@@ -84,5 +84,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // resolves them fine, only the planner rejects v1 targets — rewrite
     // the resolved command to a distributed copy-on-write plan first
     ext.injectPostHocResolutionRule(_ => org.apache.spark.sql.graft.RowLevelSqlRewrite)
+    // the `graft_*` operator names (Sql.Registry) resolve on reference
+    ext.injectResolutionRule(Sql.ResolveOperators)
   }
 }

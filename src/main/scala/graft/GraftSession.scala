@@ -79,19 +79,6 @@ object GraftSession {
       // mode would truncate every other partition of the table)
       .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-  /** Release operator-internal caches. Several operators persist an
-    * intermediate they consume more than once (q41/q42's shingle
-    * stream, q45/q55/q46's normalized vectors, q33's ranked base) —
-    * persist rather than localCheckpoint ON PURPOSE: at 1000 executors
-    * node loss is routine, and a persisted frame recomputes from
-    * lineage where a checkpointed one fails the job. The cost is that
-    * Spark's CacheManager holds those entries until cleared: Bench and
-    * Verify clear per query, and a long-lived session should call this
-    * between operator invocations (it is `spark.catalog.clearCache()`
-    * — user-cached frames are also dropped). */
-  def clearOperatorCaches(spark: SparkSession): Unit =
-    spark.catalog.clearCache()
-
   /** Cores from SPARK_GRAFT_CPUS (driver contract), default 32. */
   def envCores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 

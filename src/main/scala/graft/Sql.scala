@@ -1,6 +1,13 @@
 package graft
 
+import java.util.Locale
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.UNRESOLVED_RELATION
+import org.apache.spark.sql.functions.{col, lit, pmod, upper, when}
 
 /** Hive-CLI-style SQL entry point: registers every lake table under a
   * directory as a view and executes SQL text against them — the
@@ -9,8 +16,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   sbt "runMain graft.Sql /root/testdata/sf0.01 \
   *     SELECT l_returnflag, count(*) FROM lineitem GROUP BY 1"
   *
-  * Ad-hoc exploration only — programmatic callers use [[run]] and get a
-  * DataFrame back (full Catalyst plan, no materialization here). */
+  * The `graft_*` operator names ([[Registry]]) resolve in any session
+  * built with GraftExtensions, with no registration call. Ad-hoc
+  * exploration only — programmatic callers use [[run]] and get a
+  * DataFrame back. */
 object Sql {
 
   val TableNames: Seq[String] = Seq("region", "nation", "customer",
@@ -37,265 +46,205 @@ object Sql {
     }
   }
 
-  /** SQL-text reach for the LLM-pipeline operators (§2c): registers the
-    * near-dup / ANN / text-hygiene entry points as TVF-style temp views
-    * over the session's `documents`/`embeddings` views, so a SQL-only
-    * user can run them without touching the Scala API:
+  /** SQL-text reach for the LLM-pipeline operators (§2c): every
+    * `graft_*` relation name and the builder of its operator frame over
+    * the session's `documents`/`embeddings`/`events` views, so a
+    * SQL-only user can run them without touching the Scala API:
     *
     *   SELECT * FROM graft_jaccard_pairs WHERE jaccard >= 0.9
-    *   SELECT * FROM graft_minhash_pairs
     *   SELECT * FROM graft_ann_topk WHERE rk = 1
+    *   SELECT * FROM graft_dedup_clusters
     *
-    * Views are lazy plans — nothing executes at registration, each view
-    * runs the operator's full distributed plan when queried, and
-    * Catalyst pushes view-level predicates/projections into it. Call
-    * after [[registerTables]]: each view captures the operator plan
-    * over the `documents`/`embeddings` views registered at that point.
-    * The scalar functions `graft_dot`/`graft_fingerprint` are
-    * registered by GraftExtensions; this covers the whole-operator
-    * surface. */
-  def registerPipelineSql(spark: SparkSession): Seq[String] = {
-    import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
-    def docs = spark.table("documents")
-    def embs = spark.table("embeddings")
-    val views: Seq[(String, () => DataFrame)] = Seq(
-      "graft_exact_dups"     -> (() => Dedup.q40(docs)),
-      "graft_jaccard_pairs"  -> (() => Dedup.q41(docs)),
-      "graft_minhash_pairs"  -> (() => Dedup.q42(docs)),
-      "graft_simhash_pairs"  -> (() => Dedup.q43(docs)),
-      "graft_phash_pairs"    -> (() => Multimodal.q93(spark, docs)),
-      "graft_source_overlap" -> (() => Dedup.q95(docs)),
-      "graft_ann_topk"       -> (() => Similarity.q44(embs)),
-      "graft_embed_outliers" -> (() => Similarity.q122(embs)),
-      "graft_langid"         -> (() => TextAnalysis.q47(docs)),
-      "graft_quality"        -> (() => TextAnalysis.q48(docs)),
-      "graft_token_counts"   -> (() => TextAnalysis.q49(docs)),
-      "graft_tfidf"          -> (() => TextAnalysis.q89(docs)),
-      "graft_bpe_merges"     -> (() => TextAnalysis.q98(docs)),
-      "graft_bigram_nll"     -> (() => TextAnalysis.q99(docs)),
-      "graft_feature_hash"   -> (() => TextAnalysis.q100(docs)),
-      "graft_gram_matrix"    -> (() => Similarity.q97(embs)),
-      "graft_boilerplate"    -> (() => TextAnalysis.q101(docs)),
-      "graft_mix_resample"   -> (() => TextAnalysis.q102(docs)),
-      "graft_knn_labels"     -> (() => Similarity.q103(embs)),
-      "graft_quality_lr"     -> (() => TextAnalysis.q104(docs)),
-      "graft_source_profile" -> (() => TextAnalysis.q106(docs)),
-      "graft_split_decontam" -> (() => TextAnalysis.q107(docs)),
-      "graft_ann_int8"       -> (() => Similarity.q108(embs)),
-      "graft_split_neardup"  -> (() => Dedup.q111(docs)),
-      "graft_bpe_tokens"     -> (() => TextAnalysis.q113(docs)),
-      "graft_pack_bpe"       -> (() => TextAnalysis.q77Bpe(docs)),
-      "graft_chunk_bpe"      -> (() => TextAnalysis.q87Bpe(docs)),
-      "graft_band_skew"      -> (() => Dedup.q112(docs)),
-      "graft_prefix_skew"    -> (() => Dedup.q123(docs)),
-      "graft_repeated_spans" -> (() => Dedup.q114(docs)),
-      "graft_span_fraction"  -> (() => Dedup.q115(docs)),
-      "graft_span_scrub"     -> (() => Dedup.q119(docs)),
-      // byte-granular substring family + the partial-overlap triad and
-      // its scrub lanes (round 16): all lazy frames — winnowing /
-      // codec work runs in mapPartitions when the view is queried
-      "graft_substr_spans"    -> (() => Dedup.q200(docs)),
-      "graft_substr_coverage" -> (() => Dedup.q201(docs)),
-      "graft_winnow_skew"     -> (() => Dedup.q202(docs)),
-      "graft_substr_scrubbed" -> (() => Dedup.q203(docs)),
-      "graft_audio_overlap"   -> (() => Multimodal.q204AudioOverlap(spark, docs)),
-      "graft_image_overlap"   -> (() => Multimodal.q205ImageOverlap(spark, docs)),
-      "graft_audio_scrubbed"  -> (() => Multimodal.q206AudioScrub(spark, docs)),
-      "graft_audio_landmarks" -> (() => Multimodal.q207AudioLandmarks(spark, docs)),
-      "graft_image_scrubbed"  -> (() => Multimodal.q208ImageScrub(spark, docs)),
-      // video family (round 18): the last modality reachable only from
-      // the Scala API — near-dup / partial-overlap / scrub, same lazy
-      // frame discipline as the audio/image lanes above
-      "graft_video_neardup"   -> (() => Multimodal.q210VideoNeardup(spark, docs)),
-      "graft_video_overlap"   -> (() => Multimodal.q211VideoOverlap(spark, docs)),
-      "graft_video_scrubbed"  -> (() => Multimodal.q212VideoScrub(spark, docs)),
-      "graft_clean_scrubbed" -> (() =>
-        graft.operators.Pipeline.cleanCorpus(docs, scrubSpans = true)),
-      "graft_dsir"           -> (() => TextAnalysis.q117(docs)),
-      "graft_ppl_buckets"    -> (() => TextAnalysis.q118(docs)),
-      "graft_temp_mix"       -> (() => TextAnalysis.q120(docs)),
-      "graft_src_diversity"  -> (() => TextAnalysis.q121(docs)),
-      "graft_bm25_search"    -> (() => {
-        import spark.implicits._
-        TextAnalysis.q116(docs, graft.Oracles.Bm25Queries.toDF("query_id", "terms"))
-      }),
-      "graft_incr_dedup"     -> (() => {
-        import org.apache.spark.sql.functions.{col, lit, pmod}
-        Dedup.q109(
-          docs.filter(pmod(col("doc_id"), lit(Oracles.IngestBatchMod)) =!= 0L),
-          docs.filter(pmod(col("doc_id"), lit(Oracles.IngestBatchMod)) === 0L))
-      }),
-      "graft_dup_profile"    -> (() => Dedup.q127(docs)),
-      "graft_quota_topk"     -> (() => TextAnalysis.q128(docs)),
-      "graft_pack_assign"    -> (() => TextAnalysis.q129(docs)),
-      "graft_vocab_growth"   -> (() => TextAnalysis.q130(docs)),
-      // near-dup ingest (q131) is fully lazy — no bloom fit, no
-      // fixpoint — so unlike graft_bloom_dedup it can be a view;
-      // same corpus/batch derivation as graft_incr_dedup
-      "graft_near_ingest"    -> (() => {
-        import org.apache.spark.sql.functions.{col, lit, pmod}
-        Dedup.q131(
-          docs.filter(pmod(col("doc_id"), lit(Oracles.IngestBatchMod)) =!= 0L),
-          docs.filter(pmod(col("doc_id"), lit(Oracles.IngestBatchMod)) === 0L))
-      }),
-      "graft_token_budget"   -> (() => TextAnalysis.q135(docs)),
-      "graft_weighted_sample" -> (() => TextAnalysis.q137(docs)),
-      "graft_cdc_dedup"      -> (() => Multimodal.q139(spark, docs)),
-      "graft_heavy_hitters"  -> (() => TextAnalysis.q140(docs)),
-      "graft_calibrate"      -> (() => TextAnalysis.q141(docs)),
-      "graft_retention"      -> (() => graft.operators.Events.q142(spark.table("events"))),
-      "graft_bench_containment" -> (() => Dedup.q143(docs)),
-      "graft_neyman_alloc"   -> (() => TextAnalysis.q144(docs)),
-      // URL/domain curation (q148–q153)
-      "graft_urls"           -> (() => graft.operators.UrlCuration.q148(docs)),
-      "graft_domain_blocked" -> (() => graft.operators.UrlCuration.q149(docs)),
-      "graft_domain_quota"   -> (() => graft.operators.UrlCuration.q150(docs)),
-      "graft_url_dups"       -> (() => graft.operators.UrlCuration.q151(docs)),
-      "graft_domain_split"   -> (() => graft.operators.UrlCuration.q152(docs)),
-      "graft_domain_profile" -> (() => graft.operators.UrlCuration.q153(docs)),
-      "graft_domain_rank"    -> (() => graft.operators.Graphs.q154(docs)),
-      "graft_kmeans"         -> (() => graft.operators.KMeans.q155(embs)),
-      "graft_cluster_profile" -> (() => graft.operators.KMeans.q156(embs)),
-      "graft_cluster_purity" -> (() => graft.operators.KMeans.q191(embs)),
-      "graft_ann_recall"     -> (() => Similarity.q193(embs)),
-      "graft_cluster_nmi"    -> (() => graft.operators.KMeans.q192(embs)),
-      "graft_zipf_fit"       -> (() => graft.operators.TextAnalysis.q157(docs)),
-      "graft_skyline"        -> (() => graft.operators.Relational.q158(docs)),
-      "graft_sentiment"      -> (() => graft.operators.TextAnalysis.q159(docs)),
-      "graft_entropy"        -> (() => graft.operators.TextAnalysis.q160(docs)),
-      "graft_hybrid_search"  -> (() => {
-        import spark.implicits._
-        Similarity.q161(docs, embs,
-          graft.Oracles.Bm25Queries.toDF("query_id", "terms"),
-          depth = Oracles.HybridDepth)
-      }),
-      "graft_minimizer_pairs" -> (() => Dedup.q162(docs,
+    * Nothing is registered: [[ResolveOperators]] builds a name's frame
+    * each time a statement references it, over the tables visible at
+    * that moment. A lazy operator runs its distributed plan with the
+    * statement, and Catalyst pushes the statement's predicates and
+    * projections into it. An iterative or fit-first operator (the
+    * clustering fixpoints, q126's bloom fit, q134's PCA fit, q138's PQ
+    * codebook) runs its construction jobs during analysis. The scalar
+    * functions (`graft_dot`, `graft_fingerprint`, ...) are registered
+    * by GraftExtensions itself. */
+  val Registry: Map[String, SparkSession => DataFrame] = {
+    import graft.operators._
+    def docs(f: DataFrame => DataFrame): SparkSession => DataFrame =
+      s => f(s.table("documents"))
+    def media(f: (SparkSession, DataFrame) => DataFrame): SparkSession => DataFrame =
+      s => f(s, s.table("documents"))
+    def embs(f: DataFrame => DataFrame): SparkSession => DataFrame =
+      s => f(s.table("embeddings"))
+    def events(f: DataFrame => DataFrame): SparkSession => DataFrame =
+      s => f(s.table("events"))
+    // the q109/q126/q131 corpus/batch derivation, shared so the three
+    // ingest reports are comparable rows
+    def ingest(f: (DataFrame, DataFrame) => DataFrame): SparkSession => DataFrame =
+      docs { d =>
+        val inBatch = pmod(col("doc_id"), lit(Oracles.IngestBatchMod)) === 0L
+        f(d.filter(!inBatch), d.filter(inBatch))
+      }
+    def bm25Queries(d: DataFrame): DataFrame =
+      d.sparkSession.createDataFrame(Oracles.Bm25Queries).toDF("query_id", "terms")
+    Map(
+      "graft_exact_dups"      -> docs(Dedup.q40),
+      "graft_jaccard_pairs"   -> docs(Dedup.q41),
+      "graft_minhash_pairs"   -> docs(Dedup.q42),
+      "graft_simhash_pairs"   -> docs(Dedup.q43),
+      "graft_phash_pairs"     -> media(Multimodal.q93(_, _)),
+      "graft_source_overlap"  -> docs(Dedup.q95),
+      "graft_ann_topk"        -> embs(Similarity.q44),
+      "graft_embed_outliers"  -> embs(Similarity.q122(_)),
+      "graft_langid"          -> docs(TextAnalysis.q47),
+      "graft_quality"         -> docs(TextAnalysis.q48),
+      "graft_token_counts"    -> docs(TextAnalysis.q49),
+      "graft_tfidf"           -> docs(TextAnalysis.q89(_)),
+      "graft_bpe_merges"      -> docs(TextAnalysis.q98(_)),
+      "graft_bigram_nll"      -> docs(TextAnalysis.q99),
+      "graft_feature_hash"    -> docs(TextAnalysis.q100(_)),
+      "graft_gram_matrix"     -> embs(Similarity.q97(_)),
+      "graft_boilerplate"     -> docs(TextAnalysis.q101(_)),
+      "graft_mix_resample"    -> docs(TextAnalysis.q102),
+      "graft_knn_labels"      -> embs(Similarity.q103(_)),
+      "graft_quality_lr"      -> docs(TextAnalysis.q104(_)),
+      "graft_source_profile"  -> docs(TextAnalysis.q106(_)),
+      "graft_split_decontam"  -> docs(TextAnalysis.q107),
+      "graft_ann_int8"        -> embs(Similarity.q108(_)),
+      "graft_split_neardup"   -> docs(Dedup.q111(_)),
+      "graft_bpe_tokens"      -> docs(TextAnalysis.q113(_)),
+      "graft_pack_bpe"        -> docs(TextAnalysis.q77Bpe(_)),
+      "graft_chunk_bpe"       -> docs(TextAnalysis.q87Bpe(_)),
+      "graft_band_skew"       -> docs(Dedup.q112(_)),
+      "graft_prefix_skew"     -> docs(Dedup.q123(_)),
+      "graft_repeated_spans"  -> docs(Dedup.q114(_)),
+      "graft_span_fraction"   -> docs(Dedup.q115(_)),
+      "graft_span_scrub"      -> docs(Dedup.q119(_)),
+      "graft_substr_spans"    -> docs(Dedup.q200(_)),
+      "graft_substr_coverage" -> docs(Dedup.q201(_)),
+      "graft_winnow_skew"     -> docs(Dedup.q202(_)),
+      "graft_substr_scrubbed" -> docs(Dedup.q203(_)),
+      "graft_audio_overlap"   -> media(Multimodal.q204AudioOverlap(_, _)),
+      "graft_image_overlap"   -> media(Multimodal.q205ImageOverlap(_, _)),
+      "graft_audio_scrubbed"  -> media(Multimodal.q206AudioScrub(_, _)),
+      "graft_audio_landmarks" -> media(Multimodal.q207AudioLandmarks(_, _)),
+      "graft_image_scrubbed"  -> media(Multimodal.q208ImageScrub(_, _)),
+      "graft_video_neardup"   -> media(Multimodal.q210VideoNeardup(_, _)),
+      "graft_video_overlap"   -> media(Multimodal.q211VideoOverlap(_, _)),
+      "graft_video_scrubbed"  -> media(Multimodal.q212VideoScrub(_, _)),
+      "graft_clean_scrubbed"  -> docs(Pipeline.cleanCorpus(_, scrubSpans = true)),
+      "graft_dsir"            -> docs(TextAnalysis.q117(_)),
+      "graft_ppl_buckets"     -> docs(TextAnalysis.q118(_)),
+      "graft_temp_mix"        -> docs(TextAnalysis.q120(_)),
+      "graft_src_diversity"   -> docs(TextAnalysis.q121),
+      "graft_bm25_search"     -> docs(d => TextAnalysis.q116(d, bm25Queries(d))),
+      "graft_incr_dedup"      -> ingest(Dedup.q109),
+      "graft_dup_profile"     -> docs(Dedup.q127),
+      "graft_quota_topk"      -> docs(TextAnalysis.q128(_)),
+      "graft_pack_assign"     -> docs(TextAnalysis.q129(_)),
+      "graft_vocab_growth"    -> docs(TextAnalysis.q130(_)),
+      "graft_near_ingest"     -> ingest(Dedup.q131(_, _)),
+      "graft_token_budget"    -> docs(TextAnalysis.q135(_)),
+      "graft_weighted_sample" -> docs(TextAnalysis.q137(_)),
+      "graft_cdc_dedup"       -> media(Multimodal.q139(_, _)),
+      "graft_heavy_hitters"   -> docs(TextAnalysis.q140(_)),
+      "graft_calibrate"       -> docs(TextAnalysis.q141),
+      "graft_retention"       -> events(Events.q142),
+      "graft_bench_containment" -> docs(Dedup.q143(_)),
+      "graft_neyman_alloc"    -> docs(TextAnalysis.q144(_)),
+      "graft_urls"            -> docs(UrlCuration.q148),
+      "graft_domain_blocked"  -> docs(UrlCuration.q149(_)),
+      "graft_domain_quota"    -> docs(UrlCuration.q150(_)),
+      "graft_url_dups"        -> docs(UrlCuration.q151),
+      "graft_domain_split"    -> docs(UrlCuration.q152),
+      "graft_domain_profile"  -> docs(UrlCuration.q153),
+      "graft_domain_rank"     -> docs(Graphs.q154(_)),
+      "graft_kmeans"          -> embs(KMeans.q155(_)),
+      "graft_cluster_profile" -> embs(KMeans.q156(_)),
+      "graft_cluster_purity"  -> embs(KMeans.q191(_)),
+      "graft_ann_recall"      -> embs(Similarity.q193(_)),
+      "graft_cluster_nmi"     -> embs(KMeans.q192(_)),
+      "graft_zipf_fit"        -> docs(TextAnalysis.q157(_)),
+      "graft_skyline"         -> docs(Relational.q158),
+      "graft_sentiment"       -> docs(TextAnalysis.q159),
+      "graft_entropy"         -> docs(TextAnalysis.q160),
+      "graft_hybrid_search"   -> docs(d => Similarity.q161(d,
+        d.sparkSession.table("embeddings"), bm25Queries(d),
+        depth = Oracles.HybridDepth)),
+      "graft_minimizer_pairs" -> docs(Dedup.q162(_,
         w = Oracles.MinimizerW, minShared = Oracles.MinimizerShared)),
-      "graft_novelty"        -> (() => Dedup.q163(docs)),
-      "graft_mmr_topk"       -> (() => {
-        import org.apache.spark.sql.functions.col
-        Similarity.q164(embs.filter(col("vec_id") < 5), embs)
-      }),
-      "graft_domain_communities" -> (() =>
-        graft.operators.Graphs.q165(docs, iters = Oracles.LpaIters)),
-      "graft_keywords"       -> (() => TextAnalysis.q166(docs)),
-      "graft_chi2_drift"     -> (() => TextAnalysis.q167(docs,
-        buckets = Oracles.DsirBuckets)),
-      "graft_domain_gini"    -> (() => graft.operators.UrlCuration.q168(docs)),
-      "graft_sem_decontam"   -> (() => {
-        import org.apache.spark.sql.functions.col
-        Similarity.q169(embs.filter(col("vec_id") >= Oracles.SemBenchIds),
-          embs.filter(col("vec_id") < Oracles.SemBenchIds),
-          tau = Oracles.SemDecontamTau)
-      }),
-      "graft_temporal_split" -> (() =>
-        graft.operators.Events.q170(spark.table("events"))),
-      "graft_shard_rebalance" -> (() => graft.operators.Sharding.q171(docs,
-        n = Oracles.ShardN, m = Oracles.ShardM,
-        vnodes = Oracles.ShardVnodes)),
-      "graft_attribution"    -> (() =>
-        graft.operators.Events.q172(spark.table("events"))),
-      "graft_hourly_anomaly" -> (() =>
-        graft.operators.Events.q173(spark.table("events"))),
-      "graft_triangles"      -> (() => graft.operators.Graphs.q174(docs)),
-      "graft_assortativity"  -> (() => graft.operators.Graphs.q195(docs)),
-      "graft_khop"           -> (() => graft.operators.Graphs.q175(docs,
-        hops = Oracles.KhopHops)),
-      "graft_dedup_savings"  -> (() => Dedup.q176(docs)),
-      // round-12 operators (q177–q182)
-      "graft_semdedup"       -> (() => graft.operators.KMeans.q177(embs,
-        tau = Oracles.SemDedupTau)),
-      "graft_gopher_rules"   -> (() => TextAnalysis.q178(docs)),
-      "graft_epoch_schedule" -> (() => TextAnalysis.q179(docs,
-        budgetFactor = Oracles.EpochBudgetFactor,
-        maxEpochs = Oracles.EpochMaxEpochs)),
-      "graft_hits"           -> (() => graft.operators.Graphs.q180(docs,
-        iters = Oracles.HitsIters)),
-      "graft_domain_weights" -> (() => TextAnalysis.q181(docs,
-        iters = Oracles.ReweightIters)),
-      "graft_rejections"     -> (() => graft.operators.Pipeline.q182(docs,
-        tau = Oracles.RejectContamTau)),
-      "graft_k_anonymity"    -> (() => graft.operators.Events.q183(
-        spark.table("events"), k = Oracles.KAnonK)),
-      "graft_sketch_eval"    -> (() => Dedup.q184(docs,
+      "graft_novelty"         -> docs(Dedup.q163),
+      "graft_mmr_topk"        -> embs(e => Similarity.q164(e.filter(col("vec_id") < 5), e)),
+      "graft_domain_communities" -> docs(Graphs.q165(_, iters = Oracles.LpaIters)),
+      "graft_keywords"        -> docs(TextAnalysis.q166(_)),
+      "graft_chi2_drift"      -> docs(TextAnalysis.q167(_, buckets = Oracles.DsirBuckets)),
+      "graft_domain_gini"     -> docs(UrlCuration.q168),
+      "graft_sem_decontam"    -> embs(e => Similarity.q169(
+        e.filter(col("vec_id") >= Oracles.SemBenchIds),
+        e.filter(col("vec_id") < Oracles.SemBenchIds),
+        tau = Oracles.SemDecontamTau)),
+      "graft_temporal_split"  -> events(Events.q170),
+      "graft_shard_rebalance" -> docs(Sharding.q171(_, n = Oracles.ShardN,
+        m = Oracles.ShardM, vnodes = Oracles.ShardVnodes)),
+      "graft_attribution"     -> events(Events.q172(_)),
+      "graft_hourly_anomaly"  -> events(Events.q173(_)),
+      "graft_triangles"       -> docs(Graphs.q174),
+      "graft_assortativity"   -> docs(Graphs.q195),
+      "graft_khop"            -> docs(Graphs.q175(_, hops = Oracles.KhopHops)),
+      "graft_dedup_savings"   -> docs(Dedup.q176),
+      "graft_semdedup"        -> embs(KMeans.q177(_, tau = Oracles.SemDedupTau)),
+      "graft_gopher_rules"    -> docs(TextAnalysis.q178(_)),
+      "graft_epoch_schedule"  -> docs(TextAnalysis.q179(_,
+        budgetFactor = Oracles.EpochBudgetFactor, maxEpochs = Oracles.EpochMaxEpochs)),
+      "graft_hits"            -> docs(Graphs.q180(_, iters = Oracles.HitsIters)),
+      "graft_domain_weights"  -> docs(TextAnalysis.q181(_, iters = Oracles.ReweightIters)),
+      "graft_rejections"      -> docs(Pipeline.q182(_, tau = Oracles.RejectContamTau)),
+      "graft_k_anonymity"     -> events(Events.q183(_, k = Oracles.KAnonK)),
+      "graft_sketch_eval"     -> docs(Dedup.q184(_,
         w = Oracles.MinimizerW, minShared = Oracles.MinimizerShared)),
-      "graft_l_diversity"    -> (() => graft.operators.Events.q185(
-        spark.table("events"), k = Oracles.KAnonK, l = Oracles.LDivL)),
-      "graft_contam_runs"    -> (() => Dedup.q186(docs)),
-      // round-13 operators (q187/q189/q190; q188 is iterative — see
-      // materializePipelineTables)
-      "graft_vocab_richness" -> (() => TextAnalysis.q187(docs)),
-      "graft_ks_drift"       -> (() => TextAnalysis.q189(docs)),
-      "graft_vocab_coverage" -> (() => TextAnalysis.q190(docs)),
-      "graft_burstiness"     -> (() => TextAnalysis.q194(docs)),
-      "graft_cond_entropy"   -> (() => TextAnalysis.q196(docs)),
+      "graft_l_diversity"     -> events(Events.q185(_, k = Oracles.KAnonK, l = Oracles.LDivL)),
+      "graft_contam_runs"     -> docs(Dedup.q186),
+      "graft_vocab_richness"  -> docs(TextAnalysis.q187),
+      "graft_ks_drift"        -> docs(TextAnalysis.q189),
+      "graft_vocab_coverage"  -> docs(TextAnalysis.q190(_)),
+      "graft_burstiness"      -> docs(TextAnalysis.q194(_)),
+      "graft_cond_entropy"    -> docs(TextAnalysis.q196),
       // drift between the q110 snapshot derivations (see Oracles)
-      "graft_token_drift"    -> (() => {
-        import org.apache.spark.sql.functions.{col, lit, pmod, when, upper}
-        TextAnalysis.q132(
-          docs.filter(pmod(col("doc_id"), lit(Oracles.DiffOldDropMod)) =!= 0L),
-          docs.filter(pmod(col("doc_id"), lit(Oracles.DiffNewDropMod)) =!= 0L)
-            .select(col("doc_id"),
-              when(pmod(col("doc_id"), lit(Oracles.DiffUpperMod)) === 0L,
-                upper(col("text"))).otherwise(col("text")).as("text")))
-      })
+      "graft_token_drift"     -> docs(d => TextAnalysis.q132(
+        d.filter(pmod(col("doc_id"), lit(Oracles.DiffOldDropMod)) =!= 0L),
+        d.filter(pmod(col("doc_id"), lit(Oracles.DiffNewDropMod)) =!= 0L)
+          .select(col("doc_id"),
+            when(pmod(col("doc_id"), lit(Oracles.DiffUpperMod)) === 0L,
+              upper(col("text"))).otherwise(col("text")).as("text")))),
+      "graft_dedup_clusters"  -> docs(Dedup.q64(_)),
+      "graft_dup_weights"     -> docs(Dedup.q188(_)),
+      "graft_media_clean"     -> media(Multimodal.q94(_, _)),
+      "graft_embed_clusters"  -> embs(Similarity.q96),
+      "graft_canonical_pick"  -> docs(Pipeline.q105(_)),
+      "graft_bloom_dedup"     -> ingest(Dedup.q126(_, _)),
+      "graft_clean_funnel"    -> docs(Pipeline.q133(_)),
+      "graft_pca_proj"        -> embs(Similarity.q134(_)),
+      "graft_pq_ann"          -> embs(Similarity.q138(_))
     )
-    views.map { case (name, mk) => mk().createOrReplaceTempView(name); name }
   }
 
-  /** The ITERATIVE pipeline operators (connected-components clustering
-    * runs a driver-side fixpoint loop, so their plans cannot be lazy
-    * views): registering these EXECUTES the clustering now and exposes
-    * the results as `graft_dedup_clusters` / `graft_media_clean`.
-    * Separate from [[registerPipelineSql]] so `run` stays lazy — call
-    * this only when a SQL session actually wants cluster verdicts. */
-  def materializePipelineTables(spark: SparkSession): Seq[String] = {
-    import graft.operators.{Dedup, Multimodal}
-    def docs = spark.table("documents")
-    val tables: Seq[(String, () => DataFrame)] = Seq(
-      "graft_dedup_clusters" -> (() => Dedup.q64(docs)),
-      "graft_dup_weights"    -> (() => Dedup.q188(docs)),
-      "graft_media_clean"    -> (() => Multimodal.q94(spark, docs)),
-      "graft_embed_clusters" -> (() => graft.operators.Similarity.q96(spark.table("embeddings"))),
-      "graft_canonical_pick" -> (() => graft.operators.Pipeline.q105(docs)),
-      // eager like the fixpoint tables: q126's bloom FIT collects the
-      // serialized filter before the plan can be built, so it cannot
-      // be a lazy view (same corpus/batch derivation as
-      // graft_incr_dedup — the two reports are comparable rows)
-      "graft_bloom_dedup"    -> (() => {
-        import org.apache.spark.sql.functions.{col, lit, pmod}
-        Dedup.q126(
-          docs.filter(pmod(col("doc_id"), lit(Oracles.IngestBatchMod)) =!= 0L),
-          docs.filter(pmod(col("doc_id"), lit(Oracles.IngestBatchMod)) === 0L))
-      }),
-      // the funnel embeds the same iterative clustering as
-      // graft_dedup_clusters — eager for the same reason
-      "graft_clean_funnel"   -> (() => graft.operators.Pipeline.q133(docs)),
-      // the PCA fit collects the moment cells before the projection
-      // plan exists — eager like graft_bloom_dedup
-      "graft_pca_proj"       -> (() =>
-        graft.operators.Similarity.q134(spark.table("embeddings"))),
-      // the PQ codebook fit collects its bounded training sample
-      // before the search plan exists — eager for the same reason
-      "graft_pq_ann"         -> (() =>
-        graft.operators.Similarity.q138(spark.table("embeddings")))
-    )
-    tables.map { case (name, mk) => mk().createOrReplaceTempView(name); name }
+  /** Rewrites a single-part relation named in [[Registry]] into its
+    * operator's analyzed plan, aliased by the name as a view would be
+    * (injected by GraftExtensions). Extended resolution rules run after
+    * ResolveRelations in the same batch, so a temp view or table of the
+    * same name has already claimed the relation, and an unknown
+    * `graft_*` name stays unresolved and fails as
+    * TABLE_OR_VIEW_NOT_FOUND. */
+  final case class ResolveOperators(spark: SparkSession) extends Rule[LogicalPlan] {
+    def apply(plan: LogicalPlan): LogicalPlan =
+      plan.resolveOperatorsUpWithPruning(_.containsPattern(UNRESOLVED_RELATION)) {
+        case u @ UnresolvedRelation(Seq(name), _, false) =>
+          Registry.get(name.toLowerCase(Locale.ROOT)).fold[LogicalPlan](u)(build =>
+            SubqueryAlias(name, build(spark).queryExecution.analyzed))
+      }
   }
 
   def run(spark: SparkSession, dir: String, query: String): DataFrame = {
     registerTables(spark, dir)
-    registerPipelineSql(spark)
     spark.sql(query)
   }
 
-  /** CLI argument handling, factored out of [[main]] so the spec can
-    * drive the exact CLI path on its own session:
-    * `[--with-clusters] <tableDir> <sql...>`. The flag opts into
-    * [[materializePipelineTables]] — the iterative cluster operators
-    * execute eagerly at registration (a fixpoint loop can't be a lazy
-    * view), so a plain SQL session doesn't pay for clustering it never
-    * queries. */
   /** sql04: SNAPSHOT TABLES on the SQL surface — bind an s16 table
     * under `name` (head version), `name_history` (the commit log:
     * version/parent/operation/ts/file count), and optionally
@@ -319,15 +268,11 @@ object Sql {
         .createOrReplaceTempView(s"${name}_v$v"))
   }
 
+  /** CLI argument handling, factored out of [[main]] so the spec can
+    * drive the exact CLI path on its own session. */
   def cli(spark: SparkSession, args: Seq[String]): DataFrame = {
-    val withClusters = args.headOption.contains("--with-clusters")
-    val rest = if (withClusters) args.tail else args
-    require(rest.length >= 2,
-      "usage: graft.Sql [--with-clusters] <tableDir> <sql...>")
-    registerTables(spark, rest.head)
-    registerPipelineSql(spark)
-    if (withClusters) materializePipelineTables(spark)
-    spark.sql(rest.tail.mkString(" "))
+    require(args.length >= 2, "usage: graft.Sql <tableDir> <sql...>")
+    run(spark, args.head, args.tail.mkString(" "))
   }
 
   def main(args: Array[String]): Unit = {

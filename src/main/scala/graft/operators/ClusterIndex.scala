@@ -229,7 +229,6 @@ object ClusterIndex {
       val gBNew = gB.join(
         gOld.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
         .persist(lvl)
-      try {
       // (3) candidates: batch×batch + batch×stored (either side may
       // hold the smaller id, so run the stored join both ways);
       // distinct() collapses pairs found via both routes when a retry
@@ -240,12 +239,15 @@ object ClusterIndex {
       // candidate pairs three times (two semi-join prunes + the verify
       // join) — unpersisted, the three-way PPJoin union re-ran per
       // consumer (the fit path already persists its cands for the same
-      // reason). Two longs per row; released in the finally below.
+      // reason). Two longs per row; released with the batch frames in
+      // the finally below, on the exception path too (a failed
+      // streaming retry would otherwise leak one copy per attempt).
       val cands = ppCandidates(pB, pB, t)
         .unionAll(ppCandidates(pB, pOld, t))
         .unionAll(ppCandidates(pOld, pB, t))
         .distinct()
         .persist(lvl)
+      try {
       val gAll = gOld.select(col("doc_id"), col("g"))
         .unionAll(gBNew.select(col("doc_id"), col("g")))
       val newEdges = edgesFrom(gAll, cands, bMembers, t)
@@ -259,8 +261,6 @@ object ClusterIndex {
         // fully before the write drops the old files (Ckpt: honors the
         // reliable-checkpoint seam like every other lineage cut)
         .transform(Ckpt.cut(_))
-      // the eager cut above is the last consumer of the candidate pairs
-      cands.unpersist(blocking = false)
       // write order = crash-window analysis: grams (idempotent via
       // gBNew) → labels (overwrite, recomputable while digests absent)
       // → meta (advisory counter) → digests (the commit record; once
@@ -292,7 +292,7 @@ object ClusterIndex {
         digestsTable(name), "dg")
       } finally {
         batch.unpersist(); fresh.unpersist(); bMembers.unpersist()
-        gB.unpersist(); gBNew.unpersist(); ()
+        gB.unpersist(); gBNew.unpersist(); cands.unpersist(); ()
       }
     }
   }

@@ -352,69 +352,70 @@ object Dedup {
     val edges = p0.select(col("doc_a").as("u"), col("doc_b").as("v"))
       .unionAll(p0.select(col("doc_b").as("u"), col("doc_a").as("v")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // seed = identity label AND the first propagation round in ONE
-    // aggregation: every vertex appears as `u` (edges are symmetric), so
-    // label₀ = min(u, min(neighbors)) — saves a full join+checkpoint+count
-    // round versus starting from label = doc_id
-    // LAZY checkpoints throughout the loop: the convergence count is
-    // the action that materializes each round's frame, so a round is
-    // ONE Spark job (eager checkpoint + count was two) — the loop's
-    // cost at test scale is fixed per-round overhead, not data
-    var labels = edges.groupBy(col("u").as("doc_id"))
-      .agg(least(min(col("v")), min(col("u"))).as("label"))
-      .transform(cut)
-    var changed = 1L
-    var round = 0
-    while (changed > 0) {
-      round += 1
-      val nbrMin = edges
-        .join(labels.select(col("doc_id").as("v"), col("label")), "v")
-        .groupBy(col("u").as("doc_id"))
-        .agg(min(col("label")).as("nbr_label"))
-      val plain = labels
-        .join(nbrMin, Seq("doc_id"), "left_outer")
-        .select(col("doc_id"), col("label"),
-          least(col("label"), coalesce(col("nbr_label"), col("label")))
-            .as("fwd_label"))
-      // acceleration is ADAPTIVE: clique-ish dedup graphs converge in
-      // 2 rounds of plain propagation, where the extra jump/reverse
-      // exchanges are pure overhead — only a graph still changing at
-      // round 3 (a long-diameter component) pays for them, and then
-      // they cut the remaining rounds exponentially
-      val joined = (if (round < 3) plain
-        .select(col("doc_id"), col("fwd_label").as("new_label"), col("label"))
-      else {
-        // pointer doubling: l(l(v)) — label is a component vertex, so
-        // the jump resolves against the label frame itself
-        val ll = labels.select(col("doc_id").as("label"), col("label").as("ll"))
-        val fwd = plain
-          .join(ll, Seq("label"), "left_outer")
-          .select(col("doc_id"), col("label"),
-            least(col("fwd_label"), coalesce(col("ll"), col("fwd_label")))
-              .as("fwd_label"))
-        // hash-to-min reverse step: every vertex SENDS its round
-        // minimum to its (old) representative, which takes the min of
-        // what its members found — a new component minimum reaches the
-        // rep this round and every member via the jump next round
-        val repMin = fwd
-          .select(col("label").as("doc_id"), col("fwd_label"))
-          .groupBy(col("doc_id"))
-          .agg(min(col("fwd_label")).as("rep_min"))
-        fwd
-          .join(repMin, Seq("doc_id"), "left_outer")
-          .select(col("doc_id"),
-            least(col("fwd_label"), coalesce(col("rep_min"), col("fwd_label")))
-              .as("new_label"),
-            col("label"))
-      })
-        .select(col("doc_id"), col("new_label").as("label"),
-          (col("new_label") < col("label")).as("improved"))
+    try {
+      // seed = identity label AND the first propagation round in ONE
+      // aggregation: every vertex appears as `u` (edges are symmetric), so
+      // label₀ = min(u, min(neighbors)) — saves a full join+checkpoint+count
+      // round versus starting from label = doc_id
+      // LAZY checkpoints throughout the loop: the convergence count is
+      // the action that materializes each round's frame, so a round is
+      // ONE Spark job (eager checkpoint + count was two) — the loop's
+      // cost at test scale is fixed per-round overhead, not data
+      var labels = edges.groupBy(col("u").as("doc_id"))
+        .agg(least(min(col("v")), min(col("u"))).as("label"))
         .transform(cut)
-      changed = joined.filter(col("improved")).count()
-      labels = joined.select(col("doc_id"), col("label"))
-    }
-    edges.unpersist()
-    labels
+      var changed = 1L
+      var round = 0
+      while (changed > 0) {
+        round += 1
+        val nbrMin = edges
+          .join(labels.select(col("doc_id").as("v"), col("label")), "v")
+          .groupBy(col("u").as("doc_id"))
+          .agg(min(col("label")).as("nbr_label"))
+        val plain = labels
+          .join(nbrMin, Seq("doc_id"), "left_outer")
+          .select(col("doc_id"), col("label"),
+            least(col("label"), coalesce(col("nbr_label"), col("label")))
+              .as("fwd_label"))
+        // acceleration is ADAPTIVE: clique-ish dedup graphs converge in
+        // 2 rounds of plain propagation, where the extra jump/reverse
+        // exchanges are pure overhead — only a graph still changing at
+        // round 3 (a long-diameter component) pays for them, and then
+        // they cut the remaining rounds exponentially
+        val joined = (if (round < 3) plain
+          .select(col("doc_id"), col("fwd_label").as("new_label"), col("label"))
+        else {
+          // pointer doubling: l(l(v)) — label is a component vertex, so
+          // the jump resolves against the label frame itself
+          val ll = labels.select(col("doc_id").as("label"), col("label").as("ll"))
+          val fwd = plain
+            .join(ll, Seq("label"), "left_outer")
+            .select(col("doc_id"), col("label"),
+              least(col("fwd_label"), coalesce(col("ll"), col("fwd_label")))
+                .as("fwd_label"))
+          // hash-to-min reverse step: every vertex SENDS its round
+          // minimum to its (old) representative, which takes the min of
+          // what its members found — a new component minimum reaches the
+          // rep this round and every member via the jump next round
+          val repMin = fwd
+            .select(col("label").as("doc_id"), col("fwd_label"))
+            .groupBy(col("doc_id"))
+            .agg(min(col("fwd_label")).as("rep_min"))
+          fwd
+            .join(repMin, Seq("doc_id"), "left_outer")
+            .select(col("doc_id"),
+              least(col("fwd_label"), coalesce(col("rep_min"), col("fwd_label")))
+                .as("new_label"),
+              col("label"))
+        })
+          .select(col("doc_id"), col("new_label").as("label"),
+            (col("new_label") < col("label")).as("improved"))
+          .transform(cut)
+        changed = joined.filter(col("improved")).count()
+        labels = joined.select(col("doc_id"), col("label"))
+      }
+      labels
+    } finally edges.unpersist()
   }
 
   /** q64: dedup clusters from the q41 near-dup pairs — one row per doc

@@ -537,9 +537,9 @@ object Graphs {
       // the projection both consume it — unpersisted, the edge ⋈
       // scores join ran twice per half-round (r19, guide §2.4).
       // Node-sized; direct persist + same-half-round unpersist after
-      // the eager cut (r20, ADVICE): only the CURRENT half-round's
-      // frame is ever re-read, so 2·iters accumulated pins were pure
-      // storage-memory pressure.
+      // the eager cut, in a finally (r20, ADVICE): only the CURRENT
+      // half-round's frame is ever re-read, so 2·iters accumulated pins
+      // were pure storage-memory pressure.
       val raw = e
         .join(bc(scores.withColumnRenamed("node", joinKey), useBcast), joinKey)
         .select(col(outKey).as("node"), col(scoreCol).as("v"))
@@ -547,15 +547,15 @@ object Graphs {
         .groupBy(col("node"))
         .agg(sum(col("v")).as("raw"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val tot = raw.agg(sum(col("raw")).as("t"))
-      val out = raw
-        .crossJoin(broadcast(tot))
-        .select(col("node"),
-          coalesce(expr(s"(raw * $scale) div t"), lit(0L))
-            .as(outCol))
-        .transform(Ckpt.cut(_))
-      raw.unpersist(blocking = false)
-      out
+      try {
+        val tot = raw.agg(sum(col("raw")).as("t"))
+        raw
+          .crossJoin(broadcast(tot))
+          .select(col("node"),
+            coalesce(expr(s"(raw * $scale) div t"), lit(0L))
+              .as(outCol))
+          .transform(Ckpt.cut(_))
+      } finally raw.unpersist(blocking = false)
     }
     for (_ <- 1 to iters) {
       auth = half(hub, "h", "src", "dst", "a")   // a(v) ∝ Σ_{u→v} h(u)

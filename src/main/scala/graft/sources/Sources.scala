@@ -607,39 +607,40 @@ object Sources {
     val affectedParts = updates.select(partitionCols.map(updates.col): _*)
       .unionByName(matchedParts).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val affected = target.join(affectedParts, partitionCols, "left_semi")
-    val kept = affected.join(keys, keyCols, "left_anti")
-    val merged = kept.unionByName(updates)
-    merged.write.mode(SaveMode.Overwrite).parquet(staging)
-    val staged = spark.read.parquet(staging)
-    // compute the drained-partition list BEFORE mutating `path`: the
-    // lineage of both sides reads the pre-upsert target, and a cache
-    // loss after the overwrite would silently recompute from mutated
-    // data (missing the moved key's old partition). Metadata-sized.
-    val emptied = affectedParts
-      .join(staged.select(partitionCols.map(staged.col): _*).distinct(),
-        partitionCols, "left_anti")
-      .select(partitionCols.map(c => col(c).cast("string")): _*)
-      .collect()
-    insertOverwritePartitions(staged, path, partitionCols)
-    // partitions fully drained by the upsert: in affected but absent
-    // from the staged result — delete their directories (hive-escaped
-    // names; string-cast partition values match the directory layout)
-    if (emptied.nonEmpty) {
-      import org.apache.hadoop.fs.Path
-      import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      emptied.foreach { row =>
-        val dir = partitionCols.zipWithIndex.map { case (c, i) =>
-          val v = if (row.isNullAt(i)) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-                  else ExternalCatalogUtils.escapePathName(row.getString(i))
-          s"${ExternalCatalogUtils.escapePathName(c)}=$v"
-        }.mkString("/")
-        val p = new Path(s"$path/$dir")
-        if (fs.exists(p)) require(fs.delete(p, true), s"failed to delete drained partition $p")
+    try {
+      val affected = target.join(affectedParts, partitionCols, "left_semi")
+      val kept = affected.join(keys, keyCols, "left_anti")
+      val merged = kept.unionByName(updates)
+      merged.write.mode(SaveMode.Overwrite).parquet(staging)
+      val staged = spark.read.parquet(staging)
+      // compute the drained-partition list BEFORE mutating `path`: the
+      // lineage of both sides reads the pre-upsert target, and a cache
+      // loss after the overwrite would silently recompute from mutated
+      // data (missing the moved key's old partition). Metadata-sized.
+      val emptied = affectedParts
+        .join(staged.select(partitionCols.map(staged.col): _*).distinct(),
+          partitionCols, "left_anti")
+        .select(partitionCols.map(c => col(c).cast("string")): _*)
+        .collect()
+      insertOverwritePartitions(staged, path, partitionCols)
+      // partitions fully drained by the upsert: in affected but absent
+      // from the staged result — delete their directories (hive-escaped
+      // names; string-cast partition values match the directory layout)
+      if (emptied.nonEmpty) {
+        import org.apache.hadoop.fs.Path
+        import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        emptied.foreach { row =>
+          val dir = partitionCols.zipWithIndex.map { case (c, i) =>
+            val v = if (row.isNullAt(i)) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+                    else ExternalCatalogUtils.escapePathName(row.getString(i))
+            s"${ExternalCatalogUtils.escapePathName(c)}=$v"
+          }.mkString("/")
+          val p = new Path(s"$path/$dir")
+          if (fs.exists(p)) require(fs.delete(p, true), s"failed to delete drained partition $p")
+        }
       }
-    }
-    affectedParts.unpersist()
+    } finally affectedParts.unpersist()
   }
 
   /** s06: small-files compaction — the nightly maintenance op that keeps

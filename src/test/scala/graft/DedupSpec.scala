@@ -58,6 +58,43 @@ class DedupSpec extends GraftSpec {
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).contains((1L, 2L)))
   }
 
+  test("q84 banded Levenshtein keeps exactly the pairs the unbanded filter keeps") {
+    import org.apache.spark.sql.functions.{col, greatest, length, levenshtein, lit}
+    // 50-char texts: six distinct filler words, then a tail of letters;
+    // a variant turns the tail's first d letters into 'z' (no base
+    // holds a 'z'), so its distance is exactly d and only its last
+    // shingle differs (blocking Jaccard 4/6). At simFloor 0.8 and
+    // length 50 the cutoff is d = 10 (edit_sim exactly 0.8) and the band
+    // is k = floor((1 - 0.8) * 50) + 2 = 11: d = 11 lies in (cutoff, k],
+    // d = 12 = k + 1 makes the banded DP give up
+    val groups = Seq(10 -> "north river stone bridge over mill",
+      11 -> "quiet garden path past cedar trees",
+      12 -> "bright market square fresh warm loaf")
+    val texts = groups.flatMap { case (d, words) =>
+      val tail = "abcdefghijklmnopqrstuvwxy".take(49 - words.length)
+      Seq((d * 10L, s"$words $tail"),
+        (d * 10L + 1, s"$words ${"z" * d}${tail.drop(d)}"))
+    }
+    assert(texts.forall(_._2.length == 50), texts)
+    val corpus = texts.toDF("doc_id", "text")
+    val ta = corpus.select(col("doc_id").as("doc_a"), col("text").as("text_a"))
+    val tb = corpus.select(col("doc_id").as("doc_b"), col("text").as("text_b"))
+    val unbanded = ta.crossJoin(tb).filter(col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b"),
+        levenshtein(col("text_a"), col("text_b")).cast("long").as("dist"),
+        (lit(1.0) - levenshtein(col("text_a"), col("text_b")).cast("double") /
+          greatest(length(col("text_a")), length(col("text_b")))).as("edit_sim"))
+    // the engineered distances hold
+    val dists = unbanded.collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    groups.foreach { case (d, _) => assert(dists((d * 10L, d * 10L + 1)) == d) }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_a", "doc_b", "dist", "edit_sim").collect().map(_.toSeq).toSet
+    val expected = rows(unbanded.filter(col("edit_sim") >= 0.8))
+    assert(expected == Set(Seq(100L, 101L, 10L, 0.8)), expected)
+    assert(rows(Dedup.q84(corpus)) == expected)
+  }
+
   test("clusters: transitive chain a-b, b-c collapses to one component") {
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 9L)).toDF("doc_a", "doc_b")
     val got = Dedup.clusters(pairs).collect()

@@ -395,6 +395,29 @@ class SourcesSpec extends GraftSpec {
     assert(!new java.io.File(path).listFiles().exists(_.getName.startsWith("part=a")))
   }
 
+  test("m02 a failed upsert releases its affected-partition cache") {
+    import org.apache.spark.sql.functions.{lit, raise_error}
+    val path = tmp("m02-fail")
+    Sources.insertOverwritePartitions(Tables.nation(spark, SF), path,
+      Seq("n_regionkey"))
+    // the payload column fails only while the merged rows are staged,
+    // after the affected-partition frame has been materialized (a range,
+    // not a local relation, so the optimizer cannot fold the error in)
+    val updates = spark.range(1).select(lit(0).as("n_nationkey"),
+      raise_error(lit("payload failure")).cast("string").as("n_name"),
+      lit(0).as("n_regionkey"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val err = intercept[Exception] {
+      Sources.upsertPartitioned(spark, path, updates,
+        keyCols = Seq("n_nationkey"), partitionCols = Seq("n_regionkey"),
+        staging = tmp("m02-fail-staging"))
+    }
+    assert(err.toString.contains("payload failure") ||
+      Option(err.getCause).exists(_.toString.contains("payload failure")), err)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"failed upsert left persisted RDDs behind: $leaked")
+  }
+
   test("s06 partitioned compaction preserves layout; flat compaction refuses partition dirs") {
     val nation = Tables.nation(spark, SF)
     val path = tmp("s06-part")

@@ -42,8 +42,8 @@ class SqlSurfaceSpec extends GraftSpec {
 
   test("pipeline operators are drivable through SQL text only (q41/q42 shapes)") {
     Sql.registerTables(spark, SF)
-    val views = Sql.registerPipelineSql(spark)
-    assert(views.contains("graft_jaccard_pairs") && views.contains("graft_minhash_pairs"))
+    assert(Sql.Registry.contains("graft_jaccard_pairs") &&
+      Sql.Registry.contains("graft_minhash_pairs"))
 
     // exact n-gram Jaccard near-dup (q41 shape), SQL text only — must
     // agree with the Scala API run on the same corpus
@@ -233,16 +233,13 @@ class SqlSurfaceSpec extends GraftSpec {
          WHERE n_urls > n_docs OR url_dup_rate < 0 OR url_dup_rate > 1""")
       .collect().isEmpty)
 
-    // iterative operators materialize on demand (clusters run a
-    // driver fixpoint loop, so they are tables, not lazy views)
-    val tables = Sql.materializePipelineTables(spark)
-    assert(tables.contains("graft_dedup_clusters"))
-    // q126's bloom fit is eager, so it rides the materialize call; its
-    // verdict column is the closed q109 status set
-    assert(tables.contains("graft_bloom_dedup"))
-    // PQ ANN rides the materialize call (sample collect before plan);
-    // every query reports a full ranked top-5
-    assert(tables.contains("graft_pq_ann"))
+    // iterative and fit-first operators resolve like any other name
+    // (clusters run a driver fixpoint loop, q126's bloom fit and the PQ
+    // codebook collect before their plans exist): their construction
+    // runs when a statement first references them
+    assert(Seq("graft_dedup_clusters", "graft_bloom_dedup", "graft_pq_ann")
+      .forall(Sql.Registry.contains))
+    // every PQ ANN query reports a full ranked top-5
     assert(spark.sql(
       """SELECT qid FROM graft_pq_ann
          GROUP BY qid HAVING count(*) <> 5 OR max(rk) <> 5""")
@@ -266,18 +263,69 @@ class SqlSurfaceSpec extends GraftSpec {
          WHERE c.doc_id IS NULL""").collect().isEmpty)
   }
 
-  test("CLI --with-clusters: one invocation reaches the iterative cluster operators") {
-    // the exact argv shape `graft.Sql --with-clusters <dir> <sql...>`
-    // takes, through the same cli() path main() calls
-    val r = Sql.cli(spark, Seq("--with-clusters", SF,
+  test("CLI: a fresh session answers the iterative cluster operators with no flag") {
+    // the exact argv shape `graft.Sql <dir> <sql...>` takes, through the
+    // same cli() path main() calls
+    val fresh = spark.newSession()
+    val r = Sql.cli(fresh, Seq(SF,
       """SELECT label, count(*) AS n FROM graft_dedup_clusters
          GROUP BY label HAVING count(*) > 1""")).collect()
     assert(r.nonEmpty)
-    // without the flag the cluster tables are not registered
+    // the name resolved on reference: only the lake tables are views
+    assert(fresh.catalog.listTables().collect().filter(_.isTemporary)
+      .map(_.name).toSet == Sql.TableNames.toSet)
+  }
+
+  /** Spark jobs started while `f` runs. */
+  private def jobsOf(f: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    try { f; org.apache.spark.ListenerBusDrain(sc) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  test("Sql.run of a statement naming no graft_* relation builds no operator") {
     val fresh = spark.newSession()
-    Sql.cli(fresh, Seq(SF, "SELECT 1"))
-    assert(!fresh.catalog.tableExists("graft_dedup_clusters"))
-    assert(fresh.catalog.tableExists("graft_minhash_pairs")) // lazy views are
+    val stmt = "SELECT count(*) FROM lineitem"
+    Sql.registerTables(fresh, SF)
+    val register = jobsOf(Sql.registerTables(fresh, SF))
+    val statement = jobsOf(fresh.sql(stmt).collect())
+    val viaRun = jobsOf(Sql.run(fresh, SF, stmt).collect())
+    assert(viaRun == register + statement,
+      s"Sql.run ran $viaRun jobs; registerTables $register + statement $statement")
+    assert(Pins.pending == 0)
+  }
+
+  test("a temp view shadows a registry name; an unknown graft_ name still fails") {
+    val fresh = spark.newSession()
+    val own = fresh.range(3).toDF("x")
+    own.createOrReplaceTempView("graft_hits")
+    own.createOrReplaceTempView("plain_hits")
+    // same answer and the same jobs as the plain view: q180 never built
+    val viaShadow = jobsOf(
+      assert(fresh.sql("SELECT sum(x) FROM graft_hits").collect()(0).getLong(0) == 3L))
+    val viaPlain = jobsOf(fresh.sql("SELECT sum(x) FROM plain_hits").collect())
+    assert(viaShadow == viaPlain)
+    assert(Pins.pending == 0)
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      fresh.sql("SELECT * FROM graft_nope"))
+    assert(e.getCondition == "TABLE_OR_VIEW_NOT_FOUND", e.getMessage)
+  }
+
+  test("every graft_* registry name resolves to its operator frame") {
+    Sql.registerTables(spark, SF)
+    assert(Sql.Registry.size == 122)
+    Sql.Registry.keys.toSeq.sorted.foreach { name =>
+      assert(spark.table(name).schema.nonEmpty, name)
+      Pins.release()
+    }
   }
 
   test("EXPLAIN and SHOW surfaces respond through SQL text") {
@@ -290,11 +338,10 @@ class SqlSurfaceSpec extends GraftSpec {
 
   test("round-16 views: substring family + overlap triad answer through SQL text") {
     Sql.registerTables(spark, SF)
-    val views = Sql.registerPipelineSql(spark)
     Seq("graft_substr_spans", "graft_substr_coverage", "graft_winnow_skew",
       "graft_substr_scrubbed", "graft_audio_overlap", "graft_image_overlap",
       "graft_audio_scrubbed")
-      .foreach(v => assert(views.contains(v), v))
+      .foreach(v => assert(Sql.Registry.contains(v), v))
     // the scrub length identity holds through the SQL surface too
     assert(spark.sql(
       """SELECT * FROM graft_substr_scrubbed
@@ -322,9 +369,8 @@ class SqlSurfaceSpec extends GraftSpec {
 
   test("round-18 views: video family answers through SQL text == the DataFrame API") {
     Sql.registerTables(spark, SF)
-    val views = Sql.registerPipelineSql(spark)
     Seq("graft_video_neardup", "graft_video_overlap", "graft_video_scrubbed")
-      .foreach(v => assert(views.contains(v), v))
+      .foreach(v => assert(Sql.Registry.contains(v), v))
     // the q212 frame-partition identity holds through the SQL surface
     assert(spark.sql(
       """SELECT * FROM graft_video_scrubbed
@@ -349,10 +395,9 @@ class SqlSurfaceSpec extends GraftSpec {
 
   test("round-12 views (q177–q182) answer through SQL text with their invariants") {
     Sql.registerTables(spark, SF)
-    val views = Sql.registerPipelineSql(spark)
     Seq("graft_semdedup", "graft_gopher_rules", "graft_epoch_schedule",
       "graft_hits", "graft_domain_weights", "graft_rejections")
-      .foreach(v => assert(views.contains(v), v))
+      .foreach(v => assert(Sql.Registry.contains(v), v))
     // gopher pass IS the conjunction of its five rules
     assert(spark.sql(
       """SELECT * FROM graft_gopher_rules
