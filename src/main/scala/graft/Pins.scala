@@ -18,9 +18,12 @@ import org.apache.spark.storage.StorageLevel
   *
   * [[pin]] makes the lifetime explicit: the frame persists exactly as
   * before AND registers here; the session's driving loop (Verify and
-  * Bench per query, the SQL CLI per statement, a serving layer per
-  * request) calls [[release]] once the query's consumers have
-  * materialized. Releasing is always CORRECT at any time — persist is
+  * Bench per query, a serving layer per request) calls [[release]]
+  * once the query's consumers have materialized. On the SQL path that
+  * owner is whoever materializes a [[Sql.run]] result: `Sql.run`
+  * returns a lazy frame and so cannot release the pins its `graft_*`
+  * relations take (the CLI's `main` stops its session after its one
+  * statement). Releasing is always CORRECT at any time — persist is
   * only a cache, the plan recomputes — so a forgotten release merely
   * matches the old behavior and an early release costs recompute,
   * never wrong answers.

@@ -240,6 +240,11 @@ object Sql {
       }
   }
 
+  /** Register `dir`'s tables ([[registerTables]]) and return `query`'s
+    * lazy frame. A `graft_*` relation the statement names is built while
+    * the statement is analyzed, and any [[Pins]] its operator takes stay
+    * cached past this call: the caller that materializes the result owns
+    * the [[Pins.release]] after it, as Verify and Bench do per query. */
   def run(spark: SparkSession, dir: String, query: String): DataFrame = {
     registerTables(spark, dir)
     spark.sql(query)

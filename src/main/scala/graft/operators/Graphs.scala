@@ -81,7 +81,17 @@ object Graphs {
   /** Fixed-iteration damped PageRank over a directed edge list
     * (src, dst). Every node must appear as a src (no dangling mass —
     * the q154 edge derivation guarantees it by construction); dangling
-    * nodes would silently lose their mass rather than redistribute. */
+    * nodes would silently lose their mass rather than redistribute.
+    *
+    * Broadcast mode cuts rounds LAZILY (see the plan comment below), so
+    * every round runs inside the caller's final action: its outermost
+    * broadcast exchange awaits the whole chain of per-round broadcast
+    * jobs. `spark.sql.broadcastTimeout` (default 300 s) therefore bounds
+    * the TOTAL multi-round runtime, not one round's collect, and the
+    * `iters` nested broadcast futures each hold a thread of the bounded
+    * broadcast-exchange pool while they wait. [[BroadcastNodeLimit]]
+    * keeps both far off at the sizes this mode serves; eager cuts (the
+    * co-partitioned mode) never had either limit. */
   def pagerank(edges: DataFrame, iters: Int = 10, alpha: Double = 0.85,
                broadcastNodeLimit: Long = BroadcastNodeLimit): DataFrame = {
     // Plan shape per round: the EDGE list (the only corpus-sized frame,
@@ -236,7 +246,10 @@ object Graphs {
     * (the q64/q154 lineage cut). Above [[BroadcastNodeLimit]] nodes
     * the hints drop away and the pinned edge list is cached
     * pre-partitioned on src — the co-partitioned path: per round only
-    * the label table and the (dst, lbl) partial counts shuffle. */
+    * the label table and the (dst, lbl) partial counts shuffle.
+    * Broadcast mode cuts rounds lazily, as [[pagerank]] does, with the
+    * same limits: `spark.sql.broadcastTimeout` bounds all rounds
+    * together and each nested round holds a broadcast-exchange thread. */
   def labelProp(edges: DataFrame, iters: Int = 5,
                 broadcastNodeLimit: Long = BroadcastNodeLimit): DataFrame = {
     // pin the input projection before symmetrizing: the union below

@@ -523,8 +523,10 @@ object Similarity {
   /** q46: embedding-cosine near-duplicate pairs (cos > 0.4, a<b).
     *
     * Exact all-pairs is O(n²) by definition; the scale questions are
-    * the per-pair cost and WHERE the n² runs. Two kernels, identical
-    * bit-exact output:
+    * the per-pair cost and WHERE the n² runs. One bounded collect of at
+    * most `maxRows` + 1 vectors picks the kernel (and is the broadcast
+    * table when it comes back short). Two kernels, identical bit-exact
+    * output:
     *
     *  - n ≤ `maxRows`: broadcast the normalized vector table (n×64
     *    doubles — the same memory class as a broadcast-hash-join side)
@@ -533,13 +535,14 @@ object Similarity {
     *  - n > `maxRows`: BLOCK-PARTITIONED distributed kernel — vectors
     *    hash into ⌈n/[[EmbedDedupBlockRows]]⌉ blocks, every block PAIR
     *    (ba ≤ bb) becomes one task comparing two bounded arrays with
-    *    the same primitive loop. No driver collect, no single-node
-    *    broadcast: shuffle is n·B/2 vector payloads and parallelism
-    *    grows as B², so the operator keeps running (it degrades in
-    *    COMPUTE, which is inherent to exact pair semantics) instead of
-    *    refusing. A Catalyst `aggregate`-lambda dot product would
-    *    interpret a 64-step fold per pair (~45 s at sf0.1); both
-    *    kernels run the tight while-loop instead.
+    *    the same primitive loop. No unbounded driver collect, no
+    *    single-node broadcast (one `count()` sizes the blocks): shuffle
+    *    is n·B/2 vector payloads and parallelism grows as B², so the
+    *    operator keeps running (it degrades in COMPUTE, which is
+    *    inherent to exact pair semantics) instead of refusing. A
+    *    Catalyst `aggregate`-lambda dot product would interpret a
+    *    64-step fold per pair (~45 s at sf0.1); both kernels run the
+    *    tight while-loop instead.
     *
     * Both kernels fold dot products left-to-right (and IEEE
     * multiplication is commutative bit-for-bit, so pair orientation
@@ -550,14 +553,18 @@ object Similarity {
           blockRows: Int = EmbedDedupBlockRows): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    // persist BEFORE the guard count so the count and the kernel below
-    // read one materialized scan of the source instead of two
+    // persist BEFORE the sizing collect so it and the kernel below read
+    // one materialized scan of the source instead of two
     val vecs = vecRows(embeddings)
       .transform(graft.Pins.pin)
-    val nRows = vecs.count()
+    // one bounded action sizes the input: at most cap + 1 rows reach the
+    // driver, and when fewer came back they ARE the broadcast table
+    // (cap stays below Int.MaxValue, the largest Dataset.limit)
+    val cap = math.min(maxRows, Int.MaxValue - 1L).toInt
+    val head = vecs.limit(cap + 1).collect()
     val pairs =
-      if (nRows <= maxRows) {
-        val bc = spark.sparkContext.broadcast(vecs.collect().sortBy(_._1))
+      if (head.length <= cap) {
+        val bc = spark.sparkContext.broadcast(head.sortBy(_._1))
         vecs.mapPartitions { it =>
           val all = bc.value
           it.flatMap { case (ida, va, na) =>
@@ -570,6 +577,7 @@ object Similarity {
           }
         }
       } else {
+        val nRows = vecs.count()
         val b = math.max(1L, (nRows + blockRows - 1) / blockRows).toInt
         val blocks = vecs
           .groupByKey { case (id, _, _) =>

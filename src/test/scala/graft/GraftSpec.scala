@@ -25,6 +25,21 @@ trait GraftSpec extends AnyFunSuite with BeforeAndAfterEach {
   /** Smallest driver-generated dataset — correctness, not throughput. */
   val SF = "/root/testdata/sf0.001"
 
+  /** Spark jobs started while `f` runs. */
+  def jobsOf(f: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    try { f; org.apache.spark.ListenerBusDrain(sc) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
+
   def formattedPlan(df: org.apache.spark.sql.DataFrame): String = {
     val out = new java.io.ByteArrayOutputStream()
     Console.withOut(new java.io.PrintStream(out))(df.explain("formatted"))

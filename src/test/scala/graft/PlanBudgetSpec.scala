@@ -20,6 +20,19 @@ class PlanBudgetSpec extends GraftSpec {
     assert(ran.codegenSpans >= 1, ran)  // final adaptive plan is codegen'd
   }
 
+  test("construction job budget: warm loads leave q46's sizing collect as the only eager job") {
+    val budget = Seq("q40_dedup_exact" -> 0, "q44_ann_cosine_topk" -> 0,
+      "q46_embed_dedup" -> 1, "q47_langid" -> 0, "q48_quality_score" -> 0,
+      "q05_multijoin" -> 0, "q136_range_join" -> 0)
+    budget.foreach { case (name, jobs) =>
+      val build = SparkEntry.queries(name)
+      build(spark, SF) // warm: each table's schema is inferred once
+      Pins.release()
+      assert(jobsOf(build(spark, SF)) == jobs, name)
+      Pins.release()
+    }
+  }
+
   test("q05 six-table join keeps every dimension broadcast") {
     val df = Relational.q05(Tables.region(spark, SF), Tables.nation(spark, SF),
       Tables.customer(spark, SF), Tables.orders(spark, SF),

@@ -276,26 +276,12 @@ class SqlSurfaceSpec extends GraftSpec {
       .map(_.name).toSet == Sql.TableNames.toSet)
   }
 
-  /** Spark jobs started while `f` runs. */
-  private def jobsOf(f: => Any): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(l)
-    try { f; org.apache.spark.ListenerBusDrain(sc) }
-    finally sc.removeSparkListener(l)
-    n.get
-  }
-
   test("Sql.run of a statement naming no graft_* relation builds no operator") {
     val fresh = spark.newSession()
     val stmt = "SELECT count(*) FROM lineitem"
     Sql.registerTables(fresh, SF)
     val register = jobsOf(Sql.registerTables(fresh, SF))
+    assert(register == 0, s"a warm registerTables ran $register jobs")
     val statement = jobsOf(fresh.sql(stmt).collect())
     val viaRun = jobsOf(Sql.run(fresh, SF, stmt).collect())
     assert(viaRun == register + statement,
