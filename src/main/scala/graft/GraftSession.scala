@@ -12,8 +12,10 @@ import org.apache.spark.sql.SparkSession
   *     default would make every local shuffle 6× over-partitioned;
   *     on a real cluster this is set to ~2-3× total cores),
   *   - UTC session timezone (oracle parity, SURVEY.md §6),
-  *   - nanos-as-long so the driver's TIMESTAMP(NANOS) events parquet
-  *     reads vectorized (ns→µs conversion in Events.withTs).
+  *   - nanos-as-long, so an events parquet written as TIMESTAMP(NANOS)
+  *     by another engine reads as int64 nanos that Events.withTs
+  *     converts to µs (the generated tables are TIMESTAMP(MICROS)).
+  *     This builder is the conf's one owner: no loader sets it.
   */
 object GraftSession {
 

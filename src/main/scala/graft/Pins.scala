@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.storage.StorageLevel
 
 /** Ownership registry for intra-plan persists.
@@ -42,6 +42,15 @@ object Pins {
     live.add(ds)
     ds
   }
+
+  /** Pin `df`, then sort it globally by `by`. The sort's range
+    * partitioner samples its child before the real exchange, and with
+    * no shuffle boundary in between the sample pass re-executes the
+    * whole upstream pipeline (r20 StageProbe: two near-identical heavy
+    * stages reading the same upstream exchange, one sample pass with
+    * no shuffle write and one real). Pinned, the pipeline materializes
+    * once and the sort re-reads it. */
+  def pinSorted(df: DataFrame, by: Column*): DataFrame = pin(df).orderBy(by: _*)
 
   /** Unpersist every registered pin (non-blocking). Call after a
     * query's consumers have materialized. Unpersisting a frame that

@@ -35,13 +35,7 @@ object Sql {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     TableNames.filter { name =>
       val exists = fs.exists(new Path(s"$dir/$name.parquet"))
-      if (exists) {
-        val df = name match {
-          case "events" => Tables.events(spark, dir) // nanos→µs handling
-          case _        => Tables.table(spark, dir, name)
-        }
-        df.createOrReplaceTempView(name)
-      }
+      if (exists) Tables.table(spark, dir, name).createOrReplaceTempView(name)
       exists
     }
   }

@@ -72,13 +72,11 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame       = table(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame     = table(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame   = table(s, d, "lineitem")
-  /** `events.ts` is parquet TIMESTAMP(NANOS), which Spark's vectorized
-    * reader rejects — read it as raw int64 nanos (legacy conf) and let
-    * [[graft.operators.Events.withTs]] convert to µs TimestampType. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    table(s, d, "events")
-  }
+  /** `events.ts` is parquet TIMESTAMP(MICROS); under any reader conf
+    * [[graft.operators.Events.withTs]] normalizes it to µs
+    * TimestampType. The load reads with the caller's confs and changes
+    * none of them. */
+  def events(s: SparkSession, d: String): DataFrame     = table(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame  = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }

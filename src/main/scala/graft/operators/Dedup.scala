@@ -202,26 +202,13 @@ object Dedup {
     * only, as the uncollapsed join never saw gram-less docs. */
   def jaccardPairs(documents: DataFrame, t: Double): DataFrame = {
     val (repPairs, members, g) = jaccardRepPairs(documents, t)
-    val ma = members.select(col("rep").as("doc_a"), col("doc_id").as("da"))
-    val mb = members.select(col("rep").as("doc_b"), col("doc_id").as("db"))
-    val swap = col("da") > col("db")
-    val cross = repPairs.join(ma, "doc_a").join(mb, "doc_b")
-      .select(
-        least(col("da"), col("db")).as("doc_a"),
-        greatest(col("da"), col("db")).as("doc_b"),
-        col("common"),
-        when(swap, col("nb")).otherwise(col("na")).as("na"),
-        when(swap, col("na")).otherwise(col("nb")).as("nb"),
-        col("jaccard"))
     val sizes = g.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val cm = members.join(
-      sizes.select(col("doc_id").as("rep"), col("n")), "rep")
-    val within = cm.as("x").join(cm.as("y"),
-        col("x.rep") === col("y.rep") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("x.n").as("common"), col("x.n").as("na"), col("x.n").as("nb"),
-        lit(1.0).as("jaccard"))
-    cross.unionAll(within).orderBy(col("doc_a"), col("doc_b"))
+    expandPairs(repPairs, members, Seq("common", "na", "nb", "jaccard"),
+        mirrored = Map("na" -> col("nb"), "nb" -> col("na")))
+      .unionAll(withinCliquePairs(members, Some(sizes),
+        Seq(col("n").as("common"), col("n").as("na"), col("n").as("nb"),
+          lit(1.0).as("jaccard"))))
+      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** Sparse near-dup EDGE set whose connected components (and min
@@ -302,20 +289,15 @@ object Dedup {
       .filter(col("edit_sim") >= simFloor)
       .select(col("doc_a"), col("doc_b"), col("dist"), col("edit_sim"))
     // dist/edit_sim are symmetric, so the least/greatest id swap in
-    // the expansion carries them unchanged.
-    // PINNED before the global sort (r20): the final orderBy's range
-    // partitioner SAMPLES its child, and the child here is the DP
-    // pipeline behind broadcast joins only — no shuffle boundary — so
-    // the whole Levenshtein stage executed TWICE, once for the sample
-    // pass and once for the real exchange (StageProbe r20: two
-    // byte-identical ~54 s stages both reading the same 60 KB of
-    // candidate shuffle). The pin is pair-sized; the sample pass
-    // populates it and the sort re-reads it.
-    graft.Pins.pin(
+    // the expansion carries them unchanged. Pinned before the sort: the
+    // child is the DP pipeline behind broadcast joins only, so the
+    // sample pass ran the whole Levenshtein stage twice (r20: two
+    // byte-identical ~54 s stages); the pin is pair-sized.
+    graft.Pins.pinSorted(
       expandPairs(verified, members, Seq("dist", "edit_sim"))
-        .unionAll(withinCliquePairs(members, g,
-          Seq(lit(0L).as("dist"), lit(1.0).as("edit_sim")))))
-      .orderBy(col("doc_a"), col("doc_b"))
+        .unionAll(withinCliquePairs(members, Some(shingledReps(g)),
+          Seq(lit(0L).as("dist"), lit(1.0).as("edit_sim")))),
+      col("doc_a"), col("doc_b"))
   }
 
   /** Connected components over near-dup pairs by iterative min-label
@@ -1159,31 +1141,46 @@ object Dedup {
 
   /** Re-expand rep-level near-dup pairs through the members map:
     * every (member of clique a) × (member of clique b) pair, normalized
-    * to doc_a < doc_b. Stats columns (jaccard/hamming/…) carry over
-    * unchanged — byte-identical normalized texts have identical shingle
-    * sets and fingerprints, so each member pair's true stats equal its
-    * rep pair's. */
-  private def expandPairs(repPairs: DataFrame, members: DataFrame,
-                          stats: Seq[String]): DataFrame = {
+    * to doc_a < doc_b. Stats columns carry over — byte-identical
+    * normalized texts have identical shingle sets, fingerprints and
+    * renders, so each member pair's true stats equal its rep pair's —
+    * except that a stat named in `mirrored` is read from the other
+    * side when the member ids cross their reps' order: an offset
+    * negates, na and nb trade places. */
+  private[graft] def expandPairs(repPairs: DataFrame, members: DataFrame,
+                                 stats: Seq[String],
+                                 mirrored: Map[String, Column] = Map.empty)
+      : DataFrame = {
     val ma = members.select(col("rep").as("doc_a"), col("doc_id").as("da"))
     val mb = members.select(col("rep").as("doc_b"), col("doc_id").as("db"))
     repPairs.join(ma, "doc_a").join(mb, "doc_b")
       .select(least(col("da"), col("db")).as("doc_a") +:
-        greatest(col("da"), col("db")).as("doc_b") +: stats.map(col): _*)
+        greatest(col("da"), col("db")).as("doc_b") +: stats.map(s =>
+          mirrored.get(s).fold(col(s))(m =>
+            when(col("da") <= col("db"), col(s)).otherwise(m).as(s))): _*)
   }
 
-  /** Within-clique pairs over cliques selected by `eligibleReps` (one
-    * doc_id column): members of the same clique are exact duplicates —
-    * emitted with caller-supplied constant stats (J = 1.0 / Hamming 0). */
-  private def withinCliquePairs(members: DataFrame, eligibleReps: DataFrame,
-                                stats: Seq[Column]): DataFrame = {
-    val cm = members.join(
-      eligibleReps.select(col("doc_id").as("rep")).distinct(), Seq("rep"))
-    cm.as("x").join(cm.as("y"),
-        col("x.rep") === col("y.rep") && col("x.doc_id") < col("y.doc_id"))
+  /** Within-clique pairs: members of the same clique are exact
+    * duplicates, emitted with caller-supplied `stats`. With `eligible`
+    * (one row per rep, keyed `doc_id`) only its cliques pair up, and
+    * `stats` may read its per-rep columns — a rep's own overlap stats,
+    * filtered by the gate cross pairs pass; without it every clique
+    * pairs up. */
+  private[graft] def withinCliquePairs(members: DataFrame,
+                                       eligible: Option[DataFrame],
+                                       stats: Seq[Column]): DataFrame = {
+    val pairs = members.as("x").join(members.as("y"),
+      col("x.rep") === col("y.rep") && col("x.doc_id") < col("y.doc_id"))
+    eligible.fold(pairs)(e => pairs.join(
+        e.withColumnRenamed("doc_id", "erep"), col("x.rep") === col("erep")))
       .select(col("x.doc_id").as("doc_a") +: col("y.doc_id").as("doc_b") +:
         stats: _*)
   }
+
+  /** The reps with at least one shingle: the cliques the uncollapsed
+    * Jaccard plans paired up (they never saw gram-less docs). */
+  private def shingledReps(g: DataFrame): DataFrame =
+    g.select(col("doc_id")).distinct()
 
   val MinhashK = 64   // permutations
   val Bands    = 16   // 16 bands × 4 rows
@@ -1267,7 +1264,8 @@ object Dedup {
     // definition — but only for cliques that HAVE shingles (≥ 3 words),
     // matching the uncollapsed plan, which never saw shingle-less docs
     expandPairs(repPairs, members, Seq("jaccard"))
-      .unionAll(withinCliquePairs(members, g, Seq(lit(1.0).as("jaccard"))))
+      .unionAll(withinCliquePairs(members, Some(shingledReps(g)),
+        Seq(lit(1.0).as("jaccard"))))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -1356,9 +1354,36 @@ object Dedup {
       .select(col("doc_id"), fp.as("simhash"))
   }
 
-  /** q43: SimHash near-dup pairs — block on 4×16-bit bands (two docs with
-    * Hamming distance ≤ 3 must share at least one band), verify with
-    * bit_count(xor) ≤ 3. */
+  /** 64-bit-hash near-dup pairs over a (doc_id, `hashCol`) frame:
+    * 4×16-bit bands — two hashes with Hamming distance ≤ 3 must agree
+    * on at least one full band (pigeonhole) — as an equi-join, then
+    * exact verify with bit_count(xor) ≤ maxHamming. Only (doc_id,
+    * hash) rows shuffle. The self-join reads `hashes` twice, so
+    * callers pass a pinned frame: unpinned, the pipeline behind the
+    * hashes (a codec round-trip for the media lanes q93/q198/q210)
+    * ran 2-3× per query (r19 StageProbe: three ~45-100 s codec
+    * stages in one q94 run). */
+  private[graft] def hammingBandPairs(hashes: DataFrame, hashCol: String,
+                                      maxHamming: Int): DataFrame = {
+    val banded = hashes.select(col("doc_id"), col(hashCol),
+      explode(array((0 until 4).map(j =>
+        struct(lit(j).as("band"),
+          shiftright(col(hashCol), 16 * j).bitwiseAND(0xFFFFL).as("band_key"))): _*))
+        .as("bk"))
+      .select(col("doc_id"), col(hashCol), col("bk.band").as("band"),
+        col("bk.band_key").as("band_key"))
+    banded.as("a")
+      .join(banded.as("b"),
+        col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
+        col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+        bit_count(col(s"a.$hashCol").bitwiseXOR(col(s"b.$hashCol"))).as("hamming"))
+      .distinct()
+      .filter(col("hamming") <= maxHamming)
+  }
+
+  /** q43: SimHash near-dup pairs — [[hammingBandPairs]] at Hamming
+    * distance ≤ 3. */
   def q43(documents: DataFrame): DataFrame = {
     // exact-dup collapse (see [[exactReps]]): a clique of N identical
     // docs is ONE banding row instead of N quadratically-colliding ones
@@ -1368,27 +1393,13 @@ object Dedup {
     // eligible-rep set — unpinned, the token-explode + 64-column
     // conditional-sum aggregation replayed three times per run
     val sh = graft.Pins.pin(simhash(reps))
-    val banded = sh.select(col("doc_id"), col("simhash"),
-      explode(array((0 until 4).map(j =>
-        struct(lit(j).as("band"),
-          shiftright(col("simhash"), 16 * j).bitwiseAND(0xFFFFL).as("band_key"))): _*))
-        .as("bk"))
-      .select(col("doc_id"), col("simhash"), col("bk.band").as("band"),
-        col("bk.band_key").as("band_key"))
-    val repPairs = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= 3)
+    val repPairs = hammingBandPairs(sh, "simhash", 3)
     // identical normalized texts have identical fingerprints: cross-
     // clique pairs carry the rep pair's Hamming distance, within-clique
     // pairs are Hamming 0 (every doc has a simhash, so every clique is
     // eligible)
     expandPairs(repPairs, members, Seq("hamming"))
-      .unionAll(withinCliquePairs(members, sh,
+      .unionAll(withinCliquePairs(members, Some(sh.select(col("doc_id"))),
         Seq(lit(0).cast("integer").as("hamming"))))
       .orderBy(col("doc_a"), col("doc_b"))
   }

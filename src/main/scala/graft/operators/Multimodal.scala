@@ -2,7 +2,9 @@ package graft.operators
 
 import java.awt.image.BufferedImage
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing (SURVEY.md §2c): media as opaque binary
@@ -28,7 +30,33 @@ import org.apache.spark.sql.functions._
   *    the output schema, not a driver loop;
   *  - q93's perceptual-hash blocking shuffles 8-byte hashes, never
   *    pixels, and reuses q43's Hamming-band machinery
-  *    (Dedup.scala:303) so candidate generation is an equi-join.
+  *    ([[Dedup.hammingBandPairs]]) so candidate generation is an
+  *    equi-join.
+  *
+  * The pair and scrub lanes (q93, q198, q204–q208, q210–q212) share one
+  * rep-collapse skeleton:
+  *  - [[renderReps]]: [[Dedup.exactReps]], then each rep's media is
+  *    rendered ONCE — identical normalized texts render identical
+  *    media, so a clique of N byte-variant copies costs one codec
+  *    round-trip and one fingerprint row, not N quadratically
+  *    colliding ones;
+  *  - a pair kernel over the reps' (doc_id, payload) frame, whose
+  *    codec stage is [[perPayload]]; only fingerprints, positions and
+  *    ids shuffle;
+  *  - [[cliquePairs]]: cross pairs expand through the members map
+  *    ([[Dedup.expandPairs]]; an offset negates when member ids cross
+  *    their reps' order) and members of one clique pair up at offset
+  *    0 ([[Dedup.withinCliquePairs]]) with the rep's own full-overlap
+  *    stats, under the SAME gate as cross pairs (r15 ADVICE #5: within
+  *    rows used to bypass it);
+  *  - or, in the scrub lanes, [[scrubReps]]: the doc_b (larger-id)
+  *    side of each pair is cut, so shared content survives in exactly
+  *    one place (the q203 survivorship); per-rep cut lists join the
+  *    pinned media, so only CUT reps decode and re-encode, untouched
+  *    reps pass through byte-identical, and members inherit their
+  *    rep's verdict (identical media carries identical cuts);
+  *  - outputs whose sort would re-run a codec stage go through
+  *    [[graft.Pins.pinSorted]].
   */
 object Multimodal {
 
@@ -41,11 +69,11 @@ object Multimodal {
   case class ResizedRow(doc_id: Long, width: Int, height: Int,
                         n_bytes: Long, checksum: Long)
   case class FrameRow(doc_id: Long, frame_idx: Int, frame_checksum: Long)
-  // private[graft], not private: Spark's generated encoder code must be
-  // able to call the accessors; object-private compiles to a private
-  // nested class, Janino fails, and the encoder silently falls back to
-  // the interpreted path for every row
-  private[graft] case class PHashRow(doc_id: Long, phash: Long)
+  // The row classes further down are private[graft], not private:
+  // Spark's generated encoder code must be able to call the accessors;
+  // object-private compiles to a private nested class, Janino fails,
+  // and the encoder silently falls back to the interpreted path for
+  // every row
 
   val BatchSize = 64
 
@@ -418,22 +446,19 @@ object Multimodal {
       .map { case (id, text) =>
         val b = text.getBytes("UTF-8")
         val h = checksum(b)
+        val w = 16 + (h % 16).toInt
+        val ht = 16 + ((h / 16) % 16).toInt
         val mt = if (id % 3 == 0) "video" else if (id % 3 == 1) "image" else "audio"
         mt match {
           case "image" =>
-            val w = 16 + (h % 16).toInt
-            val ht = 16 + ((h / 16) % 16).toInt
             MediaRow(id, codec.encode(renderImage(text, w, ht)),
               MediaMeta("image", w, ht, n_frames = 1, sample_rate = 0))
           case "audio" =>
             val samples = renderAudio(text, AudioRate, AudioSamples)
-            MediaRow(id, audio.encode(samples, AudioRate),
-              MediaMeta("audio",
-                width = 16 + (h % 16).toInt, height = 16 + ((h / 16) % 16).toInt,
-                n_frames = samples.length, sample_rate = AudioRate))
+            MediaRow(id, audio.encode(samples, AudioRate), MediaMeta("audio",
+              w, ht, n_frames = samples.length, sample_rate = AudioRate))
           case _ =>
-            MediaRow(id, b, MediaMeta(mt,
-              width = 16 + (h % 16).toInt, height = 16 + ((h / 16) % 16).toInt,
+            MediaRow(id, b, MediaMeta(mt, w, ht,
               n_frames = 8 + (h % 8).toInt, sample_rate = 0))
         }
       }
@@ -467,7 +492,7 @@ object Multimodal {
           codec: MediaCodec = ImageIoCodec,
           audio: AudioCodec = WavCodec): DataFrame = {
     import spark.implicits._
-    mediaTable(spark, documents, codec, audio)
+    val features = mediaTable(spark, documents, codec, audio)
       .select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
@@ -495,14 +520,7 @@ object Multimodal {
         }
       }
       .toDF()
-    // PINNED before the final orderBy (r20): the global sort's range
-    // partitioner SAMPLES its child, and with no shuffle boundary in
-    // between the sample pass re-executed the whole codec pipeline —
-    // StageProbe: two near-identical heavy stages reading the same
-    // upstream exchange, one sample (no shuffle write) + one real.
-    // The pin materializes once; the sort re-reads it.
-      .transform(graft.Pins.pin)
-      .orderBy(col("doc_id"))
+    graft.Pins.pinSorted(features, col("doc_id"))
   }
 
   /** q52: resize to a fixed target box. Image rows run the REAL
@@ -514,7 +532,7 @@ object Multimodal {
                 maxW: Int = 16, maxH: Int = 16,
                 codec: MediaCodec = ImageIoCodec): DataFrame = {
     import spark.implicits._
-    mediaTable(spark, documents, codec)
+    val resized = mediaTable(spark, documents, codec)
       .select(col("doc_id"), col("payload"), col("meta.width"), col("meta.height"))
       .as[(Long, Array[Byte], Int, Int)]
       .mapPartitions { it =>
@@ -534,10 +552,7 @@ object Multimodal {
         })
       }
       .toDF()
-      // pinned before the final orderBy (r20): see the q51 note — the
-      // range sampling re-executed the codec stage
-      .transform(graft.Pins.pin)
-      .orderBy(col("doc_id"))
+    graft.Pins.pinSorted(resized, col("doc_id"))
   }
 
   /** Length-prefixed frame container (4-byte big-endian size before
@@ -571,7 +586,6 @@ object Multimodal {
     if (p != bytes.length) Nil else out.result()
   }
 
-  // private[graft] for the same encoder-codegen reason as [[PHashRow]]
   private[graft] case class FrameOut(doc_id: Long, frame_idx: Int, width: Int,
                                      height: Int, frame_bytes: Long)
 
@@ -593,7 +607,7 @@ object Multimodal {
                      video: Option[VideoCodec] = None): DataFrame = {
     import spark.implicits._
     val vc = video.getOrElse(FramedCodec(codec))
-    mediaTable(spark, documents, codec)
+    val frames = mediaTable(spark, documents, codec)
       .filter(col("meta.media_type") === "video")
       .select(col("doc_id"), col("payload"), col("meta.n_frames"))
       .as[(Long, Array[Byte], Int)]
@@ -613,108 +627,136 @@ object Multimodal {
         })
       }
       .toDF()
-      // pinned before the final orderBy (r20): see the q51 note
-      .transform(graft.Pins.pin)
-      .orderBy(col("doc_id"), col("frame_idx"))
+    graft.Pins.pinSorted(frames, col("doc_id"), col("frame_idx"))
+  }
+
+  // ------------------------------------------------ rep-collapse skeleton
+
+  /** [[Dedup.exactReps]], then `render` once per rep's text. Returns
+    * ((doc_id, `valueCol`) per rep, members map). The render is a
+    * CPU-bound codec stage: like [[mediaTable]] it spreads across every
+    * core regardless of the scan's partitioning, and batches per
+    * partition. */
+  private def renderReps[T: TypeTag](documents: DataFrame, valueCol: String)(
+      render: String => T): (DataFrame, DataFrame) = {
+    val spark = documents.sparkSession
+    import spark.implicits._
+    val (reps, members) = Dedup.exactReps(documents)
+    val rendered = reps.select(col("doc_id"), col("text"))
+      .repartition(spark.sparkContext.defaultParallelism)
+      .as[(Long, String)]
+      .mapPartitions { it =>
+        it.grouped(BatchSize).flatMap(_.map { case (id, text) =>
+          (id, render(text))
+        })
+      }
+      .toDF("doc_id", valueCol)
+    (rendered, members)
+  }
+
+  /** The batched codec stage over a (doc_id, payload) frame: `f` runs
+    * once per row, partition-local, in batches of [[BatchSize]] (the
+    * unit a codec amortizes setup over); payloads never shuffle. */
+  private def perPayload[T <: Product : TypeTag](media: DataFrame)(
+      f: (Long, Array[Byte]) => Iterable[T]): Dataset[T] = {
+    val spark = media.sparkSession
+    import spark.implicits._
+    media.select(col("doc_id"), col("payload"))
+      .as[(Long, Array[Byte])]
+      .mapPartitions(_.grouped(BatchSize).flatMap(_.flatMap { case (id, b) =>
+        f(id, b)
+      }))
+  }
+
+  /** Rep pairs expanded to member pairs, sorted by (doc_a, doc_b,
+    * `offsets`): cross pairs carry `offsets` and `stats`, an offset
+    * negating when member ids cross their reps' order; members of one
+    * clique pair up at offset 0 with `within` stats, over the cliques
+    * `eligible` keeps ([[Dedup.withinCliquePairs]]). */
+  private def cliquePairs(repPairs: DataFrame, members: DataFrame,
+                          offsets: Seq[String], stats: Seq[String],
+                          eligible: Option[DataFrame],
+                          within: Seq[Column]): DataFrame =
+    Dedup.expandPairs(repPairs, members, offsets ++ stats,
+        offsets.map(o => o -> -col(o)).toMap)
+      .unionAll(Dedup.withinCliquePairs(members, eligible,
+        offsets.map(lit(0).as(_)) ++ within))
+      .orderBy((Seq("doc_a", "doc_b") ++ offsets).map(col): _*)
+
+  /** Whole-asset perceptual lanes (q93/q198/q210): cross-clique pairs
+    * inherit the rep pair's Hamming distance (identical media per
+    * clique); within-clique pairs are Hamming 0, and every clique is
+    * eligible because every doc renders. */
+  private def hammingCliques(repPairs: DataFrame, members: DataFrame): DataFrame =
+    cliquePairs(repPairs, members, Nil, Seq("hamming"), None,
+      Seq(lit(0).as("hamming")))
+
+  /** The scrub lanes' tail (q206/q208/q212): render and pin each rep's
+    * media (the pair kernel and the cut join both read it), let `cuts`
+    * run the lane's pair kernel over it and return (doc_id, cut
+    * columns…) rows for the doc_b side, collect each rep's cuts, and
+    * `rewrite` each (rep, payload, cuts) row — cuts are None for an
+    * untouched rep — into (rep, payload, stats…) named `outCols`.
+    * Members take their rep's row. */
+  private def scrubReps[C: TypeTag, R <: Product : TypeTag](
+      documents: DataFrame, render: String => Array[Byte],
+      outCols: Seq[String])(cuts: DataFrame => DataFrame)(
+      rewrite: ((Long, Array[Byte], Option[Seq[C]])) => R): DataFrame = {
+    val spark = documents.sparkSession
+    import spark.implicits._
+    val (rendered, members) = renderReps(documents, "payload")(render)
+    val media = graft.Pins.pin(rendered)
+    val cutRows = cuts(media)
+    val perRep = cutRows.groupBy(col("doc_id"))
+      // _1.._n field names so the tuple decoder below resolves
+      .agg(collect_list(struct(cutRows.columns.tail.zipWithIndex.map {
+        case (c, i) => col(c).as(s"_${i + 1}")
+      }: _*)).as("iv"))
+    val repOut = media.join(perRep, Seq("doc_id"), "left_outer")
+      .as[(Long, Array[Byte], Option[Seq[C]])]
+      .mapPartitions(it => it.grouped(BatchSize).flatMap(_.map(rewrite)))
+      .toDF("rep" +: outCols: _*)
+    graft.Pins.pinSorted(members.join(repOut, "rep")
+      .select(("doc_id" +: outCols).map(col): _*), col("doc_id"))
+  }
+
+  // ------------------------------------------------ q93 image near-dup
+
+  /** The q93 thumbnail: [[renderImage]] at dims derived from the
+    * NORMALIZED token stream (lowercased, sorted), not the raw bytes,
+    * so byte-level variants of the same content (case, token order)
+    * render pixel-identical thumbnails — the perceptual contract —
+    * while content changes move the hash. */
+  private[graft] def thumbnail(text: String): BufferedImage = {
+    val h = checksum(
+      text.toLowerCase.trim.split(" ").sorted.mkString(" ").getBytes("UTF-8"))
+    renderImage(text, 16 + (h % 16).toInt, 16 + ((h / 16) % 16).toInt)
+  }
+
+  /** The full codec round-trip to one 64-bit perceptual hash:
+    * [[thumbnail]] → REAL PNG encode → REAL decode → [[dHash]]. */
+  private[graft] def phashOf(text: String): Long =
+    dHash(decodeImage(encodePng(thumbnail(text))).get._1)
+
+  /** Rep-level core of [[q93]]: dHash + Hamming banding over the reps.
+    * Returns (verified rep pairs with hamming, members map). */
+  private def phashRepPairs(documents: DataFrame,
+                            maxHamming: Int): (DataFrame, DataFrame) = {
+    val (ph, members) = renderReps(documents, "phash")(phashOf)
+    (Dedup.hammingBandPairs(graft.Pins.pin(ph), "phash", maxHamming), members)
   }
 
   /** q93: PERCEPTUAL near-dup pairs over the corpus' rendered
     * thumbnails — the pass that still sees a duplicate after one
     * re-encode/resize has hidden it from byte identity (q79). Per
-    * document: render → REAL PNG encode → REAL decode → 64-bit [[dHash]]
-    * over the box-averaged 9×8 grayscale thumbnail. Candidate blocking
-    * is q43's Hamming-band machinery verbatim (Dedup.scala:303): 4×16-bit
-    * bands — two hashes with Hamming distance ≤ 3 must agree on at least
-    * one full band (pigeonhole) — then exact verify with
+    * rep: [[phashOf]]; candidate blocking is q43's Hamming-band
+    * machinery ([[Dedup.hammingBandPairs]]), then exact verify with
     * bit_count(xor) ≤ maxHamming. Only (doc_id, phash) pairs shuffle;
     * pixels and payloads never leave their partition. */
-  /** The full codec round-trip to one 64-bit perceptual hash: render →
-    * REAL PNG encode → REAL decode → [[dHash]]. Render dimensions
-    * derive from the NORMALIZED token stream (lowercased, sorted), not
-    * the raw bytes, so byte-level variants of the same content (case,
-    * token order) produce pixel-identical thumbnails — the perceptual
-    * contract — while content changes move the hash. */
-  private[graft] def phashOf(text: String): Long = {
-    val h = checksum(
-      text.toLowerCase.trim.split(" ").sorted.mkString(" ").getBytes("UTF-8"))
-    val w = 16 + (h % 16).toInt
-    val ht = 16 + ((h / 16) % 16).toInt
-    val (img, _) = decodeImage(encodePng(renderImage(text, w, ht))).get
-    dHash(img)
-  }
-
-  /** Rep-level core of [[q93]]: exact-dup collapse (Dedup.exactReps —
-    * identical normalized texts render pixel-identical thumbnails, so
-    * a clique of N byte-variant copies costs ONE codec round-trip and
-    * ONE banding row instead of N quadratically-colliding ones), then
-    * dHash + Hamming banding over the reps. Returns (verified rep
-    * pairs with hamming, members map). */
-  private def phashRepPairs(spark: SparkSession, documents: DataFrame,
-                            maxHamming: Int): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val (reps, members) = graft.operators.Dedup.exactReps(documents)
-    val ph = reps
-      .select(col("doc_id"), col("text"))
-      // CPU-bound codec stage: same parallelism rationale as mediaTable
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.grouped(BatchSize).flatMap(_.map { case (id, text) =>
-          PHashRow(id, phashOf(text))
-        })
-      }
-      .toDF()
-      // pinned: the band self-join references this frame TWICE (a and
-      // b sides), and q94's cluster propagation persists the pair
-      // frame whose single materialization still contains both sides —
-      // unpinned, the render→PNG→decode→dHash pipeline ran 2-3× per
-      // query (r19 StageProbe: three ~45-100 s codec stages in one
-      // q94 run; guide §2.4)
-      .transform(graft.Pins.pin)
-    (hammingBandPairs(ph, "phash", maxHamming), members)
-  }
-
-  /** q43's Hamming-band candidate machinery over any (doc_id, <hash>)
-    * frame: 4×16-bit bands — two 64-bit hashes with Hamming distance
-    * ≤ 3 must agree on at least one full band (pigeonhole) — then
-    * exact verify with bit_count(xor) ≤ maxHamming. Only (doc_id,
-    * hash) rows shuffle. Shared by the image (q93) and audio (q198)
-    * perceptual near-dup passes. */
-  private def hammingBandPairs(hashes: DataFrame, hashCol: String,
-                               maxHamming: Int): DataFrame = {
-    val banded = hashes.select(col("doc_id"), col(hashCol),
-      explode(array((0 until 4).map(j =>
-        struct(lit(j).as("band"),
-          shiftright(col(hashCol), 16 * j).bitwiseAND(0xFFFFL).as("band_key"))): _*))
-        .as("bk"))
-      .select(col("doc_id"), col(hashCol), col("bk.band").as("band"),
-        col("bk.band_key").as("band_key"))
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        bit_count(col(s"a.$hashCol").bitwiseXOR(col(s"b.$hashCol"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
-
   def q93(spark: SparkSession, documents: DataFrame,
           maxHamming: Int = 3): DataFrame = {
-    val (repPairs, members) = phashRepPairs(spark, documents, maxHamming)
-    // cross-clique pairs inherit the rep pair's Hamming distance
-    // (identical thumbnails per clique); within-clique pairs are
-    // Hamming 0 — every doc renders, so every clique is eligible
-    val ma = members.select(col("rep").as("doc_a"), col("doc_id").as("da"))
-    val mb = members.select(col("rep").as("doc_b"), col("doc_id").as("db"))
-    val cross = repPairs.join(ma, "doc_a").join(mb, "doc_b")
-      .select(least(col("da"), col("db")).as("doc_a"),
-        greatest(col("da"), col("db")).as("doc_b"), col("hamming"))
-    val within = members.as("x").join(members.as("y"),
-        col("x.rep") === col("y.rep") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        lit(0).cast("integer").as("hamming"))
-    cross.unionAll(within).orderBy(col("doc_a"), col("doc_b"))
+    val (repPairs, members) = phashRepPairs(documents, maxHamming)
+    hammingCliques(repPairs, members)
   }
 
   /** Sparse perceptual near-dup EDGE set for cluster consumers (q94):
@@ -722,9 +764,8 @@ object Multimodal {
     * clique member — components, vertex set, and min labels equal
     * those of the full [[q93]] pair list (every doc renders, so every
     * multi-member clique is Hamming-0-connected in both). */
-  private def phashEdges(spark: SparkSession, documents: DataFrame,
-                         maxHamming: Int): DataFrame = {
-    val (repPairs, members) = phashRepPairs(spark, documents, maxHamming)
+  private def phashEdges(documents: DataFrame, maxHamming: Int): DataFrame = {
+    val (repPairs, members) = phashRepPairs(documents, maxHamming)
     val star = members.filter(col("doc_id") =!= col("rep"))
       .select(col("doc_id").as("doc_a"), col("rep").as("doc_b"))
     repPairs.select(col("doc_a"), col("doc_b")).unionAll(star)
@@ -756,7 +797,7 @@ object Multimodal {
     // propagate over the sparse rep-pair + star edge set (round 8):
     // identical components and labels, linear edges per clique
     val labels = graft.operators.Dedup.clusters(
-      phashEdges(spark, documents, maxHamming))
+      phashEdges(documents, maxHamming))
     exact
       .join(exactCanon, "dg")
       .join(labels, Seq("doc_id"), "left_outer")
@@ -770,10 +811,8 @@ object Multimodal {
 
   // ---------------------------------------------------------------- q197/q198 audio
 
-  // private[graft] for the same encoder-codegen reason as [[PHashRow]]
   private[graft] case class AudioWin(doc_id: Long, win_idx: Int,
                                      n_samples: Int, rms_q: Long, zcr: Long)
-  private[graft] case class AFingRow(doc_id: Long, afp: Long)
 
   /** q197: audio WINDOW SAMPLING — the q53 analog for the audio axis:
     * each audio doc's WAV payload is REALLY DECODED through the codec
@@ -788,93 +827,52 @@ object Multimodal {
   def q197AudioSample(spark: SparkSession, documents: DataFrame,
                       winSamples: Int = 200, every: Int = 4,
                       codec: AudioCodec = WavCodec): DataFrame = {
-    import spark.implicits._
-    mediaTable(spark, documents, audio = codec)
-      .filter(col("meta.media_type") === "audio")
-      .select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(BatchSize).flatMap(_.flatMap { case (id, b) =>
-          codec.decode(b).toSeq.flatMap { case (s, _, _) =>
-            val nWin = s.length / winSamples
-            (0 until nWin by every).map { w =>
-              val off = w * winSamples
-              var ss = 0.0; var zc = 0L
-              var i = 0
-              while (i < winSamples) {
-                val x = s(off + i).toDouble
-                ss += x * x
-                if (i > 0 && (s(off + i) >= 0) != (s(off + i - 1) >= 0)) zc += 1
-                i += 1
-              }
-              AudioWin(id, w, winSamples,
-                math.floor(math.sqrt(ss / winSamples) * 100).toLong, zc)
-            }
+    val windows = perPayload(mediaTable(spark, documents, audio = codec)
+        .filter(col("meta.media_type") === "audio")) { (id, b) =>
+      codec.decode(b).toSeq.flatMap { case (s, _, _) =>
+        val nWin = s.length / winSamples
+        (0 until nWin by every).map { w =>
+          val off = w * winSamples
+          var ss = 0.0; var zc = 0L
+          var i = 0
+          while (i < winSamples) {
+            val x = s(off + i).toDouble
+            ss += x * x
+            if (i > 0 && (s(off + i) >= 0) != (s(off + i - 1) >= 0)) zc += 1
+            i += 1
           }
-        })
+          AudioWin(id, w, winSamples,
+            math.floor(math.sqrt(ss / winSamples) * 100).toLong, zc)
+        }
       }
-      .toDF()
-      // pinned before the final orderBy (r20): see the q51 note
-      .transform(graft.Pins.pin)
-      .orderBy(col("doc_id"), col("win_idx"))
+    }.toDF()
+    graft.Pins.pinSorted(windows, col("doc_id"), col("win_idx"))
   }
 
-  /** Rep-level core of [[q198]] — [[phashRepPairs]]' structure on the
-    * audio axis: exact-dup collapse first (byte-variant copies of the
-    * same normalized token stream synthesize IDENTICAL audio, so a
-    * clique costs ONE synth→encode→decode→fingerprint round-trip),
-    * then the shared Hamming-band machinery over the 64-bit spectral
-    * fingerprints. The fingerprint is computed from the DECODED
-    * payload of a full codec round-trip — the output proves the codec
-    * ran, mirroring q52's re-decode discipline. */
-  private def afpRepPairs(spark: SparkSession, documents: DataFrame,
-                          maxHamming: Int, codec: AudioCodec)
-      : (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val (reps, members) = graft.operators.Dedup.exactReps(documents)
-    val fp = reps
-      .select(col("doc_id"), col("text"))
-      // CPU-bound codec stage: same parallelism rationale as mediaTable
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.grouped(BatchSize).flatMap(_.map { case (id, text) =>
-          val wav = codec.encode(
-            renderAudio(text, AudioRate, AudioSamples), AudioRate)
-          val (s, rate, _) = codec.decode(wav).get
-          AFingRow(id, audioFingerprint(s, rate))
-        })
-      }
-      .toDF()
-      // pinned: the band self-join references this frame twice — the
-      // phashRepPairs rationale on the audio axis (r19)
-      .transform(graft.Pins.pin)
-    (hammingBandPairs(fp, "afp", maxHamming), members)
-  }
+  /** The audio lanes' per-rep clip: [[renderAudio]] → REAL WAV encode
+    * through the codec seam. */
+  private def renderWav(text: String, codec: AudioCodec): Array[Byte] =
+    codec.encode(renderAudio(text, AudioRate, AudioSamples), AudioRate)
 
   /** q198: AUDIO perceptual near-dup pairs — the q93 pass for the
     * audio axis: the byte-identity pass (q79) misses a re-encoded or
     * attenuated copy of the same recording; the spectral fingerprint
     * still sees it. Per rep: synth → REAL WAV encode → REAL decode →
-    * 64-bit [[audioFingerprint]]; candidates via the shared
-    * 4×16-bit-band pigeonhole join; exact Hamming verify. Only
-    * (doc_id, fingerprint) rows shuffle — samples and payloads never
-    * leave their partition. rows-only with planted-dup specs, like
-    * q93. */
+    * 64-bit [[audioFingerprint]] (computed from the DECODED payload,
+    * so the output proves the codec ran — q52's re-decode discipline);
+    * candidates via the shared 4×16-bit-band pigeonhole join; exact
+    * Hamming verify. Only (doc_id, fingerprint) rows shuffle — samples
+    * and payloads never leave their partition. rows-only with
+    * planted-dup specs, like q93. */
   def q198AudioNeardup(spark: SparkSession, documents: DataFrame,
                        maxHamming: Int = 3,
                        codec: AudioCodec = WavCodec): DataFrame = {
-    val (repPairs, members) = afpRepPairs(spark, documents, maxHamming, codec)
-    val ma = members.select(col("rep").as("doc_a"), col("doc_id").as("da"))
-    val mb = members.select(col("rep").as("doc_b"), col("doc_id").as("db"))
-    val cross = repPairs.join(ma, "doc_a").join(mb, "doc_b")
-      .select(least(col("da"), col("db")).as("doc_a"),
-        greatest(col("da"), col("db")).as("doc_b"), col("hamming"))
-    val within = members.as("x").join(members.as("y"),
-        col("x.rep") === col("y.rep") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        lit(0).cast("integer").as("hamming"))
-    cross.unionAll(within).orderBy(col("doc_a"), col("doc_b"))
+    val (fp, members) = renderReps(documents, "afp") { text =>
+      val (s, rate, _) = codec.decode(renderWav(text, codec)).get
+      audioFingerprint(s, rate)
+    }
+    hammingCliques(
+      Dedup.hammingBandPairs(graft.Pins.pin(fp), "afp", maxHamming), members)
   }
 
   // ------------------------------------------------ q204 audio overlap
@@ -905,6 +903,30 @@ object Multimodal {
     Dedup.winnowChars(samplesAsChars(s), winSamples,
       winSamples + winSamples / 2 - 1)
 
+  /** `keys` minus every key carried by more than `dfCap` docs (none
+    * when dfCap ≤ 0) — the q202 hot-bucket cap of the overlap kernels:
+    * a silence window, jingle anchor, logo tile or black frame carried
+    * by thousands of docs would go quadratic in carriers. */
+  private def dropHot(keys: DataFrame, key: String, dfCap: Int): DataFrame =
+    if (dfCap <= 0) keys
+    else keys.join(keys.groupBy(col(key))
+        .agg(countDistinct(col("doc_id")).as("df"))
+        .filter(col("df") > dfCap).select(col(key)),
+      Seq(key), "left_anti")
+
+  /** Sorted positions split into runs whose consecutive gaps are ≤
+    * `maxGap`: (first, last, count) per run. */
+  private def segmentRuns(ps: Seq[Int], maxGap: Int): Seq[(Int, Int, Int)] = {
+    val runs = scala.collection.mutable.ArrayBuffer[(Int, Int, Int)]()
+    var cs = ps.head; var ce = ps.head; var cn = 1
+    ps.tail.foreach { p =>
+      if (p - ce > maxGap) { runs += ((cs, ce, cn)); cs = p; ce = p; cn = 1 }
+      else { ce = p; cn += 1 }
+    }
+    runs += ((cs, ce, cn))
+    runs.toSeq
+  }
+
   /** Core audio-overlap kernel over any (doc_id, payload) frame.
     * Returns (pairs, docFull):
     *
@@ -915,10 +937,8 @@ object Multimodal {
     * run_samples the audio they evidence.
     *
     * docFull — (doc_id, n_matched_full, run_full): what a pair of
-    * byte-identical copies of this doc would report; the within-
-    * clique expansion joins it so clique rows pass the SAME
-    * minRunWins gate as cross pairs (r15 ADVICE: within rows used to
-    * bypass the gates).
+    * byte-identical copies of this doc would report (the within-clique
+    * stats).
     *
     * Two key modes:
     *  - exact (winnowed anchors, [[winnowSampleAnchors]]): verbatim
@@ -938,10 +958,8 @@ object Multimodal {
     *    once needs constellation-style landmark hashing, out of
     *    scope and documented in SURVEY §2c.
     *
-    * `dfCap` is the q202 hot-bucket mitigation either way (a silence
-    * window / jingle anchor carried by thousands of clips would go
-    * quadratic in carriers). Payloads never shuffle — only
-    * (doc_id, pos, 8-byte key) rows do. */
+    * `dfCap` is the [[dropHot]] cap either way. Payloads never
+    * shuffle — only (doc_id, pos, 8-byte key) rows do. */
   private[graft] def audioOverlapPairs(media: DataFrame, winSamples: Int,
                                        minRunWins: Int, dfCap: Int,
                                        codec: AudioCodec,
@@ -950,35 +968,24 @@ object Multimodal {
     val spark = media.sparkSession
     import spark.implicits._
     val minRunSamples = minRunWins.toLong * winSamples
-    val wfps = media.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(BatchSize).flatMap(_.flatMap { case (id, b) =>
-          codec.decode(b).toSeq.flatMap { case (s, rate, _) =>
-            if (exact)
-              winnowSampleAnchors(s, winSamples).map { case (pos, h) =>
-                AWinRow(id, pos, h)
-              }
-            else {
-              val nWin = s.length / winSamples
-              (0 until nWin).map { w =>
-                AWinRow(id, w * winSamples,
-                  audioFingerprint(java.util.Arrays.copyOfRange(
-                    s, w * winSamples, (w + 1) * winSamples), rate))
-              }
-            }
+    val wfps = perPayload(media) { (id, b) =>
+      codec.decode(b).toSeq.flatMap { case (s, rate, _) =>
+        if (exact)
+          winnowSampleAnchors(s, winSamples).map { case (pos, h) =>
+            AWinRow(id, pos, h)
           }
-        })
+        else {
+          val nWin = s.length / winSamples
+          (0 until nWin).map { w =>
+            AWinRow(id, w * winSamples,
+              audioFingerprint(java.util.Arrays.copyOfRange(
+                s, w * winSamples, (w + 1) * winSamples), rate))
+          }
+        }
       }
-      .toDF()
+    }.toDF()
       .transform(graft.Pins.pin) // a/b join sides + df rollup + docFull
-    val kept =
-      if (dfCap <= 0) wfps
-      else wfps.join(
-        wfps.groupBy(col("wfp"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") > dfCap).select(col("wfp")),
-        Seq("wfp"), "left_anti")
+    val kept = dropHot(wfps, "wfp", dfCap)
     // no distinct before the rollups: (doc_id, win_idx) is unique per
     // row, so joined pairs cannot collide on (doc_a, doc_b, offset,
     // pa) — and both branches below aggregate with SET semantics, so
@@ -992,8 +999,12 @@ object Multimodal {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         (col("a.win_idx") - col("b.win_idx")).as("offset_samples"),
         col("a.win_idx").as("pa"))
+    val diagonals = matched
+      .groupBy(col("doc_a"), col("doc_b"), col("offset_samples"))
+      .agg(sort_array(collect_set(col("pa"))).as("pas"))
+      .as[(Long, Long, Int, Seq[Int])]
     val pairs =
-      if (exact)
+      (if (exact)
         // evidenced audio on this diagonal, SEGMENTED into contiguous
         // clusters (r16 review): an anchor match certifies winSamples
         // of IDENTICAL content from its position (the q114 collision
@@ -1009,57 +1020,37 @@ object Multimodal {
         // the cut extents never cover unevidenced samples. Winnowing
         // places anchors every ≤ winSamples/2 positions on a verbatim
         // run, so a true contiguous embed NEVER splits.
-        matched.groupBy(col("doc_a"), col("doc_b"), col("offset_samples"))
-          .agg(sort_array(collect_set(col("pa"))).as("pas"))
-          .as[(Long, Long, Int, Seq[Int])]
-          .flatMap { case (da, db, off, pas) =>
-            val clusters =
-              scala.collection.mutable.ArrayBuffer[(Int, Int, Int)]()
-            var cs = pas.head; var ce = pas.head; var cn = 1
-            pas.tail.foreach { p =>
-              if (p - ce > winSamples) {
-                clusters += ((cs, ce, cn)); cs = p; ce = p; cn = 1
-              } else { ce = p; cn += 1 }
-            }
-            clusters += ((cs, ce, cn))
-            // within a cluster consecutive gaps ≤ winSamples, so the
-            // span is fully certified: run == span, no cap needed
-            clusters.map { case (s, e, n) =>
-              (da, db, off, n.toLong, (e - s + winSamples).toLong,
-                // matched extents on the a side (b side = a − offset):
-                // the scrub lane (q206) cuts these sample ranges
-                s.toLong, (e + winSamples).toLong)
-            }
+        diagonals.flatMap { case (da, db, off, pas) =>
+          // within a cluster consecutive gaps ≤ winSamples, so the
+          // span is fully certified: run == span, no cap needed
+          segmentRuns(pas, winSamples).map { case (s, e, n) =>
+            (da, db, off, n.toLong, (e - s + winSamples).toLong,
+              // matched extents on the a side (b side = a − offset):
+              // the scrub lane (q206) cuts these sample ranges
+              s.toLong, (e + winSamples).toLong)
           }
-          .toDF("doc_a", "doc_b", "offset_samples", "n_matched",
-            "run_samples", "a_start", "a_end")
-          .filter(col("run_samples") >= minRunSamples)
-      else {
+        }
+      else
         // perceptual keys certify nothing exact — an isolated band-sign
         // collision is noise, so evidence must be a CONSECUTIVE window
         // run (the r15 semantics; the r16 rewrite briefly gated on the
         // span cap alone, which let 3 scattered one-window coincidences
         // on one diagonal pass a minRunWins=3 gate)
-        matched
-          .groupBy(col("doc_a"), col("doc_b"), col("offset_samples"))
-          .agg(sort_array(collect_set(col("pa"))).as("pas"))
-          .as[(Long, Long, Int, Seq[Int])]
-          .map { case (da, db, off, pas) =>
-            var best = 0; var run = 0; var prev = Int.MinValue
-            pas.foreach { p =>
-              run = if (p == prev + winSamples) run + 1 else 1
-              if (run > best) best = run
-              prev = p
-            }
-            // n_matched == the old count over the distinct'd stream:
-            // within a group, rows are distinct pa values
-            (da, db, off, pas.size.toLong, best.toLong * winSamples,
-              pas.head.toLong, pas.last.toLong + winSamples)
+        diagonals.map { case (da, db, off, pas) =>
+          var best = 0; var run = 0; var prev = Int.MinValue
+          pas.foreach { p =>
+            run = if (p == prev + winSamples) run + 1 else 1
+            if (run > best) best = run
+            prev = p
           }
-          .toDF("doc_a", "doc_b", "offset_samples", "n_matched",
-            "run_samples", "a_start", "a_end")
-          .filter(col("run_samples") >= minRunSamples)
-      }
+          // n_matched == the old count over the distinct'd stream:
+          // within a group, rows are distinct pa values
+          (da, db, off, pas.size.toLong, best.toLong * winSamples,
+            pas.head.toLong, pas.last.toLong + winSamples)
+        })
+      .toDF("doc_a", "doc_b", "offset_samples", "n_matched",
+        "run_samples", "a_start", "a_end")
+      .filter(col("run_samples") >= minRunSamples)
     // per-doc full-overlap stats from the CAPPED frame: a rep whose
     // keys are all dfCap-hot witnesses nothing for its clique either —
     // within rows must pass the same cap as cross pairs (r16 review)
@@ -1081,10 +1072,7 @@ object Multimodal {
     * but grid-gated — see [[audioOverlapPairs]]) → diagonal grouping;
     * reported pairs carry the time offset IN SAMPLES and the
     * evidenced run length, i.e. WHERE and HOW LONG the shared audio
-    * is. Exact-dup clique members expand through the members map
-    * (full overlap at offset 0 — one codec round-trip per clique, the
-    * q198 discipline) under the same minRunWins gate as cross pairs.
-    * rows-only: codec-dependent; the planted clip-in-compilation
+    * is. rows-only: codec-dependent; the planted clip-in-compilation
     * specs (grid-aligned AND non-aligned offsets) carry the
     * correctness argument. */
   def q204AudioOverlap(spark: SparkSession, documents: DataFrame,
@@ -1092,45 +1080,13 @@ object Multimodal {
                        dfCap: Int = 0,
                        codec: AudioCodec = WavCodec,
                        exact: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val (reps, members) = graft.operators.Dedup.exactReps(documents)
-    val media = reps.select(col("doc_id"), col("text"))
-      // CPU-bound codec stage: same parallelism rationale as mediaTable
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.grouped(BatchSize).flatMap(_.map { case (id, text) =>
-          (id, codec.encode(renderAudio(text, AudioRate, AudioSamples),
-            AudioRate))
-        })
-      }
-      .toDF("doc_id", "payload")
+    val (media, members) = renderReps(documents, "payload")(renderWav(_, codec))
     val (repPairs, docFull) = audioOverlapPairs(media, winSamples,
       minRunWins, dfCap, codec, exact)
-    val ma = members.select(col("rep").as("doc_a"), col("doc_id").as("da"))
-    val mb = members.select(col("rep").as("doc_b"), col("doc_id").as("db"))
-    val cross = repPairs.join(ma, "doc_a").join(mb, "doc_b")
-      .select(least(col("da"), col("db")).as("doc_a"),
-        greatest(col("da"), col("db")).as("doc_b"),
-        // orientation flips when member ids cross their reps' order
-        when(col("da") <= col("db"), col("offset_samples"))
-          .otherwise(-col("offset_samples")).as("offset_samples"),
-        col("n_matched"), col("run_samples"))
-    // within-clique: byte-identical normalized texts synthesize the
-    // same clip — full overlap at offset 0, no codec work needed. The
-    // rep's docFull row supplies the stats AND subjects clique rows to
-    // the SAME minRunWins gate as cross pairs (r15 ADVICE #5: within
-    // rows used to bypass it).
-    val within = members.as("x").join(members.as("y"),
-        col("x.rep") === col("y.rep") && col("x.doc_id") < col("y.doc_id"))
-      .join(docFull.select(col("doc_id").as("frep"),
-        col("n_matched_full"), col("run_full")), col("x.rep") === col("frep"))
-      .filter(col("run_full") >= minRunWins.toLong * winSamples)
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        lit(0).as("offset_samples"), col("n_matched_full").as("n_matched"),
-        col("run_full").as("run_samples"))
-    cross.unionAll(within)
-      .orderBy(col("doc_a"), col("doc_b"), col("offset_samples"))
+    cliquePairs(repPairs, members, Seq("offset_samples"),
+      Seq("n_matched", "run_samples"),
+      Some(docFull.filter(col("run_full") >= minRunWins.toLong * winSamples)),
+      Seq(col("n_matched_full").as("n_matched"), col("run_full").as("run_samples")))
   }
 
   /** Driver-facing RECONCILIATION of [[q204AudioOverlap]] — the
@@ -1350,15 +1306,11 @@ object Multimodal {
       : (DataFrame, DataFrame) = {
     val spark = media.sparkSession
     import spark.implicits._
-    val lmsRaw = media.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(BatchSize).flatMap(_.flatMap { case (id, b) =>
-          codec.decode(b).toSeq.flatMap { case (s, _, _) =>
-            spectralLandmarks(s).map { case (t, h) => AWinRow(id, t, h) }
-          }
-        })
+    val lmsRaw = perPayload(media) { (id, b) =>
+      codec.decode(b).toSeq.flatMap { case (s, _, _) =>
+        spectralLandmarks(s).map { case (t, h) => AWinRow(id, t, h) }
       }
+    }
     // With a positive dfCap (the production default) every hash group
     // is bounded at dfCap docs × 4 capped occurrences, so the pair
     // expansion runs INSIDE one groupByKey(hash) group: ONE exchange
@@ -1467,10 +1419,8 @@ object Multimodal {
     * to amplitude/light spectral distortion, so an ATTENUATED clip
     * embedded at an arbitrary sample offset — invisible to BOTH q204
     * modes, spec'd exactly so — is reported here with its frame
-    * offset and landmark support. Per exact-dup rep, same synth →
-    * codec → kernel → member-expansion shape as q204; within-clique
-    * rows carry the rep's own landmark count under the same
-    * minLandmarks gate. `dfCap` defaults ON (64): a landmark triple
+    * offset and landmark support. Within-clique rows carry the rep's
+    * own landmark count. `dfCap` defaults ON (64): a landmark triple
     * carried by more docs than that is the jingle/drone boilerplate
     * of the audio axis (the q202 argument), and on corpora with few
     * distinct spectral voices it is also what keeps the hash join
@@ -1480,56 +1430,38 @@ object Multimodal {
   def q207AudioLandmarks(spark: SparkSession, documents: DataFrame,
                          minLandmarks: Int = 8, dfCap: Int = 64,
                          codec: AudioCodec = WavCodec): DataFrame = {
-    import spark.implicits._
-    val (reps, members) = graft.operators.Dedup.exactReps(documents)
-    val media = reps.select(col("doc_id"), col("text"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.grouped(BatchSize).flatMap(_.map { case (id, text) =>
-          (id, codec.encode(renderAudio(text, AudioRate, AudioSamples),
-            AudioRate))
-        })
-      }
-      .toDF("doc_id", "payload")
+    val (media, members) = renderReps(documents, "payload")(renderWav(_, codec))
     val (repPairs, docFull) = audioLandmarkPairs(media, minLandmarks,
       dfCap, codec)
-    val ma = members.select(col("rep").as("doc_a"), col("doc_id").as("da"))
-    val mb = members.select(col("rep").as("doc_b"), col("doc_id").as("db"))
-    val cross = repPairs.join(ma, "doc_a").join(mb, "doc_b")
-      .select(least(col("da"), col("db")).as("doc_a"),
-        greatest(col("da"), col("db")).as("doc_b"),
-        when(col("da") <= col("db"), col("offset_frames"))
-          .otherwise(-col("offset_frames")).as("offset_frames"),
-        col("n_matched"))
-    val within = members.as("x").join(members.as("y"),
-        col("x.rep") === col("y.rep") && col("x.doc_id") < col("y.doc_id"))
-      .join(docFull.select(col("doc_id").as("frep"), col("n_landmarks")),
-        col("x.rep") === col("frep"))
-      .filter(col("n_landmarks") >= minLandmarks)
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        lit(0).as("offset_frames"), col("n_landmarks").as("n_matched"))
-    cross.unionAll(within)
-      .orderBy(col("doc_a"), col("doc_b"), col("offset_frames"))
+    cliquePairs(repPairs, members, Seq("offset_frames"), Seq("n_matched"),
+      Some(docFull.filter(col("n_landmarks") >= minLandmarks)),
+      Seq(col("n_landmarks").as("n_matched")))
   }
 
   // ------------------------------------------------ q206 audio scrub
 
+  /** Merge [start, end) intervals (any order; overlapping or touching
+    * ones merge) clamped to [0, n) into sorted disjoint runs — the one
+    * interval walk behind the q206 sample cut and the q212 frame cut,
+    * so a position cut by two spans is cut once. */
+  private[graft] def mergeIntervals(iv: Seq[(Long, Long)], n: Int): Seq[(Int, Int)] = {
+    val merged = scala.collection.mutable.ArrayBuffer[(Int, Int)]()
+    iv.map { case (a, b) => (math.max(0L, a), math.min(n.toLong, b)) }
+      .filter(p => p._2 > p._1).sortBy(_._1).foreach { case (a, b) =>
+        if (merged.nonEmpty && a <= merged.last._2) {
+          val (la, lb) = merged.last
+          merged(merged.size - 1) = (la, math.max(lb, b.toInt))
+        } else merged += ((a.toInt, b.toInt))
+      }
+    merged.toSeq
+  }
+
   /** Interval-union cut over one PCM clip: remove the samples covered
-    * by `iv` ([start, end) pairs, any order), merging overlaps so a
-    * sample cut by two spans is cut once — the q203 cut walk in
-    * samples. Returns (kept samples, cut count). */
+    * by `iv` ([[mergeIntervals]]) — the q203 cut walk in samples.
+    * Returns (kept samples, cut count). */
   private[graft] def cutSamples(s: Array[Short], iv: Seq[(Long, Long)])
       : (Array[Short], Int) = {
-    val merged = scala.collection.mutable.ArrayBuffer[(Int, Int)]()
-    iv.map { case (a, b) =>
-      (math.max(0, a).toInt, math.min(s.length.toLong, b).toInt)
-    }.filter(p => p._2 > p._1).sortBy(_._1).foreach { case (a, b) =>
-      if (merged.nonEmpty && a <= merged.last._2) {
-        val (la, lb) = merged.last
-        merged(merged.size - 1) = (la, math.max(lb, b))
-      } else merged += ((a, b))
-    }
+    val merged = mergeIntervals(iv, s.length)
     val cut = merged.map(p => p._2 - p._1).sum
     val out = new Array[Short](s.length - cut)
     var src = 0; var dst = 0
@@ -1549,11 +1481,8 @@ object Multimodal {
     *
     * Composition: exact-mode [[audioOverlapPairs]] (winnowed anchors,
     * so embeds at ANY sample offset are found) → per-rep interval
-    * union of the matched extents → [[cutSamples]] → re-encode through
-    * the codec seam. `keepFirst` (default, the q203 semantics): each
-    * diagonal cuts only its doc_b (larger-id) side, so shared audio
-    * survives in exactly one place; `keepFirst = false` cuts both
-    * sides (the no-copy-may-survive decontamination stance).
+    * union of the matched extents on the doc_b side → [[cutSamples]]
+    * → re-encode through the codec seam ([[scrubReps]]).
     *
     * The cut extent is the ANCHOR-EVIDENCED span — up to winSamples/2
     * short of the true embed boundary on each side (the winnowing
@@ -1561,70 +1490,34 @@ object Multimodal {
     * Residual shared runs after the cut are therefore < 1.5·winSamples
     * — strictly below the minRunWins·winSamples report gate, so a
     * re-probe of the scrubbed corpus is CLEAN by construction (spec'd
-    * with a planted non-aligned embed). Untouched docs pass through
-    * byte-identical: the left join ships payloads of CUT reps only,
-    * and members inherit their rep's verdict (identical audio carries
-    * identical cuts).
+    * with a planted non-aligned embed).
     *
     * Output: (doc_id, payload [scrubbed WAV], n_samples, cut_samples,
     * out_samples). Scale shape: q204's own exchanges plus one
-    * rep-keyed join of pair-count-sized interval rows; payloads of
-    * cut reps decode/re-encode partition-local. */
+    * rep-keyed join of pair-count-sized interval rows. */
   def q206AudioScrub(spark: SparkSession, documents: DataFrame,
                      winSamples: Int = 1000, minRunWins: Int = 3,
                      dfCap: Int = 0,
-                     codec: AudioCodec = WavCodec,
-                     keepFirst: Boolean = true): DataFrame = {
-    import spark.implicits._
-    val (reps, members) = graft.operators.Dedup.exactReps(documents)
-    val media = reps.select(col("doc_id"), col("text"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.grouped(BatchSize).flatMap(_.map { case (id, text) =>
-          (id, codec.encode(renderAudio(text, AudioRate, AudioSamples),
-            AudioRate))
-        })
-      }
-      .toDF("doc_id", "payload")
-      .transform(graft.Pins.pin) // pair kernel + the cut join
-    val (pairs, _) = audioOverlapPairs(media, winSamples, minRunWins,
-      dfCap, codec, exact = true)
-    val bSide = pairs.select(col("doc_b").as("doc_id"),
-      (col("a_start") - col("offset_samples")).as("c_start"),
-      (col("a_end") - col("offset_samples")).as("c_end"))
-    val cuts = (if (keepFirst) bSide
-      else bSide.unionAll(pairs.select(col("doc_a").as("doc_id"),
-        col("a_start").as("c_start"), col("a_end").as("c_end"))))
-      .groupBy(col("doc_id"))
-      // _1/_2 field names so the tuple decoder below resolves
-      .agg(collect_list(struct(col("c_start").as("_1"),
-        col("c_end").as("_2"))).as("iv"))
-    val repOut = media.join(cuts, Seq("doc_id"), "left_outer")
-      .as[(Long, Array[Byte], Option[Seq[(Long, Long)]])]
-      .mapPartitions { it =>
-        it.grouped(BatchSize).flatMap(_.map {
-          case (id, payload, None) =>
-            // untouched rep: payload passes through byte-identical —
-            // decoded once for the sample count, never re-encoded
-            val n = codec.decode(payload).map(_._1.length).getOrElse(0)
-            (id, payload, n.toLong, 0L, n.toLong)
-          case (id, payload, Some(iv)) =>
-            val (s, rate, _) = codec.decode(payload).get
-            val (kept, cut) = cutSamples(s, iv)
-            (id, codec.encode(kept, rate), s.length.toLong, cut.toLong,
-              kept.length.toLong)
-        })
-      }
-      .toDF("rep", "payload", "n_samples", "cut_samples", "out_samples")
-    members.join(repOut, "rep")
-      .select(col("doc_id"), col("payload"), col("n_samples"),
-        col("cut_samples"), col("out_samples"))
-      // pinned before the final orderBy (r20): see the q51 note — the
-      // sample pass re-ran the decode→cut→re-encode walk
-      .transform(graft.Pins.pin)
-      .orderBy(col("doc_id"))
-  }
+                     codec: AudioCodec = WavCodec): DataFrame =
+    scrubReps[(Long, Long), (Long, Array[Byte], Long, Long, Long)](documents,
+        renderWav(_, codec),
+        Seq("payload", "n_samples", "cut_samples", "out_samples")) { media =>
+      val (pairs, _) = audioOverlapPairs(media, winSamples, minRunWins,
+        dfCap, codec, exact = true)
+      pairs.select(col("doc_b").as("doc_id"),
+        (col("a_start") - col("offset_samples")).as("c_start"),
+        (col("a_end") - col("offset_samples")).as("c_end"))
+    } {
+      case (id, payload, None) =>
+        // decoded once for the sample count, never re-encoded
+        val n = codec.decode(payload).map(_._1.length).getOrElse(0)
+        (id, payload, n.toLong, 0L, n.toLong)
+      case (id, payload, Some(iv)) =>
+        val (s, rate, _) = codec.decode(payload).get
+        val (kept, cut) = cutSamples(s, iv)
+        (id, codec.encode(kept, rate), s.length.toLong, cut.toLong,
+          kept.length.toLong)
+    }
 
   /** Driver-facing RECONCILIATION of [[q206AudioScrub]] — the q203
     * length identity in samples: the scrub PARTITIONS each clip into
@@ -1833,40 +1726,26 @@ object Multimodal {
     * same pixel offset (ax_a − ax_b, ay_a − ay_b), so a crop-and-
     * paste collapses into ONE row carrying WHERE (the pixel offset —
     * any offset, not just tile multiples) and HOW MUCH (matched-
-    * anchor count). `dfCap` caps hot anchors (a watermark/logo tile
-    * carried by thousands of images is the boilerplate-gram problem
-    * in pixels). Only (doc_id, ax, ay, 8-byte hash) rows shuffle;
-    * pixels stay partition-local. Returns (pairs, per-doc anchor
-    * counts) — the second frame feeds the within-clique expansion so
-    * clique rows pass the SAME minTiles gate as cross pairs. */
+    * anchor count). `dfCap` caps hot anchors ([[dropHot]]). Only
+    * (doc_id, ax, ay, 8-byte hash) rows shuffle; pixels stay
+    * partition-local. Returns (pairs, per-doc anchor counts). */
   private[graft] def imageOverlapPairs(media: DataFrame, tile: Int,
                                        minTiles: Int, dfCap: Int,
                                        codec: MediaCodec)
       : (DataFrame, DataFrame) = {
     val spark = media.sparkSession
     import spark.implicits._
-    val tiles = media.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(BatchSize).flatMap(_.flatMap { case (id, b) =>
-          codec.decode(b).toSeq.flatMap { case (img, _) =>
-            val w = img.getWidth; val h = img.getHeight
-            val rgb = img.getRGB(0, 0, w, h, null, 0, w)
-            winnowTileAnchors(rgb, w, h, tile).map { case (ax, ay, th) =>
-              TileRow(id, ax, ay, th)
-            }
-          }
-        })
+    val tiles = perPayload(media) { (id, b) =>
+      codec.decode(b).toSeq.flatMap { case (img, _) =>
+        val w = img.getWidth; val h = img.getHeight
+        val rgb = img.getRGB(0, 0, w, h, null, 0, w)
+        winnowTileAnchors(rgb, w, h, tile).map { case (ax, ay, th) =>
+          TileRow(id, ax, ay, th)
+        }
       }
-      .toDF()
+    }.toDF()
       .transform(graft.Pins.pin) // a/b join sides + the df rollup
-    val kept =
-      if (dfCap <= 0) tiles
-      else tiles.join(
-        tiles.groupBy(col("th"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") > dfCap).select(col("th")),
-        Seq("th"), "left_anti")
+    val kept = dropHot(tiles, "th", dfCap)
     val pairs = kept.as("a").join(kept.as("b"),
         col("a.th") === col("b.th") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
@@ -1928,8 +1807,7 @@ object Multimodal {
     * pastes (the dominant collage/screenshot mode — re-encoded pastes
     * additionally need a perceptual tile key; at production image
     * sizes swap the anchor hash for a per-anchor dHash and Hamming-
-    * band the join, the q93 machinery). Exact-dup members expand
-    * through the members map under the same minTiles gate. rows-only
+    * band the join, the q93 machinery). rows-only
     * with planted collage specs (aligned AND non-aligned) — partial
     * anchor matches between DIFFERENT renders are genuine operator
     * findings (shared local blobs), so no equality-based oracle
@@ -1937,51 +1815,15 @@ object Multimodal {
   def q205ImageOverlap(spark: SparkSession, documents: DataFrame,
                        tile: Int = 8, minTiles: Int = 2, dfCap: Int = 0,
                        codec: MediaCodec = ImageIoCodec): DataFrame = {
-    import spark.implicits._
-    val (reps, members) = graft.operators.Dedup.exactReps(documents)
-    val media = reps.select(col("doc_id"), col("text"))
-      // CPU-bound codec stage: same parallelism rationale as mediaTable
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.grouped(BatchSize).flatMap(_.map { case (id, text) =>
-          // the q93 render recipe: dims from the checksum of the
-          // SORTED normalized token stream, PNG-encoded
-          val hsum = checksum(text.toLowerCase.trim.split(" ").sorted
-            .mkString(" ").getBytes("UTF-8"))
-          val w = 16 + (hsum % 16).toInt
-          val ht = 16 + ((hsum / 16) % 16).toInt
-          (id, codec.encode(renderImage(text, w, ht)))
-        })
-      }
-      .toDF("doc_id", "payload")
+    val (media, members) =
+      renderReps(documents, "payload")(t => codec.encode(thumbnail(t)))
     val (repPairs, docAnchors) =
       imageOverlapPairs(media, tile, minTiles, dfCap, codec)
-    val ma = members.select(col("rep").as("doc_a"), col("doc_id").as("da"))
-    val mb = members.select(col("rep").as("doc_b"), col("doc_id").as("db"))
-    val cross = repPairs.join(ma, "doc_a").join(mb, "doc_b")
-      .select(least(col("da"), col("db")).as("doc_a"),
-        greatest(col("da"), col("db")).as("doc_b"),
-        when(col("da") <= col("db"), col("dx_px"))
-          .otherwise(-col("dx_px")).as("dx_px"),
-        when(col("da") <= col("db"), col("dy_px"))
-          .otherwise(-col("dy_px")).as("dy_px"),
-        col("n_anchors"))
-    // within-clique: identical normalized text renders pixel-identical
-    // canvases — full overlap at (0, 0), matched count = the rep's own
-    // anchor count, GATED by the same minTiles floor as cross pairs
-    // (r15 ADVICE #5; an all-uniform render has zero anchors and is
-    // consistently silent on both paths)
-    val within = members.as("x").join(members.as("y"),
-        col("x.rep") === col("y.rep") && col("x.doc_id") < col("y.doc_id"))
-      .join(docAnchors.select(col("doc_id").as("trep"), col("n_doc_anchors")),
-        col("x.rep") === col("trep"))
-      .filter(col("n_doc_anchors") >= minTiles)
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        lit(0).as("dx_px"), lit(0).as("dy_px"),
-        col("n_doc_anchors").as("n_anchors"))
-    cross.unionAll(within)
-      .orderBy(col("doc_a"), col("doc_b"), col("dx_px"), col("dy_px"))
+    // an all-uniform render has zero anchors and is consistently
+    // silent on both paths
+    cliquePairs(repPairs, members, Seq("dx_px", "dy_px"), Seq("n_anchors"),
+      Some(docAnchors.filter(col("n_doc_anchors") >= minTiles)),
+      Seq(col("n_doc_anchors").as("n_anchors")))
   }
 
   // ------------------------------------------------ q208 image scrub
@@ -2028,67 +1870,33 @@ object Multimodal {
     * uniform fill, uniform blocks are anchor-INELIGIBLE, so the
     * blanked region can never re-match: a re-probe of the scrubbed
     * corpus is clean by construction (spec'd with a non-aligned
-    * paste). keepFirst semantics like q203/q206: content survives on
-    * the smaller-id side. Untouched docs pass through byte-identical;
-    * members inherit their rep's blanking. Output: (doc_id, payload,
-    * w, h, n_px, cut_px). Pixels stay partition-local; only
-    * pair-count-sized rect rows join the media frame. */
+    * paste). Output: (doc_id, payload, w, h, n_px, cut_px). Pixels stay
+    * partition-local; only pair-count-sized rect rows join the media
+    * frame. */
   def q208ImageScrub(spark: SparkSession, documents: DataFrame,
                      tile: Int = 8, minTiles: Int = 2, dfCap: Int = 0,
-                     codec: MediaCodec = ImageIoCodec,
-                     keepFirst: Boolean = true): DataFrame = {
-    import spark.implicits._
-    val (reps, members) = graft.operators.Dedup.exactReps(documents)
-    val media = reps.select(col("doc_id"), col("text"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.grouped(BatchSize).flatMap(_.map { case (id, text) =>
-          val hsum = checksum(text.toLowerCase.trim.split(" ").sorted
-            .mkString(" ").getBytes("UTF-8"))
-          val w = 16 + (hsum % 16).toInt
-          val ht = 16 + ((hsum / 16) % 16).toInt
-          (id, codec.encode(renderImage(text, w, ht)))
-        })
-      }
-      .toDF("doc_id", "payload")
-      .transform(graft.Pins.pin) // pair kernel + the blank join
-    val (pairs, _) = imageOverlapPairs(media, tile, minTiles, dfCap, codec)
+                     codec: MediaCodec = ImageIoCodec): DataFrame = {
     val margin = math.max(1, tile / 2) // the winnowing window w′
-    val bSide = pairs.select(col("doc_b").as("doc_id"),
-      (col("ax0") - col("dx_px") - margin).as("x0"),
-      (col("ay0") - col("dy_px") - margin).as("y0"),
-      (col("ax1") - col("dx_px") + margin).as("x1"),
-      (col("ay1") - col("dy_px") + margin).as("y1"))
-    val cuts = (if (keepFirst) bSide
-      else bSide.unionAll(pairs.select(col("doc_a").as("doc_id"),
-        (col("ax0") - margin).as("x0"), (col("ay0") - margin).as("y0"),
-        (col("ax1") + margin).as("x1"), (col("ay1") + margin).as("y1"))))
-      .groupBy(col("doc_id"))
-      .agg(collect_list(struct(col("x0").as("_1"), col("y0").as("_2"),
-        col("x1").as("_3"), col("y1").as("_4"))).as("rects"))
-    val repOut = media.join(cuts, Seq("doc_id"), "left_outer")
-      .as[(Long, Array[Byte], Option[Seq[(Int, Int, Int, Int)]])]
-      .mapPartitions { it =>
-        it.grouped(BatchSize).flatMap(_.map {
-          case (id, payload, None) =>
-            val (img, _) = codec.decode(payload).get
-            (id, payload, img.getWidth, img.getHeight,
-              img.getWidth.toLong * img.getHeight, 0L)
-          case (id, payload, Some(rects)) =>
-            val (img, _) = codec.decode(payload).get
-            val (blanked, cut) = blankRects(img, rects)
-            (id, codec.encode(blanked), img.getWidth, img.getHeight,
-              img.getWidth.toLong * img.getHeight, cut)
-        })
-      }
-      .toDF("rep", "payload", "w", "h", "n_px", "cut_px")
-    members.join(repOut, "rep")
-      .select(col("doc_id"), col("payload"), col("w"), col("h"),
-        col("n_px"), col("cut_px"))
-      // pinned before the final orderBy (r20): see the q51 note
-      .transform(graft.Pins.pin)
-      .orderBy(col("doc_id"))
+    scrubReps[(Int, Int, Int, Int), (Long, Array[Byte], Int, Int, Long, Long)](
+        documents, t => codec.encode(thumbnail(t)),
+        Seq("payload", "w", "h", "n_px", "cut_px")) { media =>
+      val (pairs, _) = imageOverlapPairs(media, tile, minTiles, dfCap, codec)
+      pairs.select(col("doc_b").as("doc_id"),
+        (col("ax0") - col("dx_px") - margin).as("x0"),
+        (col("ay0") - col("dy_px") - margin).as("y0"),
+        (col("ax1") - col("dx_px") + margin).as("x1"),
+        (col("ay1") - col("dy_px") + margin).as("y1"))
+    } {
+      case (id, payload, None) =>
+        val (img, _) = codec.decode(payload).get
+        (id, payload, img.getWidth, img.getHeight,
+          img.getWidth.toLong * img.getHeight, 0L)
+      case (id, payload, Some(rects)) =>
+        val (img, _) = codec.decode(payload).get
+        val (blanked, cut) = blankRects(img, rects)
+        (id, codec.encode(blanked), img.getWidth, img.getHeight,
+          img.getWidth.toLong * img.getHeight, cut)
+    }
   }
 
   /** Driver projection of [[q208ImageScrub]] — the area identities
@@ -2192,59 +2000,26 @@ object Multimodal {
     * 8-byte hash) rows shuffle; pixels stay partition-local. */
   private[graft] def videoNeardupPairs(media: DataFrame, maxHamming: Int,
                                        vc: VideoCodec): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val hashes = media.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(BatchSize).flatMap(_.flatMap { case (id, b) =>
-          vc.decode(b).map(clip => (id, dHash(meanFrame(clip))))
-        })
-      }
-      .toDF("doc_id", "vhash")
-      // pinned: the band self-join references this frame twice — the
-      // phashRepPairs rationale on the video axis (r19); unpinned,
-      // every clip decoded + mean-framed + hashed twice per query
-      .transform(graft.Pins.pin)
-    hammingBandPairs(hashes, "vhash", maxHamming)
+    val hashes = perPayload(media) { (id, b) =>
+      vc.decode(b).toSeq.map(clip => (id, dHash(meanFrame(clip))))
+    }.toDF("doc_id", "vhash")
+    Dedup.hammingBandPairs(graft.Pins.pin(hashes), "vhash", maxHamming)
   }
 
   /** q210: VIDEO perceptual near-dup — completes the q93 (image) /
     * q198 (audio) whole-asset row of the multimodal matrix: per
     * exact-dup rep, synthesize the q53-recipe clip, container round-
     * trip through the [[VideoCodec]] seam, [[videoNeardupPairs]],
-    * then clique expansion under q93's semantics (cross pairs inherit
-    * the rep pair's Hamming distance; within-clique pairs are
-    * Hamming 0 — every doc renders a clip, so every clique is
-    * eligible). rows-only: dHash bits are not portable SQL; the
-    * planted JPEG-re-encode spec carries the correctness argument. */
+    * then q93's clique expansion. rows-only: dHash bits are not
+    * portable SQL; the planted JPEG-re-encode spec carries the
+    * correctness argument. */
   def q210VideoNeardup(spark: SparkSession, documents: DataFrame,
                        maxHamming: Int = 3,
                        codec: MediaCodec = ImageIoCodec,
                        video: Option[VideoCodec] = None): DataFrame = {
-    import spark.implicits._
     val vc = video.getOrElse(FramedCodec(codec))
-    val (reps, members) = graft.operators.Dedup.exactReps(documents)
-    val media = reps.select(col("doc_id"), col("text"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.grouped(BatchSize).flatMap(_.map { case (id, text) =>
-          (id, renderClip(text, vc))
-        })
-      }
-      .toDF("doc_id", "payload")
-    val repPairs = videoNeardupPairs(media, maxHamming, vc)
-    val ma = members.select(col("rep").as("doc_a"), col("doc_id").as("da"))
-    val mb = members.select(col("rep").as("doc_b"), col("doc_id").as("db"))
-    val cross = repPairs.join(ma, "doc_a").join(mb, "doc_b")
-      .select(least(col("da"), col("db")).as("doc_a"),
-        greatest(col("da"), col("db")).as("doc_b"), col("hamming"))
-    val within = members.as("x").join(members.as("y"),
-        col("x.rep") === col("y.rep") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        lit(0).as("hamming"))
-    cross.unionAll(within).orderBy(col("doc_a"), col("doc_b"))
+    val (media, members) = renderReps(documents, "payload")(renderClip(_, vc))
+    hammingCliques(videoNeardupPairs(media, maxHamming, vc), members)
   }
 
   /** Frame-level overlap pairs over any (doc_id, payload) video frame
@@ -2258,36 +2033,22 @@ object Multimodal {
     * discipline). An embedded clip (re-broadcast inside a
     * compilation) puts every shared frame on ONE diagonal — the event
     * whole-clip hashing ([[videoNeardupPairs]]) is blind to. `dfCap`
-    * drops frame hashes carried by more than dfCap docs (black/title
-    * frames are the hot-bucket mode in video). Only (doc_id,
-    * frame_idx, 8-byte hash) rows shuffle. Returns (pairs, per-doc
-    * frame stats) — the second frame feeds the within-clique
-    * expansion under the same minRunFrames gate as cross pairs. */
+    * is the [[dropHot]] cap. Only (doc_id, frame_idx, 8-byte hash)
+    * rows shuffle. Returns (pairs, per-doc full-overlap stats). */
   private[graft] def videoOverlapPairs(media: DataFrame, minRunFrames: Int,
                                        dfCap: Int, vc: VideoCodec)
       : (DataFrame, DataFrame) = {
     val spark = media.sparkSession
     import spark.implicits._
-    val fhs = media.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(BatchSize).flatMap(_.flatMap { case (id, b) =>
-          vc.decode(b).toSeq.flatMap { clip =>
-            (0 until clip.numFrames).map { f =>
-              VFrameRow(id, f, dHash(clip.frame(f)._1))
-            }
-          }
-        })
+    val fhs = perPayload(media) { (id, b) =>
+      vc.decode(b).toSeq.flatMap { clip =>
+        (0 until clip.numFrames).map { f =>
+          VFrameRow(id, f, dHash(clip.frame(f)._1))
+        }
       }
-      .toDF()
+    }.toDF()
       .transform(graft.Pins.pin) // a/b join sides + df rollup + docFull
-    val kept =
-      if (dfCap <= 0) fhs
-      else fhs.join(
-        fhs.groupBy(col("fh"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") > dfCap).select(col("fh")),
-        Seq("fh"), "left_anti")
+    val kept = dropHot(fhs, "fh", dfCap)
     // no distinct before the rollup: (doc_id, frame_idx) is unique per
     // row, so two joined frame pairs can only collide on
     // (doc_a, doc_b, offset, fa) if they ARE the same pair — and the
@@ -2303,14 +2064,7 @@ object Multimodal {
       .agg(sort_array(collect_set(col("fa"))).as("fas"))
       .as[(Long, Long, Int, Seq[Int])]
       .flatMap { case (da, db, off, fas) =>
-        val clusters = scala.collection.mutable.ArrayBuffer[(Int, Int, Int)]()
-        var cs = fas.head; var ce = fas.head; var cn = 1
-        fas.tail.foreach { f =>
-          if (f - ce > 1) { clusters += ((cs, ce, cn)); cs = f; ce = f; cn = 1 }
-          else { ce = f; cn += 1 }
-        }
-        clusters += ((cs, ce, cn))
-        clusters.map { case (s, e, n) =>
+        segmentRuns(fas, 1).map { case (s, e, n) =>
           (da, db, off, n.toLong, (e - s + 1).toLong, s, e + 1)
         }
       }
@@ -2332,62 +2086,43 @@ object Multimodal {
     * perceptual) cannot see. Per exact-dup rep: q53-recipe synth →
     * container round-trip → [[videoOverlapPairs]]' frame-diagonal
     * grouping; reported pairs carry the frame offset and the
-    * consecutive evidenced run. Exact-dup members expand through the
-    * members map (full overlap at offset 0) under the SAME
-    * minRunFrames gate as cross pairs. rows-only: dHash frame keys
-    * are not portable SQL; planted clip-in-compilation (including
-    * per-frame lossy re-encode) specs carry the correctness
-    * argument. */
+    * consecutive evidenced run. rows-only: dHash frame keys are not
+    * portable SQL; planted clip-in-compilation (including per-frame
+    * lossy re-encode) specs carry the correctness argument. */
   def q211VideoOverlap(spark: SparkSession, documents: DataFrame,
                        minRunFrames: Int = 3, dfCap: Int = 0,
                        codec: MediaCodec = ImageIoCodec,
                        video: Option[VideoCodec] = None): DataFrame = {
-    import spark.implicits._
     val vc = video.getOrElse(FramedCodec(codec))
-    val (reps, members) = graft.operators.Dedup.exactReps(documents)
-    val media = reps.select(col("doc_id"), col("text"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.grouped(BatchSize).flatMap(_.map { case (id, text) =>
-          (id, renderClip(text, vc))
-        })
-      }
-      .toDF("doc_id", "payload")
+    val (media, members) = renderReps(documents, "payload")(renderClip(_, vc))
     val (repPairs, docFull) = videoOverlapPairs(media, minRunFrames, dfCap, vc)
-    val ma = members.select(col("rep").as("doc_a"), col("doc_id").as("da"))
-    val mb = members.select(col("rep").as("doc_b"), col("doc_id").as("db"))
-    val cross = repPairs.join(ma, "doc_a").join(mb, "doc_b")
-      .select(least(col("da"), col("db")).as("doc_a"),
-        greatest(col("da"), col("db")).as("doc_b"),
-        when(col("da") <= col("db"), col("offset_frames"))
-          .otherwise(-col("offset_frames")).as("offset_frames"),
-        col("n_matched"), col("run_frames"))
-    val within = members.as("x").join(members.as("y"),
-        col("x.rep") === col("y.rep") && col("x.doc_id") < col("y.doc_id"))
-      .join(docFull.select(col("doc_id").as("frep"),
-        col("n_matched_full"), col("run_full")), col("x.rep") === col("frep"))
-      .filter(col("run_full") >= minRunFrames.toLong)
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        lit(0).as("offset_frames"), col("n_matched_full").as("n_matched"),
-        col("run_full").as("run_frames"))
-    cross.unionAll(within)
-      .orderBy(col("doc_a"), col("doc_b"), col("offset_frames"))
+    cliquePairs(repPairs, members, Seq("offset_frames"),
+      Seq("n_matched", "run_frames"),
+      Some(docFull.filter(col("run_full") >= minRunFrames.toLong)),
+      Seq(col("n_matched_full").as("n_matched"), col("run_full").as("run_frames")))
   }
 
-  /** Merge [start, end) intervals clamped to [0, n): the q206 cut walk
-    * over frame indexes. */
-  private[graft] def mergeFrameCuts(iv: Seq[(Int, Int)], n: Int)
-      : Seq[(Int, Int)] = {
-    val merged = scala.collection.mutable.ArrayBuffer[(Int, Int)]()
-    iv.map { case (a, b) => (math.max(0, a), math.min(n, b)) }
-      .filter(p => p._2 > p._1).sortBy(_._1).foreach { case (a, b) =>
-        if (merged.nonEmpty && a <= merged.last._2) {
-          val (la, lb) = merged.last
-          merged(merged.size - 1) = (la, math.max(lb, b))
-        } else merged += ((a, b))
-      }
-    merged.toSeq
+  /** The q212 per-clip scrub kernel, factored for direct spec'ing:
+    * decode → drop the frames in the [[mergeIntervals]] of `iv` →
+    * re-encode kept frames. Returns (payload, n_frames, cut_frames,
+    * out_frames). A FULLY-scrubbed clip (every frame evidenced — e.g.
+    * a doc wholly embedded in another) emits the EMPTY payload
+    * explicitly rather than asking the codec to encode zero frames (a
+    * production container codec may refuse). By the ck01 contract
+    * empty bytes decode to None — consumers distinguish
+    * scrubbed-to-nothing from foreign bytes via out_frames == 0, never
+    * by decoding the payload. */
+  private[graft] def scrubClipFrames(payload: Array[Byte],
+                                     iv: Seq[(Int, Int)], vc: VideoCodec)
+      : (Array[Byte], Long, Long, Long) = {
+    val clip = vc.decode(payload).get
+    val n = clip.numFrames
+    val merged = mergeIntervals(iv.map { case (a, b) => (a.toLong, b.toLong) }, n)
+    val keep = (0 until n)
+      .filterNot(f => merged.exists(c => f >= c._1 && f < c._2))
+    val out = if (keep.isEmpty) Array.emptyByteArray
+              else vc.encode(keep.map(f => clip.frame(f)._1))
+    (out, n.toLong, (n - keep.length).toLong, keep.length.toLong)
   }
 
   /** q212: VIDEO SCRUB — the FOURTH leg of the rewrite family (q203
@@ -2397,86 +2132,33 @@ object Multimodal {
     * lane. Per [[videoOverlapPairs]] cluster (already SEGMENTED into
     * consecutive runs — the r17 discipline, so the cut never covers a
     * replaced-middle gap), the evidenced frame range on the doc_b
-    * (larger-id) side is dropped from the container and the remaining
-    * frames re-encode through the codec seam. `keepFirst` (default,
-    * the q203/q206/q208 survivorship): shared footage survives on the
-    * smaller-id side; `keepFirst = false` cuts both sides. Sub-gate
+    * side is dropped from the container ([[scrubClipFrames]]) and the
+    * remaining frames re-encode through the codec seam. Sub-gate
     * clusters (run < minRunFrames) are below the report gate on a
     * re-probe by construction, so the scrubbed corpus re-probes CLEAN
-    * (spec'd). Untouched reps pass through byte-identical; members
-    * inherit their rep's cut. Output: (doc_id, payload, n_frames,
-    * cut_frames, out_frames). Only pair-count-sized interval rows
-    * join the media frame; frames decode/re-encode partition-local
-    * for CUT reps only. */
-  /** The q212 per-clip scrub kernel, factored for direct spec'ing:
-    * decode → merge cut intervals → re-encode kept frames. Returns
-    * (payload, n_frames, cut_frames, out_frames). A FULLY-scrubbed
-    * clip (every frame evidenced — e.g. a doc wholly embedded in
-    * another) emits the EMPTY payload explicitly rather than asking
-    * the codec to encode zero frames (a production container codec may
-    * refuse). By the ck01 contract empty bytes decode to None —
-    * consumers distinguish scrubbed-to-nothing from foreign bytes via
-    * out_frames == 0, never by decoding the payload. */
-  private[graft] def scrubClipFrames(payload: Array[Byte],
-                                     iv: Seq[(Int, Int)], vc: VideoCodec)
-      : (Array[Byte], Long, Long, Long) = {
-    val clip = vc.decode(payload).get
-    val n = clip.numFrames
-    val merged = mergeFrameCuts(iv, n)
-    val keep = (0 until n)
-      .filterNot(f => merged.exists(c => f >= c._1 && f < c._2))
-    val out = if (keep.isEmpty) Array.emptyByteArray
-              else vc.encode(keep.map(f => clip.frame(f)._1))
-    (out, n.toLong, (n - keep.length).toLong, keep.length.toLong)
-  }
-
+    * (spec'd). Output: (doc_id, payload, n_frames, cut_frames,
+    * out_frames). Only pair-count-sized interval rows join the media
+    * frame. */
   def q212VideoScrub(spark: SparkSession, documents: DataFrame,
                      minRunFrames: Int = 3, dfCap: Int = 0,
                      codec: MediaCodec = ImageIoCodec,
-                     video: Option[VideoCodec] = None,
-                     keepFirst: Boolean = true): DataFrame = {
-    import spark.implicits._
+                     video: Option[VideoCodec] = None): DataFrame = {
     val vc = video.getOrElse(FramedCodec(codec))
-    val (reps, members) = graft.operators.Dedup.exactReps(documents)
-    val media = reps.select(col("doc_id"), col("text"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.grouped(BatchSize).flatMap(_.map { case (id, text) =>
-          (id, renderClip(text, vc))
-        })
-      }
-      .toDF("doc_id", "payload")
-      .transform(graft.Pins.pin) // pair kernel + the cut join
-    val (pairs, _) = videoOverlapPairs(media, minRunFrames, dfCap, vc)
-    val bSide = pairs.select(col("doc_b").as("doc_id"),
-      (col("a_start") - col("offset_frames")).as("c_start"),
-      (col("a_end") - col("offset_frames")).as("c_end"))
-    val cuts = (if (keepFirst) bSide
-      else bSide.unionAll(pairs.select(col("doc_a").as("doc_id"),
-        col("a_start").as("c_start"), col("a_end").as("c_end"))))
-      .groupBy(col("doc_id"))
-      .agg(collect_list(struct(col("c_start").as("_1"),
-        col("c_end").as("_2"))).as("iv"))
-    val repOut = media.join(cuts, Seq("doc_id"), "left_outer")
-      .as[(Long, Array[Byte], Option[Seq[(Int, Int)]])]
-      .mapPartitions { it =>
-        it.grouped(BatchSize).flatMap(_.map {
-          case (id, payload, None) =>
-            val n = vc.decode(payload).map(_.numFrames).getOrElse(0)
-            (id, payload, n.toLong, 0L, n.toLong)
-          case (id, payload, Some(iv)) =>
-            val (out, n, cut, kept) = scrubClipFrames(payload, iv, vc)
-            (id, out, n, cut, kept)
-        })
-      }
-      .toDF("rep", "payload", "n_frames", "cut_frames", "out_frames")
-    members.join(repOut, "rep")
-      .select(col("doc_id"), col("payload"), col("n_frames"),
-        col("cut_frames"), col("out_frames"))
-      // pinned before the final orderBy (r20): see the q51 note
-      .transform(graft.Pins.pin)
-      .orderBy(col("doc_id"))
+    scrubReps[(Int, Int), (Long, Array[Byte], Long, Long, Long)](documents,
+        renderClip(_, vc),
+        Seq("payload", "n_frames", "cut_frames", "out_frames")) { media =>
+      val (pairs, _) = videoOverlapPairs(media, minRunFrames, dfCap, vc)
+      pairs.select(col("doc_b").as("doc_id"),
+        (col("a_start") - col("offset_frames")).as("c_start"),
+        (col("a_end") - col("offset_frames")).as("c_end"))
+    } {
+      case (id, payload, None) =>
+        val n = vc.decode(payload).map(_.numFrames).getOrElse(0)
+        (id, payload, n.toLong, 0L, n.toLong)
+      case (id, payload, Some(iv)) =>
+        val (out, n, cut, kept) = scrubClipFrames(payload, iv, vc)
+        (id, out, n, cut, kept)
+    }
   }
 
   /** Driver-facing RECONCILIATION of [[q212VideoScrub]] — the q206

@@ -643,6 +643,44 @@ class MultimodalSpec extends GraftSpec {
     assert(hotPairs.exists(p => p._1 == 1L && p._2 == 2L), hotPairs)
   }
 
+  test("mergeIntervals == the runs of a brute-force coverage bitmap") {
+    def brute(iv: Seq[(Long, Long)], n: Int): Seq[(Int, Int)] = {
+      val cov = new Array[Boolean](n)
+      iv.foreach { case (a, b) =>
+        (math.max(a, 0L) until math.min(b, n.toLong)).foreach(i => cov(i.toInt) = true)
+      }
+      val runs = Seq.newBuilder[(Int, Int)]
+      var i = 0
+      while (i < n) {
+        if (cov(i)) {
+          val s = i
+          while (i < n && cov(i)) i += 1
+          runs += ((s, i))
+        } else i += 1
+      }
+      runs.result()
+    }
+    val fixed = Seq(
+      (Seq.empty[(Long, Long)], 10),           // empty
+      (Seq((0L, 3L), (3L, 5L)), 10),           // touching -> one run
+      (Seq((4L, 4L), (7L, 6L)), 10),           // zero-width and reversed
+      (Seq((-5L, 2L), (8L, 40L)), 10),         // out of range both ends
+      (Seq((12L, 15L)), 10),                   // wholly past the end
+      (Seq((5L, 9L), (1L, 6L), (2L, 3L)), 10)) // overlapping, any order
+    val rng = new scala.util.Random(20261019L)
+    val random = Seq.fill(2000) {
+      val n = rng.nextInt(40)
+      (Seq.fill(rng.nextInt(7)) {
+        val a = rng.nextInt(60) - 10L
+        (a, a + rng.nextInt(16) - 2L)
+      }, n)
+    }
+    (fixed ++ random).foreach { case (iv, n) =>
+      assert(Multimodal.mergeIntervals(iv, n) == brute(iv, n), (iv, n))
+    }
+    assert(Multimodal.mergeIntervals(Seq((0L, 3L), (3L, 5L)), 10) == Seq((0, 5)))
+  }
+
   test("q206 scrub: planted NON-ALIGNED embed cut; re-probe clean; clean doc untouched") {
     val rate = Multimodal.AudioRate
     val clipA = Multimodal.renderAudio("alpha beta gamma tokens", rate, 2000)
@@ -988,7 +1026,8 @@ class MultimodalSpec extends GraftSpec {
       (r.getAs[Int]("a_start") - r.getAs[Int]("offset_frames"),
         r.getAs[Int]("a_end") - r.getAs[Int]("offset_frames"))).toSeq
     graft.Pins.release()
-    val merged = Multimodal.mergeFrameCuts(cuts, comp.length)
+    val merged = Multimodal.mergeIntervals(
+      cuts.map { case (a, b) => (a.toLong, b.toLong) }, comp.length)
     // the cut covers exactly frames 0..2 and 4..6 of the compilation —
     // the replacement frame 3 is outside every interval
     assert(merged == Seq((0, 3), (4, 7)), merged)

@@ -185,6 +185,35 @@ class PlanBudgetSpec extends GraftSpec {
     graft.Pins.release()
   }
 
+  /** (exchanges, InMemoryRelations, construction jobs) of one media
+    * lane built over the warm sf0.001 corpus: the shape a refactor of
+    * the rep-collapse skeleton must leave exactly as it was. */
+  private def mediaShape(build: org.apache.spark.sql.DataFrame =>
+      org.apache.spark.sql.DataFrame): (Int, Int, Int) = {
+    val docs = Tables.documents(spark, SF)
+    var df: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsOf { df = build(docs) }
+    val shape = (PlanReport.analyze(df).exchanges,
+      """\(\d+\) InMemoryRelation""".r.findAllIn(formattedPlan(df)).size, jobs)
+    graft.Pins.release()
+    shape
+  }
+
+  import graft.operators.Multimodal
+  Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+      (Int, Int, Int))](
+    ("q93 image near-dup", Multimodal.q93(spark, _), (4, 7, 0)),
+    ("q205 image overlap", Multimodal.q205ImageOverlap(spark, _), (5, 8, 0)),
+    ("q206 audio scrub", Multimodal.q206AudioScrub(spark, _), (6, 7, 0)),
+    ("q208 image scrub", Multimodal.q208ImageScrub(spark, _), (7, 7, 0)),
+    ("q211 video overlap", Multimodal.q211VideoOverlap(spark, _), (5, 8, 0)),
+    ("q212 video scrub", Multimodal.q212VideoScrub(spark, _), (6, 7, 0))
+  ).foreach { case (name, build, expected) =>
+    test(s"$name: exchanges, pinned relations and construction jobs are pinned") {
+      assert(mediaShape(build) == expected, name)
+    }
+  }
+
   test("q105 via the s27 index: label-scan plan, no CC fixpoint, bounded exchanges") {
     // the r15 verdict's q105 ask: with served labels the plan must be
     // a bucketed label scan + quality join + per-label window — the

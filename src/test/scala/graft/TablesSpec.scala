@@ -19,8 +19,8 @@ class TablesSpec extends GraftSpec {
 
   test("every table loads with the schema plain spark.read.parquet infers") {
     Tables.all.foreach { name =>
-      val warm = (if (name == "events") Tables.events(spark, SF)
-        else { Tables.table(spark, SF, name); Tables.table(spark, SF, name) })
+      Tables.table(spark, SF, name)
+      val warm = Tables.table(spark, SF, name)
       assert(warm.schema == spark.read.parquet(s"$SF/$name.parquet").schema, name)
     }
   }
@@ -88,6 +88,15 @@ class TablesSpec extends GraftSpec {
       assert(memo == tsType(spark.read.parquet(s"$SF/events.parquet")), v)
       assert(memo == Right(if (v == "true") TimestampNTZType else TimestampType), v)
     }
+  }
+
+  test("loading events leaves the caller's session confs as they were") {
+    val other = spark.newSession()
+    other.conf.set(NanosAsLong, "false")
+    val events = graft.operators.Events.withTs(Tables.events(other, SF))
+    assert(events.schema("ts").dataType == TimestampType)
+    assert(events.count() > 0)
+    assert(other.conf.get(NanosAsLong) == "false")
   }
 
   test("a missing table still fails with PATH_NOT_FOUND") {
