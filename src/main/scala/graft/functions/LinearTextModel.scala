@@ -153,7 +153,7 @@ object LinearModel {
   def fit(df: org.apache.spark.sql.DataFrame, textCol: String,
           labelCol: String, buckets: Long = 1L << 17,
           useBigrams: Boolean = false, iters: Int = 200,
-          lr: Double = 4.0, l2: Double = 0.0): LinearModel = {
+          lr: Double = 4.0, l2: Double = 0.0): LinearModel = graft.Pins.scope {
     val spark = df.sparkSession
     import spark.implicits._
     val data = df
@@ -167,116 +167,114 @@ object LinearModel {
     val feats = data
       .map { case (t, l) => (featureBuckets(t, buckets, useBigrams),
         classIdx(l)) }
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = feats.count().toDouble
-      var bias = new Array[Float](k)
-      var rows = new java.util.HashMap[java.lang.Long, Array[Float]]()
-      // AdaGrad accumulators (driver-side, hence deterministic): a
-      // single global step size cannot serve both ends of a Zipfian
-      // feature distribution — stopword buckets see gradients orders
-      // of magnitude larger than the rare marker buckets that carry
-      // the signal, so plain GD either oscillates on the former or
-      // starves the latter (measured: ≤ 0.38 held-out agreement at
-      // any fixed lr). Per-coordinate sqrt-normalization fixes the
-      // conditioning (Duchi et al. '11).
-      val gsqBias = new Array[Double](k)
-      val gsqRows = new java.util.HashMap[java.lang.Long, Array[Double]]()
-      var it = 0
-      while (it < iters) {
-        val bcB = spark.sparkContext.broadcast(bias)
-        val bcW = spark.sparkContext.broadcast(rows)
-        // per-partition (bucket -> long grads, bias long grads), merged
-        // associatively — one aggregation job per epoch
-        val zero = (new java.util.HashMap[java.lang.Long, Array[Long]](),
-          new Array[Long](k))
-        def seqOp(acc: (java.util.HashMap[java.lang.Long, Array[Long]], Array[Long]),
-                  doc: (Array[Long], Int)) = {
-          val (fb, y) = doc
-          val w = bcW.value
-          // accumulate-then-divide-once, mirroring scores() exactly
-          val acc0 = new Array[Double](k)
-          var i = 0
-          while (i < fb.length) {
-            val row = w.get(fb(i))
-            if (row != null) {
-              var cc = 0
-              while (cc < k) { acc0(cc) += row(cc); cc += 1 }
-            }
-            i += 1
+      .transform(graft.Pins.pin)
+    val n = feats.count().toDouble
+    var bias = new Array[Float](k)
+    var rows = new java.util.HashMap[java.lang.Long, Array[Float]]()
+    // AdaGrad accumulators (driver-side, hence deterministic): a
+    // single global step size cannot serve both ends of a Zipfian
+    // feature distribution — stopword buckets see gradients orders
+    // of magnitude larger than the rare marker buckets that carry
+    // the signal, so plain GD either oscillates on the former or
+    // starves the latter (measured: ≤ 0.38 held-out agreement at
+    // any fixed lr). Per-coordinate sqrt-normalization fixes the
+    // conditioning (Duchi et al. '11).
+    val gsqBias = new Array[Double](k)
+    val gsqRows = new java.util.HashMap[java.lang.Long, Array[Double]]()
+    var it = 0
+    while (it < iters) {
+      val bcB = spark.sparkContext.broadcast(bias)
+      val bcW = spark.sparkContext.broadcast(rows)
+      // per-partition (bucket -> long grads, bias long grads), merged
+      // associatively — one aggregation job per epoch
+      val zero = (new java.util.HashMap[java.lang.Long, Array[Long]](),
+        new Array[Long](k))
+      def seqOp(acc: (java.util.HashMap[java.lang.Long, Array[Long]], Array[Long]),
+                doc: (Array[Long], Int)) = {
+        val (fb, y) = doc
+        val w = bcW.value
+        // accumulate-then-divide-once, mirroring scores() exactly
+        val acc0 = new Array[Double](k)
+        var i = 0
+        while (i < fb.length) {
+          val row = w.get(fb(i))
+          if (row != null) {
+            var cc = 0
+            while (cc < k) { acc0(cc) += row(cc); cc += 1 }
           }
-          val s = new Array[Double](k)
-          var c = 0
-          while (c < k) {
-            s(c) = bcB.value(c) + acc0(c) / fb.length; c += 1
-          }
-          // softmax (max-shifted) → err = p - onehot(y)
-          var mx = s(0); c = 1
-          while (c < k) { if (s(c) > mx) mx = s(c); c += 1 }
-          var z = 0.0; c = 0
-          while (c < k) { s(c) = math.exp(s(c) - mx); z += s(c); c += 1 }
-          c = 0
-          while (c < k) {
-            s(c) = s(c) / z - (if (c == y) 1.0 else 0.0)
-            acc._2(c) += math.round(s(c) * GradScale)
-            c += 1
-          }
-          i = 0
-          while (i < fb.length) {
-            val g = acc._1.computeIfAbsent(fb(i), _ => new Array[Long](k))
-            c = 0
-            while (c < k) {
-              g(c) += math.round(s(c) / fb.length * GradScale); c += 1
-            }
-            i += 1
-          }
-          acc
+          i += 1
         }
-        def combOp(a: (java.util.HashMap[java.lang.Long, Array[Long]], Array[Long]),
-                   b: (java.util.HashMap[java.lang.Long, Array[Long]], Array[Long])) = {
-          b._1.forEach { (bkt, g) =>
-            val t = a._1.computeIfAbsent(bkt, _ => new Array[Long](k))
-            var c = 0
-            while (c < k) { t(c) += g(c); c += 1 }
-          }
-          var c = 0
-          while (c < k) { a._2(c) += b._2(c); c += 1 }
-          a
-        }
-        val (gradW, gradB) = feats.rdd.treeAggregate(zero)(seqOp, combOp)
-        val nextBias = new Array[Float](k)
+        val s = new Array[Double](k)
         var c = 0
         while (c < k) {
-          val g = (gradB(c) / GradScale) / n
-          gsqBias(c) += g * g
-          nextBias(c) =
-            (bias(c) - lr * g / (math.sqrt(gsqBias(c)) + 1e-10)).toFloat
+          s(c) = bcB.value(c) + acc0(c) / fb.length; c += 1
+        }
+        // softmax (max-shifted) → err = p - onehot(y)
+        var mx = s(0); c = 1
+        while (c < k) { if (s(c) > mx) mx = s(c); c += 1 }
+        var z = 0.0; c = 0
+        while (c < k) { s(c) = math.exp(s(c) - mx); z += s(c); c += 1 }
+        c = 0
+        while (c < k) {
+          s(c) = s(c) / z - (if (c == y) 1.0 else 0.0)
+          acc._2(c) += math.round(s(c) * GradScale)
           c += 1
         }
-        val nextRows = new java.util.HashMap[java.lang.Long, Array[Float]]()
-        rows.forEach { (bkt, w) => nextRows.put(bkt, w.clone()) }
-        gradW.forEach { (bkt, g) =>
-          val w = nextRows.computeIfAbsent(bkt, _ => new Array[Float](k))
-          val gs = gsqRows.computeIfAbsent(bkt, _ => new Array[Double](k))
-          var cc = 0
-          while (cc < k) {
-            // l2 is a knob, default OFF: on the q47 weak-label task it
-            // measured strictly worse (1e-4 → −0.02 held-out, 1e-2 →
-            // collapse) — the rare marker features that carry the
-            // signal decay as fast as the memorization features
-            val gg = (g(cc) / GradScale) / n + l2 * w(cc)
-            gs(cc) += gg * gg
-            w(cc) = (w(cc) - lr * gg / (math.sqrt(gs(cc)) + 1e-10)).toFloat
-            cc += 1
+        i = 0
+        while (i < fb.length) {
+          val g = acc._1.computeIfAbsent(fb(i), _ => new Array[Long](k))
+          c = 0
+          while (c < k) {
+            g(c) += math.round(s(c) / fb.length * GradScale); c += 1
           }
+          i += 1
         }
-        bias = nextBias
-        rows = nextRows
-        bcB.destroy(); bcW.destroy()
-        it += 1
+        acc
       }
-      new LinearModel(classes, buckets, useBigrams, bias, rows)
-    } finally { feats.unpersist(); () }
+      def combOp(a: (java.util.HashMap[java.lang.Long, Array[Long]], Array[Long]),
+                 b: (java.util.HashMap[java.lang.Long, Array[Long]], Array[Long])) = {
+        b._1.forEach { (bkt, g) =>
+          val t = a._1.computeIfAbsent(bkt, _ => new Array[Long](k))
+          var c = 0
+          while (c < k) { t(c) += g(c); c += 1 }
+        }
+        var c = 0
+        while (c < k) { a._2(c) += b._2(c); c += 1 }
+        a
+      }
+      val (gradW, gradB) = feats.rdd.treeAggregate(zero)(seqOp, combOp)
+      val nextBias = new Array[Float](k)
+      var c = 0
+      while (c < k) {
+        val g = (gradB(c) / GradScale) / n
+        gsqBias(c) += g * g
+        nextBias(c) =
+          (bias(c) - lr * g / (math.sqrt(gsqBias(c)) + 1e-10)).toFloat
+        c += 1
+      }
+      val nextRows = new java.util.HashMap[java.lang.Long, Array[Float]]()
+      rows.forEach { (bkt, w) => nextRows.put(bkt, w.clone()) }
+      gradW.forEach { (bkt, g) =>
+        val w = nextRows.computeIfAbsent(bkt, _ => new Array[Float](k))
+        val gs = gsqRows.computeIfAbsent(bkt, _ => new Array[Double](k))
+        var cc = 0
+        while (cc < k) {
+          // l2 is a knob, default OFF: on the q47 weak-label task it
+          // measured strictly worse (1e-4 → −0.02 held-out, 1e-2 →
+          // collapse) — the rare marker features that carry the
+          // signal decay as fast as the memorization features
+          val gg = (g(cc) / GradScale) / n + l2 * w(cc)
+          gs(cc) += gg * gg
+          w(cc) = (w(cc) - lr * gg / (math.sqrt(gs(cc)) + 1e-10)).toFloat
+          cc += 1
+        }
+      }
+      bias = nextBias
+      rows = nextRows
+      bcB.destroy(); bcW.destroy()
+      it += 1
+    }
+    new LinearModel(classes, buckets, useBigrams, bias, rows)
   }
 
   private def tokenHash(tok: String): Long = {

@@ -84,42 +84,39 @@ object AnnIndex {
           buckets: Int = DefaultBuckets,
           centroids: Option[Array[Array[Double]]] = None,
           pqCodebooks: Option[Array[Array[Array[Double]]]] = None): Unit = {
-    LakeLock.withWriter(corpus.sparkSession, name) {
+    LakeLock.withWriter(corpus.sparkSession, name) { graft.Pins.scope {
     val spark = corpus.sparkSession
-    val vecs = Similarity.vecRows(corpus)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      Sources.writeBucketed(vecs.toDF("vec_id", "v", "norm"),
-        vectorsTable(name), "vec_id", buckets)
-      Sources.writeBucketed(Similarity.lshPostings(Similarity.sigRows(vecs)),
-        lshTable(name), "bucket", buckets)
-      val cents = centroids.getOrElse(Similarity.ivfFit(corpus))
-      spark.createDataFrame(cents.toIndexedSeq.zipWithIndex
-          .map { case (c, i) => (i, c.toIndexedSeq) })
-        .toDF("list", "centroid")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .format("parquet").saveAsTable(ivfCentroidsTable(name))
-      Sources.writeBucketed(Similarity.ivfAssign(vecs, cents, 1),
-        ivfListsTable(name), "list", math.min(buckets, Similarity.IvfLists))
-      Sources.writeBucketed(Similarity.int8Codes(corpus),
-        int8Table(name), "vec_id", buckets)
-      // PQ artifacts: the codebook rows are M·K metadata (the IVF-
-      // centroid class); the code table is the 64×-compressed serving
-      // currency. The codebook pins between refits exactly like the
-      // IVF quantizer (same contract, same spec).
-      val cb = pqCodebooks.getOrElse(Similarity.pqFit(corpus))
-      spark.createDataFrame(
-          for ((sub, m) <- cb.toIndexedSeq.zipWithIndex;
-               (cent, c) <- sub.toIndexedSeq.zipWithIndex)
-            yield (m, c, cent.toIndexedSeq))
-        .toDF("m", "c", "centroid")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .format("parquet").saveAsTable(pqCodebookTable(name))
-      Sources.writeBucketed(Similarity.pqEncode(corpus, cb),
-        pqCodesTable(name), "vec_id", buckets)
-      fitHnswUnlocked(corpus, name, buckets)
-    } finally { vecs.unpersist(); () }
-  }
+    val vecs = graft.Pins.pin(Similarity.vecRows(corpus))
+    Sources.writeBucketed(vecs.toDF("vec_id", "v", "norm"),
+      vectorsTable(name), "vec_id", buckets)
+    Sources.writeBucketed(Similarity.lshPostings(Similarity.sigRows(vecs)),
+      lshTable(name), "bucket", buckets)
+    val cents = centroids.getOrElse(Similarity.ivfFit(corpus))
+    spark.createDataFrame(cents.toIndexedSeq.zipWithIndex
+        .map { case (c, i) => (i, c.toIndexedSeq) })
+      .toDF("list", "centroid")
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .format("parquet").saveAsTable(ivfCentroidsTable(name))
+    Sources.writeBucketed(Similarity.ivfAssign(vecs, cents, 1),
+      ivfListsTable(name), "list", math.min(buckets, Similarity.IvfLists))
+    Sources.writeBucketed(Similarity.int8Codes(corpus),
+      int8Table(name), "vec_id", buckets)
+    // PQ artifacts: the codebook rows are M·K metadata (the IVF-
+    // centroid class); the code table is the 64×-compressed serving
+    // currency. The codebook pins between refits exactly like the
+    // IVF quantizer (same contract, same spec).
+    val cb = pqCodebooks.getOrElse(Similarity.pqFit(corpus))
+    spark.createDataFrame(
+        for ((sub, m) <- cb.toIndexedSeq.zipWithIndex;
+             (cent, c) <- sub.toIndexedSeq.zipWithIndex)
+          yield (m, c, cent.toIndexedSeq))
+      .toDF("m", "c", "centroid")
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .format("parquet").saveAsTable(pqCodebookTable(name))
+    Sources.writeBucketed(Similarity.pqEncode(corpus, cb),
+      pqCodesTable(name), "vec_id", buckets)
+    fitHnswUnlocked(corpus, name, buckets)
+  } }
   }
 
   /** s29: fit ONLY the HNSW artifact for `name` — one serialized
@@ -290,26 +287,23 @@ object AnnIndex {
     * artifact — stage such a frame to scratch parquet first (the st40
     * sink does exactly this for its dedup anti-join). */
   def append(batch: DataFrame, name: String): Unit = {
-    LakeLock.withWriter(batch.sparkSession, name) {
+    LakeLock.withWriter(batch.sparkSession, name) { graft.Pins.scope {
     val spark = batch.sparkSession
-    val vecs = Similarity.vecRows(batch)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      appendBucketed(spark, vecs.toDF("vec_id", "v", "norm"),
-        vectorsTable(name), "vec_id")
-      appendBucketed(spark, Similarity.lshPostings(Similarity.sigRows(vecs)),
-        lshTable(name), "bucket")
-      appendBucketed(spark,
-        Similarity.ivfAssign(vecs, loadCentroids(spark, name), 1),
-        ivfListsTable(name), "list")
-      appendBucketed(spark, Similarity.int8Codes(batch),
-        int8Table(name), "vec_id")
-      appendBucketed(spark,
-        Similarity.pqEncode(batch, loadPqCodebook(spark, name)),
-        pqCodesTable(name), "vec_id")
-      appendHnsw(spark, vecs, name)
-    } finally { vecs.unpersist(); () }
-  }
+    val vecs = graft.Pins.pin(Similarity.vecRows(batch))
+    appendBucketed(spark, vecs.toDF("vec_id", "v", "norm"),
+      vectorsTable(name), "vec_id")
+    appendBucketed(spark, Similarity.lshPostings(Similarity.sigRows(vecs)),
+      lshTable(name), "bucket")
+    appendBucketed(spark,
+      Similarity.ivfAssign(vecs, loadCentroids(spark, name), 1),
+      ivfListsTable(name), "list")
+    appendBucketed(spark, Similarity.int8Codes(batch),
+      int8Table(name), "vec_id")
+    appendBucketed(spark,
+      Similarity.pqEncode(batch, loadPqCodebook(spark, name)),
+      pqCodesTable(name), "vec_id")
+    appendHnsw(spark, vecs, name)
+  } }
   }
 
   /** HNSW incremental maintenance: route the batch's vectors to their

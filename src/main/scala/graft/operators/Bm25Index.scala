@@ -113,35 +113,33 @@ object Bm25Index {
       .join(spark.table(dlTable(name)).select(col("doc_id")),
         Seq("doc_id"), "left_anti")
       .transform(Ckpt.cut(_))
-    if (newDocs.limit(1).count() > 0L) {
+    if (newDocs.limit(1).count() > 0L) graft.Pins.scope {
       val inc = toks(newDocs).groupBy(col("tok"), col("doc_id"))
         .agg(count(lit(1)).as("tf"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        // df is additive in new docs: merged table = old ∪ increment,
-        // summed — vocab-sized, pinned before the overwrite
-        val mergedDf = spark.table(dfTable(name))
-          .unionAll(inc.groupBy(col("tok")).agg(count(lit(1)).as("df")))
-          .groupBy(col("tok")).agg(sum(col("df")).cast("long").as("df"))
-          .transform(Ckpt.cut(_))
-        val incStats = inc
-          .agg(countDistinct(col("doc_id")).cast("long").as("nd"),
-            sum(col("tf")).cast("long").as("tt")).head()
-        val old = spark.table(statsTable(name)).head()
-        graft.sources.Sources.appendBucketed(
-          inc, postingsTable(name), "tok")
-        graft.sources.Sources.appendBucketed(
-          inc.groupBy(col("doc_id")).agg(sum(col("tf")).cast("long").as("dl")),
-          dlTable(name), "doc_id")
-        val buckets = spark.sessionState.catalog
-          .getTableMetadata(
-            org.apache.spark.sql.catalyst.TableIdentifier(dfTable(name)))
-          .bucketSpec.map(_.numBuckets).getOrElse(DefaultBuckets)
-        graft.sources.Sources.writeBucketed(mergedDf, dfTable(name), "tok", buckets)
-        writeStats(spark, name, org.apache.spark.sql.Row(
-          old.getAs[Long]("n_docs") + incStats.getAs[Long]("nd"),
-          old.getAs[Long]("total_toks") + incStats.getAs[Long]("tt")))
-      } finally { inc.unpersist(); () }
+        .transform(graft.Pins.pin)
+      // df is additive in new docs: merged table = old ∪ increment,
+      // summed — vocab-sized, pinned before the overwrite
+      val mergedDf = spark.table(dfTable(name))
+        .unionAll(inc.groupBy(col("tok")).agg(count(lit(1)).as("df")))
+        .groupBy(col("tok")).agg(sum(col("df")).cast("long").as("df"))
+        .transform(Ckpt.cut(_))
+      val incStats = inc
+        .agg(countDistinct(col("doc_id")).cast("long").as("nd"),
+          sum(col("tf")).cast("long").as("tt")).head()
+      val old = spark.table(statsTable(name)).head()
+      graft.sources.Sources.appendBucketed(
+        inc, postingsTable(name), "tok")
+      graft.sources.Sources.appendBucketed(
+        inc.groupBy(col("doc_id")).agg(sum(col("tf")).cast("long").as("dl")),
+        dlTable(name), "doc_id")
+      val buckets = spark.sessionState.catalog
+        .getTableMetadata(
+          org.apache.spark.sql.catalyst.TableIdentifier(dfTable(name)))
+        .bucketSpec.map(_.numBuckets).getOrElse(DefaultBuckets)
+      graft.sources.Sources.writeBucketed(mergedDf, dfTable(name), "tok", buckets)
+      writeStats(spark, name, org.apache.spark.sql.Row(
+        old.getAs[Long]("n_docs") + incStats.getAs[Long]("nd"),
+        old.getAs[Long]("total_toks") + incStats.getAs[Long]("tt")))
     }
   }
   }

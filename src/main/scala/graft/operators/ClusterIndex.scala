@@ -130,15 +130,13 @@ object ClusterIndex {
     LakeLock.withWriter(spark, name) {
       Seq(labelsTable(name), gramsTable(name), digestsTable(name),
         metaTable(name)).foreach(clearTable(spark, _))
-      // eager fit: persists have a structural owner (unpersist in
-      // finally), so none of these go through Pins
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+      // eager fit: its pins live exactly as long as the fit
+      graft.Pins.scope {
       val (reps, members0) = Dedup.exactReps(documents)
-      val members = members0.persist(lvl)
-      val g = hashOrderGrams(reps, t).persist(lvl)
-      val cands = ppCandidates(g.filter(col("pref")), g.filter(col("pref")), t)
-        .persist(lvl)
-      try {
+      val members = graft.Pins.pin(members0)
+      val g = graft.Pins.pin(hashOrderGrams(reps, t))
+      val cands = graft.Pins.pin(
+        ppCandidates(g.filter(col("pref")), g.filter(col("pref")), t))
       val labels = Dedup.clusters(edgesFrom(g, cands, members, t))
       graft.sources.Sources.writeBucketed(
         labels, labelsTable(name), "doc_id", buckets)
@@ -163,8 +161,6 @@ object ClusterIndex {
         .toDF("t", "n_docs", "version")
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .format("parquet").saveAsTable(metaTable(name))
-      } finally {
-        members.unpersist(); g.unpersist(); cands.unpersist(); ()
       }
     }
   }
@@ -187,12 +183,11 @@ object ClusterIndex {
   def append(docs: DataFrame, name: String): Unit = {
     val spark = docs.sparkSession
     val (t, nOld, _) = params(spark, name)
-    LakeLock.withWriter(spark, name) {
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    LakeLock.withWriter(spark, name) { graft.Pins.scope {
       // Dedup.normDigest, not a re-inlined md5: the one digest every
       // exact-dedup surface keys on (drift here would break the
       // digest-absorb path against s12 and the batch operators)
-      val batch = docs.withColumn("dg", Dedup.normDigest).persist(lvl)
+      val batch = graft.Pins.pin(docs.withColumn("dg", Dedup.normDigest))
       val stored = spark.table(digestsTable(name))
       // (1) digest hits absorb into the existing clique: edge to the
       // stored rep — only when that rep is shingled, mirroring
@@ -204,16 +199,16 @@ object ClusterIndex {
         .filter(col("shingled") && col("doc_id") =!= col("rep"))
         .select(col("doc_id").as("doc_a"), col("rep").as("doc_b"))
       // (2) batch-new digests: clique up within the batch
-      val fresh = batch.join(stored, Seq("dg"), "left_anti").persist(lvl)
+      val fresh = graft.Pins.pin(batch.join(stored, Seq("dg"), "left_anti"))
       val wDg = org.apache.spark.sql.expressions.Window.partitionBy(col("dg"))
       val bMembers = fresh.select(col("doc_id"), col("dg"))
         .withColumn("rep", min(col("doc_id")).over(wDg))
         .select(col("doc_id"), col("rep"))
-        .persist(lvl)
+        .transform(graft.Pins.pin)
       val bReps = fresh.join(
         bMembers.filter(col("doc_id") === col("rep")).select(col("doc_id")),
         Seq("doc_id"), "left_semi")
-      val gB = hashOrderGrams(bReps, t).persist(lvl)
+      val gB = graft.Pins.pin(hashOrderGrams(bReps, t))
       val gOld = spark.table(gramsTable(name))
       // RETRY SAFETY (r16 review): the multi-table append is not
       // atomic, and st36's foreachBatch retries a crashed epoch. The
@@ -228,7 +223,7 @@ object ClusterIndex {
       // recomputed rows are identical — dropping either copy is safe.
       val gBNew = gB.join(
         gOld.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-        .persist(lvl)
+        .transform(graft.Pins.pin)
       // (3) candidates: batch×batch + batch×stored (either side may
       // hold the smaller id, so run the stored join both ways);
       // distinct() collapses pairs found via both routes when a retry
@@ -239,15 +234,14 @@ object ClusterIndex {
       // candidate pairs three times (two semi-join prunes + the verify
       // join) — unpersisted, the three-way PPJoin union re-ran per
       // consumer (the fit path already persists its cands for the same
-      // reason). Two longs per row; released with the batch frames in
-      // the finally below, on the exception path too (a failed
-      // streaming retry would otherwise leak one copy per attempt).
+      // reason). Two longs per row; released with the batch frames when
+      // the scope ends, on the exception path too (a failed streaming
+      // retry would otherwise leak one copy per attempt).
       val cands = ppCandidates(pB, pB, t)
         .unionAll(ppCandidates(pB, pOld, t))
         .unionAll(ppCandidates(pOld, pB, t))
         .distinct()
-        .persist(lvl)
-      try {
+        .transform(graft.Pins.pin)
       val gAll = gOld.select(col("doc_id"), col("g"))
         .unionAll(gBNew.select(col("doc_id"), col("g")))
       val newEdges = edgesFrom(gAll, cands, bMembers, t)
@@ -290,11 +284,7 @@ object ClusterIndex {
           .select(col("dg"), col("rep"),
             coalesce(col("shingled"), lit(false)).as("shingled")),
         digestsTable(name), "dg")
-      } finally {
-        batch.unpersist(); fresh.unpersist(); bMembers.unpersist()
-        gB.unpersist(); gBNew.unpersist(); cands.unpersist(); ()
-      }
-    }
+    } }
   }
 
   def drop(spark: SparkSession, name: String): Unit =

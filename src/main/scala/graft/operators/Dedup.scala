@@ -331,10 +331,12 @@ object Dedup {
     // ~13 s kernel stages in one q96 run, guide §2.4). One pair-sized
     // cache read replaces the second run at any scale.
     val p0 = graft.Pins.pin(pairs.select(col("doc_a"), col("doc_b")))
-    val edges = p0.select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .unionAll(p0.select(col("doc_b").as("u"), col("doc_a").as("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    // edges are dead once the loop ends (the labels it returns are
+    // checkpointed): scoped to this call
+    graft.Pins.scope {
+      val edges = graft.Pins.pin(
+        p0.select(col("doc_a").as("u"), col("doc_b").as("v"))
+          .unionAll(p0.select(col("doc_b").as("u"), col("doc_a").as("v"))))
       // seed = identity label AND the first propagation round in ONE
       // aggregation: every vertex appears as `u` (edges are symmetric), so
       // label₀ = min(u, min(neighbors)) — saves a full join+checkpoint+count
@@ -397,7 +399,7 @@ object Dedup {
         labels = joined.select(col("doc_id"), col("label"))
       }
       labels
-    } finally edges.unpersist()
+    }
   }
 
   /** q64: dedup clusters from the q41 near-dup pairs — one row per doc

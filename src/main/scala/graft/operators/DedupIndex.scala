@@ -48,18 +48,15 @@ object DedupIndex {
 
   def fit(corpus: DataFrame, name: String,
           buckets: Int = DefaultBuckets, fpp: Double = 0.01): Unit = {
-    LakeLock.withWriter(corpus.sparkSession, name) {
+    LakeLock.withWriter(corpus.sparkSession, name) { graft.Pins.scope {
     val spark = corpus.sparkSession
-    val dgs = corpus.select(Dedup.normDigest.as("dg")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      graft.sources.Sources.writeBucketed(dgs, digestsTable(name), "dg", buckets)
-      val n = dgs.count()
-      val (nItems, nBits) = Dedup.bloomParams(n, fpp)
-      writeBloomRow(spark, name, n, nItems, nBits, fpp,
-        Dedup.bloomAggregate(dgs, nItems, nBits))
-    } finally { dgs.unpersist(); () }
-  }
+    val dgs = graft.Pins.pin(corpus.select(Dedup.normDigest.as("dg")).distinct())
+    graft.sources.Sources.writeBucketed(dgs, digestsTable(name), "dg", buckets)
+    val n = dgs.count()
+    val (nItems, nBits) = Dedup.bloomParams(n, fpp)
+    writeBloomRow(spark, name, n, nItems, nBits, fpp,
+      Dedup.bloomAggregate(dgs, nItems, nBits))
+  } }
   }
 
   /** q126 against the persisted tables — same bloom-prefilter shape,

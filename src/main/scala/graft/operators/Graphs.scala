@@ -549,18 +549,17 @@ object Graphs {
       // raw persisted per half-round: the renormalization total and
       // the projection both consume it — unpersisted, the edge ⋈
       // scores join ran twice per half-round (r19, guide §2.4).
-      // Node-sized; direct persist + same-half-round unpersist after
-      // the eager cut, in a finally (r20, ADVICE): only the CURRENT
-      // half-round's frame is ever re-read, so 2·iters accumulated pins
-      // were pure storage-memory pressure.
-      val raw = e
-        .join(bc(scores.withColumnRenamed("node", joinKey), useBcast), joinKey)
-        .select(col(outKey).as("node"), col(scoreCol).as("v"))
-        .unionByName(nodesR.select(col("node"), lit(0L).as("v")))
-        .groupBy(col("node"))
-        .agg(sum(col("v")).as("raw"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      // Node-sized; scoped to its half-round, released after the eager
+      // cut (r20): only the CURRENT half-round's frame is ever re-read,
+      // so 2·iters accumulated pins were pure storage-memory pressure.
+      graft.Pins.scope {
+        val raw = e
+          .join(bc(scores.withColumnRenamed("node", joinKey), useBcast), joinKey)
+          .select(col(outKey).as("node"), col(scoreCol).as("v"))
+          .unionByName(nodesR.select(col("node"), lit(0L).as("v")))
+          .groupBy(col("node"))
+          .agg(sum(col("v")).as("raw"))
+          .transform(graft.Pins.pin)
         val tot = raw.agg(sum(col("raw")).as("t"))
         raw
           .crossJoin(broadcast(tot))
@@ -568,7 +567,7 @@ object Graphs {
             coalesce(expr(s"(raw * $scale) div t"), lit(0L))
               .as(outCol))
           .transform(Ckpt.cut(_))
-      } finally raw.unpersist(blocking = false)
+      }
     }
     for (_ <- 1 to iters) {
       auth = half(hub, "h", "src", "dst", "a")   // a(v) ∝ Σ_{u→v} h(u)

@@ -97,30 +97,24 @@ object NearDupIndex {
 
   def fit(corpus: DataFrame, name: String,
           buckets: Int = DefaultBuckets): Unit = {
-    LakeLock.withWriter(corpus.sparkSession, name) {
-    val spark = corpus.sparkSession
-    // persist the rep-level shingle stream's PARENT (the distinct-text
+    LakeLock.withWriter(corpus.sparkSession, name) { graft.Pins.scope {
+    // pin the rep-level shingle stream's PARENT (the distinct-text
     // frame): all three artifact derivations re-scan rep, not the corpus
-    val rep = corpus
+    val rep = graft.Pins.pin(corpus
       .select(Dedup.normDigest.as("dg"), col("text"))
-      .dropDuplicates("dg")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val g = Dedup.shingles(rep.select(col("dg").as("doc_id"), col("text")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        graft.sources.Sources.writeBucketed(
-          rep.select(col("dg")), digestsTable(name), "dg", buckets)
-        graft.sources.Sources.writeBucketed(
-          Dedup.bandKeys(Dedup.minhashSignature(g))
-            .select(col("doc_id").as("dg"), col("n"), col("band"), col("band_key")),
-          bandsTable(name), "band_key", buckets)
-        graft.sources.Sources.writeBucketed(
-          g.select(col("doc_id").as("dg"), xxhash64(col("g")).as("gh")),
-          gramsTable(name), "dg", buckets)
-      } finally { g.unpersist(); () }
-    } finally { rep.unpersist(); () }
-  }
+      .dropDuplicates("dg"))
+    val g = graft.Pins.pin(
+      Dedup.shingles(rep.select(col("dg").as("doc_id"), col("text"))))
+    graft.sources.Sources.writeBucketed(
+      rep.select(col("dg")), digestsTable(name), "dg", buckets)
+    graft.sources.Sources.writeBucketed(
+      Dedup.bandKeys(Dedup.minhashSignature(g))
+        .select(col("doc_id").as("dg"), col("n"), col("band"), col("band_key")),
+      bandsTable(name), "band_key", buckets)
+    graft.sources.Sources.writeBucketed(
+      g.select(col("doc_id").as("dg"), xxhash64(col("g")).as("gh")),
+      gramsTable(name), "dg", buckets)
+  } }
   }
 
   /** Near-dup ingest verdicts for a batch against the fitted index —
@@ -216,20 +210,18 @@ object NearDupIndex {
       .dropDuplicates("dg")
       .join(spark.table(digestsTable(name)), Seq("dg"), "left_anti")
       .transform(Ckpt.cut(_))
-    if (newRep.limit(1).count() > 0L) {
-      val g = Dedup.shingles(newRep.select(col("dg").as("doc_id"), col("text")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        graft.sources.Sources.appendBucketed(
-          newRep.select(col("dg")), digestsTable(name), "dg")
-        graft.sources.Sources.appendBucketed(
-          Dedup.bandKeys(Dedup.minhashSignature(g))
-            .select(col("doc_id").as("dg"), col("n"), col("band"), col("band_key")),
-          bandsTable(name), "band_key")
-        graft.sources.Sources.appendBucketed(
-          g.select(col("doc_id").as("dg"), xxhash64(col("g")).as("gh")),
-          gramsTable(name), "dg")
-      } finally { g.unpersist(); () }
+    if (newRep.limit(1).count() > 0L) graft.Pins.scope {
+      val g = graft.Pins.pin(
+        Dedup.shingles(newRep.select(col("dg").as("doc_id"), col("text"))))
+      graft.sources.Sources.appendBucketed(
+        newRep.select(col("dg")), digestsTable(name), "dg")
+      graft.sources.Sources.appendBucketed(
+        Dedup.bandKeys(Dedup.minhashSignature(g))
+          .select(col("doc_id").as("dg"), col("n"), col("band"), col("band_key")),
+        bandsTable(name), "band_key")
+      graft.sources.Sources.appendBucketed(
+        g.select(col("doc_id").as("dg"), xxhash64(col("g")).as("gh")),
+        gramsTable(name), "dg")
     }
   }
   }

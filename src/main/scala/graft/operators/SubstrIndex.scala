@@ -100,17 +100,14 @@ object SubstrIndex {
           gram: Int = Dedup.SubstrGram,
           dfCap: Int = 0): Unit = {
     require(minLen >= gram, s"minLen ($minLen) must be >= gram ($gram)")
-    LakeLock.withWriter(corpus.sparkSession, name) {
-      val rep = repTexts(corpus)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        graft.sources.Sources.writeBucketed(
-          fingerprints(rep, minLen, gram), sfpTable(name), "h", buckets)
-        graft.sources.Sources.writeBucketed(
-          rep, textsTable(name), "dg", buckets)
-        writeParams(corpus.sparkSession, name, minLen, gram, dfCap)
-      } finally { rep.unpersist(); () }
-    }
+    LakeLock.withWriter(corpus.sparkSession, name) { graft.Pins.scope {
+      val rep = graft.Pins.pin(repTexts(corpus))
+      graft.sources.Sources.writeBucketed(
+        fingerprints(rep, minLen, gram), sfpTable(name), "h", buckets)
+      graft.sources.Sources.writeBucketed(
+        rep, textsTable(name), "dg", buckets)
+      writeParams(corpus.sparkSession, name, minLen, gram, dfCap)
+    } }
   }
 
   /** Verified span rows (batch digest, index digest, start in batch

@@ -94,7 +94,7 @@ object Sources {
   // Inside a deferringStats scope every autogather call RECORDS its
   // table instead of analyzing; flushDeferredStats gathers each
   // recorded table once. The streaming lanes wrap each foreachBatch
-  // body and flush on query termination (Streams.flushStatsOnClose).
+  // body and flush on query termination (Streams.onTerminated).
   // While deferred, the write itself invalidates the catalog rowCount
   // (Spark drops stats on insert rather than let them go stale), so
   // for the stream's lifetime reads estimate from live file sizes —
@@ -599,48 +599,46 @@ object Sources {
     * is a near-free file move per partition. */
   def upsertPartitioned(spark: SparkSession, path: String, updates: DataFrame,
                         keyCols: Seq[String], partitionCols: Seq[String],
-                        staging: String): Unit = {
+                        staging: String): Unit = graft.Pins.scope {
     val target = spark.read.parquet(path)
     val keys = updates.select(keyCols.map(updates.col): _*)
     val matchedParts = target.join(keys, keyCols, "left_semi")
       .select(partitionCols.map(target.col): _*).distinct()
     val affectedParts = updates.select(partitionCols.map(updates.col): _*)
       .unionByName(matchedParts).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val affected = target.join(affectedParts, partitionCols, "left_semi")
-      val kept = affected.join(keys, keyCols, "left_anti")
-      val merged = kept.unionByName(updates)
-      merged.write.mode(SaveMode.Overwrite).parquet(staging)
-      val staged = spark.read.parquet(staging)
-      // compute the drained-partition list BEFORE mutating `path`: the
-      // lineage of both sides reads the pre-upsert target, and a cache
-      // loss after the overwrite would silently recompute from mutated
-      // data (missing the moved key's old partition). Metadata-sized.
-      val emptied = affectedParts
-        .join(staged.select(partitionCols.map(staged.col): _*).distinct(),
-          partitionCols, "left_anti")
-        .select(partitionCols.map(c => col(c).cast("string")): _*)
-        .collect()
-      insertOverwritePartitions(staged, path, partitionCols)
-      // partitions fully drained by the upsert: in affected but absent
-      // from the staged result — delete their directories (hive-escaped
-      // names; string-cast partition values match the directory layout)
-      if (emptied.nonEmpty) {
-        import org.apache.hadoop.fs.Path
-        import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        emptied.foreach { row =>
-          val dir = partitionCols.zipWithIndex.map { case (c, i) =>
-            val v = if (row.isNullAt(i)) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-                    else ExternalCatalogUtils.escapePathName(row.getString(i))
-            s"${ExternalCatalogUtils.escapePathName(c)}=$v"
-          }.mkString("/")
-          val p = new Path(s"$path/$dir")
-          if (fs.exists(p)) require(fs.delete(p, true), s"failed to delete drained partition $p")
-        }
+      .transform(graft.Pins.pin)
+    val affected = target.join(affectedParts, partitionCols, "left_semi")
+    val kept = affected.join(keys, keyCols, "left_anti")
+    val merged = kept.unionByName(updates)
+    merged.write.mode(SaveMode.Overwrite).parquet(staging)
+    val staged = spark.read.parquet(staging)
+    // compute the drained-partition list BEFORE mutating `path`: the
+    // lineage of both sides reads the pre-upsert target, and a cache
+    // loss after the overwrite would silently recompute from mutated
+    // data (missing the moved key's old partition). Metadata-sized.
+    val emptied = affectedParts
+      .join(staged.select(partitionCols.map(staged.col): _*).distinct(),
+        partitionCols, "left_anti")
+      .select(partitionCols.map(c => col(c).cast("string")): _*)
+      .collect()
+    insertOverwritePartitions(staged, path, partitionCols)
+    // partitions fully drained by the upsert: in affected but absent
+    // from the staged result — delete their directories (hive-escaped
+    // names; string-cast partition values match the directory layout)
+    if (emptied.nonEmpty) {
+      import org.apache.hadoop.fs.Path
+      import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+      val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      emptied.foreach { row =>
+        val dir = partitionCols.zipWithIndex.map { case (c, i) =>
+          val v = if (row.isNullAt(i)) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+                  else ExternalCatalogUtils.escapePathName(row.getString(i))
+          s"${ExternalCatalogUtils.escapePathName(c)}=$v"
+        }.mkString("/")
+        val p = new Path(s"$path/$dir")
+        if (fs.exists(p)) require(fs.delete(p, true), s"failed to delete drained partition $p")
       }
-    } finally affectedParts.unpersist()
+    }
   }
 
   /** s06: small-files compaction — the nightly maintenance op that keeps

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, StreamingQueryListener}
 import graft.Cols._
 import graft.operators.Events
 
@@ -18,6 +19,13 @@ import graft.operators.Events
   * state: per-user state is one open session (constant size), sessions
   * close either when a later event exceeds the gap or when the event-time
   * timeout fires — so state is O(active users), not O(events).
+  *
+  * Every foreachBatch lane runs on one skeleton, [[eachBatch]]: each
+  * micro-batch body runs inside a [[graft.Pins.scope]], so the pins
+  * its operators take are released when the batch ends (on failure
+  * too) and a long-lived stream holds no storage between batches. A
+  * gate fit once against a static reference ([[fittedGate]]) keeps
+  * that one frame pinned until its query terminates.
   */
 object Streams {
 
@@ -124,12 +132,89 @@ object Streams {
     * overwrite the same path instead of duplicating rows (idempotent
     * writes + checkpointed offsets = effectively-once). */
   def startIdempotentSink(df: DataFrame, outDir: String,
-                          checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+                          checkpoint: String): StreamingQuery =
+    eachBatch(df, checkpoint) { (batch, batchId) =>
+      batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+    }
+
+  /** The micro-batch skeleton of every foreachBatch lane: `body` gets
+    * each batch and its id inside a [[graft.Pins.scope]], so the pins
+    * the batch's operators take are released when it ends — normally
+    * or by an exception — and never touch another query's pins. */
+  private def eachBatch(df: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
     df.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        graft.Pins.scope(body(batch, batchId))
       }
+      .start()
+
+  /** Run `hook` once when `query` terminates — on stop() and on
+    * failure alike — from a self-removing listener; a query that has
+    * already terminated runs it at once. */
+  private def onTerminated(query: StreamingQuery)(hook: => Unit)
+      : StreamingQuery = {
+    val streams = query.sparkSession.streams
+    val once = new java.util.concurrent.atomic.AtomicBoolean(false)
+    def fire(): Unit = if (once.compareAndSet(false, true)) hook
+    val listener = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (e.id == query.id) { streams.removeListener(this); fire() }
+    }
+    streams.addListener(listener)
+    if (!query.isActive) { streams.removeListener(listener); fire() }
+    query
+  }
+
+  /** st15–st18: a gate fit ONCE against a static reference. The fitted
+    * frame is pinned for the query's lifetime — every micro-batch
+    * reads it — and released when the query terminates. */
+  private def fittedGate(docs: DataFrame, checkpoint: String,
+                         fit: => DataFrame)(
+      body: (DataFrame, DataFrame) => Unit): StreamingQuery = {
+    val (query, release) = graft.Pins.owned {
+      val ref = graft.Pins.pin(fit)
+      eachBatch(docs, checkpoint)((batch, _) => body(batch, ref))
+    }
+    onTerminated(query)(release())
+  }
+
+  /** st20, st21, st25: admit the batch's docs whose verdict is `new`
+    * into `outDir`, then `register` them in the lake-resident index so
+    * a later batch dedups against them. */
+  private def admitGate(docs: DataFrame, outDir: String, checkpoint: String)(
+      verdicts: DataFrame => DataFrame)(
+      register: DataFrame => Unit): StreamingQuery =
+    eachBatch(docs, checkpoint) { (batch, _) =>
+      val keep = verdicts(batch).filter(col("status") === "new")
+        .select(col("doc_id"))
+      val kept = graft.Pins.pin(batch.join(keep, Seq("doc_id"), "left_semi"))
+      kept.write.mode("append").parquet(outDir)
+      register(kept)
+    }
+
+  /** st36, st40: index maintenance whose appends defer their stats
+    * gathering per batch ([[graft.sources.Sources.deferringStats]]) and
+    * gather once at query termination — batch job counts stay flat and
+    * a crashed stream still leaves gathered stats behind. */
+  private def maintenance(df: DataFrame, checkpoint: String)(
+      body: DataFrame => Unit): StreamingQuery =
+    onTerminated(eachBatch(df, checkpoint) { (batch, _) =>
+      graft.sources.Sources.deferringStats(batch.sparkSession)(body(batch))
+    })(graft.sources.Sources.flushDeferredStats(df.sparkSession))
+
+  /** The append-mode parquet sink of the keyed-state lanes (st22, st23). */
+  private def parquetSink(df: DataFrame, outDir: String,
+                          checkpoint: String): StreamingQuery =
+    df.writeStream
+      .format("parquet")
+      .option("path", outDir)
+      .option("checkpointLocation", checkpoint)
+      .outputMode(OutputMode.Append())
       .start()
 
   /** st05: stream-stream interval join — view→purchase conversions
@@ -214,7 +299,7 @@ object Streams {
     * (`SELECT ... FROM table`) — ingestion and warehouse queries share
     * one catalog object, no manual path coordination. */
   def sinkToCatalogTable(stream: DataFrame, table: String,
-                         checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+                         checkpoint: String): StreamingQuery =
     stream.writeStream
       .format("parquet")
       .option("checkpointLocation", checkpoint)
@@ -234,16 +319,12 @@ object Streams {
     * suffixed by batchId so replays never collide mid-write. */
   def startCdcUpsert(updates: DataFrame, path: String, staging: String,
                      checkpoint: String, keyCols: Seq[String],
-                     partitionCols: Seq[String]): org.apache.spark.sql.streaming.StreamingQuery =
-    updates.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.sources.Sources.upsertPartitioned(batch.sparkSession, path,
-            batch, keyCols, partitionCols, s"$staging/batch_$batchId")
-        }
-      }
-      .start()
+                     partitionCols: Seq[String]): StreamingQuery =
+    eachBatch(updates, checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty)
+        graft.sources.Sources.upsertPartitioned(batch.sparkSession, path,
+          batch, keyCols, partitionCols, s"$staging/batch_$batchId")
+    }
 
   /** st26: streaming SNAPSHOT-TABLE sink — every micro-batch lands as
     * ONE atomic s16 commit ([[graft.sources.SnapshotTable]]), closing
@@ -297,14 +378,10 @@ object Streams {
   }
 
   def startSnapshotSink(df: DataFrame, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) commitBatchOnce(batch.toDF(), batchId, path)
-        ()
-      }
-      .start()
+      : StreamingQuery =
+    eachBatch(df, checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty) commitBatchOnce(batch, batchId, path)
+    }
 
   /** st31: streaming INCREMENTAL-VIEW maintenance — the st26 snapshot
     * sink composed with mv02: each micro-batch lands in the base
@@ -323,25 +400,9 @@ object Streams {
     * (IncrementalView.create, keys + algebraic aggs). */
   def startIncrementalViewSink(df: DataFrame, basePath: String,
                                mvPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = df.sparkSession
-    val query = df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          commitBatchOnce(batch.toDF(), batchId, basePath)
-          // refresh serializes under the view's own lock; a CONTENDED
-          // refresh (an operator running an out-of-band refresh) skips —
-          // the next refresh folds every unfolded commit, and the
-          // close-time refresh below catches a contended FINAL batch
-          try graft.sources.IncrementalView.refresh(batch.sparkSession, mvPath)
-          catch { case _: graft.operators.LakeLock.Contended => () }
-        }
-        ()
-      }
-      .start()
-    refreshViewOnClose(spark, query, mvPath, join = false)
-  }
+      : StreamingQuery =
+    viewSink(df, basePath, mvPath, checkpoint)(
+      graft.sources.IncrementalView.refresh(_, mvPath))
 
   /** st39: streaming FACT⋈FACT incremental-view maintenance — st31
     * composed with mv04. TWO independent micro-batch streams each land
@@ -357,63 +418,37 @@ object Streams {
     * contended batch and never double-counts (the s16 publish is
     * atomic, the watermarks ride the same commit). */
   def startJoinViewSink(df: DataFrame, basePath: String, mvPath: String,
-                        checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = df.sparkSession
-    val query = df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          commitBatchOnce(batch.toDF(), batchId, basePath)
-          // refreshJoin serializes under its OWN view-level lock; only
-          // the dedicated Contended signal means "the other stream's
-          // refresh is folding right now — skip, it (or the close-time
-          // refresh below) covers our commit". Any other failure
-          // propagates and fails the batch, as it should.
-          try graft.sources.IncrementalView.refreshJoin(batch.sparkSession, mvPath)
-          catch { case _: graft.operators.LakeLock.Contended => () }
-        }
-        ()
-      }
-      .start()
-    refreshViewOnClose(spark, query, mvPath, join = true)
-  }
+                        checkpoint: String): StreamingQuery =
+    viewSink(df, basePath, mvPath, checkpoint)(
+      graft.sources.IncrementalView.refreshJoin(_, mvPath))
 
-  /** Run one FINAL view refresh when `query` terminates — the other
-    * half of the skip-on-contention policy above: without it, a
-    * contended LAST batch would leave the view lagging until some
-    * external refresh call. Mirrors [[flushStatsOnClose]] (self-
-    * removing listener; termination fires on stop() and on failure).
-    * Exceptions stay inside the listener — a close-time refresh that
-    * loses one more contention round (or finds a mutated base) must
-    * not take the listener bus down; the view simply stays one
-    * refresh behind, which every refresh covers by design. */
-  private def refreshViewOnClose(spark: org.apache.spark.sql.SparkSession,
-      query: org.apache.spark.sql.streaming.StreamingQuery, mvPath: String,
-      join: Boolean): org.apache.spark.sql.streaming.StreamingQuery = {
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-        if (e.id == query.id) {
-          try {
-            if (join) graft.sources.IncrementalView.refreshJoin(spark, mvPath)
-            else graft.sources.IncrementalView.refresh(spark, mvPath)
-            ()
-          } catch {
-            case _: graft.operators.LakeLock.Contended => ()
-            case ex: Exception =>
-              System.err.println(s"[graft] close-time view refresh of " +
-                s"$mvPath failed: $ex")
-          }
-          spark.streams.removeListener(this)
-        }
+  /** The st31/st39 body: land each non-empty batch in the base exactly
+    * once, then fold it into the view. The refresh serializes under the
+    * view's own lock; a CONTENDED refresh (the other stream's, or an
+    * operator's out-of-band one, is folding right now) skips — the next
+    * refresh folds every unfolded commit — and any other failure fails
+    * the batch, as it should. One final refresh at query termination
+    * catches a contended LAST batch; its exceptions stay inside the
+    * hook (the view then stays one refresh behind, which every refresh
+    * covers by design). */
+  private def viewSink(df: DataFrame, basePath: String, mvPath: String,
+                       checkpoint: String)(
+      refresh: SparkSession => Any): StreamingQuery = {
+    def fold(s: SparkSession): Unit =
+      try { refresh(s); () }
+      catch { case _: graft.operators.LakeLock.Contended => () }
+    val spark = df.sparkSession
+    onTerminated(eachBatch(df, checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        commitBatchOnce(batch, batchId, basePath)
+        fold(batch.sparkSession)
+      }
+    }) {
+      try fold(spark)
+      catch { case ex: Exception =>
+        System.err.println(s"[graft] close-time view refresh of $mvPath failed: $ex")
+      }
     }
-    spark.streams.addListener(listener)
-    query
   }
 
   /** st10: streaming corpus dedup by CONTENT fingerprint — the
@@ -534,11 +569,12 @@ object Streams {
     * word-3-gram shingles overlap the eval/benchmark suite beyond
     * `maxContamination` never land in the training lake. The benchmark
     * gram index is fit ONCE ([[graft.operators.Dedup.benchmarkGrams]],
-    * persisted) and reused by every micro-batch; each batch then runs
-    * the exact batch code path (broadcast gram join + per-doc count
-    * aggregation) via foreachBatch, so stream and batch verdicts
-    * cannot drift — the spec asserts set parity with a batch q69
-    * filter over the same docs.
+    * pinned until the query terminates) and reused by every
+    * micro-batch; each batch then runs the exact batch code path
+    * (broadcast gram join + per-doc count aggregation) via
+    * foreachBatch, so stream and batch verdicts cannot drift — the
+    * spec asserts set parity with a batch q69 filter over the same
+    * docs.
     *
     * Scale shape: eval suites are tiny next to the corpus (MBs vs
     * 100 TB), so the index broadcasts map-side; per-batch shuffle is
@@ -546,33 +582,25 @@ object Streams {
     * with < 3 tokens carry no contamination evidence and pass. */
   def startDecontamGate(docs: DataFrame, benchmark: DataFrame,
                         outDir: String, checkpoint: String,
-                        maxContamination: Double = 0.5)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val benchGrams = graft.operators.Dedup.benchmarkGrams(benchmark)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       _: Long) =>
-        val dirty = graft.operators.Dedup
-          .contaminationAgainst(batch, benchGrams)
-          .filter(col("contamination") > maxContamination)
-          .select(col("doc_id"))
-        batch.join(dirty, Seq("doc_id"), "left_anti")
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-  }
+                        maxContamination: Double = 0.5): StreamingQuery =
+    fittedGate(docs, checkpoint,
+        graft.operators.Dedup.benchmarkGrams(benchmark)) { (batch, benchGrams) =>
+      val dirty = graft.operators.Dedup
+        .contaminationAgainst(batch, benchGrams)
+        .filter(col("contamination") > maxContamination)
+        .select(col("doc_id"))
+      batch.join(dirty, Seq("doc_id"), "left_anti")
+        .write.mode("append").parquet(outDir)
+    }
 
   /** st16: streaming DSIR gate — q117's importance weighting applied
     * at INGEST: the target-vs-raw log-ratio table is fit ONCE from a
     * static reference corpus ([[graft.operators.TextAnalysis.dsirFit]],
-    * persisted) and every micro-batch scores its documents through the
-    * exact batch apply path (broadcast ≤buckets-row join + per-doc
-    * bucket-ordered fold) via foreachBatch — stream and batch weights
-    * are bit-identical by construction, so a gate threshold tuned on
-    * the batch side transfers exactly. Docs below `minWeight` never
+    * pinned for the query's lifetime) and every micro-batch scores its
+    * documents through the exact batch apply path (broadcast
+    * ≤buckets-row join + per-doc bucket-ordered fold) via foreachBatch
+    * — stream and batch weights are bit-identical by construction, so
+    * a gate threshold tuned on the batch side transfers exactly. Docs below `minWeight` never
     * land in the lake.
     *
     * Scale shape: the fitted table is ≤ `buckets` rows (broadcast,
@@ -582,65 +610,47 @@ object Streams {
   def startDsirGate(docs: DataFrame, reference: DataFrame,
                     outDir: String, checkpoint: String,
                     targetSource: String = "src0", buckets: Int = 64,
-                    minWeight: Double = 0.0)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val lr = graft.operators.TextAnalysis
-      .dsirFit(reference, targetSource, buckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       _: Long) =>
-        val keep = graft.operators.TextAnalysis
-          .dsirApply(batch, lr, buckets)
-          .filter(col("weight") > minWeight)
-          .select(col("doc_id"))
-        batch.join(keep, Seq("doc_id"), "left_semi")
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-  }
+                    minWeight: Double = 0.0): StreamingQuery =
+    fittedGate(docs, checkpoint, graft.operators.TextAnalysis
+        .dsirFit(reference, targetSource, buckets)) { (batch, lr) =>
+      val keep = graft.operators.TextAnalysis
+        .dsirApply(batch, lr, buckets)
+        .filter(col("weight") > minWeight)
+        .select(col("doc_id"))
+      batch.join(keep, Seq("doc_id"), "left_semi")
+        .write.mode("append").parquet(outDir)
+    }
 
   /** st17: streaming TEMPERATURE-MIX gate — q120's source-balanced
     * sampling applied at ingest: the per-source rate table (n_s^α
     * mixing weights + integer keep thresholds) is fit ONCE from a
     * static reference corpus ([[graft.operators.TextAnalysis
-    * .tempMixRates]], sources-sized, persisted) and every micro-batch
-    * runs the exact batch apply path (broadcast join + one integer
-    * Knuth hash per doc) — stream and batch keep-verdicts are
-    * bit-identical, so the mix tuned batch-side transfers exactly.
+    * .tempMixRates]], sources-sized, pinned for the query's lifetime)
+    * and every micro-batch runs the exact batch apply path (broadcast
+    * join + one integer Knuth hash per doc) — stream and batch
+    * keep-verdicts are bit-identical, so the mix tuned batch-side transfers exactly.
     * Stateless: no state store, no watermark, append mode at any
     * ingest rate; per-batch work is ∝ batch size with no shuffle
     * (the rate side broadcasts). */
   def startTempMixGate(docs: DataFrame, reference: DataFrame,
                        outDir: String, checkpoint: String,
                        alpha: Double = graft.Oracles.MixAlpha,
-                       budget: Long = graft.Oracles.MixBudget)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val rates = graft.operators.TextAnalysis
-      .tempMixRates(reference, alpha, budget)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       _: Long) =>
-        val keep = graft.operators.TextAnalysis
-          .tempMixApply(batch, rates)
-          .filter(col("keep"))
-          .select(col("doc_id"))
-        batch.join(keep, Seq("doc_id"), "left_semi")
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-  }
+                       budget: Long = graft.Oracles.MixBudget): StreamingQuery =
+    fittedGate(docs, checkpoint, graft.operators.TextAnalysis
+        .tempMixRates(reference, alpha, budget)) { (batch, rates) =>
+      val keep = graft.operators.TextAnalysis
+        .tempMixApply(batch, rates)
+        .filter(col("keep"))
+        .select(col("doc_id"))
+      batch.join(keep, Seq("doc_id"), "left_semi")
+        .write.mode("append").parquet(outDir)
+    }
 
   /** st18: streaming SPAN-SCRUB gate — q119's substring-level dedup
     * applied at INGEST: the cross-doc repeated-span key set is fit ONCE
     * from a static reference corpus ([[graft.operators.Dedup
-    * .repeatedSpanSet]] — q119's own fit side, persisted across
-    * micro-batches) and every micro-batch is rewritten through the
+    * .repeatedSpanSet]] — q119's own fit side, pinned for the query's
+    * lifetime) and every micro-batch is rewritten through the
     * exact q119 scrub path ([[graft.operators.Dedup.spanScrubApply]])
     * via foreachBatch: repeated k-token spans are cut, overlapping cuts
     * merge, surviving tokens reassemble — so a license header that
@@ -660,20 +670,12 @@ object Streams {
     * cadence the engine already champions. */
   def startSpanScrubGate(docs: DataFrame, reference: DataFrame,
                          outDir: String, checkpoint: String,
-                         k: Int = graft.Oracles.SpanK)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val repeated = graft.operators.Dedup.repeatedSpanSet(reference, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       _: Long) =>
-        graft.operators.Dedup.spanScrubApply(batch, repeated, k)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-  }
+                         k: Int = graft.Oracles.SpanK): StreamingQuery =
+    fittedGate(docs, checkpoint,
+        graft.operators.Dedup.repeatedSpanSet(reference, k)) { (batch, repeated) =>
+      graft.operators.Dedup.spanScrubApply(batch, repeated, k)
+        .write.mode("append").parquet(outDir)
+    }
 
   /** st19: streaming EMBEDDING-DEDUP gate — semantic near-dup dedup at
     * INGEST against the s11 persisted ANN index: each micro-batch's
@@ -699,22 +701,16 @@ object Streams {
     * batch-side q46/q64 pass at the next append/refit). */
   def startEmbDedupGate(docs: DataFrame, indexName: String,
                         outDir: String, checkpoint: String,
-                        minCosine: Double = 0.95)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       _: Long) =>
-        val dup = graft.operators.AnnIndex.searchInt8(
-            batch.select(col("doc_id").as("vec_id"), col("embedding")),
-            indexName, k = 1)
-          .filter(col("cos") >= minCosine)
-          .select(col("qid").as("doc_id"))
-        batch.join(dup, Seq("doc_id"), "left_anti")
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
+                        minCosine: Double = 0.95): StreamingQuery =
+    eachBatch(docs, checkpoint) { (batch, _) =>
+      val dup = graft.operators.AnnIndex.searchInt8(
+          batch.select(col("doc_id").as("vec_id"), col("embedding")),
+          indexName, k = 1)
+        .filter(col("cos") >= minCosine)
+        .select(col("qid").as("doc_id"))
+      batch.join(dup, Seq("doc_id"), "left_anti")
+        .write.mode("append").parquet(outDir)
+    }
 
   /** st20: streaming CORPUS-dedup gate over the persisted s12 index —
     * exact dedup at ingest where the dedup STATE lives in the LAKE
@@ -736,24 +732,10 @@ object Streams {
     * double-ADMIT; pair the parquet sink with the st06 idempotent-sink
     * pattern for exactly-once output files. */
   def startCorpusDedupGate(docs: DataFrame, indexName: String,
-                           outDir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       _: Long) =>
-        val keep = graft.operators.DedupIndex.dedup(batch, indexName)
-          .filter(col("status") === "new")
-          .select(col("doc_id"))
-        val kept = batch.join(keep, Seq("doc_id"), "left_semi")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          kept.write.mode("append").parquet(outDir)
-          graft.operators.DedupIndex.append(kept, indexName)
-        } finally { kept.unpersist(); () }
-        ()
-      }
-      .start()
+                           outDir: String, checkpoint: String): StreamingQuery =
+    admitGate(docs, outDir, checkpoint)(
+      graft.operators.DedupIndex.dedup(_, indexName))(
+      graft.operators.DedupIndex.append(_, indexName))
 
   /** st21: streaming NEAR-dup gate over the persisted s13 index — the
     * near-duplicate twin of st20, completing the lake-state pair: each
@@ -774,23 +756,10 @@ object Streams {
   def startNearDupGate(docs: DataFrame, indexName: String,
                        outDir: String, checkpoint: String,
                        t: Double = graft.operators.Dedup.MinhashJaccardThreshold)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       _: Long) =>
-        val keep = graft.operators.NearDupIndex.dedup(batch, indexName, t)
-          .filter(col("status") === "new")
-          .select(col("doc_id"))
-        val kept = batch.join(keep, Seq("doc_id"), "left_semi")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          kept.write.mode("append").parquet(outDir)
-          graft.operators.NearDupIndex.append(kept, indexName)
-        } finally { kept.unpersist(); () }
-        ()
-      }
-      .start()
+      : StreamingQuery =
+    admitGate(docs, outDir, checkpoint)(
+      graft.operators.NearDupIndex.dedup(_, indexName, t))(
+      graft.operators.NearDupIndex.append(_, indexName))
 
   /** st34: streaming SUBSTRING-DECONTAMINATION gate — the byte-
     * granular twin of st15's trigram-overlap decontam, served from the
@@ -804,24 +773,18 @@ object Streams {
     * the checkpoint as usual. */
   def startSubstrDecontamGate(docs: DataFrame, indexName: String,
                               outDir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       _: Long) =>
-        // (minLen, gram, dfCap) come from the index's own params table
-        // (r15): a gate-supplied gram that differed from the fitted one
-        // would share zero fingerprints and silently admit everything
-        val keep = graft.operators.SubstrIndex
-          .containment(batch, indexName)
-          .filter(col("status") === "clean")
-          .select(col("doc_id"))
-        batch.join(keep, Seq("doc_id"), "left_semi")
-          .write.mode("append").parquet(outDir)
-        graft.Pins.release()
-        ()
-      }
-      .start()
+      : StreamingQuery =
+    eachBatch(docs, checkpoint) { (batch, _) =>
+      // (minLen, gram, dfCap) come from the index's own params table
+      // (r15): a gate-supplied gram that differed from the fitted one
+      // would share zero fingerprints and silently admit everything
+      val keep = graft.operators.SubstrIndex
+        .containment(batch, indexName)
+        .filter(col("status") === "clean")
+        .select(col("doc_id"))
+      batch.join(keep, Seq("doc_id"), "left_semi")
+        .write.mode("append").parquet(outDir)
+    }
 
   /** st35: streaming SUBSTRING-SCRUB gate — st34's rewrite twin (the
     * q203-vs-q200 relationship at the stream boundary): instead of
@@ -837,17 +800,11 @@ object Streams {
     * by checkpoint. */
   def startSubstrScrubGate(docs: DataFrame, indexName: String,
                            outDir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       _: Long) =>
-        graft.operators.SubstrIndex.scrub(batch, indexName)
-          .write.mode("append").parquet(outDir)
-        graft.Pins.release()
-        ()
-      }
-      .start()
+      : StreamingQuery =
+    eachBatch(docs, checkpoint) { (batch, _) =>
+      graft.operators.SubstrIndex.scrub(batch, indexName)
+        .write.mode("append").parquet(outDir)
+    }
 
   /** st36: streaming CLUSTER-LABEL MAINTENANCE over the s27 index —
     * the q109 ingest cadence for near-dup CLUSTERS. Unlike the gates
@@ -872,26 +829,15 @@ object Streams {
     * autogather path, which would fire one ANALYZE job per micro-batch
     * forever. Each batch body runs under
     * [[graft.sources.Sources.deferringStats]] (appends only RECORD
-    * their tables) and [[flushStatsOnClose]] gathers once at query
-    * termination — batch job counts stay flat and the catalog row
+    * their tables) and one [[onTerminated]] hook gathers them once at
+    * query termination — batch job counts stay flat and the catalog row
     * counts are current again by stream close. */
   def startClusterMaintenance(docs: DataFrame, indexName: String,
-                              checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = docs.sparkSession
-    val query = docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       _: Long) =>
-        graft.sources.Sources.deferringStats(batch.sparkSession) {
-          graft.operators.ClusterIndex.append(
-            batch.select(col("doc_id"), col("text")), indexName)
-        }
-        ()
-      }
-      .start()
-    flushStatsOnClose(spark, query)
-  }
+                              checkpoint: String): StreamingQuery =
+    maintenance(docs, checkpoint) { batch =>
+      graft.operators.ClusterIndex.append(
+        batch.select(col("doc_id"), col("text")), indexName)
+    }
 
   /** st40: streaming ANN-INDEX maintenance — st36's fit-once/append-
     * forever cadence applied to the s11/s29 serving index: each
@@ -914,70 +860,35 @@ object Streams {
     * the quantizers want a representative corpus, not the first
     * micro-batch). */
   def startAnnIndexMaintenance(embs: DataFrame, indexName: String,
-                               checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = embs.sparkSession
-    val query = embs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       _: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val fresh = batch.toDF().join(
-            s.table(graft.operators.AnnIndex.vectorsTable(indexName))
-              .select(col("vec_id")),
-            Seq("vec_id"), "left_anti")
-          // STAGE the anti-joined batch before appending: `fresh` is a
-          // lazy plan over the index's OWN vectors table, and append's
-          // first artifact write INSERTS into that table — Spark then
-          // recomputes dependent plans, so every later artifact would
-          // see the anti-join as empty (self-referential lineage). A
-          // batch-sized scratch write cuts the lineage at a snapshot
-          // taken BEFORE any index mutation.
-          val stage = new org.apache.hadoop.fs.Path(
-            s.conf.get("spark.sql.warehouse.dir"),
-            s"graft_st40_stage_$indexName")
-          val fs = stage.getFileSystem(s.sparkContext.hadoopConfiguration)
-          try {
-            fresh.select(col("vec_id"), col("embedding"))
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .parquet(stage.toString)
-            val staged = s.read.parquet(stage.toString)
-            if (staged.head(1).nonEmpty)
-              graft.sources.Sources.deferringStats(s) {
-                graft.operators.AnnIndex.append(staged, indexName)
-              }
-          } finally { fs.delete(stage, true); () }
-        }
-        ()
+                               checkpoint: String): StreamingQuery =
+    maintenance(embs, checkpoint) { batch =>
+      if (!batch.isEmpty) {
+        val s = batch.sparkSession
+        val fresh = batch.join(
+          s.table(graft.operators.AnnIndex.vectorsTable(indexName))
+            .select(col("vec_id")),
+          Seq("vec_id"), "left_anti")
+        // STAGE the anti-joined batch before appending: `fresh` is a
+        // lazy plan over the index's OWN vectors table, and append's
+        // first artifact write INSERTS into that table — Spark then
+        // recomputes dependent plans, so every later artifact would
+        // see the anti-join as empty (self-referential lineage). A
+        // batch-sized scratch write cuts the lineage at a snapshot
+        // taken BEFORE any index mutation.
+        val stage = new org.apache.hadoop.fs.Path(
+          s.conf.get("spark.sql.warehouse.dir"),
+          s"graft_st40_stage_$indexName")
+        val fs = stage.getFileSystem(s.sparkContext.hadoopConfiguration)
+        try {
+          fresh.select(col("vec_id"), col("embedding"))
+            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+            .parquet(stage.toString)
+          val staged = s.read.parquet(stage.toString)
+          if (staged.head(1).nonEmpty)
+            graft.operators.AnnIndex.append(staged, indexName)
+        } finally { fs.delete(stage, true); () }
       }
-      .start()
-    flushStatsOnClose(spark, query)
-  }
-
-  /** Gather every stat deferred during `query`'s micro-batches once,
-    * at termination — the close-of-stream half of the autogather
-    * debounce. Self-removing listener; termination events fire on
-    * stop() AND on failure, so a crashed stream still leaves gathered
-    * stats behind for the next planner. */
-  private[graft] def flushStatsOnClose(spark: org.apache.spark.sql.SparkSession,
-      query: org.apache.spark.sql.streaming.StreamingQuery)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-        if (e.id == query.id) {
-          graft.sources.Sources.flushDeferredStats(spark)
-          spark.streams.removeListener(this)
-        }
     }
-    spark.streams.addListener(listener)
-    query
-  }
 
   /** st25: streaming URL-DEDUP gate — the crawl-frontier twin of st20,
     * keyed on the CANONICAL URL instead of the text digest: each
@@ -1002,29 +913,16 @@ object Streams {
   def startUrlDedupGate(docs: DataFrame, indexName: String,
                         outDir: String, checkpoint: String,
                         buckets: Int = graft.operators.UrlIndex.DefaultBuckets)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       _: Long) =>
-        val spark = batch.sparkSession
-        import graft.operators.UrlIndex
-        // first batch bootstraps an empty registry (a pre-fitted s15
-        // index — e.g. from an existing crawl — is picked up as-is)
-        if (!spark.catalog.tableExists(UrlIndex.urlsTable(indexName)))
-          UrlIndex.fit(batch.limit(0), indexName, buckets)
-        val keep = UrlIndex.dedup(batch, indexName)
-          .filter(col("status") === "new")
-          .select(col("doc_id"))
-        val kept = batch.join(keep, Seq("doc_id"), "left_semi")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          kept.write.mode("append").parquet(outDir)
-          UrlIndex.append(kept, indexName)
-        } finally { kept.unpersist(); () }
-        ()
-      }
-      .start()
+      : StreamingQuery = {
+    import graft.operators.UrlIndex
+    admitGate(docs, outDir, checkpoint) { batch =>
+      // first batch bootstraps an empty registry (a pre-fitted s15
+      // index — e.g. from an existing crawl — is picked up as-is)
+      if (!batch.sparkSession.catalog.tableExists(UrlIndex.urlsTable(indexName)))
+        UrlIndex.fit(batch.limit(0), indexName, buckets)
+      UrlIndex.dedup(batch, indexName)
+    }(UrlIndex.append(_, indexName))
+  }
 
   case class QuotaDoc(doc_id: Long, source: String)
   /** st32 spec fixture row (top-level so encoders resolve). */
@@ -1047,10 +945,11 @@ object Streams {
     * quality-ranked survivorship matters. */
   def startQuotaGate(docs: DataFrame, quota: Long,
                      outDir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select(col("doc_id").cast("long").as("doc_id"), col("source"))
+    val admitted = docs
+      .select(col("doc_id").cast("long").as("doc_id"), col("source"))
       .as[QuotaDoc]
       .groupByKey(_.source)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
@@ -1061,13 +960,7 @@ object Streams {
           state.update(used + keep.length)
           keep.iterator
       }
-      .toDF()
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
+    parquetSink(admitted.toDF(), outDir, checkpoint)
   }
 
   private def closed(user: Long, s: OpenSession): SessionOut =
@@ -1163,11 +1056,11 @@ object Streams {
     * (stamped with `seen`, the sketch's cumulative token count, so
     * consecutive snapshots of one source are distinguishable). */
   def startFreqMonitor(docs: DataFrame, capacity: Int = 64, k: Int = 10,
-                       outDir: String = null, checkpoint: String = null)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+                       outDir: String, checkpoint: String): StreamingQuery = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select(col("doc_id").cast("long").as("doc_id"), col("source"),
+    val heavy = docs
+      .select(col("doc_id").cast("long").as("doc_id"), col("source"),
         split(lower(trim(col("text"))), " ").as("toks"))
       .as[MonDoc]
       .groupByKey(_.source)
@@ -1189,13 +1082,7 @@ object Streams {
             HhRow(src, i + 1, tok, est, dec, seen)
           }.iterator
       }
-      .toDF()
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
+    parquetSink(heavy.toDF(), outDir, checkpoint)
   }
 
   case class ThrottleDoc(doc_id: Long, source: String,
@@ -1229,8 +1116,8 @@ object Streams {
       .as[ThrottleDoc]
       .groupByKey(_.source)
       .flatMapGroupsWithState[BucketState, ThrottleOut](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout()) {
+        OutputMode.Append(),
+        GroupStateTimeout.NoTimeout()) {
         case (src, it, state) =>
           val capMilli = capacity * 1000L
           var s = state.getOption.getOrElse(BucketState(capMilli, Long.MinValue))

@@ -13,6 +13,8 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
+import _root_.graft.Pins
+
 /** SQL-text row-level mutations — `DELETE FROM` / `UPDATE` / `MERGE
   * INTO` — for v1 lake tables (session-catalog tables `USING parquet`
   * and path-based file relations).
@@ -110,15 +112,13 @@ case class GraftRowLevelCommand(
   /** Predicate as a three-valued-logic-safe boolean: NULL ⇒ false. */
   private def pred(e: Expression): Column = coalesce(c(e), lit(false))
 
-  override def run(spark: SparkSession): Seq[Row] = {
+  // scoped: MERGE's pinned join must outlive the staging write (which
+  // re-reads it), then release
+  override def run(spark: SparkSession): Seq[Row] = Pins.scope {
     val (catalogTable, path, partitionCols) =
       RowLevelSqlRewrite.unwrapTarget(target).getOrElse(
         throw new IllegalStateException(s"$verb target is not a graft lake table"))
     val tdf = ColumnBridge.ofRows(spark, target)
-    // set by the MERGE path: the persisted join must outlive the staging
-    // write (which re-reads it), then release
-    var pinned: Option[DataFrame] = None
-
     val result: DataFrame = verb match {
       case "DELETE" =>
         tdf.filter(!pred(condition.get))
@@ -132,10 +132,7 @@ case class GraftRowLevelCommand(
             case None => c(attr).as(attr.name)
           }
         }: _*)
-      case "MERGE" =>
-        val (df, joined) = mergeResult(spark, tdf)
-        pinned = Some(joined)
-        df
+      case "MERGE" => mergeResult(spark, tdf)
     }
 
     // Stage next to the table (same FS — executors can reach it; a
@@ -173,10 +170,7 @@ case class GraftRowLevelCommand(
           spark.catalog.refreshByPath(loc.toString)
       }
       catalogTable.foreach(ct => spark.catalog.refreshTable(ct.identifier.unquotedString))
-    } finally {
-      pinned.foreach(_.unpersist())
-      fs.delete(staging, true)
-    }
+    } finally { fs.delete(staging, true); () }
     Seq.empty
   }
 
@@ -184,58 +178,53 @@ case class GraftRowLevelCommand(
     * flags) drive the three row classes; within a class the action list
     * folds right so the FIRST action whose condition holds wins, exactly
     * SQL MERGE's evaluation order. */
-  private def mergeResult(spark: SparkSession, tdf0: DataFrame): (DataFrame, DataFrame) = {
+  private def mergeResult(spark: SparkSession, tdf0: DataFrame): DataFrame = {
     val T = "__graft_t"; val S = "__graft_s"; val TID = "__graft_tid"
     val tdf = tdf0.withColumn(T, lit(true))
       .withColumn(TID, monotonically_increasing_id())
     val sdf = ColumnBridge.ofRows(spark, source.get).withColumn(S, lit(true))
-    val joined = tdf.join(sdf, c(condition.get), "full_outer")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val isMatched = col(T).isNotNull && col(S).isNotNull
-      val isNotMatched = col(T).isNull && col(S).isNotNull
-      if (matchedActions.nonEmpty || notMatchedBySourceActions.nonEmpty) {
-        val dups = joined.filter(isMatched).groupBy(col(TID)).count()
-          .filter(col("count") > 1).limit(1).count()
-        if (dups > 0) throw new org.apache.spark.SparkException(
-          "MERGE cardinality violation: a target row matched more than one source row")
-      }
-      def actionCond(a: MergeAction): Column =
-        a.condition.map(pred).getOrElse(lit(true))
-      def branchKeep(actions: Seq[MergeAction], default: Column): Column =
-        actions.foldRight(default) { (a, els) =>
-          val keep = a match { case _: DeleteAction => lit(false); case _ => lit(true) }
-          when(actionCond(a), keep).otherwise(els)
-        }
-      def branchValue(actions: Seq[MergeAction], attr: Attribute,
-          default: Column): Column =
-        actions.foldRight(default) { (a, els) =>
-          val v: Column = a match {
-            case u: UpdateAction =>
-              u.assignments
-                .find(_.key.asInstanceOf[AttributeReference].exprId == attr.exprId)
-                .map(x => c(x.value)).getOrElse(c(attr))
-            case i: InsertAction =>
-              i.assignments
-                .find(_.key.asInstanceOf[AttributeReference].exprId == attr.exprId)
-                .map(x => c(x.value)).getOrElse(lit(null).cast(attr.dataType))
-            case _: DeleteAction => c(attr) // row is dropped by branchKeep
-          }
-          when(actionCond(a), v).otherwise(els)
-        }
-      val keep = when(isMatched, branchKeep(matchedActions, lit(true)))
-        .when(isNotMatched, branchKeep(notMatchedActions, lit(false)))
-        .otherwise(branchKeep(notMatchedBySourceActions, lit(true)))
-      val cols = target.output.map { attr =>
-        when(isMatched, branchValue(matchedActions, attr, c(attr)))
-          .when(isNotMatched,
-            branchValue(notMatchedActions, attr, lit(null).cast(attr.dataType)))
-          .otherwise(branchValue(notMatchedBySourceActions, attr, c(attr)))
-          .as(attr.name)
-      }
-      (joined.filter(keep).select(cols: _*), joined)
-    } catch {
-      case t: Throwable => joined.unpersist(); throw t
+    val joined = Pins.pin(tdf.join(sdf, c(condition.get), "full_outer"))
+    val isMatched = col(T).isNotNull && col(S).isNotNull
+    val isNotMatched = col(T).isNull && col(S).isNotNull
+    if (matchedActions.nonEmpty || notMatchedBySourceActions.nonEmpty) {
+      val dups = joined.filter(isMatched).groupBy(col(TID)).count()
+        .filter(col("count") > 1).limit(1).count()
+      if (dups > 0) throw new org.apache.spark.SparkException(
+        "MERGE cardinality violation: a target row matched more than one source row")
     }
+    def actionCond(a: MergeAction): Column =
+      a.condition.map(pred).getOrElse(lit(true))
+    def branchKeep(actions: Seq[MergeAction], default: Column): Column =
+      actions.foldRight(default) { (a, els) =>
+        val keep = a match { case _: DeleteAction => lit(false); case _ => lit(true) }
+        when(actionCond(a), keep).otherwise(els)
+      }
+    def branchValue(actions: Seq[MergeAction], attr: Attribute,
+        default: Column): Column =
+      actions.foldRight(default) { (a, els) =>
+        val v: Column = a match {
+          case u: UpdateAction =>
+            u.assignments
+              .find(_.key.asInstanceOf[AttributeReference].exprId == attr.exprId)
+              .map(x => c(x.value)).getOrElse(c(attr))
+          case i: InsertAction =>
+            i.assignments
+              .find(_.key.asInstanceOf[AttributeReference].exprId == attr.exprId)
+              .map(x => c(x.value)).getOrElse(lit(null).cast(attr.dataType))
+          case _: DeleteAction => c(attr) // row is dropped by branchKeep
+        }
+        when(actionCond(a), v).otherwise(els)
+      }
+    val keep = when(isMatched, branchKeep(matchedActions, lit(true)))
+      .when(isNotMatched, branchKeep(notMatchedActions, lit(false)))
+      .otherwise(branchKeep(notMatchedBySourceActions, lit(true)))
+    val cols = target.output.map { attr =>
+      when(isMatched, branchValue(matchedActions, attr, c(attr)))
+        .when(isNotMatched,
+          branchValue(notMatchedActions, attr, lit(null).cast(attr.dataType)))
+        .otherwise(branchValue(notMatchedBySourceActions, attr, c(attr)))
+        .as(attr.name)
+    }
+    joined.filter(keep).select(cols: _*)
   }
 }

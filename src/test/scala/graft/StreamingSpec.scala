@@ -608,6 +608,60 @@ class StreamingSpec extends GraftSpec {
     } finally q.stop()
   }
 
+  test("st15 releases its fitted reference when the query stops") {
+    val bench = Seq((100L, "omega psi chi phi upsilon tau"))
+      .toDF("doc_id", "text")
+    def reference = graft.operators.Dedup.benchmarkGrams(bench)
+    val ms = MemoryStream[(Long, String)]
+    val outDir = java.nio.file.Files
+      .createTempDirectory("graft-st15-rel").toString + "/out"
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft-st15-rel-ck").toString
+    val q = Streams.startDecontamGate(
+      ms.toDF().toDF("doc_id", "text"), bench, outDir, ckpt)
+    try {
+      ms.addData((1L, "omega psi chi phi upsilon tau"), (2L, "clean words only here"))
+      q.processAllAvailable()
+      assert(reference.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "the fitted reference should stay cached while the gate runs")
+    } finally q.stop()
+    // released by the termination hook (async listener — poll)
+    val deadline = System.currentTimeMillis() + 30000
+    while (reference.storageLevel != org.apache.spark.storage.StorageLevel.NONE &&
+      System.currentTimeMillis() < deadline) Thread.sleep(100)
+    assert(reference.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "st15's fitted reference is still cached after its query stopped")
+  }
+
+  test("st34 micro-batches leave a frame pinned outside the stream cached") {
+    val reference = Seq((1L, "ref wrapper this benchmark passage is long enough " +
+      "to trip the sixty four char floor more ref")).toDF("doc_id", "text")
+    graft.operators.SubstrIndex.drop(spark, "graft_st34pin")
+    graft.operators.SubstrIndex.fit(reference, "graft_st34pin")
+    Pins.release()
+    val outside = Pins.pin(spark.range(0, 40).toDF("id")
+      .withColumn("v", org.apache.spark.sql.functions.col("id") * 104729L))
+    outside.count()
+    val ms = MemoryStream[(Long, String)]
+    val outDir = java.nio.file.Files
+      .createTempDirectory("graft-st34-pin").toString + "/out"
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft-st34-pin-ck").toString
+    val q = Streams.startSubstrDecontamGate(
+      ms.toDF().toDF("doc_id", "text"), "graft_st34pin", outDir, ckpt)
+    try {
+      ms.addData((10L, "totally novel writing sharing nothing with the reference"))
+      q.processAllAvailable()
+      assert(spark.read.parquet(outDir).count() == 1L)
+      assert(outside.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "a micro-batch released a pin it does not own")
+      assert(Pins.pending == 1)
+    } finally {
+      q.stop()
+      graft.operators.SubstrIndex.drop(spark, "graft_st34pin")
+    }
+  }
+
   test("st34 streaming substring-decontam gate drops byte-granular quotes of the reference") {
     val blockA = "this benchmark passage is long enough to trip the sixty four char floor"
     val blockB = "a second distinct reference passage also comfortably past the floor!!"
@@ -911,6 +965,41 @@ class StreamingSpec extends GraftSpec {
       assert(q.lastProgress == null ||
         q.lastProgress.stateOperators.isEmpty)
     } finally q.stop()
+  }
+
+  test("st21 micro-batches leave no pins and no cached RDDs behind") {
+    val ixName = "graft_st21_leak"
+    def text(tag: String) =
+      (1 to 15).map(w => s"${tag}_w$w term$w").mkString(" ")
+    graft.operators.NearDupIndex.drop(spark, ixName)
+    graft.operators.NearDupIndex.fit(
+      Seq((1L, text("hist"))).toDF("doc_id", "text"), ixName)
+    Pins.release()
+    // caches only: a lineage cut keeps its blocks in a persisted RDD
+    // until the RDD is garbage-collected (Ckpt), which is not a pin
+    def cachedRdds: Int =
+      spark.sparkContext.getPersistentRDDs.values.count(!_.isCheckpointed)
+    val pending0 = Pins.pending
+    val rdds0 = cachedRdds
+    val ms = MemoryStream[(Long, String)]
+    val outDir = java.nio.file.Files
+      .createTempDirectory("graft-st21-leak").toString + "/out"
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft-st21-leak-ck").toString
+    val q = Streams.startNearDupGate(
+      ms.toDF().toDF("doc_id", "text"), ixName, outDir, ckpt)
+    try {
+      ms.addData((10L, text("hist") + " tail"), (11L, text("alpha")))
+      q.processAllAvailable()
+      ms.addData((20L, text("alpha") + " tail"), (22L, text("beta")))
+      q.processAllAvailable()
+      assert(spark.read.parquet(outDir).count() == 2L)
+      assert(Pins.pending == pending0, "micro-batch pins left in the global queue")
+      assert(cachedRdds == rdds0, "micro-batch caches left on the executors")
+    } finally {
+      q.stop()
+      graft.operators.NearDupIndex.drop(spark, ixName)
+    }
   }
 
   test("st36 streaming cluster maintenance: labels track the stream, append == refit, replay-safe") {
