@@ -86,6 +86,7 @@ object AnnIndex {
           pqCodebooks: Option[Array[Array[Array[Double]]]] = None): Unit = {
     LakeLock.withWriter(corpus.sparkSession, name) { graft.Pins.scope {
     val spark = corpus.sparkSession
+    drop(spark, name)
     val vecs = graft.Pins.pin(Similarity.vecRows(corpus))
     Sources.writeBucketed(vecs.toDF("vec_id", "v", "norm"),
       vectorsTable(name), "vec_id", buckets)
@@ -137,28 +138,17 @@ object AnnIndex {
               nShards: Int = DefaultBuckets,
               m: Int = 8, efConstruction: Int = 64): Unit =
     LakeLock.withWriter(corpus.sparkSession, name) {
+      Seq(hnswTable(name), hnswMetaTable(name))
+        .foreach(Sources.clearTable(corpus.sparkSession, _))
       fitHnswUnlocked(corpus, name, nShards, m, efConstruction)
     }
 
-  /** Drop a table AND its warehouse location (the ClusterIndex.fit
-    * discipline): a fresh session's in-memory catalog does not know a
-    * previous JVM's tables, so an Overwrite-create would trip over the
-    * orphaned directory (LOCATION_ALREADY_EXISTS). */
-  private def clearTable(spark: SparkSession, table: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)))
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) { fs.delete(loc, true); () }
-  }
-
+  /** The HNSW artifact over tables its caller has cleared. */
   private def fitHnswUnlocked(corpus: DataFrame, name: String,
                               nShards: Int, m: Int = 8,
                               efConstruction: Int = 64): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    Seq(hnswTable(name), hnswMetaTable(name)).foreach(clearTable(spark, _))
     // PARTITIONED by shard: each shard's payload row owns its own
     // directory, so [[appendHnsw]]'s dynamic-partition overwrite
     // rewrites exactly the touched shards' files — append I/O is
@@ -290,16 +280,16 @@ object AnnIndex {
     LakeLock.withWriter(batch.sparkSession, name) { graft.Pins.scope {
     val spark = batch.sparkSession
     val vecs = graft.Pins.pin(Similarity.vecRows(batch))
-    appendBucketed(spark, vecs.toDF("vec_id", "v", "norm"),
+    Sources.appendBucketed(vecs.toDF("vec_id", "v", "norm"),
       vectorsTable(name), "vec_id")
-    appendBucketed(spark, Similarity.lshPostings(Similarity.sigRows(vecs)),
+    Sources.appendBucketed(Similarity.lshPostings(Similarity.sigRows(vecs)),
       lshTable(name), "bucket")
-    appendBucketed(spark,
+    Sources.appendBucketed(
       Similarity.ivfAssign(vecs, loadCentroids(spark, name), 1),
       ivfListsTable(name), "list")
-    appendBucketed(spark, Similarity.int8Codes(batch),
+    Sources.appendBucketed(Similarity.int8Codes(batch),
       int8Table(name), "vec_id")
-    appendBucketed(spark,
+    Sources.appendBucketed(
       Similarity.pqEncode(batch, loadPqCodebook(spark, name)),
       pqCodesTable(name), "vec_id")
     appendHnsw(spark, vecs, name)
@@ -424,7 +414,7 @@ object AnnIndex {
       try {
         spark.table(t).select(col("shard"), col("payload"))
           .write.parquet(stage.toString)
-        clearTable(spark, t)
+        Sources.clearTable(spark, t)
         spark.read.parquet(stage.toString)
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .format("parquet").partitionBy("shard").saveAsTable(t)
@@ -432,27 +422,12 @@ object AnnIndex {
     }
   }
 
-  /** Append `df` into an existing bucketed table, reading the bucket
-    * count from the table's own catalog metadata so the appended files
-    * join the fitted layout (Spark refuses a mismatched spec). */
-  private def appendBucketed(spark: SparkSession, df: DataFrame,
-                             table: String, bucketCol: String): Unit = {
-    Sources.recoverCompacting(spark, table) // heal a crashed compaction swap
-    val n = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(sys.error(s"$table is not bucketed — not an index table"))
-    df.write.mode(org.apache.spark.sql.SaveMode.Append)
-      .bucketBy(n, bucketCol).sortBy(bucketCol)
-      .format("parquet").saveAsTable(table)
-  }
-
-  /** Drop every table of index `name` (idempotent). */
+  /** Drop every table of index `name` and its location (idempotent). */
   def drop(spark: SparkSession, name: String): Unit =
     Seq(vectorsTable(name), lshTable(name), ivfCentroidsTable(name),
       ivfListsTable(name), int8Table(name), pqCodebookTable(name),
       pqCodesTable(name), hnswTable(name), hnswMetaTable(name))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      .foreach(Sources.clearTable(spark, _))
 
   /** LSH top-k against a loaded index — [[Similarity.search]] served
     * from the persisted postings + vectors tables: the query batch is

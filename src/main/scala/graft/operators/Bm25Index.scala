@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Sources
 
 /** s14: persisted BM25 TEXT-RETRIEVAL index — the inverted-index lake
   * artifact that completes the serving-index family (s11 ANN vectors,
@@ -56,18 +57,19 @@ object Bm25Index {
           buckets: Int = DefaultBuckets): Unit = {
     LakeLock.withWriter(corpus.sparkSession, name) {
     val spark = corpus.sparkSession
+    drop(spark, name)
     // postings materialize first; df/dl/stats then derive from the
     // postings TABLE (df = docs per term, dl = Σ tf per doc), so the
     // corpus text is scanned exactly once
-    graft.sources.Sources.writeBucketed(
+    Sources.writeBucketed(
       toks(corpus).groupBy(col("tok"), col("doc_id"))
         .agg(count(lit(1)).as("tf")),
       postingsTable(name), "tok", buckets)
     val p = spark.table(postingsTable(name))
-    graft.sources.Sources.writeBucketed(
+    Sources.writeBucketed(
       p.groupBy(col("tok")).agg(count(lit(1)).as("df")),
       dfTable(name), "tok", buckets)
-    graft.sources.Sources.writeBucketed(
+    Sources.writeBucketed(
       p.groupBy(col("doc_id")).agg(sum(col("tf")).cast("long").as("dl")),
       dlTable(name), "doc_id", buckets)
     writeStats(spark, name,
@@ -106,13 +108,9 @@ object Bm25Index {
   def append(docs: DataFrame, name: String): Unit = {
     LakeLock.withWriter(docs.sparkSession, name) {
     val spark = docs.sparkSession
-    // registry anti-join: only not-yet-indexed doc_ids register —
-    // localCheckpoint because the derivation READS tables the appends
-    // below WRITE (the s12 append rationale)
-    val newDocs = docs.select(col("doc_id"), col("text"))
-      .join(spark.table(dlTable(name)).select(col("doc_id")),
-        Seq("doc_id"), "left_anti")
-      .transform(Ckpt.cut(_))
+    // registry anti-join: only not-yet-indexed doc_ids register
+    val newDocs = Sources.unregistered(
+      docs.select(col("doc_id"), col("text")), dlTable(name), "doc_id")
     if (newDocs.limit(1).count() > 0L) graft.Pins.scope {
       val inc = toks(newDocs).groupBy(col("tok"), col("doc_id"))
         .agg(count(lit(1)).as("tf"))
@@ -127,16 +125,11 @@ object Bm25Index {
         .agg(countDistinct(col("doc_id")).cast("long").as("nd"),
           sum(col("tf")).cast("long").as("tt")).head()
       val old = spark.table(statsTable(name)).head()
-      graft.sources.Sources.appendBucketed(
-        inc, postingsTable(name), "tok")
-      graft.sources.Sources.appendBucketed(
+      Sources.appendBucketed(inc, postingsTable(name), "tok")
+      Sources.appendBucketed(
         inc.groupBy(col("doc_id")).agg(sum(col("tf")).cast("long").as("dl")),
         dlTable(name), "doc_id")
-      val buckets = spark.sessionState.catalog
-        .getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(dfTable(name)))
-        .bucketSpec.map(_.numBuckets).getOrElse(DefaultBuckets)
-      graft.sources.Sources.writeBucketed(mergedDf, dfTable(name), "tok", buckets)
+      Sources.rewriteBucketed(mergedDf, dfTable(name))
       writeStats(spark, name, org.apache.spark.sql.Row(
         old.getAs[Long]("n_docs") + incStats.getAs[Long]("nd"),
         old.getAs[Long]("total_toks") + incStats.getAs[Long]("tt")))
@@ -146,7 +139,7 @@ object Bm25Index {
 
   def drop(spark: SparkSession, name: String): Unit =
     Seq(postingsTable(name), dfTable(name), dlTable(name), statsTable(name))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      .foreach(Sources.clearTable(spark, _))
 
   private def writeStats(spark: SparkSession, name: String,
                          row: org.apache.spark.sql.Row): Unit = {

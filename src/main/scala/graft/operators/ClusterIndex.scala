@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Sources
 
 /** s27: persisted NEAR-DUP CLUSTER-LABEL index — the fit-once pattern
   * (s12 exact digests, s13 near-dup signatures, s26 substring
@@ -81,20 +82,6 @@ object ClusterIndex {
         col("pos") <= col("n") - ceil(lit(t) * col("n")) + 1)
   }
 
-  /** PPJoin candidate join between two prefix frames (lossless under
-    * the shared hash order): doc_a < doc_b plus the length and
-    * positional filters evaluated inside the equi-join. */
-  private def ppCandidates(pa: DataFrame, pb: DataFrame, t: Double)
-      : DataFrame =
-    pa.as("a").join(pb.as("b"),
-        col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id") &&
-        col("a.n") >= lit(t) * col("b.n") &&
-        col("b.n") >= lit(t) * col("a.n") &&
-        lit(1) + least(col("a.n") - col("a.pos"), col("b.n") - col("b.pos")) >=
-          ceil(lit(t / (1 + t)) * (col("a.n") + col("b.n"))))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-
   /** Verified rep pairs + clique star edges from a gram frame and a
     * members map — [[Dedup.neardupEdges]]' output shape, candidates
     * supplied by the caller. */
@@ -110,37 +97,23 @@ object ClusterIndex {
     repPairs.unionAll(star)
   }
 
-  /** Drop a table AND its default warehouse location. With the
-    * in-memory catalog a previous PROCESS's fit leaves files behind
-    * with no catalog entry; saveAsTable(Overwrite) then refuses with
-    * LOCATION_ALREADY_EXISTS, so a refit must clear both. */
-  private def clearTable(spark: SparkSession, table: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)))
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) { fs.delete(loc, true); () }
-  }
-
   def fit(documents: DataFrame, name: String,
           t: Double = Dedup.JaccardThreshold,
           buckets: Int = DefaultBuckets): Unit = {
     val spark = documents.sparkSession
     LakeLock.withWriter(spark, name) {
-      Seq(labelsTable(name), gramsTable(name), digestsTable(name),
-        metaTable(name)).foreach(clearTable(spark, _))
+      drop(spark, name)
       // eager fit: its pins live exactly as long as the fit
       graft.Pins.scope {
       val (reps, members0) = Dedup.exactReps(documents)
       val members = graft.Pins.pin(members0)
       val g = graft.Pins.pin(hashOrderGrams(reps, t))
       val cands = graft.Pins.pin(
-        ppCandidates(g.filter(col("pref")), g.filter(col("pref")), t))
+        Dedup.ppCandidates(g.filter(col("pref")), g.filter(col("pref")), t))
       val labels = Dedup.clusters(edgesFrom(g, cands, members, t))
-      graft.sources.Sources.writeBucketed(
+      Sources.writeBucketed(
         labels, labelsTable(name), "doc_id", buckets)
-      graft.sources.Sources.writeBucketed(
+      Sources.writeBucketed(
         g.select(col("doc_id"), col("g"), col("n"), col("pos"), col("pref")),
         gramsTable(name), "g", buckets)
       // Dedup.normDigest, not a re-inlined md5 (r16 review): append()
@@ -154,7 +127,7 @@ object ClusterIndex {
         .join(shingled, Seq("rep"), "left_outer")
         .select(col("dg"), col("rep"),
           coalesce(col("shingled"), lit(false)).as("shingled"))
-      graft.sources.Sources.writeBucketed(
+      Sources.writeBucketed(
         digests, digestsTable(name), "dg", buckets)
       val nDocs = documents.count()
       spark.createDataFrame(Seq((t, nDocs, Version)))
@@ -237,9 +210,9 @@ object ClusterIndex {
       // reason). Two longs per row; released with the batch frames when
       // the scope ends, on the exception path too (a failed streaming
       // retry would otherwise leak one copy per attempt).
-      val cands = ppCandidates(pB, pB, t)
-        .unionAll(ppCandidates(pB, pOld, t))
-        .unionAll(ppCandidates(pOld, pB, t))
+      val cands = Dedup.ppCandidates(pB, pB, t)
+        .unionAll(Dedup.ppCandidates(pB, pOld, t))
+        .unionAll(Dedup.ppCandidates(pOld, pB, t))
         .distinct()
         .transform(graft.Pins.pin)
       val gAll = gOld.select(col("doc_id"), col("g"))
@@ -259,16 +232,14 @@ object ClusterIndex {
       // gBNew) → labels (overwrite, recomputable while digests absent)
       // → meta (advisory counter) → digests (the commit record; once
       // present a retry absorbs the batch as hits and every earlier
-      // write is already in place). appendBucketed reads each target
-      // table's OWN bucket spec, so per-table bucket tuning stays
-      // consistent.
-      graft.sources.Sources.appendBucketed(
+      // write is already in place). The append and the rewrite both
+      // read each target table's OWN bucket spec, so per-table bucket
+      // tuning stays consistent.
+      Sources.appendBucketed(
         gBNew.select(col("doc_id"), col("g"), col("n"), col("pos"),
           col("pref")),
         gramsTable(name), "g")
-      val (_, _, buckets) = tableLayout(spark, labelsTable(name))
-      graft.sources.Sources.writeBucketed(
-        relabeled, labelsTable(name), "doc_id", buckets)
+      Sources.rewriteBucketed(relabeled, labelsTable(name))
       // registered-doc EVENT counter (replays can inflate it; a refit
       // re-trues it) — the refit-trigger signal, not a correctness input
       val nNew = docs.count()
@@ -278,7 +249,7 @@ object ClusterIndex {
         .format("parquet").saveAsTable(metaTable(name))
       val shingledB = gB.select(col("doc_id").as("rep")).distinct()
         .withColumn("shingled", lit(true))
-      graft.sources.Sources.appendBucketed(
+      Sources.appendBucketed(
         bReps.select(col("doc_id").as("rep"), Dedup.normDigest.as("dg"))
           .join(shingledB, Seq("rep"), "left_outer")
           .select(col("dg"), col("rep"),
@@ -287,17 +258,9 @@ object ClusterIndex {
     } }
   }
 
+  /** Drop every table of index `name` and its location (idempotent). */
   def drop(spark: SparkSession, name: String): Unit =
     Seq(labelsTable(name), gramsTable(name), digestsTable(name),
       metaTable(name))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-
-  private def tableLayout(spark: SparkSession, table: String)
-      : (String, String, Int) = {
-    val spec = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec
-      .getOrElse(sys.error(s"$table is not bucketed"))
-    (table, spec.bucketColumnNames.head, spec.numBuckets)
-  }
+      .foreach(Sources.clearTable(spark, _))
 }

@@ -159,23 +159,7 @@ object Dedup {
     // already pinned
     val prefix = prefixRows(g, t)
       .transform(graft.Pins.pin)
-    // Two lossless candidate filters evaluated INSIDE the equi-join
-    // (PPJoin, Xiao et al., WWW'08), so pruned pairs never shuffle:
-    //  - LENGTH: J ≥ t forces |A| ≥ t·|B| and |B| ≥ t·|A|
-    //  - POSITIONAL: a token match at prefix positions (pa, pb) bounds
-    //    the achievable overlap by 1 + min(n_a − pa, n_b − pb), which
-    //    must reach the J ≥ t requirement ⌈t/(1+t)·(n_a+n_b)⌉; tokens
-    //    deep in both prefixes can't anymore, killing the candidate
-    //    explosion on corpora where even prefix shingles are common
-    val candidates = prefix.as("a")
-      .join(prefix.as("b"),
-        col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id") &&
-        col("a.n") >= lit(t) * col("b.n") &&
-        col("b.n") >= lit(t) * col("a.n") &&
-        lit(1) + least(col("a.n") - col("a.pos"), col("b.n") - col("b.pos")) >=
-          ceil(lit(t / (1 + t)) * (col("a.n") + col("b.n"))))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val candidates = ppCandidates(prefix, prefix, t)
       // pinned: verifyJaccard references the candidate pairs THREE
       // times (two semi-join prunes + the verification join); without
       // the pin each reference replays the whole blocking self-join —
@@ -189,6 +173,27 @@ object Dedup {
         col("jaccard"))
     (repPairs, members, g)
   }
+
+  /** PPJoin candidate pairs (doc_a < doc_b) between two prefix frames
+    * (doc_id, g, n, pos) ordered under one shared gram order. Two
+    * lossless filters evaluate INSIDE the equi-join (PPJoin, Xiao et
+    * al., WWW'08), so pruned pairs never shuffle:
+    *  - LENGTH: J ≥ t forces |A| ≥ t·|B| and |B| ≥ t·|A|
+    *  - POSITIONAL: a token match at prefix positions (pa, pb) bounds
+    *    the achievable overlap by 1 + min(n_a − pa, n_b − pb), which
+    *    must reach the J ≥ t requirement ⌈t/(1+t)·(n_a+n_b)⌉; tokens
+    *    deep in both prefixes can't anymore, killing the candidate
+    *    explosion on corpora where even prefix shingles are common. */
+  private[graft] def ppCandidates(pa: DataFrame, pb: DataFrame, t: Double)
+      : DataFrame =
+    pa.as("a").join(pb.as("b"),
+        col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id") &&
+        col("a.n") >= lit(t) * col("b.n") &&
+        col("b.n") >= lit(t) * col("a.n") &&
+        lit(1) + least(col("a.n") - col("a.pos"), col("b.n") - col("b.pos")) >=
+          ceil(lit(t / (1 + t)) * (col("a.n") + col("b.n"))))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .distinct()
 
   /** The q41 machinery at an arbitrary threshold `t` — the prefix and
     * PPJoin filters are threshold-parametric, so lower-similarity

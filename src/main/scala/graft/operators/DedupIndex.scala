@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Sources
 
 /** s12: persisted EXACT-DEDUP index — the lake artifact that makes
   * q109/q126's scale footnote ("at production scale the corpus digest
@@ -50,8 +51,9 @@ object DedupIndex {
           buckets: Int = DefaultBuckets, fpp: Double = 0.01): Unit = {
     LakeLock.withWriter(corpus.sparkSession, name) { graft.Pins.scope {
     val spark = corpus.sparkSession
+    drop(spark, name)
     val dgs = graft.Pins.pin(corpus.select(Dedup.normDigest.as("dg")).distinct())
-    graft.sources.Sources.writeBucketed(dgs, digestsTable(name), "dg", buckets)
+    Sources.writeBucketed(dgs, digestsTable(name), "dg", buckets)
     val n = dgs.count()
     val (nItems, nBits) = Dedup.bloomParams(n, fpp)
     writeBloomRow(spark, name, n, nItems, nBits, fpp,
@@ -80,22 +82,14 @@ object DedupIndex {
     LakeLock.withWriter(docs.sparkSession, name) {
     val spark = docs.sparkSession
     val meta = spark.table(bloomTable(name)).head()
-    // localCheckpoint, not persist: the anti-join READS the table the
-    // append below WRITES — the table commit invalidates dependent
-    // cached plans, so a lazy/persisted frame would silently
-    // re-evaluate against the already-grown table (to empty). The
-    // eager checkpoint pins the increment's rows first; the batch is
-    // maintenance-sized, so the lost-executor recompute concern that
-    // makes operators prefer persist doesn't apply.
-    val newDg = docs.select(Dedup.normDigest.as("dg")).distinct()
-      .join(spark.table(digestsTable(name)), Seq("dg"), "left_anti")
-      .transform(Ckpt.cut(_))
+    val newDg = Sources.unregistered(
+      docs.select(Dedup.normDigest.as("dg")).distinct(), digestsTable(name), "dg")
     val nNew = newDg.count()
     if (nNew > 0L) {
       val estItems = meta.getAs[Long]("est_items")
       val numBits = meta.getAs[Long]("num_bits")
       val inc = Dedup.bloomAggregate(newDg, estItems, numBits)
-      graft.sources.Sources.appendBucketed(newDg, digestsTable(name), "dg")
+      Sources.appendBucketed(newDg, digestsTable(name), "dg")
       val merged = org.apache.spark.util.sketch.BloomFilter
         .readFrom(meta.getAs[Array[Byte]]("bloom"))
       merged.mergeInPlace(
@@ -110,7 +104,7 @@ object DedupIndex {
 
   def drop(spark: SparkSession, name: String): Unit =
     Seq(digestsTable(name), bloomTable(name))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      .foreach(Sources.clearTable(spark, _))
 
   private[graft] def loadBloom(spark: SparkSession, name: String): Array[Byte] =
     spark.table(bloomTable(name)).head().getAs[Array[Byte]]("bloom")

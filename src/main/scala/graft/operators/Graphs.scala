@@ -78,12 +78,110 @@ object Graphs {
   private def roundSlices(rows: Long): Int =
     math.max(1L, (rows + 1999999L) / 2000000L).toInt
 
+  /** One iterative run's round layout, decided ONCE from the pinned
+    * node table: the node count, broadcast-or-co-partitioned
+    * ([[BroadcastNodeLimit]]), and every frame shape that follows from
+    * that choice. `e0` is the run's pinned edge list. */
+  private final class Rounds(e0: DataFrame, val nodes: DataFrame, limit: Long) {
+    val nNodes: Long = nodes.count()
+    val useBcast: Boolean = nNodes <= limit
+
+    def bc(df: DataFrame): DataFrame = Graphs.bc(df, useBcast)
+
+    /** LAZY cuts in broadcast mode (r20, the Dedup.clusters
+      * discipline): each round consumes the previous round's frame
+      * through a broadcast whose collect job materializes the lazily
+      * marked checkpoint as a side effect — so a round is ONE job
+      * instead of [checkpoint job + broadcast job] (q154 StageProbe: 55
+      * jobs → 35). A second consumer in the same round (q175's union
+      * side) reads the blocks after the broadcast stage it depends on
+      * has written them. The plan stays flat either way:
+      * localCheckpoint truncates the logical plan at call time, only
+      * the block write is deferred. Co-partitioned mode keeps EAGER
+      * cuts — there the next round reads the frame through exchanges,
+      * where deferred materialization would race two consumers into
+      * computing the same checkpoint RDD. */
+    def cut(df: DataFrame): DataFrame = Ckpt.cut(df, eager = !useBcast)
+
+    /** `init` cut, then `rounds` cut applications of `step`. */
+    def iterate(init: DataFrame, rounds: Int)(step: DataFrame => DataFrame): DataFrame =
+      (1 to rounds).foldLeft(cut(init))((s, _) => cut(step(s)))
+
+    // per-round read parallelism from MEASURED row counts (broadcast
+    // mode only — see roundSlices); e0 is already materialized by the
+    // node derivation, so the edge count is one cache-read job
+    private lazy val edgeSlices = roundSlices(e0.count())
+
+    /** An edge-sized frame as the rounds read it. */
+    def read(df: DataFrame): DataFrame =
+      if (useBcast) df.coalesce(edgeSlices) else df
+
+    /** The node table as the rounds read it. */
+    lazy val nodesR: DataFrame =
+      if (useBcast) nodes.coalesce(roundSlices(nNodes)) else nodes
+
+    /** `e0` laid out for joins on `key`: hash-partitioned on it when
+      * co-partitioned, so a frame cached from it already satisfies the
+      * join's required distribution and the edge payload never
+      * re-exchanges per round. */
+    def keyed(key: String): DataFrame =
+      if (useBcast) e0 else e0.repartition(col(key))
+
+    /** The edge frame of rounds joining on `key` (pinned when
+      * co-partitioned; broadcast mode reads `e0` itself). */
+    def edges(key: String): DataFrame =
+      if (useBcast) read(e0) else graft.Pins.pin(keyed(key))
+  }
+
+  /** The directed prelude of [[pagerank]] and [[hits]]: `e0` pinned
+    * FIRST — the node derivation references it twice (the src and dst
+    * branches of the union) and the round edge frames once more;
+    * unpinned, the caller's whole edge derivation (q154: URL-normalize
+    * + chain join) replayed ~3× before any round ran (r19, guide §2.4). */
+  private def directed(edges: DataFrame, limit: Long): Rounds = {
+    val e0 = graft.Pins.pin(edges)
+    new Rounds(e0, graft.Pins.pin(e0.select(col("src").as("node"))
+      .union(e0.select(col("dst").as("node"))).distinct()), limit)
+  }
+
+  /** The symmetrized prelude of [[labelProp]] and [[q175]]: both
+    * orientations of ONE pinned input projection (the union references
+    * it twice; unpinned, the caller's edge derivation replays for the
+    * reversed branch, r19), and the distinct result pinned too — nodes
+    * and the round edge frame both reference it. */
+  private def symmetrized(edges: DataFrame, limit: Long): Rounds = {
+    val ein = graft.Pins.pin(sized(edges.select(col("src"), col("dst"))))
+    val e0 = graft.Pins.pin(ein
+      .unionByName(ein.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct())
+    new Rounds(e0, graft.Pins.pin(e0.select(col("src").as("node")).distinct()),
+      limit)
+  }
+
+  /** The degree-join prelude of [[triangleStats]] and [[assortativity]]:
+    * the node degree table and the distinct undirected edges (a < b,
+    * no self-loops) carrying both endpoint degrees (da, db). */
+  private def withDegrees(edges: DataFrame): (DataFrame, DataFrame) = {
+    val und = graft.Pins.pin(
+      edges
+        .select(least(col("src"), col("dst")).as("a"),
+          greatest(col("src"), col("dst")).as("b"))
+        .filter(col("a") =!= col("b")).distinct())
+    val deg = graft.Pins.pin(
+      und.select(col("a").as("n"))
+        .unionByName(und.select(col("b").as("n")))
+        .groupBy(col("n")).agg(count(lit(1)).cast("long").as("deg")))
+    (deg, und
+      .join(deg.select(col("n").as("a"), col("deg").as("da")), "a")
+      .join(deg.select(col("n").as("b"), col("deg").as("db")), "b"))
+  }
+
   /** Fixed-iteration damped PageRank over a directed edge list
     * (src, dst). Every node must appear as a src (no dangling mass —
     * the q154 edge derivation guarantees it by construction); dangling
     * nodes would silently lose their mass rather than redistribute.
     *
-    * Broadcast mode cuts rounds LAZILY (see the plan comment below), so
+    * Broadcast mode cuts rounds LAZILY ([[Rounds.cut]]), so
     * every round runs inside the caller's final action: its outermost
     * broadcast exchange awaits the whole chain of per-round broadcast
     * jobs. `spark.sql.broadcastTimeout` (default 300 s) therefore bounds
@@ -102,19 +200,11 @@ object Graphs {
     // src, so the cached layout satisfies the join's required
     // distribution and only the rank table shuffles) — then one
     // map-side-combined aggregation whose exchange carries ≤ nodes
-    // (node, long) rows. `localCheckpoint(eager)` per round keeps each
+    // (node, long) rows. `localCheckpoint` per round keeps each
     // round's plan flat (a lazily-composed 10-round tree re-plans all
     // prior rounds per round — measured 12 s vs ~4 s at sf0.01).
-    // e0 pinned FIRST: the nodes derivation references it twice (src
-    // and dst branches of the union) and the edge+outdeg frame once
-    // more — unpinned, the caller's whole edge derivation (q154:
-    // URL-normalize + chain join) replayed ~3× before any round ran
-    // (r19, guide §2.4).
-    val e0 = graft.Pins.pin(sized(edges.select(col("src"), col("dst"))))
-    val nodes = graft.Pins.pin(e0.select(col("src").as("node"))
-      .union(e0.select(col("dst").as("node"))).distinct())
-    val nNodes = nodes.count()
-    val useBcast = nNodes <= broadcastNodeLimit
+    val r = directed(sized(edges.select(col("src"), col("dst"))),
+      broadcastNodeLimit)
     // LOOP-INVARIANT work folded OUT of the rounds (r19 StageProbe:
     // ~96 jobs per q154 run, most of them per-round rebuild+broadcast
     // of frames that never change — Spark reuses exchanges within one
@@ -124,37 +214,15 @@ object Graphs {
     //  - the node-count total is the SAME value the broadcast guard
     //    just collected (nodes.count()), so the old per-round one-row
     //    nn aggregate + broadcast becomes a literal.
-    val eBase = if (useBcast) e0 else e0.repartition(col("src"))
+    // Co-partitioned, e0 is partitioned on src BEFORE the out-degree
+    // join, so only eod is pinned — no second edge-sized copy.
+    val eBase = r.keyed("src")
     val outdeg = eBase.groupBy(col("src")).agg(count(lit(1)).as("od"))
-    val eod = graft.Pins.pin(eBase.join(bc(outdeg, useBcast), "src")
-      .select(col("src"), col("dst"), col("od")))
-    // per-round read parallelism from MEASURED row counts (broadcast
-    // mode only — see roundSlices): e0 is already materialized by the
-    // nodes derivation, so the edge count is a cache-read job
-    val (eodR, nodesR) =
-      if (useBcast)
-        (eod.coalesce(roundSlices(e0.count())),
-          nodes.coalesce(roundSlices(nNodes)))
-      else (eod, nodes)
-    val n = nNodes.toDouble
-    // LAZY cuts in broadcast mode (r20, the Dedup.clusters discipline):
-    // each round consumes the previous ranks exactly ONCE, through a
-    // broadcast whose collect job materializes the lazily-marked
-    // checkpoint as a side effect — so a round is ONE job instead of
-    // [checkpoint job + broadcast job] (q154 StageProbe: 55 jobs → 35,
-    // most of the removed ones sub-100 ms scheduling overhead that
-    // still cost a job boundary each). The plan stays flat either way:
-    // localCheckpoint truncates the logical plan at call time, only
-    // the block write is deferred. Co-partitioned mode keeps EAGER
-    // cuts — there the next round reads the frame through exchanges,
-    // where deferred materialization would race two consumers into
-    // computing the same checkpoint RDD.
-    def cutR(df: DataFrame): DataFrame = Ckpt.cut(df, eager = !useBcast)
-    var ranks = cutR(nodes
-      .select(col("node"), (lit(1.0) / lit(n)).as("pr")))
-    for (_ <- 1 to iters)
-      ranks = cutR(pagerankRound(eodR, nodesR, n, ranks, alpha, useBcast))
-    ranks
+    val eod = r.read(graft.Pins.pin(eBase.join(r.bc(outdeg), "src")
+      .select(col("src"), col("dst"), col("od"))))
+    val n = r.nNodes.toDouble
+    r.iterate(r.nodes.select(col("node"), (lit(1.0) / lit(n)).as("pr")), iters)(
+      pagerankRound(eod, r.nodesR, n, _, alpha, r.useBcast))
   }
 
   /** One PageRank round as a LAZY plan — extracted so PlanBudgetSpec
@@ -252,30 +320,10 @@ object Graphs {
     * together and each nested round holds a broadcast-exchange thread. */
   def labelProp(edges: DataFrame, iters: Int = 5,
                 broadcastNodeLimit: Long = BroadcastNodeLimit): DataFrame = {
-    // pin the input projection before symmetrizing: the union below
-    // references it twice, and without the pin the caller's whole edge
-    // derivation (q165: URL-normalize + chain join) replays for the
-    // reversed branch (r19, guide §2.4)
-    val ein = graft.Pins.pin(sized(edges.select(col("src"), col("dst"))))
-    // e0 pinned too (the q154 prelude discipline): nodes and the
-    // per-round edge frame both reference it, and in broadcast mode e
-    // IS e0 instead of a second identical pinned copy
-    val e0 = graft.Pins.pin(ein
-      .unionByName(ein.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct())
-    val nodes = graft.Pins.pin(e0.select(col("src").as("node")).distinct())
-    val useBcast = nodes.count() <= broadcastNodeLimit
-    // per-round read parallelism from the measured edge count in
-    // broadcast mode (roundSlices); co-partitioned mode keeps the
-    // src-hash layout untouched
-    val e = if (useBcast) e0.coalesce(roundSlices(e0.count()))
-      else graft.Pins.pin(e0.repartition(col("src")))
-    // lazy cuts in broadcast mode — the pagerank cutR reasoning: each
-    // round consumes the previous labels once, via the broadcast whose
-    // collect materializes the deferred checkpoint
-    def cutR(df: DataFrame): DataFrame = Ckpt.cut(df, eager = !useBcast)
-    var labels = cutR(nodes.withColumn("lbl", col("node")))
-    for (_ <- 1 to iters) {
+    val r = symmetrized(edges, broadcastNodeLimit)
+    val e = r.edges("src")
+    val wDst = org.apache.spark.sql.expressions.Window.partitionBy(col("dst"))
+    r.iterate(r.nodes.withColumn("lbl", col("node")), iters) { labels =>
       // r20 argmax shape (guide §2.4): the tie rule "max count, then
       // min label" is ONE window max over the (dst, lbl) counts plus a
       // filter and a min — the old shape materialized the counts
@@ -287,17 +335,13 @@ object Graphs {
       // aggregate), the counts stream through it once, and the max/
       // filter/min algebra is unchanged → identical labels (integer
       // counts, deterministic tie-break; oracle hash-exact).
-      val wDst = org.apache.spark.sql.expressions.Window.partitionBy(col("dst"))
-      labels = e
-        .join(bc(labels.withColumnRenamed("node", "src"), useBcast), "src")
+      e.join(r.bc(labels.withColumnRenamed("node", "src")), "src")
         .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("cnt"))
         .withColumn("mc", max(col("cnt")).over(wDst))
         .filter(col("cnt") === col("mc"))
         .groupBy(col("dst")).agg(min(col("lbl")).as("lbl"))
         .withColumnRenamed("dst", "node")
-        .transform(cutR)
     }
-    labels
   }
 
   /** q174: TRIANGLE COUNT + global CLUSTERING COEFFICIENT of the
@@ -341,19 +385,9 @@ object Graphs {
 
   /** The degree-correlation core over any (src, dst) edge list. */
   def assortativity(edges: DataFrame): DataFrame = {
-    val und = graft.Pins.pin(
-      edges
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") =!= col("b")).distinct())
-    val deg = graft.Pins.pin(
-      und.select(col("a").as("n"))
-        .unionByName(und.select(col("b").as("n")))
-        .groupBy(col("n")).agg(count(lit(1)).cast("long").as("deg")))
+    val (deg, withDeg) = withDegrees(edges)
     val nn = deg.agg(count(lit(1)).cast("long").as("n_nodes"))
-    und
-      .join(deg.select(col("n").as("a"), col("deg").as("da")), "a")
-      .join(deg.select(col("n").as("b"), col("deg").as("db")), "b")
+    withDeg
       .agg(count(lit(1)).cast("long").as("n_edges"),
         (count(lit(1)) * 2).cast("long").as("m"),
         sum(col("da") + col("db")).cast("long").as("sx"),
@@ -373,18 +407,7 @@ object Graphs {
   /** The oriented-wedge triangle core over any (src, dst) edge list —
     * q174's plan, reusable on arbitrary graphs (spec plants a K4). */
   def triangleStats(edges: DataFrame): DataFrame = {
-    val und = graft.Pins.pin(
-      edges
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") =!= col("b")).distinct())
-    val deg = graft.Pins.pin(
-      und.select(col("a").as("n"))
-        .unionByName(und.select(col("b").as("n")))
-        .groupBy(col("n")).agg(count(lit(1)).cast("long").as("deg")))
-    val withDeg = und
-      .join(deg.select(col("n").as("a"), col("deg").as("da")), "a")
-      .join(deg.select(col("n").as("b"), col("deg").as("db")), "b")
+    val (deg, withDeg) = withDegrees(edges)
     val aLower = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
     val oriented = graft.Pins.pin(withDeg.select(
@@ -428,41 +451,18 @@ object Graphs {
     * localCheckpoint lineage cut. */
   def q175(documents: DataFrame, hops: Int = 6,
            broadcastNodeLimit: Long = BroadcastNodeLimit): DataFrame = {
-    // ONE edge derivation, symmetrized in-plan: the previous form
-    // called crawlEdges twice, so the URL-normalize + chain-join
-    // pipeline ran twice to produce the same rows reversed (r19) —
-    // union both orientations of a single PINNED subtree instead (the
-    // union references fwd twice; the distinct that follows makes the
-    // two forms row-identical)
-    val fwd = graft.Pins.pin(
-      sized(crawlEdges(documents).select(col("src"), col("dst"))))
-    // e0 pinned too (the q154 prelude discipline): nodes and the
-    // per-round edge frame both reference it, and in broadcast mode e
-    // IS e0 instead of a second identical pinned copy
-    val e0 = graft.Pins.pin(fwd
-      .unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct())
-    val nodes = graft.Pins.pin(e0.select(col("src").as("node")).distinct())
-    val useBcast = nodes.count() <= broadcastNodeLimit
-    // measured per-round read parallelism in broadcast mode (roundSlices)
-    val e = if (useBcast) e0.coalesce(roundSlices(e0.count()))
-      else graft.Pins.pin(e0.repartition(col("src")))
+    // ONE edge derivation, symmetrized in-plan (calling crawlEdges
+    // twice ran the URL-normalize + chain-join pipeline twice, r19)
+    val r = symmetrized(crawlEdges(documents), broadcastNodeLimit)
+    val e = r.edges("src")
     val seed = e.agg(min(col("src")).as("node"))
-    // lazy cuts in broadcast mode (the pagerank cutR reasoning). dist
-    // has TWO consumers per round, but the broadcast side is a stage
-    // DEPENDENCY of the union side's stage — the bc collect
-    // materializes the deferred checkpoint blocks before the union
-    // reads them, so the round still computes dist exactly once.
-    def cutR(df: DataFrame): DataFrame = Ckpt.cut(df, eager = !useBcast)
-    var dist = cutR(broadcast(seed).withColumn("dist", lit(0L)))
-    for (_ <- 1 to hops) {
+    r.iterate(broadcast(seed).withColumn("dist", lit(0L)), hops) { dist =>
       val relax = e
-        .join(bc(dist.withColumnRenamed("node", "src"), useBcast), "src")
+        .join(r.bc(dist.withColumnRenamed("node", "src")), "src")
         .select(col("dst").as("node"), (col("dist") + 1L).as("dist"))
-      dist = cutR(dist.unionByName(relax)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist")))
-    }
-    dist.select(col("node").as("domain"), col("dist").as("hop"))
+      dist.unionByName(relax)
+        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
+    }.select(col("node").as("domain"), col("dist").as("hop"))
       .orderBy(col("domain"))
   }
 
@@ -511,27 +511,14 @@ object Graphs {
     * corpus-sized edge list every half-round. */
   def hits(edges: DataFrame, iters: Int = 5, scale: Long = 1000000L,
            broadcastNodeLimit: Long = BroadcastNodeLimit): DataFrame = {
-    // e0 pinned FIRST (the q154 prelude discipline): nodes references
-    // it twice and the per-key edge frames once more each; in
-    // broadcast mode eBySrc IS e0, not a second identical pinned copy
-    val e0 = graft.Pins.pin(edges.select(col("src"), col("dst")).distinct())
-    val nodes = graft.Pins.pin(e0.select(col("src").as("node"))
-      .unionByName(e0.select(col("dst").as("node"))).distinct())
-    val nNodes = nodes.count()
-    val useBcast = nNodes <= broadcastNodeLimit
-    // measured per-half-round read parallelism in broadcast mode
-    // (roundSlices): both the edge frame and the union's node side are
-    // read 2·iters times from cache
-    val eBySrc =
-      if (useBcast) e0.coalesce(roundSlices(e0.count()))
-      else graft.Pins.pin(e0.repartition(col("src")))
-    val eByDst =
-      if (useBcast) eBySrc
-      else graft.Pins.pin(e0.repartition(col("dst")))
-    val nodesR =
-      if (useBcast) nodes.coalesce(roundSlices(nNodes)) else nodes
-    var hub = nodes.withColumn("h", lit(scale)).transform(Ckpt.cut(_))
-    var auth = nodes.withColumn("a", lit(scale)).transform(Ckpt.cut(_))
+    val r = directed(edges.select(col("src"), col("dst")).distinct(),
+      broadcastNodeLimit)
+    // broadcast mode reads e0 for both keys; only the co-partitioned
+    // arm builds (and pins) the dst layout
+    val eBySrc = r.edges("src")
+    val eByDst = r.edges("dst")
+    var hub = r.nodes.withColumn("h", lit(scale)).transform(Ckpt.cut(_))
+    var auth = r.nodes.withColumn("a", lit(scale)).transform(Ckpt.cut(_))
     // one half-round: raw(n) = Σ over `joinKey` edges of the opposite
     // score, then integer renormalize to Σ≈scale
     def half(scores: DataFrame, scoreCol: String, joinKey: String,
@@ -554,9 +541,9 @@ object Graphs {
       // so 2·iters accumulated pins were pure storage-memory pressure.
       graft.Pins.scope {
         val raw = e
-          .join(bc(scores.withColumnRenamed("node", joinKey), useBcast), joinKey)
+          .join(r.bc(scores.withColumnRenamed("node", joinKey)), joinKey)
           .select(col(outKey).as("node"), col(scoreCol).as("v"))
-          .unionByName(nodesR.select(col("node"), lit(0L).as("v")))
+          .unionByName(r.nodesR.select(col("node"), lit(0L).as("v")))
           .groupBy(col("node"))
           .agg(sum(col("v")).as("raw"))
           .transform(graft.Pins.pin)

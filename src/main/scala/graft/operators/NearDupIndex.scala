@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Sources
 
 /** s13: persisted NEAR-DUP index — the MinHash-LSH complement of
   * [[DedupIndex]] (s12). s12 answers "has this EXACT text been
@@ -98,6 +99,7 @@ object NearDupIndex {
   def fit(corpus: DataFrame, name: String,
           buckets: Int = DefaultBuckets): Unit = {
     LakeLock.withWriter(corpus.sparkSession, name) { graft.Pins.scope {
+    drop(corpus.sparkSession, name)
     // pin the rep-level shingle stream's PARENT (the distinct-text
     // frame): all three artifact derivations re-scan rep, not the corpus
     val rep = graft.Pins.pin(corpus
@@ -105,13 +107,13 @@ object NearDupIndex {
       .dropDuplicates("dg"))
     val g = graft.Pins.pin(
       Dedup.shingles(rep.select(col("dg").as("doc_id"), col("text"))))
-    graft.sources.Sources.writeBucketed(
+    Sources.writeBucketed(
       rep.select(col("dg")), digestsTable(name), "dg", buckets)
-    graft.sources.Sources.writeBucketed(
+    Sources.writeBucketed(
       Dedup.bandKeys(Dedup.minhashSignature(g))
         .select(col("doc_id").as("dg"), col("n"), col("band"), col("band_key")),
       bandsTable(name), "band_key", buckets)
-    graft.sources.Sources.writeBucketed(
+    Sources.writeBucketed(
       g.select(col("doc_id").as("dg"), xxhash64(col("g")).as("gh")),
       gramsTable(name), "dg", buckets)
   } }
@@ -200,26 +202,22 @@ object NearDupIndex {
     * increment's artifacts come from the SAME kernels as fit, so
     * fit(old) + append(new) ≡ fit(old ∪ new) bit-for-bit (band keys
     * and gram hashes are pure functions of the text — no quantizer to
-    * freeze, no refit trigger). localCheckpoint for the same reason as
-    * [[DedupIndex.append]]: the anti-join READS the digest table the
-    * append WRITES, and the commit would invalidate a lazy plan. */
+    * freeze, no refit trigger). */
   def append(docs: DataFrame, name: String): Unit = {
     LakeLock.withWriter(docs.sparkSession, name) {
-    val spark = docs.sparkSession
-    val newRep = docs.select(Dedup.normDigest.as("dg"), col("text"))
-      .dropDuplicates("dg")
-      .join(spark.table(digestsTable(name)), Seq("dg"), "left_anti")
-      .transform(Ckpt.cut(_))
+    val newRep = Sources.unregistered(
+      docs.select(Dedup.normDigest.as("dg"), col("text")).dropDuplicates("dg"),
+      digestsTable(name), "dg")
     if (newRep.limit(1).count() > 0L) graft.Pins.scope {
       val g = graft.Pins.pin(
         Dedup.shingles(newRep.select(col("dg").as("doc_id"), col("text"))))
-      graft.sources.Sources.appendBucketed(
+      Sources.appendBucketed(
         newRep.select(col("dg")), digestsTable(name), "dg")
-      graft.sources.Sources.appendBucketed(
+      Sources.appendBucketed(
         Dedup.bandKeys(Dedup.minhashSignature(g))
           .select(col("doc_id").as("dg"), col("n"), col("band"), col("band_key")),
         bandsTable(name), "band_key")
-      graft.sources.Sources.appendBucketed(
+      Sources.appendBucketed(
         g.select(col("doc_id").as("dg"), xxhash64(col("g")).as("gh")),
         gramsTable(name), "dg")
     }
@@ -228,5 +226,5 @@ object NearDupIndex {
 
   def drop(spark: SparkSession, name: String): Unit =
     Seq(digestsTable(name), bandsTable(name), gramsTable(name))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      .foreach(Sources.clearTable(spark, _))
 }

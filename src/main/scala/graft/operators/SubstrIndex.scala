@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Sources
 
 /** s26: persisted SUBSTRING-CONTAINMENT index — q200's byte-granular
   * machinery as a lake artifact, for the decontamination question a
@@ -101,10 +102,11 @@ object SubstrIndex {
           dfCap: Int = 0): Unit = {
     require(minLen >= gram, s"minLen ($minLen) must be >= gram ($gram)")
     LakeLock.withWriter(corpus.sparkSession, name) { graft.Pins.scope {
+      drop(corpus.sparkSession, name)
       val rep = graft.Pins.pin(repTexts(corpus))
-      graft.sources.Sources.writeBucketed(
+      Sources.writeBucketed(
         fingerprints(rep, minLen, gram), sfpTable(name), "h", buckets)
-      graft.sources.Sources.writeBucketed(
+      Sources.writeBucketed(
         rep, textsTable(name), "dg", buckets)
       writeParams(corpus.sparkSession, name, minLen, gram, dfCap)
     } }
@@ -282,26 +284,15 @@ object SubstrIndex {
     * Anti-join on the texts table's digest key makes replays no-op. */
   def append(docs: DataFrame, name: String): Unit = {
     LakeLock.withWriter(docs.sparkSession, name) {
-      val spark = docs.sparkSession
-      val (minLen, gram, _) = params(spark, name)
-      val newRep = repTexts(docs)
-        .join(spark.table(textsTable(name)).select(col("dg")),
-          Seq("dg"), "left_anti")
-        .transform(Ckpt.cut(_)) // the append WRITES the table the anti-join READ
-      val meta = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(textsTable(name)))
-      val buckets = meta.bucketSpec.map(_.numBuckets).getOrElse(DefaultBuckets)
-      fingerprints(newRep, minLen, gram)
-        .write.mode("append")
-        .bucketBy(buckets, "h").sortBy("h")
-        .format("parquet").saveAsTable(sfpTable(name))
-      newRep.write.mode("append")
-        .bucketBy(buckets, "dg").sortBy("dg")
-        .format("parquet").saveAsTable(textsTable(name))
+      val (minLen, gram, _) = params(docs.sparkSession, name)
+      val newRep = Sources.unregistered(repTexts(docs), textsTable(name), "dg")
+      Sources.appendBucketed(
+        fingerprints(newRep, minLen, gram), sfpTable(name), "h")
+      Sources.appendBucketed(newRep, textsTable(name), "dg")
     }
   }
 
   def drop(spark: SparkSession, name: String): Unit =
     Seq(sfpTable(name), textsTable(name), paramsTable(name))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      .foreach(Sources.clearTable(spark, _))
 }

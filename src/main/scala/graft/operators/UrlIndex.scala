@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Sources
 
 /** s15: persisted URL-FRONTIER index — the crawl-side member of the
   * serving-index family (s11 ANN / s12 exact-dedup / s13 near-dup /
@@ -33,7 +34,8 @@ object UrlIndex {
   def fit(corpus: DataFrame, name: String,
           buckets: Int = DefaultBuckets): Unit = {
     LakeLock.withWriter(corpus.sparkSession, name) {
-      graft.sources.Sources.writeBucketed(
+      drop(corpus.sparkSession, name)
+      Sources.writeBucketed(
         corpus.select(urlHash(col("url")).as("uh")).distinct(),
         urlsTable(name), "uh", buckets)
     }
@@ -61,18 +63,14 @@ object UrlIndex {
 
   /** Register the canonical URLs of `docs` not already present. */
   def append(docs: DataFrame, name: String): Unit = {
-    val spark = docs.sparkSession
-    LakeLock.withWriter(spark, name) {
-      // eager checkpoint: the increment READS the table the append
-      // WRITES (the s12 append rationale)
-      val newUh = docs.select(urlHash(col("url")).as("uh")).distinct()
-        .join(spark.table(urlsTable(name)), Seq("uh"), "left_anti")
-        .transform(Ckpt.cut(_))
+    LakeLock.withWriter(docs.sparkSession, name) {
+      val newUh = Sources.unregistered(
+        docs.select(urlHash(col("url")).as("uh")).distinct(), urlsTable(name), "uh")
       if (newUh.limit(1).count() > 0L)
-        graft.sources.Sources.appendBucketed(newUh, urlsTable(name), "uh")
+        Sources.appendBucketed(newUh, urlsTable(name), "uh")
     }
   }
 
   def drop(spark: SparkSession, name: String): Unit =
-    spark.sql(s"DROP TABLE IF EXISTS ${urlsTable(name)}")
+    Sources.clearTable(spark, urlsTable(name))
 }

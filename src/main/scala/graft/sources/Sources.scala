@@ -152,10 +152,7 @@ object Sources {
     * own metadata — compaction cannot change the layout contract. */
   def compactBucketed(spark: SparkSession, table: String): Unit = {
     recoverCompacting(spark, table)
-    val meta = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val spec = meta.bucketSpec
-      .getOrElse(sys.error(s"$table is not bucketed — nothing to compact"))
+    val (spec, format) = layoutOf(spark, table)
     val bucketCol = spec.bucketColumnNames.head
     val tmp = table + "_compacting"
     val retired = table + "_retired"
@@ -165,9 +162,7 @@ object Sources {
       .repartition(col(bucketCol))
       .write.mode(SaveMode.Overwrite)
       .bucketBy(spec.numBuckets, bucketCol).sortBy(bucketCol)
-      // the table's own provider, not a hard-coded parquet: compaction
-      // must never silently convert an ORC lake table (s28)
-      .format(meta.provider.getOrElse("parquet")).saveAsTable(tmp)
+      .format(format).saveAsTable(tmp)
     // rename-ASIDE, not DROP-then-rename: the old table moves to
     // `_retired` before `_compacting` takes the name, so every crash
     // point leaves a COMPLETE copy recoverable by name — and
@@ -203,24 +198,71 @@ object Sources {
       }
     }
 
-  /** Append into an existing bucketed table under its OWN catalog
-    * bucket spec (read back so the caller cannot drift the bucket
+  /** Append into an existing bucketed table under its OWN layout
+    * ([[layoutOf]]: read back so the caller cannot drift the bucket
     * count — Spark refuses mismatched specs, this makes the match
-    * automatic). Shared by the persisted-index appends (s12/s13). */
+    * automatic). The one append path of all seven serving indexes
+    * (s11–s15, s26, s27): it heals a crashed compaction first, and it
+    * gathers stats after. */
   def appendBucketed(df: DataFrame, table: String, bucketCol: String): Unit = {
     recoverCompacting(df.sparkSession, table)
-    val meta = df.sparkSession.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val n = meta.bucketSpec.map(_.numBuckets)
-      .getOrElse(sys.error(s"$table is not bucketed — not an index table"))
+    val (spec, format) = layoutOf(df.sparkSession, table)
     df.write.mode(SaveMode.Append)
-      .bucketBy(n, bucketCol).sortBy(bucketCol)
-      // match the table's own provider (s28: ORC index tables append
-      // as ORC; Spark would otherwise refuse the mixed-format table)
-      .format(meta.provider.getOrElse("parquet")).saveAsTable(table)
+      .bucketBy(spec.numBuckets, bucketCol).sortBy(bucketCol)
+      .format(format).saveAsTable(table)
     // append grows the table past its recorded rowCount — stale stats
     // UNDER-estimate and mis-plan broadcasts, the worse direction
     autogatherStats(df.sparkSession, table)
+  }
+
+  /** Overwrite a bucketed table with `df` under the table's own layout —
+    * the same-layout rewrite of an index's small derived tables (the
+    * BM25 df merge, the cluster relabel). `df` must not be a lazy plan
+    * over `table`: cut it first. */
+  def rewriteBucketed(df: DataFrame, table: String): Unit = {
+    val (spec, format) = layoutOf(df.sparkSession, table)
+    writeBucketed(df, table, spec.bucketColumnNames.head, spec.numBuckets, format)
+  }
+
+  /** A bucketed table's own bucket spec and provider, which every
+    * append, compaction and rewrite reuses: the layout is the table's
+    * contract, never the caller's, and a hard-coded parquet would
+    * silently convert (or refuse to append to) an ORC lake table
+    * (s28). */
+  private def layoutOf(spark: SparkSession, table: String)
+      : (org.apache.spark.sql.catalyst.catalog.BucketSpec, String) = {
+    val meta = spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
+    (meta.bucketSpec.getOrElse(sys.error(s"$table is not bucketed — not an index table")),
+      meta.provider.getOrElse("parquet"))
+  }
+
+  /** The rows of `batch` whose `key` is not yet in the `registry`
+    * table: the increment an index append registers, so a replayed
+    * batch can only no-op. Cut EAGERLY, not persisted: the anti-join
+    * reads the table the append then writes, and the table commit
+    * invalidates dependent cached plans, so a lazy or persisted frame
+    * would silently re-evaluate against the grown table (to empty).
+    * The batch is maintenance-sized, so the lost-executor recompute
+    * concern that makes operators prefer persist does not apply. */
+  def unregistered(batch: DataFrame, registry: String, key: String): DataFrame = {
+    recoverCompacting(batch.sparkSession, registry)
+    batch.join(batch.sparkSession.table(registry).select(col(key)), Seq(key), "left_anti")
+      .transform(graft.operators.Ckpt.cut(_))
+  }
+
+  /** Drop a catalog table AND its default location. When the catalog
+    * is in-memory, a previous process's table leaves its files behind
+    * with no catalog entry, and creating the table again over them
+    * fails with LOCATION_ALREADY_EXISTS — so every index drop and
+    * refit clears both. */
+  def clearTable(spark: SparkSession, table: String): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    val loc = new org.apache.hadoop.fs.Path(
+      spark.sessionState.catalog.defaultTablePath(
+        org.apache.spark.sql.catalyst.TableIdentifier(table)))
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(loc)) { fs.delete(loc, true); () }
   }
 
   /** Avro round-trip (s08) — the classic Hive-lake row-interchange
@@ -265,14 +307,9 @@ object Sources {
     df.createOrReplaceTempView(tmp)
     val prevMode = spark.conf.getOption("hive.exec.dynamic.partition.mode")
     try {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
       // a previous JVM's orphaned location would otherwise leave stale
       // partition directories the dynamic insert doesn't overwrite
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(table)))
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) { fs.delete(loc, true); () }
+      clearTable(spark, table)
       val dataCols = df.schema.filterNot(f => partitionCols.contains(f.name))
       val colDdl = dataCols.map(f => s"${f.name} ${f.dataType.sql}")
         .mkString(", ")

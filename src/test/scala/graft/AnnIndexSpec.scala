@@ -157,6 +157,19 @@ class AnnIndexSpec extends GraftSpec {
     } finally spark.conf.set(key, prev)
   }
 
+  test("s11 fit over an orphaned table location starts from a clean table") {
+    import org.apache.spark.sql.functions.col
+    val n = "graft_annix_orphan"
+    orphanLocations(AnnIndex.vectorsTable(n), AnnIndex.lshTable(n),
+      AnnIndex.ivfCentroidsTable(n), AnnIndex.ivfListsTable(n),
+      AnnIndex.int8Table(n), AnnIndex.pqCodebookTable(n),
+      AnnIndex.pqCodesTable(n))
+    val part = corpus.filter(col("vec_id") < 400)
+    AnnIndex.fit(part, n)
+    assert(spark.table(AnnIndex.vectorsTable(n)).count() == part.count())
+    AnnIndex.drop(spark, n)
+  }
+
   test("s11 append: fit(old)+append(new) == pinned-centroid full refit, bit for bit") {
     import org.apache.spark.sql.functions._
     val IncName = "graft_annix_inc"
@@ -166,6 +179,11 @@ class AnnIndexSpec extends GraftSpec {
     val fresh = corpus.filter(col("vec_id") >= 400)
     AnnIndex.fit(old, IncName)
     AnnIndex.append(fresh, IncName)
+    // the append re-gathers the grown table's stats, as every index
+    // write does (a stale or missing rowCount mis-plans broadcasts)
+    assert(spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(AnnIndex.vectorsTable(IncName)))
+      .stats.flatMap(_.rowCount).contains(BigInt(corpus.count())))
     // the refit half of the contract: full fit with the incremental
     // index's own (old-corpus) quantizer pinned
     val cents = spark.table(AnnIndex.ivfCentroidsTable(IncName))

@@ -27,6 +27,16 @@ class Bm25IndexSpec extends GraftSpec {
     Bm25Index.fit(corpus, Name)
   }
 
+  test("s14 fit over an orphaned table location starts from a clean table") {
+    val n = "graft_bm25ix_orphan"
+    orphanLocations(Bm25Index.postingsTable(n), Bm25Index.dfTable(n),
+      Bm25Index.dlTable(n), Bm25Index.statsTable(n))
+    Bm25Index.fit(corpus, n)
+    assert(spark.table(Bm25Index.dlTable(n)).count() == 200L)
+    assert(spark.table(Bm25Index.statsTable(n)).head().getAs[Long]("n_docs") == 200L)
+    Bm25Index.drop(spark, n)
+  }
+
   private def rows(df: DataFrame) =
     df.collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank"),
       r.getAs[Long]("doc_id"), r.getAs[Long]("n_hit"),

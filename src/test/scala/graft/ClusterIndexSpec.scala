@@ -32,6 +32,16 @@ class ClusterIndexSpec extends GraftSpec {
 
   private val Name = "graft_clix"
 
+  test("s27 fit over an orphaned table location starts from a clean table") {
+    val n = "graft_clix_orphan"
+    orphanLocations(ClusterIndex.labelsTable(n), ClusterIndex.gramsTable(n),
+      ClusterIndex.digestsTable(n), ClusterIndex.metaTable(n))
+    ClusterIndex.fit(corpus, n)
+    assert(labelSet(ClusterIndex.labels(spark, n)).nonEmpty)
+    assert(ClusterIndex.params(spark, n)._2 == 7L)
+    ClusterIndex.drop(spark, n)
+  }
+
   test("s27 fit: served labels == inline clusters(neardupEdges), bit for bit") {
     ClusterIndex.drop(spark, Name)
     ClusterIndex.fit(corpus, Name)

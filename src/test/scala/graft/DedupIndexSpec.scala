@@ -31,6 +31,15 @@ class DedupIndexSpec extends GraftSpec {
     df.collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("dg"),
       r.getAs[String]("status"))).toSeq
 
+  test("s12 fit over an orphaned table location starts from a clean table") {
+    val n = "graft_dedupix_orphan"
+    orphanLocations(DedupIndex.digestsTable(n), DedupIndex.bloomTable(n))
+    DedupIndex.fit(corpus, n)
+    assert(spark.table(DedupIndex.digestsTable(n)).count() == 120L)
+    assert(spark.table(DedupIndex.bloomTable(n)).count() == 1L)
+    DedupIndex.drop(spark, n)
+  }
+
   test("s12 dedup from the loaded index == batch q109, bit for bit") {
     fitted
     assert(statuses(DedupIndex.dedup(batch, Name)) ==

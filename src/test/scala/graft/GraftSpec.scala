@@ -40,6 +40,17 @@ trait GraftSpec extends AnyFunSuite with BeforeAndAfterEach {
     n.get
   }
 
+  /** Leave a file at each table's default location with no catalog
+    * entry — what a previous process's index fit leaves behind when the
+    * catalog is in-memory. */
+  def orphanLocations(tables: String*): Unit = tables.foreach { t =>
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+      .defaultTablePath(org.apache.spark.sql.catalyst.TableIdentifier(t)))
+    loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(new org.apache.hadoop.fs.Path(loc, "part-00000-orphan")).close()
+  }
+
   def formattedPlan(df: org.apache.spark.sql.DataFrame): String = {
     val out = new java.io.ByteArrayOutputStream()
     Console.withOut(new java.io.PrintStream(out))(df.explain("formatted"))

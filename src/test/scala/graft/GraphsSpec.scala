@@ -195,6 +195,44 @@ class GraphsSpec extends GraftSpec {
     assert(re.toSet == out.toSet)
   }
 
+  /** (total jobs, construction jobs, pins left for the query's owner)
+    * of one graph frame built and collected over the sf0.001 corpus. */
+  private def budget(build: => org.apache.spark.sql.DataFrame): (Int, Int, Int) = {
+    Pins.release()
+    var df: org.apache.spark.sql.DataFrame = null
+    val construct = jobsOf { df = build }
+    val total = construct + jobsOf(df.collect())
+    val pins = Pins.pending
+    Pins.release()
+    (total, construct, pins)
+  }
+
+  test("graph job and pin counts hold in both round layouts") {
+    // (total jobs, construction jobs, pins) at sf0.001; the co-partitioned
+    // arm forced with broadcastNodeLimit = 0 over the crawl graph
+    val docs = Tables.documents(spark, SF)
+    Graphs.q154(docs).collect() // warm: schema inference and codegen
+    val got = Seq(
+      "q154" -> budget(Graphs.q154(docs)),
+      "q165" -> budget(Graphs.q165(docs)),
+      "q174" -> budget(Graphs.q174(docs)),
+      "q175" -> budget(Graphs.q175(docs)),
+      "q180" -> budget(Graphs.q180(docs)),
+      "q195" -> budget(Graphs.q195(docs)),
+      "pagerank/co" -> budget(Graphs.pagerank(Graphs.crawlEdges(docs),
+        broadcastNodeLimit = 0L)),
+      "labelProp/co" -> budget(Graphs.labelProp(Graphs.crawlEdges(docs),
+        broadcastNodeLimit = 0L)),
+      "q175/co" -> budget(Graphs.q175(docs, broadcastNodeLimit = 0L)),
+      "hits/co" -> budget(Graphs.hits(Graphs.crawlEdges(docs),
+        broadcastNodeLimit = 0L)))
+    assert(got.toMap == Map(
+      "q154" -> (35, 32, 4), "q165" -> (29, 26, 4), "q174" -> (29, 0, 4),
+      "q175" -> (36, 33, 4), "q180" -> (76, 72, 3), "q195" -> (25, 0, 3),
+      "pagerank/co" -> (53, 52, 4), "labelProp/co" -> (43, 42, 5),
+      "q175/co" -> (44, 41, 5), "hits/co" -> (96, 94, 5)), got)
+  }
+
   test("q195 assortativity: star reads exactly -1, path reads exactly -1/2") {
     import spark.implicits._
     // K1,3 star: hubs never wire to hubs -> perfectly disassortative

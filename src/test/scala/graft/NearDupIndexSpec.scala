@@ -38,6 +38,15 @@ class NearDupIndexSpec extends GraftSpec {
     NearDupIndex.fit(corpus, Name)
   }
 
+  test("s13 fit over an orphaned table location starts from a clean table") {
+    val n = "graft_neardupix_orphan"
+    orphanLocations(NearDupIndex.digestsTable(n), NearDupIndex.bandsTable(n),
+      NearDupIndex.gramsTable(n))
+    NearDupIndex.fit(corpus, n)
+    assert(spark.table(NearDupIndex.digestsTable(n)).count() == 55L)
+    NearDupIndex.drop(spark, n)
+  }
+
   private def rows(df: DataFrame) =
     df.collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("dg"),
       r.getAs[String]("status"), r.getAs[String]("match_dg"),

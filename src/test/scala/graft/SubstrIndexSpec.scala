@@ -35,6 +35,38 @@ class SubstrIndexSpec extends GraftSpec {
     SubstrIndex.fit(corpus, Name)
   }
 
+  test("s26 fit over an orphaned table location starts from a clean table") {
+    val n = "graft_substrix_orphan"
+    orphanLocations(SubstrIndex.sfpTable(n), SubstrIndex.textsTable(n),
+      SubstrIndex.paramsTable(n))
+    SubstrIndex.fit(corpus, n)
+    assert(spark.table(SubstrIndex.textsTable(n)).count() == 3L)
+    SubstrIndex.drop(spark, n)
+  }
+
+  test("s26 append heals a compaction that crashed between its two renames") {
+    val n = "graft_substrix_heal"
+    SubstrIndex.drop(spark, n)
+    SubstrIndex.fit(corpus, n)
+    val sfp = SubstrIndex.sfpTable(n)
+    val fittedRows = spark.table(sfp).collect().toSet
+    // the crash window: the serving name is unbound, the complete
+    // rewrite survives under `_compacting`
+    spark.sql(s"ALTER TABLE $sfp RENAME TO ${sfp}_compacting")
+    val inc = Seq((201L, "a freshly admitted document that is long enough " +
+      "to carry fingerprints of its own past the floor")).toDF("doc_id", "text")
+    SubstrIndex.append(inc, n)
+    assert(spark.catalog.tableExists(sfp))
+    assert(!spark.catalog.tableExists(s"${sfp}_compacting"))
+    val healed = spark.table(sfp).collect().toSet
+    assert(fittedRows.subsetOf(healed) && healed.size > fittedRows.size,
+      s"fitted ${fittedRows.size} rows, healed table holds ${healed.size}")
+    val v = rows(SubstrIndex.containment(batch, n))
+    graft.Pins.release()
+    assert(v(101L)._1 == "contained", v)
+    SubstrIndex.drop(spark, n)
+  }
+
   private def rows(df: DataFrame) =
     df.collect().map(r => r.getAs[Long]("doc_id") ->
       (r.getAs[String]("status"), r.getAs[Int]("max_len"),

@@ -23,6 +23,14 @@ class UrlIndexSpec extends GraftSpec {
     assert(spark.table(UrlIndex.urlsTable(Name)).count() == 2L) // A/p/1, B/p/2
   }
 
+  test("s15 fit over an orphaned table location starts from a clean table") {
+    val n = "graft_urlix_orphan"
+    orphanLocations(UrlIndex.urlsTable(n))
+    UrlIndex.fit(corpus, n)
+    assert(spark.table(UrlIndex.urlsTable(n)).count() == 2L)
+    UrlIndex.drop(spark, n)
+  }
+
   test("s15 dedup verdicts: corpus dup, in-batch dup, new") {
     UrlIndex.drop(spark, Name)
     UrlIndex.fit(corpus, Name)
