@@ -323,8 +323,6 @@ object LinearModel {
     * train under the same split contract, or pre-normalize whitespace
     * (q54) upstream of both training and inference. */
   def save(spark: SparkSession, path: String, m: LinearModel): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val sb = new StringBuilder
     sb ++= Header += '\n'
     sb ++= "classes," + m.classes.mkString(",") += '\n'
@@ -335,22 +333,15 @@ object LinearModel {
     keys.foreach { k =>
       sb ++= s"w,$k," + m.rows.get(k).mkString(",") += '\n'
     }
-    val out = f.create(p, true)
-    try out.write(sb.result().getBytes("UTF-8")) finally out.close()
+    val p = new org.apache.hadoop.fs.Path(path)
+    graft.sources.LakeFiles.write(graft.sources.LakeFiles.fs(spark, p), p,
+      sb.result(), overwrite = true)
   }
 
   def load(spark: SparkSession, path: String): LinearModel = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = f.open(p)
-    val body = try {
-      val bos = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-      new String(bos.toByteArray, "UTF-8")
-    } finally in.close()
-    val lines = body.split("\n").filter(_.nonEmpty)
+    val lines = graft.sources.LakeFiles.read(graft.sources.LakeFiles.fs(spark, p), p)
+      .split("\n").filter(_.nonEmpty)
     require(lines.head == Header, s"not a $Header file: ${lines.head}")
     def field(tag: String): String = {
       val l = lines.find(_.startsWith(tag + ",")).getOrElse(

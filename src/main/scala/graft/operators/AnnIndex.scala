@@ -39,9 +39,15 @@ import graft.sources.Sources
   * Bit-for-bit contract (specced): every artifact is exactly what the
   * live path derives — doubles/ints round-trip parquet losslessly, the
   * LSH planes are data-independent constants, the IVF fit is the same
-  * seeded kmeans|| — so `searchLsh`/`searchInt8` against a loaded
-  * index return byte-identical frames to [[Similarity.search]] /
-  * [[Similarity.searchInt8]] run fresh on the corpus.
+  * seeded kmeans|| — and every `search*` runs its live twin's candidate
+  * stage with the fitted table as the index side
+  * ([[Similarity.lshCandidates]], [[Similarity.ivfCandidates]],
+  * [[Similarity.int8Candidates]], [[Similarity.pqAdcCands]],
+  * [[Similarity.ivfPqCandidates]], [[Similarity.hnswShardSearch]] over
+  * the [[Similarity.hnswPanel]]). So `searchLsh`/`searchInt8` against a
+  * loaded index return byte-identical frames to [[Similarity.search]] /
+  * [[Similarity.searchInt8]] run fresh on the corpus because both paths
+  * call the same code.
   *
   * 100 TB shape: fit is one corpus scan per artifact family with
   * write-side shuffles only (the bucketing exchanges — amortized over
@@ -74,6 +80,8 @@ object AnnIndex {
     * `vecs` scan; the kmeans|| fit and the int8 quantizer read the raw
     * corpus directly (the quantizer is per-vector on the raw doubles,
     * and kmeans iterates — neither gains from the normalized frame).
+    * [[rowArtifacts]] is the per-vector derivation, shared with
+    * [[append]].
     *
     * `centroids` pins the IVF coarse quantizer instead of re-running
     * kmeans|| — the refit half of the incremental-maintenance contract
@@ -87,25 +95,15 @@ object AnnIndex {
     LakeLock.withWriter(corpus.sparkSession, name) { graft.Pins.scope {
     val spark = corpus.sparkSession
     drop(spark, name)
-    val vecs = graft.Pins.pin(Similarity.vecRows(corpus))
-    Sources.writeBucketed(vecs.toDF("vec_id", "v", "norm"),
-      vectorsTable(name), "vec_id", buckets)
-    Sources.writeBucketed(Similarity.lshPostings(Similarity.sigRows(vecs)),
-      lshTable(name), "bucket", buckets)
+    // the quantizers are metadata-sized rows (the PQ codebook pins
+    // between refits exactly like the IVF centroids — same contract,
+    // same spec)
     val cents = centroids.getOrElse(Similarity.ivfFit(corpus))
     spark.createDataFrame(cents.toIndexedSeq.zipWithIndex
         .map { case (c, i) => (i, c.toIndexedSeq) })
       .toDF("list", "centroid")
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .format("parquet").saveAsTable(ivfCentroidsTable(name))
-    Sources.writeBucketed(Similarity.ivfAssign(vecs, cents, 1),
-      ivfListsTable(name), "list", math.min(buckets, Similarity.IvfLists))
-    Sources.writeBucketed(Similarity.int8Codes(corpus),
-      int8Table(name), "vec_id", buckets)
-    // PQ artifacts: the codebook rows are M·K metadata (the IVF-
-    // centroid class); the code table is the 64×-compressed serving
-    // currency. The codebook pins between refits exactly like the
-    // IVF quantizer (same contract, same spec).
     val cb = pqCodebooks.getOrElse(Similarity.pqFit(corpus))
     spark.createDataFrame(
         for ((sub, m) <- cb.toIndexedSeq.zipWithIndex;
@@ -114,11 +112,30 @@ object AnnIndex {
       .toDF("m", "c", "centroid")
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .format("parquet").saveAsTable(pqCodebookTable(name))
-    Sources.writeBucketed(Similarity.pqEncode(corpus, cb),
-      pqCodesTable(name), "vec_id", buckets)
+    rowArtifacts(corpus, graft.Pins.pin(Similarity.vecRows(corpus)), name, cents, cb)
+      .foreach { case (df, table, key, maxBuckets) =>
+        Sources.writeBucketed(df, table, key, math.min(buckets, maxBuckets))
+      }
     fitHnswUnlocked(corpus, name, buckets)
   } }
   }
+
+  /** The per-vector artifacts of `rows` (a (vec_id, embedding) frame;
+    * `vecs` its [[Similarity.vecRows]]) under fixed quantizers, as
+    * (frame, table, bucket column, bucket ceiling) in write order — the
+    * one derivation [[fit]] writes and [[append]] appends. */
+  private def rowArtifacts(rows: DataFrame,
+                           vecs: org.apache.spark.sql.Dataset[(Long, Array[Double], Double)],
+                           name: String, cents: Array[Array[Double]],
+                           cb: Array[Array[Array[Double]]])
+      : Seq[(DataFrame, String, String, Int)] = Seq(
+    (vecs.toDF("vec_id", "v", "norm"), vectorsTable(name), "vec_id", Int.MaxValue),
+    (Similarity.lshPostings(Similarity.sigRows(vecs)), lshTable(name), "bucket",
+      Int.MaxValue),
+    (Similarity.ivfAssign(vecs, cents, 1), ivfListsTable(name), "list",
+      Similarity.IvfLists),
+    (Similarity.int8Codes(rows), int8Table(name), "vec_id", Int.MaxValue),
+    (Similarity.pqEncode(rows, cb), pqCodesTable(name), "vec_id", Int.MaxValue))
 
   /** s29: fit ONLY the HNSW artifact for `name` — one serialized
     * [[HnswGraph]] per deterministic shard (shard = hash(vec_id) mod
@@ -197,37 +214,23 @@ object AnnIndex {
   /** HNSW candidate generation from the LOADED artifact — the serving
     * twin of [[Similarity.hnswCandidates]]'s build-then-search: decode
     * each persisted shard graph, beam-search the broadcast query
-    * batch, union the shard-local candidate lists. Same search kernel
-    * ([[Similarity.hnswShardSearch]]), so loaded == live is exact.
+    * batch, union the shard-local candidate lists. Same panel collect
+    * and search kernel ([[Similarity.hnswPanel]],
+    * [[Similarity.hnswShardSearch]]), so loaded == live is exact.
     * Queries are batch-sized by contract (they broadcast — the int8
     * path's stance). */
   private[graft] def hnswServe(queries: DataFrame, name: String,
                                kPerShard: Int = 10, efSearch: Int = 48,
-                               leaveOneOut: Boolean = false): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    // the query panel broadcasts to every shard, so it is BATCH-sized
-    // by contract — enforce it loudly instead of letting a caller feed
-    // a corpus through the serving path and OOM the driver collect
-    // (limit BEFORE collect, so the guard itself is memory-safe)
-    val panel = Similarity.vecRows(queries).limit(MaxQueryPanel + 1)
-      .collect().sortBy(_._1)
-      .map { case (id, v, n) => (id, v.map(_ / n)) }
-    require(panel.length <= MaxQueryPanel,
-      s"hnsw serving batch exceeds MaxQueryPanel=$MaxQueryPanel rows: " +
-      "the panel is collected and broadcast per shard — split the " +
-      "query set into batches (or use the batch operators for " +
-      "corpus-vs-corpus work)")
+                               leaveOneOut: Boolean = false): DataFrame =
     Similarity.hnswShardSearch(
-      hnswShards(spark, name),
-      panel, efSearch, kPerShard, leaveOneOut)
-  }
+      hnswShards(queries.sparkSession, name),
+      Similarity.hnswPanel(Similarity.vecRows(queries)), efSearch, kPerShard,
+      leaveOneOut)
 
-  /** Ceiling on a serving call's query-batch size — the panel collects
-    * driver-side and broadcasts to every shard (the documented
-    * broadcast-panel pattern shared by all six paths); at 64-dim
-    * doubles this cap is ~32 MB of panel, comfortably a batch and
-    * loudly not a corpus. */
+  /** Ceiling on an HNSW query panel ([[Similarity.hnswPanel]], live or
+    * served) — the panel collects driver-side and broadcasts to every
+    * shard; at 64-dim doubles this cap is ~32 MB of panel, comfortably
+    * a batch and loudly not a corpus. */
   val MaxQueryPanel: Int = 65536
 
   /** HNSW top-k against a loaded index — [[Similarity.searchHnsw]]
@@ -280,18 +283,9 @@ object AnnIndex {
     LakeLock.withWriter(batch.sparkSession, name) { graft.Pins.scope {
     val spark = batch.sparkSession
     val vecs = graft.Pins.pin(Similarity.vecRows(batch))
-    Sources.appendBucketed(vecs.toDF("vec_id", "v", "norm"),
-      vectorsTable(name), "vec_id")
-    Sources.appendBucketed(Similarity.lshPostings(Similarity.sigRows(vecs)),
-      lshTable(name), "bucket")
-    Sources.appendBucketed(
-      Similarity.ivfAssign(vecs, loadCentroids(spark, name), 1),
-      ivfListsTable(name), "list")
-    Sources.appendBucketed(Similarity.int8Codes(batch),
-      int8Table(name), "vec_id")
-    Sources.appendBucketed(
-      Similarity.pqEncode(batch, loadPqCodebook(spark, name)),
-      pqCodesTable(name), "vec_id")
+    rowArtifacts(batch, vecs, name, loadCentroids(spark, name),
+        loadPqCodebook(spark, name))
+      .foreach { case (df, table, key, _) => Sources.appendBucketed(df, table, key) }
     appendHnsw(spark, vecs, name)
   } }
   }
@@ -433,9 +427,9 @@ object AnnIndex {
     * from the persisted postings + vectors tables: the query batch is
     * signed and multi-probed fresh, candidates come from the (t,
     * bucket) equi-join against the postings TABLE, the re-rank joins
-    * the vectors TABLE. No corpus scan in the plan. `prune` collects
-    * the batch's distinct probe buckets (≤ 2^8 values) and pushes an
-    * IN filter so the bucketed postings scan reads only touched
+    * the vectors TABLE. No corpus scan in the plan. The batch's
+    * distinct probe buckets (≤ 2^8 values) are collected and pushed as
+    * an IN filter so the bucketed postings scan reads only touched
     * bucket files.
     *
     * The query-batch frame `qv` is deliberately NOT persisted: it is a
@@ -444,20 +438,14 @@ object AnnIndex {
     * (a lazy return has no post-action hook to release it). The probe
     * collect and the re-rank join each re-derive it — batch-sized
     * arithmetic, no corpus I/O. */
-  def searchLsh(queries: DataFrame, name: String, k: Int = 5,
-                prune: Boolean = true): DataFrame = {
+  def searchLsh(queries: DataFrame, name: String, k: Int = 5): DataFrame = {
     val spark = queries.sparkSession
     val qv = Similarity.vecRows(queries)
     val probes = Similarity.lshProbes(Similarity.sigRows(qv))
-    val postings = spark.table(lshTable(name))
-    val pruned =
-      if (prune) {
-        val keys = probes.select(col("bucket")).distinct()
-          .collect().map(_.getLong(0))  // ≤ 2^PlanesPerTable values
-        postings.filter(col("bucket").isin(keys.toIndexedSeq: _*))
-      } else postings
-    val cands = probes.join(pruned, Seq("t", "bucket"))
-      .select(col("qid"), col("nid")).distinct()
+    val keys = probes.select(col("bucket")).distinct()
+      .collect().map(_.getLong(0))  // ≤ 2^PlanesPerTable values
+    val cands = Similarity.lshCandidates(probes, spark.table(lshTable(name))
+      .filter(col("bucket").isin(keys.toIndexedSeq: _*)))
     Similarity.rerankTopK(cands, qv.toDF("vec_id", "v", "norm"),
       spark.table(vectorsTable(name)), k)
   }
@@ -469,21 +457,26 @@ object AnnIndex {
     * the probed lists' bucket files), re-rank from the vectors TABLE.
     * `qv` unpersisted by design — see [[searchLsh]]. */
   def searchIvf(queries: DataFrame, name: String, k: Int = 5): DataFrame = {
-    val spark = queries.sparkSession
-    val cents = loadCentroids(spark, name)
     val qv = Similarity.vecRows(queries)
-    val probes = Similarity.ivfAssign(qv, cents, Similarity.IvfProbes)
-      .select(col("vec_id").as("qid"), col("list"))
+    Similarity.rerankTopK(ivfServe(qv, name), qv.toDF("vec_id", "v", "norm"),
+      queries.sparkSession.table(vectorsTable(name)), k)
+  }
+
+  /** IVF candidates of a query batch against the fitted lists: the
+    * batch probes its nearest lists under the loaded centroids, the
+    * probed list ids (≤ [[Similarity.IvfLists]] values) are collected
+    * and pushed as an IN filter, so the `list`-bucketed assignments
+    * scan reads only the probed bucket files. Shared by [[searchIvf]]
+    * and [[searchIvfPq]]. */
+  private def ivfServe(qv: org.apache.spark.sql.Dataset[(Long, Array[Double], Double)],
+                       name: String): DataFrame = {
+    val spark = qv.sparkSession
+    val probes = Similarity.ivfAssign(qv, loadCentroids(spark, name),
+      Similarity.IvfProbes)
     val probedLists = probes.select(col("list")).distinct()
-      .collect().map(_.getInt(0))  // ≤ IvfLists values
-    val cands = probes
-      .join(spark.table(ivfListsTable(name))
-          .filter(col("list").isin(probedLists.toIndexedSeq: _*))
-          .select(col("vec_id").as("nid"), col("list")),
-        Seq("list"))
-      .select(col("qid"), col("nid")).distinct()
-    Similarity.rerankTopK(cands, qv.toDF("vec_id", "v", "norm"),
-      spark.table(vectorsTable(name)), k)
+      .collect().map(_.getInt(0))
+    Similarity.ivfCandidates(probes, spark.table(ivfListsTable(name))
+      .filter(col("list").isin(probedLists.toIndexedSeq: _*)))
   }
 
   /** Int8 serving against a loaded index — [[Similarity.searchInt8]]
@@ -494,19 +487,8 @@ object AnnIndex {
   def searchInt8(queries: DataFrame, name: String, k: Int = 5,
                  nCandidates: Int = 50): DataFrame = {
     val spark = queries.sparkSession
-    val q = Similarity.int8Codes(queries)
-      .select(col("vec_id").as("qid"), col("qv").as("qqv"), col("inorm").as("qn"))
-    val c = spark.table(int8Table(name))
-      .select(col("vec_id").as("nid"), col("qv").as("nqv"), col("inorm").as("nn"))
-    val wc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("approx_cos").desc, col("nid"))
-    val cands = broadcast(q).join(c, lit(true))
-      .withColumn("approx_cos",
-        graft.functions.DotProductInt(col("qqv"), col("nqv")).cast("double") /
-          (col("qn") * col("nn")))
-      .withColumn("crk", row_number().over(wc))
-      .filter(col("crk") <= nCandidates)
-      .select(col("qid"), col("nid"))
+    val cands = Similarity.int8Candidates(queries, spark.table(int8Table(name)),
+      nCandidates, excludeSelf = false)
     Similarity.rerankTopK(cands,
       Similarity.normalized(queries).select(col("vec_id"), col("v"), col("norm")),
       spark.table(vectorsTable(name)), k)
@@ -545,24 +527,11 @@ object AnnIndex {
   def searchIvfPq(queries: DataFrame, name: String, k: Int = 5,
                   nCandidates: Int = 50): DataFrame = {
     val spark = queries.sparkSession
-    val cents = loadCentroids(spark, name)
     val qv = Similarity.vecRows(queries)
-    val probes = Similarity.ivfAssign(qv, cents, Similarity.IvfProbes)
-      .select(col("vec_id").as("qid"), col("list"))
-    val probedLists = probes.select(col("list")).distinct()
-      .collect().map(_.getInt(0))  // ≤ IvfLists values
-    val candIds = probes
-      .join(spark.table(ivfListsTable(name))
-          .filter(col("list").isin(probedLists.toIndexedSeq: _*))
-          .select(col("vec_id").as("nid"), col("list")),
-        Seq("list"))
-      .select(col("qid"), col("nid")).distinct()
+    val candIds = ivfServe(qv, name)
     val cb = loadPqCodebook(spark, name)
-    val scored = candIds
-      .join(spark.table(pqCodesTable(name)).select(col("vec_id").as("nid"),
-        col("codes")), "nid")
-      .join(broadcast(Similarity.pqLuts(queries, cb)), "qid")
-    Similarity.rerankTopK(Similarity.pqTopN(scored, cb, nCandidates),
+    Similarity.rerankTopK(Similarity.ivfPqCandidates(candIds,
+        spark.table(pqCodesTable(name)), queries, cb, nCandidates),
       qv.toDF("vec_id", "v", "norm"),
       spark.table(vectorsTable(name)), k)
   }

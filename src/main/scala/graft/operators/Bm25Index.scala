@@ -81,20 +81,16 @@ object Bm25Index {
 
   /** q116 against the fitted tables — same scoring tail, no corpus
     * scan, postings/df scans pruned to the query vocabulary. */
-  def search(queries: DataFrame, name: String, k: Int = 10,
-             prune: Boolean = true): DataFrame = {
+  def search(queries: DataFrame, name: String, k: Int = 10): DataFrame = {
     val spark = queries.sparkSession
     val qterms = queries.select(col("query_id"),
       posexplode(col("terms")).as(Seq("pos", "term")))
     // the batch's distinct terms: metadata-sized (≤ the batch's total
     // term count), collected to push an IN into the bucketed scans —
     // the s11 probe-key pattern
-    val terms: Seq[String] =
-      if (prune) qterms.select(col("term")).distinct()
-        .collect().map(_.getString(0)).toSeq
-      else Seq.empty
-    def pruned(df: DataFrame): DataFrame =
-      if (prune) df.filter(col("tok").isin(terms: _*)) else df
+    val terms: Seq[String] = qterms.select(col("term")).distinct()
+      .collect().map(_.getString(0)).toSeq
+    def pruned(df: DataFrame): DataFrame = df.filter(col("tok").isin(terms: _*))
     val tf = pruned(spark.table(postingsTable(name)))
       .select(col("tok").as("term"), col("doc_id"), col("tf"))
     val dfs = pruned(spark.table(dfTable(name)))

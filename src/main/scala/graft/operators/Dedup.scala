@@ -1734,6 +1734,83 @@ object Dedup {
     out.result()
   }
 
+  /** Winnowing fingerprint rows (key, pos, h) of (key, t) rows, `t`
+    * the normalized text ([[winnowChars]] per row) — the one
+    * fingerprint stage of [[substringSpans]], [[q202]], [[q202Driver]]
+    * and [[SubstrIndex]]. `K` is the key column's type. */
+  private[graft] def winnowRows[K: scala.reflect.runtime.universe.TypeTag](
+      texts: DataFrame, key: String, gram: Int, minLen: Int): DataFrame = {
+    val spark = texts.sparkSession
+    import spark.implicits._
+    texts.select(col(key), col("t")).as[(K, String)]
+      .flatMap { case (k, t) =>
+        winnowChars(t, gram, minLen).map { case (pos, h) => (k, pos, h) }
+      }
+      .toDF(key, "pos", "h")
+  }
+
+  /** `rows` minus every `key` value carried by more than `dfCap`
+    * distinct `carrier` values (none when dfCap ≤ 0) — Lee et al.'s
+    * hot-gram cap (see [[q200]]): a corpus-wide boilerplate gram, or a
+    * silence window, jingle anchor, logo tile or black frame, carried
+    * by thousands of docs would make the blocking join quadratic in its
+    * carriers. The document-frequency rollup is one partial-aggregated
+    * shuffle over the key, the same exchange class as the join it
+    * protects. The cap of [[substringSpans]], [[SubstrIndex]] and the
+    * three media overlap kernels. */
+  private[graft] def dropHot(rows: DataFrame, key: String, carrier: String,
+                             dfCap: Int): DataFrame =
+    if (dfCap <= 0) rows
+    else rows.join(rows.groupBy(col(key))
+        .agg(countDistinct(col(carrier)).as("df"))
+        .filter(col("df") > dfCap).select(col(key)),
+      Seq(key), "left_anti")
+
+  /** Maximal verbatim spans of texts `a` and `b` along one diagonal
+    * (`diag` = position in a − position in b). Each anchor (a gram
+    * start in `a`; ascending) not inside the previous span, whose
+    * `gram` chars really match in both texts (hash-collision anchors
+    * die here), extends left and right to its maximal shared run;
+    * runs ≥ `minLen` come out as (startA, startB, len). Anchor choice
+    * cannot change a maximal extent, so the spans are exact and
+    * deterministic. The one extension kernel of [[substringSpans]]
+    * and [[SubstrIndex]]. */
+  private[graft] def extendAnchors(a: String, b: String, diag: Int,
+                                   anchors: Seq[Int], gram: Int,
+                                   minLen: Int): Seq[(Int, Int, Int)] = {
+    val out = Seq.newBuilder[(Int, Int, Int)]
+    var coveredTo = -1 // end (exclusive) of the last span in a
+    anchors.foreach { pa =>
+      val pb = pa - diag
+      if (pa >= coveredTo && pb >= 0 && pb + gram <= b.length &&
+          pa + gram <= a.length && a.regionMatches(pa, b, pb, gram)) {
+        var lo = 0
+        while (pa - lo - 1 >= 0 && pb - lo - 1 >= 0 &&
+          a.charAt(pa - lo - 1) == b.charAt(pb - lo - 1)) lo += 1
+        var hi = 0
+        while (pa + gram + hi < a.length && pb + gram + hi < b.length &&
+          a.charAt(pa + gram + hi) == b.charAt(pb + gram + hi)) hi += 1
+        val len = gram + lo + hi
+        coveredTo = pa + gram + hi
+        if (len >= minLen) out += ((pa - lo, pb - lo, len))
+      }
+    }
+    out.result()
+  }
+
+  /** Characters covered by the union of [start, end) intervals sorted
+    * by start, overlaps counted once — the covered-length walk of
+    * [[q201]] and [[SubstrIndex.containment]]. */
+  private[graft] def coveredLength(iv: Seq[(Int, Int)]): Long = {
+    var tot = 0L; var cs = -1; var ce = -1
+    iv.foreach { case (s0, e0) =>
+      if (s0 > ce) { if (ce > cs) tot += ce - cs; cs = s0; ce = e0 }
+      else if (e0 > ce) ce = e0
+    }
+    if (ce > cs) tot += ce - cs
+    tot
+  }
+
   /** q200: BYTE-GRANULAR cross-document repeated substrings — the
     * character-level ExactSubstr signal of Lee et al. '22 ("Dedup-
     * licating Training Data Makes Language Models Better") that the
@@ -1787,8 +1864,10 @@ object Dedup {
       .limit(topK)
 
   /** Rep-level verified span frame (doc_a, doc_b, start_a, start_b,
-    * match_len, excerpt) + the members map — shared by the q200 report
-    * and the q201 coverage rollup. */
+    * match_len, excerpt) + the members map — shared by the q200 report,
+    * the q201 coverage rollup and the q203 scrub. [[SubstrIndex]] runs
+    * the same fingerprint, hot-gram cap and extension kernels against
+    * its fitted tables. */
   private[graft] def substringSpans(documents: DataFrame, minLen: Int,
                                     gram: Int, dfCap: Int = 0)
       : (DataFrame, DataFrame) = {
@@ -1807,22 +1886,8 @@ object Dedup {
     val norm = reps
       .select(col("doc_id"), lower(trim(col("text"))).as("t"))
       .transform(graft.Pins.pin)
-    val fpsAll = norm.as[(Long, String)]
-      .flatMap { case (id, t) =>
-        winnowChars(t, gram, minLen).map { case (pos, h) => (id, pos, h) }
-      }
-      .toDF("doc_id", "pos", "h")
-    // hot-gram cap (see q200 scaladoc): the document-frequency rollup
-    // is one partial-aggregated shuffle over 8-byte hashes, the same
-    // exchange class as the candidate join it protects
-    val fps =
-      if (dfCap <= 0) fpsAll
-      else fpsAll.join(
-        fpsAll.groupBy(col("h"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") > dfCap)
-          .select(col("h")),
-        Seq("h"), "left_anti")
+    val fps = dropHot(winnowRows[Long](norm, "doc_id", gram, minLen),
+      "h", "doc_id", dfCap)
     val cands = fps.as("a")
       .join(fps.as("b"),
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
@@ -1840,32 +1905,10 @@ object Dedup {
         col("t_a"), col("t_b"))
       .as[(Long, Long, Int, Seq[Int], String, String)]
       .flatMap { case (da, db, diag, anchors, tA, tB) =>
-        val out = Seq.newBuilder[(Long, Long, Int, Int, Int, String)]
-        var coveredTo = -1 // end (exclusive) of the last span in t_a
-        anchors.foreach { pa =>
-          if (pa >= coveredTo) {
-            val pb = pa - diag
-            if (pb >= 0 && pb + gram <= tB.length && pa + gram <= tA.length) {
-              var lo = 0
-              while (pa - lo - 1 >= 0 && pb - lo - 1 >= 0 &&
-                tA.charAt(pa - lo - 1) == tB.charAt(pb - lo - 1)) lo += 1
-              var hi = 0
-              while (pa + gram + hi < tA.length && pb + gram + hi < tB.length &&
-                tA.charAt(pa + gram + hi) == tB.charAt(pb + gram + hi)) hi += 1
-              // the anchor gram itself must really match (hash-collision
-              // false candidates die here)
-              if (tA.substring(pa, pa + gram) == tB.substring(pb, pb + gram)) {
-                val start = pa - lo
-                val len = gram + lo + hi
-                coveredTo = start + len
-                if (len >= minLen)
-                  out += ((da, db, start, pb - lo, len,
-                    tA.substring(start, start + math.min(len, 48))))
-              }
-            }
-          }
+        extendAnchors(tA, tB, diag, anchors, gram, minLen).map {
+          case (sa, sb, len) =>
+            (da, db, sa, sb, len, tA.substring(sa, sa + math.min(len, 48)))
         }
-        out.result()
       }
       .toDF("doc_a", "doc_b", "start_a", "start_b", "match_len", "excerpt")
       .distinct()
@@ -1897,16 +1940,7 @@ object Dedup {
       .groupBy(col("rep"))
       .agg(sort_array(collect_list(struct(col("s"), col("e")))).as("iv"))
       .as[(Long, Seq[(Int, Int)])]
-      .map { case (rep, iv) =>
-        var total = 0L
-        var curS = -1; var curE = -1
-        iv.foreach { case (s0, e0) =>
-          if (s0 > curE) { total += curE - curS.max(0) max 0; curS = s0; curE = e0 }
-          else if (e0 > curE) curE = e0
-        }
-        total += (curE - curS.max(0)) max 0
-        (rep, total)
-      }
+      .map { case (rep, iv) => (rep, coveredLength(iv)) }
       .toDF("rep", "covered_chars")
     documents
       .select(col("doc_id"),
@@ -1942,16 +1976,10 @@ object Dedup {
            gram: Int = SubstrGram, topK: Int = 10): DataFrame = {
     require(minLen >= gram,
       s"minLen ($minLen) must be >= gram ($gram)")
-    val spark = documents.sparkSession
-    import spark.implicits._
     val (reps, _) = exactReps(documents)
-    val fps = reps
-      .select(col("doc_id"), lower(trim(col("text"))).as("t"))
-      .as[(Long, String)]
-      .flatMap { case (id, t) =>
-        winnowChars(t, gram, minLen).map { case (pos, h) => (id, pos, h) }
-      }
-      .toDF("doc_id", "pos", "h")
+    val fps = winnowRows[Long](
+      reps.select(col("doc_id"), lower(trim(col("text"))).as("t")),
+      "doc_id", gram, minLen)
     val perBucket = fps
       .groupBy(col("h"))
       .agg(countDistinct(col("doc_id")).as("carrier_docs"),
@@ -1979,8 +2007,6 @@ object Dedup {
     * report itself stays [[q202]] (hash-valued buckets, spec-checked). */
   def q202Driver(documents: DataFrame, minLen: Int = SubstrMinLen,
                  gram: Int = SubstrGram): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
     val (reps, _) = exactReps(documents)
     val norm = reps
       .select(col("doc_id"), lower(trim(col("text"))).as("t"))
@@ -1988,11 +2014,7 @@ object Dedup {
     val eligible = norm
       .filter(length(col("t")) >= gram)
       .agg(count(lit(1)).cast("long").as("n_reps_eligible"))
-    val fingerprinted = norm.as[(Long, String)]
-      .flatMap { case (id, t) =>
-        winnowChars(t, gram, minLen).map { case (pos, h) => (id, pos, h) }
-      }
-      .toDF("doc_id", "pos", "h")
+    val fingerprinted = winnowRows[Long](norm, "doc_id", gram, minLen)
       .agg(countDistinct(col("doc_id")).cast("long")
         .as("n_docs_fingerprinted"))
     val bounds = q202(documents, minLen, gram)

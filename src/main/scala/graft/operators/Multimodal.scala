@@ -903,17 +903,6 @@ object Multimodal {
     Dedup.winnowChars(samplesAsChars(s), winSamples,
       winSamples + winSamples / 2 - 1)
 
-  /** `keys` minus every key carried by more than `dfCap` docs (none
-    * when dfCap ≤ 0) — the q202 hot-bucket cap of the overlap kernels:
-    * a silence window, jingle anchor, logo tile or black frame carried
-    * by thousands of docs would go quadratic in carriers. */
-  private def dropHot(keys: DataFrame, key: String, dfCap: Int): DataFrame =
-    if (dfCap <= 0) keys
-    else keys.join(keys.groupBy(col(key))
-        .agg(countDistinct(col("doc_id")).as("df"))
-        .filter(col("df") > dfCap).select(col(key)),
-      Seq(key), "left_anti")
-
   /** Sorted positions split into runs whose consecutive gaps are ≤
     * `maxGap`: (first, last, count) per run. */
   private def segmentRuns(ps: Seq[Int], maxGap: Int): Seq[(Int, Int, Int)] = {
@@ -958,7 +947,7 @@ object Multimodal {
     *    once needs constellation-style landmark hashing, out of
     *    scope and documented in SURVEY §2c.
     *
-    * `dfCap` is the [[dropHot]] cap either way. Payloads never
+    * `dfCap` is the [[Dedup.dropHot]] cap either way. Payloads never
     * shuffle — only (doc_id, pos, 8-byte key) rows do. */
   private[graft] def audioOverlapPairs(media: DataFrame, winSamples: Int,
                                        minRunWins: Int, dfCap: Int,
@@ -985,7 +974,7 @@ object Multimodal {
       }
     }.toDF()
       .transform(graft.Pins.pin) // a/b join sides + df rollup + docFull
-    val kept = dropHot(wfps, "wfp", dfCap)
+    val kept = Dedup.dropHot(wfps, "wfp", "doc_id", dfCap)
     // no distinct before the rollups: (doc_id, win_idx) is unique per
     // row, so joined pairs cannot collide on (doc_a, doc_b, offset,
     // pa) — and both branches below aggregate with SET semantics, so
@@ -1726,7 +1715,7 @@ object Multimodal {
     * same pixel offset (ax_a − ax_b, ay_a − ay_b), so a crop-and-
     * paste collapses into ONE row carrying WHERE (the pixel offset —
     * any offset, not just tile multiples) and HOW MUCH (matched-
-    * anchor count). `dfCap` caps hot anchors ([[dropHot]]). Only
+    * anchor count). `dfCap` caps hot anchors ([[Dedup.dropHot]]). Only
     * (doc_id, ax, ay, 8-byte hash) rows shuffle; pixels stay
     * partition-local. Returns (pairs, per-doc anchor counts). */
   private[graft] def imageOverlapPairs(media: DataFrame, tile: Int,
@@ -1745,7 +1734,7 @@ object Multimodal {
       }
     }.toDF()
       .transform(graft.Pins.pin) // a/b join sides + the df rollup
-    val kept = dropHot(tiles, "th", dfCap)
+    val kept = Dedup.dropHot(tiles, "th", "doc_id", dfCap)
     val pairs = kept.as("a").join(kept.as("b"),
         col("a.th") === col("b.th") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
@@ -2033,7 +2022,7 @@ object Multimodal {
     * discipline). An embedded clip (re-broadcast inside a
     * compilation) puts every shared frame on ONE diagonal — the event
     * whole-clip hashing ([[videoNeardupPairs]]) is blind to. `dfCap`
-    * is the [[dropHot]] cap. Only (doc_id, frame_idx, 8-byte hash)
+    * is the [[Dedup.dropHot]] cap. Only (doc_id, frame_idx, 8-byte hash)
     * rows shuffle. Returns (pairs, per-doc full-overlap stats). */
   private[graft] def videoOverlapPairs(media: DataFrame, minRunFrames: Int,
                                        dfCap: Int, vc: VideoCodec)
@@ -2048,7 +2037,7 @@ object Multimodal {
       }
     }.toDF()
       .transform(graft.Pins.pin) // a/b join sides + df rollup + docFull
-    val kept = dropHot(fhs, "fh", dfCap)
+    val kept = Dedup.dropHot(fhs, "fh", "doc_id", dfCap)
     // no distinct before the rollup: (doc_id, frame_idx) is unique per
     // row, so two joined frame pairs can only collide on
     // (doc_a, doc_b, offset, fa) if they ARE the same pair — and the

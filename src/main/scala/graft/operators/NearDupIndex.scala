@@ -79,18 +79,32 @@ object NearDupIndex {
     * caller's loop owns the release (graft.Pins contract); [[fit]]
     * keeps its own structurally-scoped persists instead. */
   private[graft] def artifacts(corpus: DataFrame): Artifacts = {
-    // one representative text per distinct digest — any member works:
-    // identical normalized texts shingle identically
-    val rep = corpus
-      .select(Dedup.normDigest.as("dg"), col("text"))
-      .dropDuplicates("dg")
+    val art = derive(reps(corpus))
+    art.copy(digests = graft.Pins.pin(art.digests))
+  }
+
+  /** One representative (dg, text) row per distinct digest — any
+    * member works: identical normalized texts shingle identically. */
+  private def reps(docs: DataFrame): DataFrame =
+    docs.select(Dedup.normDigest.as("dg"), col("text")).dropDuplicates("dg")
+
+  /** The artifacts of a (dg, text) rep frame, its shingle stream
+    * pinned (bands and grams both derive from it) — the one derivation
+    * behind [[artifacts]], [[fit]] and [[append]]. */
+  private def derive(rep: DataFrame): Artifacts = {
     val g = graft.Pins.pin(
       Dedup.shingles(rep.select(col("dg").as("doc_id"), col("text"))))
-    val bands = Dedup.bandKeys(Dedup.minhashSignature(g))
-      .select(col("doc_id").as("dg"), col("n"), col("band"), col("band_key"))
-    val grams = g.select(col("doc_id").as("dg"), xxhash64(col("g")).as("gh"))
-    Artifacts(graft.Pins.pin(rep.select(col("dg"))), bands, grams)
+    Artifacts(rep.select(col("dg")),
+      Dedup.bandKeys(Dedup.minhashSignature(g))
+        .select(col("doc_id").as("dg"), col("n"), col("band"), col("band_key")),
+      g.select(col("doc_id").as("dg"), xxhash64(col("g")).as("gh")))
   }
+
+  /** (artifact, table, bucket column) of index `name`, in write order. */
+  private def tabled(art: Artifacts, name: String): Seq[(DataFrame, String, String)] =
+    Seq((art.digests, digestsTable(name), "dg"),
+      (art.bands, bandsTable(name), "band_key"),
+      (art.grams, gramsTable(name), "dg"))
 
   private[graft] def load(spark: SparkSession, name: String): Artifacts =
     Artifacts(spark.table(digestsTable(name)),
@@ -102,20 +116,9 @@ object NearDupIndex {
     drop(corpus.sparkSession, name)
     // pin the rep-level shingle stream's PARENT (the distinct-text
     // frame): all three artifact derivations re-scan rep, not the corpus
-    val rep = graft.Pins.pin(corpus
-      .select(Dedup.normDigest.as("dg"), col("text"))
-      .dropDuplicates("dg"))
-    val g = graft.Pins.pin(
-      Dedup.shingles(rep.select(col("dg").as("doc_id"), col("text"))))
-    Sources.writeBucketed(
-      rep.select(col("dg")), digestsTable(name), "dg", buckets)
-    Sources.writeBucketed(
-      Dedup.bandKeys(Dedup.minhashSignature(g))
-        .select(col("doc_id").as("dg"), col("n"), col("band"), col("band_key")),
-      bandsTable(name), "band_key", buckets)
-    Sources.writeBucketed(
-      g.select(col("doc_id").as("dg"), xxhash64(col("g")).as("gh")),
-      gramsTable(name), "dg", buckets)
+    tabled(derive(graft.Pins.pin(reps(corpus))), name).foreach {
+      case (df, table, key) => Sources.writeBucketed(df, table, key, buckets)
+    }
   } }
   }
 
@@ -134,8 +137,7 @@ object NearDupIndex {
     val hitDg = art.digests.select(col("dg")).withColumn("hit", lit(1))
     // near stage runs only on batch digests NOT exactly indexed, one
     // representative per digest (the same collapse the fit side uses)
-    val newRep = batch.select(Dedup.normDigest.as("dg"), col("text"))
-      .dropDuplicates("dg")
+    val newRep = reps(batch)
       .join(art.digests.select(col("dg")), Seq("dg"), "left_anti")
     // pinned because THREE subtrees consume it (signature, the
     // verify side, sizes); the returned frame is lazy, so the caller's
@@ -205,21 +207,11 @@ object NearDupIndex {
     * freeze, no refit trigger). */
   def append(docs: DataFrame, name: String): Unit = {
     LakeLock.withWriter(docs.sparkSession, name) {
-    val newRep = Sources.unregistered(
-      docs.select(Dedup.normDigest.as("dg"), col("text")).dropDuplicates("dg"),
-      digestsTable(name), "dg")
+    val newRep = Sources.unregistered(reps(docs), digestsTable(name), "dg")
     if (newRep.limit(1).count() > 0L) graft.Pins.scope {
-      val g = graft.Pins.pin(
-        Dedup.shingles(newRep.select(col("dg").as("doc_id"), col("text"))))
-      Sources.appendBucketed(
-        newRep.select(col("dg")), digestsTable(name), "dg")
-      Sources.appendBucketed(
-        Dedup.bandKeys(Dedup.minhashSignature(g))
-          .select(col("doc_id").as("dg"), col("n"), col("band"), col("band_key")),
-        bandsTable(name), "band_key")
-      Sources.appendBucketed(
-        g.select(col("doc_id").as("dg"), xxhash64(col("g")).as("gh")),
-        gramsTable(name), "dg")
+      tabled(derive(newRep), name).foreach {
+        case (df, table, key) => Sources.appendBucketed(df, table, key)
+      }
     }
   }
   }

@@ -138,15 +138,15 @@ object Similarity {
     val sigs = sigRows(vecs)
       .transform(graft.Pins.pin)
     val vtab = vecs.toDF("vec_id", "v", "norm")
-    val candidates = lshCandidates(sigs, sigs)
+    val candidates = lshCandidates(lshProbes(sigs), lshPostings(sigs))
       .filter(col("qid") =!= col("nid"))
     rerankTopK(candidates, vtab, vtab, 5)
   }
 
   /** LSH bucket signatures: one Long bucket id per hash table, computed
     * by a primitive per-partition loop (see [[q45]] on why not a
-    * Catalyst expression tree). Shared by the self-similarity operator
-    * [[q45]] and the external-query entry [[search]]. */
+    * Catalyst expression tree). Shared by [[q45]], [[search]], the
+    * q193 lsh lane and [[AnnIndex]] (fit, append, searchLsh). */
   private[graft] def sigRows(vecs: org.apache.spark.sql.Dataset[(Long, Array[Double], Double)])
       : org.apache.spark.sql.Dataset[(Long, Array[Long])] = {
     val spark = vecs.sparkSession
@@ -198,13 +198,14 @@ object Similarity {
   }
 
   /** (qid, nid) candidate pairs from a (t, bucket) equi-join of query
-    * probes against index postings. Only 24-byte id rows shuffle —
-    * never vectors. */
-  private def lshCandidates(
-      querySigs: org.apache.spark.sql.Dataset[(Long, Array[Long])],
-      indexSigs: org.apache.spark.sql.Dataset[(Long, Array[Long])]): DataFrame =
-    lshProbes(querySigs)
-      .join(lshPostings(indexSigs), Seq("t", "bucket"))
+    * probes ([[lshProbes]]) against index postings — freshly derived
+    * ([[lshPostings]]) or the fitted postings table. The one LSH
+    * candidate stage of [[q45]], [[search]], the q193 lsh lane and
+    * [[AnnIndex.searchLsh]]. Only 24-byte id rows shuffle — never
+    * vectors. */
+  private[graft] def lshCandidates(probes: DataFrame, postings: DataFrame): DataFrame =
+    probes
+      .join(postings, Seq("t", "bucket"))
       .select(col("qid"), col("nid"))
       .distinct()  // same pair can collide in several tables/probes
 
@@ -223,7 +224,7 @@ object Similarity {
       .transform(graft.Pins.pin)
     val cv = vecRows(corpus)
       .transform(graft.Pins.pin)
-    val candidates = lshCandidates(sigRows(qv), sigRows(cv))
+    val candidates = lshCandidates(lshProbes(sigRows(qv)), lshPostings(sigRows(cv)))
     rerankTopK(candidates, qv.toDF("vec_id", "v", "norm"),
       cv.toDF("vec_id", "v", "norm"), k)
   }
@@ -419,25 +420,28 @@ object Similarity {
     * distribution — better recall on clustered embeddings at the cost of
     * the one-time training pass. Candidates re-rank distributed
     * ([[rerankTopK]], exact cosine, no driver collect); top-5 per query. */
-  def q55(embeddings: DataFrame,
-          centroidsOpt: Option[Array[Array[Double]]] = None): DataFrame = {
+  def q55(embeddings: DataFrame): DataFrame = {
     // shared materialized scan: list assignment (×2) + re-rank joins (×2)
     val vecs = vecRows(embeddings)
       .transform(graft.Pins.pin)
-    // ivfFit is deterministic (fixed seed), so a caller that already
-    // fitted (q193 runs ivf AND ivfpq) shares the quantizer at zero
-    // semantic cost
-    val centroids = centroidsOpt.getOrElse(ivfFit(embeddings))
-    // index side: each vector in its single nearest list; query side:
-    // probe the IvfProbes nearest lists
-    val index = ivfAssign(vecs, centroids, 1).select(col("vec_id").as("nid"), col("list"))
-    val probes = ivfAssign(vecs, centroids, IvfProbes).select(col("vec_id").as("qid"), col("list"))
-    val candidates = probes.join(index, Seq("list"))
+    val centroids = ivfFit(embeddings)
+    val candidates = ivfCandidates(ivfAssign(vecs, centroids, IvfProbes),
+        ivfAssign(vecs, centroids, 1))
       .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid")).distinct()
     val vtab = vecs.toDF("vec_id", "v", "norm")
     rerankTopK(candidates, vtab, vtab, 5)
   }
+
+  /** (qid, nid) candidate pairs from the `list` equi-join of query
+    * probes (the [[IvfProbes]] nearest lists per query) against index
+    * lists (each vector's nearest list), both (vec_id, list) frames —
+    * the index side freshly assigned or the fitted lists table. The
+    * one IVF candidate stage of [[q55]], [[ivfPqSearch]], the q193 ivf
+    * lanes, [[AnnIndex.searchIvf]] and [[AnnIndex.searchIvfPq]]. */
+  private[graft] def ivfCandidates(probes: DataFrame, lists: DataFrame): DataFrame =
+    probes.select(col("vec_id").as("qid"), col("list"))
+      .join(lists.select(col("vec_id").as("nid"), col("list")), Seq("list"))
+      .select(col("qid"), col("nid")).distinct()
 
   /** IVF coarse quantizer fit: kmeans|| (distributed), fixed seed. The
     * returned centroid arrays are the index artifact [[AnnIndex]]
@@ -688,7 +692,9 @@ object Similarity {
     * WindowGroupLimit-capped; the float re-rank is two distributed
     * joins over only candidate ids ([[rerankTopK]]). Verified by a
     * recall spec against the exact baseline q44. */
-  /** Per-vector int8 codes + integer norm for [[searchInt8]]. */
+  /** Per-vector int8 codes + integer norm — the corpus side of
+    * [[searchInt8]], the table [[AnnIndex]] persists, and the query
+    * side of [[int8Candidates]]. */
   private[graft] def int8Codes(embeddings: DataFrame): DataFrame = {
     val v = transform(col("embedding"), x => x.cast("double"))
     val amax = array_max(transform(v, x => abs(x)))
@@ -712,24 +718,35 @@ object Similarity {
     * matching its own id is a legitimate hit there ([[search]]'s
     * convention). */
   def searchInt8(queries: DataFrame, corpus: DataFrame, k: Int = 5,
-                 nCandidates: Int = 50, excludeSelf: Boolean = false): DataFrame = {
+                 nCandidates: Int = 50, excludeSelf: Boolean = false): DataFrame =
+    rerankTopK(int8Candidates(queries, int8Codes(corpus), nCandidates, excludeSelf),
+      normalized(queries).select(col("vec_id"), col("v"), col("norm")),
+      normalized(corpus).select(col("vec_id"), col("v"), col("norm")), k)
+
+  /** Integer candidate stage shared by the live [[searchInt8]] and the
+    * persisted-index serving path ([[AnnIndex.searchInt8]]): the query
+    * batch quantizes fresh and broadcasts, every code row scores with
+    * the integer dot product over integer norms, per-query
+    * top-`nCandidates` window. `codes` is any (vec_id, qv, inorm) frame
+    * — freshly quantized ([[int8Codes]]) or read from the index table;
+    * returns (qid, nid) candidate pairs. */
+  private[graft] def int8Candidates(queries: DataFrame, codes: DataFrame,
+                                    nCandidates: Int,
+                                    excludeSelf: Boolean): DataFrame = {
     val q = int8Codes(queries)
       .select(col("vec_id").as("qid"), col("qv").as("qqv"), col("inorm").as("qn"))
-    val c = int8Codes(corpus)
+    val c = codes
       .select(col("vec_id").as("nid"), col("qv").as("nqv"), col("inorm").as("nn"))
     val joinCond = if (excludeSelf) col("qid") =!= col("nid") else lit(true)
     val wc = Window.partitionBy(col("qid"))
       .orderBy(col("approx_cos").desc, col("nid"))
-    val cands = broadcast(q).join(c, joinCond)
+    broadcast(q).join(c, joinCond)
       .withColumn("approx_cos",
         graft.functions.DotProductInt(col("qqv"), col("nqv")).cast("double") /
           (col("qn") * col("nn")))
       .withColumn("crk", row_number().over(wc))
       .filter(col("crk") <= nCandidates)
       .select(col("qid"), col("nid"))
-    rerankTopK(cands,
-      normalized(queries).select(col("vec_id"), col("v"), col("norm")),
-      normalized(corpus).select(col("vec_id"), col("v"), col("norm")), k)
   }
 
   /** Driver entry: [[searchInt8]] with the first 20 corpus vectors as
@@ -1294,7 +1311,7 @@ object Similarity {
   /** ADC score + per-query top-`nCandidates` over any (qid, qlut,
     * nid, codes) frame — M array lookups + adds per row, then the
     * WindowGroupLimit-capped candidate window. Shared by the full-scan
-    * ([[pqAdcCands]]) and IVF-pruned ([[AnnIndex.searchIvfPq]]) paths. */
+    * ([[pqAdcCands]]) and IVF-pruned ([[ivfPqCandidates]]) paths. */
   private[graft] def pqTopN(scoredInput: DataFrame,
                             cb: Array[Array[Array[Double]]],
                             nCandidates: Int): DataFrame = {
@@ -1345,32 +1362,36 @@ object Similarity {
     * 64×-smaller rows), exact re-rank on the surviving candidates.
     * Leave-one-out like q108/q138 (panel ids live in the corpus). */
   private[graft] def ivfPqSearch(embeddings: DataFrame, k: Int = 5,
-                                 nCandidates: Int = 50,
-                                 centroidsOpt: Option[Array[Array[Double]]] = None,
-                                 fitted: Option[(Array[Array[Array[Double]]], DataFrame)] = None)
-      : DataFrame = {
+                                 nCandidates: Int = 50): DataFrame = {
     val queries = embeddings.filter(col("vec_id") < QueryPanel)
     val vecs = vecRows(embeddings)
       .transform(graft.Pins.pin)
-    val centroids = centroidsOpt.getOrElse(ivfFit(embeddings))
-    val index = ivfAssign(vecs, centroids, 1)
-      .select(col("vec_id").as("nid"), col("list"))
+    val centroids = ivfFit(embeddings)
     val qv = vecRows(queries)
-    val probes = ivfAssign(qv, centroids, IvfProbes)
-      .select(col("vec_id").as("qid"), col("list"))
-    val candIds = probes.join(index, Seq("list"))
+    val candIds = ivfCandidates(ivfAssign(qv, centroids, IvfProbes),
+        ivfAssign(vecs, centroids, 1))
       .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid")).distinct()
-    val (cb, codes) = fitted.getOrElse {
-      val c = pqFit(embeddings); (c, pqEncode(embeddings, c))
-    }
-    val scored = candIds
-      .join(codes.select(col("vec_id").as("nid"), col("codes")), "nid")
-      .join(broadcast(pqLuts(queries, cb)), "qid")
-    rerankTopK(pqTopN(scored, cb, nCandidates),
+    val cb = pqFit(embeddings)
+    rerankTopK(ivfPqCandidates(candIds, pqEncode(embeddings, cb), queries, cb,
+        nCandidates),
       qv.toDF("vec_id", "v", "norm"),
       vecs.toDF("vec_id", "v", "norm"), k)
   }
+
+  /** IVF-PQ scoring stage shared by [[ivfPqSearch]], the q193 ivfpq
+    * lane and [[AnnIndex.searchIvfPq]]: IVF-routed (qid, nid)
+    * candidates join their PQ codes (any (vec_id, codes) frame —
+    * freshly encoded or the fitted code table) and the broadcast query
+    * lookup tables, then [[pqTopN]] keeps each query's top
+    * `nCandidates`. */
+  private[graft] def ivfPqCandidates(candIds: DataFrame, codes: DataFrame,
+                                     queries: DataFrame,
+                                     cb: Array[Array[Array[Double]]],
+                                     nCandidates: Int): DataFrame =
+    pqTopN(candIds
+        .join(codes.select(col("vec_id").as("nid"), col("codes")), "nid")
+        .join(broadcast(pqLuts(queries, cb)), "qid"),
+      cb, nCandidates)
 
   /** HNSW candidate generation for the panel — the shard-and-merge
     * deployment shape (see [[HnswGraph]]): each corpus partition
@@ -1381,18 +1402,34 @@ object Similarity {
     * downstream, like every other path). Per-shard cost: O(n·log n)
     * inserts + panel·efSearch walks; nothing corpus-sized shuffles —
     * only (qid, nid) candidate rows come out. Leave-one-out like
-    * q108/q138 (panel ids live in the corpus). */
-  private[graft] def hnswCandidates(embeddings: DataFrame, m: Int = 8,
-                                    efConstruction: Int = 64,
-                                    efSearch: Int = 48,
-                                    kPerShard: Int = 10,
-                                    nShards: Option[Int] = None): DataFrame = {
+    * q108/q138 (panel ids live in the corpus). Built with the
+    * [[searchHnsw]] defaults (M = 8, efConstruction = 64, efSearch =
+    * 48, 10 candidates per shard, partition-local shards). */
+  private[graft] def hnswCandidates(embeddings: DataFrame): DataFrame = {
     val vecs = vecRows(embeddings)
-    val panel = vecs.filter(_._1 < QueryPanel)
-      .collect().sortBy(_._1)
+    hnswShardSearch(hnswGraphs(vecs, m = 8, efConstruction = 64, nShards = None),
+      hnswPanel(vecs.filter(_._1 < QueryPanel)), efSearch = 48, kPerShard = 10,
+      leaveOneOut = true)
+  }
+
+  /** The query panel every HNSW search broadcasts to its shards:
+    * (id, unit vector) sorted by id. Collected driver-side, so it is
+    * BATCH-sized by contract — the guard fails loudly instead of
+    * letting a caller feed a corpus through and OOM the driver (the
+    * limit runs BEFORE the collect, so the guard itself is
+    * memory-safe). The one panel collect of [[hnswCandidates]],
+    * [[searchHnsw]] and [[AnnIndex.hnswServe]]. */
+  private[graft] def hnswPanel(vecs: org.apache.spark.sql.Dataset[(Long, Array[Double], Double)])
+      : Array[(Long, Array[Double])] = {
+    val max = AnnIndex.MaxQueryPanel
+    val panel = vecs.limit(max + 1).collect().sortBy(_._1)
       .map { case (id, v, n) => (id, v.map(_ / n)) }
-    hnswShardSearch(hnswGraphs(vecs, m, efConstruction, nShards),
-      panel, efSearch, kPerShard, leaveOneOut = true)
+    require(panel.length <= max,
+      s"hnsw query batch exceeds MaxQueryPanel=$max rows: " +
+      "the panel is collected and broadcast per shard — split the " +
+      "query set into batches (or use the batch operators for " +
+      "corpus-vs-corpus work)")
+    panel
   }
 
   /** Shard the corpus and build one [[HnswGraph]] per shard. With
@@ -1472,9 +1509,8 @@ object Similarity {
                  kPerShard: Int = 10, nShards: Option[Int] = None): DataFrame = {
     val qv = vecRows(queries)
     val cv = vecRows(corpus)
-    val panel = qv.collect().sortBy(_._1).map { case (id, v, n) => (id, v.map(_ / n)) }
     val cands = hnswShardSearch(hnswGraphs(cv, m, efConstruction, nShards),
-      panel, efSearch, kPerShard, leaveOneOut = false)
+      hnswPanel(qv), efSearch, kPerShard, leaveOneOut = false)
     rerankTopK(cands, qv.toDF("vec_id", "v", "norm"),
       cv.toDF("vec_id", "v", "norm"), k)
   }
@@ -1505,7 +1541,7 @@ object Similarity {
     val lshPanel = {
       val sigs = sigRows(vecs).transform(graft.Pins.pin)
       val qsigs = sigs.filter(s => s._1 < QueryPanel)
-      rerankTopK(lshCandidates(qsigs, sigs)
+      rerankTopK(lshCandidates(lshProbes(qsigs), lshPostings(sigs))
         .filter(col("qid") =!= col("nid")), vtab, vtab, 5)
     }
     // ONE ivf routing (index assignment + panel probes + candidate
@@ -1514,24 +1550,14 @@ object Similarity {
     // candidates, then exact re-rank) — the two paths differ only in
     // scoring currency, exactly as in a Faiss deployment where one
     // coarse quantizer fronts both
-    val ivfCands = {
-      val index = ivfAssign(vecs, centroids, 1)
-        .select(col("vec_id").as("nid"), col("list"))
-      val probes = ivfAssign(vecs.filter(_._1 < QueryPanel),
-        centroids, IvfProbes).select(col("vec_id").as("qid"), col("list"))
-      probes.join(index, Seq("list"))
-        .filter(col("qid") =!= col("nid"))
-        .select(col("qid"), col("nid")).distinct()
-        .transform(graft.Pins.pin)
-    }
+    val ivfCands = ivfCandidates(
+        ivfAssign(vecs.filter(_._1 < QueryPanel), centroids, IvfProbes),
+        ivfAssign(vecs, centroids, 1))
+      .filter(col("qid") =!= col("nid"))
+      .transform(graft.Pins.pin)
     val ivfPanel = rerankTopK(ivfCands, vtab, vtab, 5)
-    val ivfPqPanel = {
-      val queries = embeddings.filter(col("vec_id") < QueryPanel)
-      val scored = ivfCands
-        .join(codes.select(col("vec_id").as("nid"), col("codes")), "nid")
-        .join(broadcast(pqLuts(queries, cb)), "qid")
-      rerankTopK(pqTopN(scored, cb, 50), vtab, vtab, 5)
-    }
+    val ivfPqPanel = rerankTopK(ivfPqCandidates(ivfCands, codes,
+        embeddings.filter(col("vec_id") < QueryPanel), cb, 50), vtab, vtab, 5)
     // s29: with an index name the hnsw lane serves from the PERSISTED
     // shard graphs (decode + beam search — no per-batch rebuild); the
     // recall floor then gates the artifact itself at the driver, not

@@ -35,6 +35,13 @@ import graft.sources.Sources
   * so one aligned region costs one extension, and extensions verify
   * exactly — a hash collision dies at the gram equality check.
   *
+  * Fingerprinting, the hot-gram cap, the anchor extension and the
+  * covered-length walk are the live q200/q201 kernels
+  * ([[Dedup.winnowRows]], [[Dedup.dropHot]], [[Dedup.extendAnchors]],
+  * [[Dedup.coveredLength]]), fed the fitted tables instead of a fresh
+  * derivation — the served spans equal the live ones because both run
+  * the same code.
+  *
   * `append(docs, name)` registers newly admitted docs: not-yet-indexed
   * digests re-derive fingerprints through the same kernel and append
   * under each table's bucket spec — idempotent (replays anti-join to
@@ -85,15 +92,8 @@ object SubstrIndex {
       .dropDuplicates("dg")
 
   private def fingerprints(rep: DataFrame, minLen: Int,
-                           gram: Int): DataFrame = {
-    val spark = rep.sparkSession
-    import spark.implicits._
-    rep.select(col("dg"), col("t")).as[(String, String)]
-      .flatMap { case (dg, t) =>
-        Dedup.winnowChars(t, gram, minLen).map { case (pos, h) => (dg, pos, h) }
-      }
-      .toDF("dg", "pos", "h")
-  }
+                           gram: Int): DataFrame =
+    Dedup.winnowRows[String](rep, "dg", gram, minLen)
 
   def fit(corpus: DataFrame, name: String,
           buckets: Int = DefaultBuckets,
@@ -116,27 +116,18 @@ object SubstrIndex {
     * text, length) for a normalized batch frame against the fitted
     * index, under the fitted params — the candidate→diagonal→exact-
     * extension core shared by [[containment]] (verdicts) and [[scrub]]
-    * (rewrite). When the index was fitted with dfCap > 0, fingerprint
-    * hashes present in more than dfCap distinct indexed texts are
-    * excluded from candidate generation (the Lee et al. hot-gram
-    * mitigation — see [[Dedup.q202]]): a corpus-wide boilerplate gram
-    * otherwise makes the candidate join quadratic in its carriers.
-    * Detection of spans anchored ONLY by such grams is forgone,
-    * knowingly. */
+    * (rewrite), through the live q200 kernels ([[Dedup.dropHot]],
+    * [[Dedup.extendAnchors]]). When the index was fitted with
+    * dfCap > 0, fingerprint hashes present in more than dfCap distinct
+    * indexed texts are excluded from candidate generation (the Lee et
+    * al. hot-gram mitigation — see [[Dedup.q202]]). Detection of spans
+    * anchored ONLY by such grams is forgone, knowingly. */
   private def spansAgainst(batchRep: DataFrame, name: String): DataFrame = {
     val spark = batchRep.sparkSession
     import spark.implicits._
     val (minLen, gram, dfCap) = params(spark, name)
     val fpB = fingerprints(batchRep, minLen, gram)
-    val sfpAll = spark.table(sfpTable(name))
-    val sfp =
-      if (dfCap <= 0) sfpAll
-      else sfpAll.join(
-        sfpAll.groupBy(col("h"))
-          .agg(countDistinct(col("dg")).as("df"))
-          .filter(col("df") > dfCap)
-          .select(col("h")),
-        Seq("h"), "left_anti")
+    val sfp = Dedup.dropHot(spark.table(sfpTable(name)), "h", "dg", dfCap)
     val cand = fpB.as("a")
       .join(sfp.as("b"), col("a.h") === col("b.h"))
       .select(col("a.dg").as("bdg"), col("b.dg").as("idg"),
@@ -157,27 +148,9 @@ object SubstrIndex {
         col("t_b"), col("t_i"))
       .as[(String, String, Int, Seq[Int], String, String)]
       .flatMap { case (bdg, idg, diag, anchors, tB, tI) =>
-        val out = Seq.newBuilder[(String, String, Int, Int)]
-        var coveredTo = -1
-        anchors.foreach { pb =>
-          if (pb >= coveredTo) {
-            val pi = pb - diag
-            if (pi >= 0 && pi + gram <= tI.length && pb + gram <= tB.length &&
-                tB.substring(pb, pb + gram) == tI.substring(pi, pi + gram)) {
-              var lo = 0
-              while (pb - lo - 1 >= 0 && pi - lo - 1 >= 0 &&
-                tB.charAt(pb - lo - 1) == tI.charAt(pi - lo - 1)) lo += 1
-              var hi = 0
-              while (pb + gram + hi < tB.length && pi + gram + hi < tI.length &&
-                tB.charAt(pb + gram + hi) == tI.charAt(pi + gram + hi)) hi += 1
-              val start = pb - lo
-              val len = gram + lo + hi
-              coveredTo = start + len
-              if (len >= minLen) out += ((bdg, idg, start, len))
-            }
-          }
+        Dedup.extendAnchors(tB, tI, diag, anchors, gram, minLen).map {
+          case (start, _, len) => (bdg, idg, start, len)
         }
-        out.result()
       }
       .toDF("bdg", "idg", "start_b", "match_len")
       .distinct()
@@ -205,15 +178,7 @@ object SubstrIndex {
         struct(col("start_b").as("s"),
           (col("start_b") + col("match_len")).as("e")))).as("iv"))
       .as[(String, Seq[(Int, Int)])]
-      .map { case (bdg, iv) =>
-        var tot = 0L; var cs = -1; var ce = -1
-        iv.foreach { case (s0, e0) =>
-          if (s0 > ce) { if (ce > cs) tot += ce - cs; cs = s0; ce = e0 }
-          else if (e0 > ce) ce = e0
-        }
-        if (ce > cs) tot += ce - cs
-        (bdg, tot)
-      }
+      .map { case (bdg, iv) => (bdg, Dedup.coveredLength(iv)) }
       .toDF("dg", "covered_chars")
     // best match per batch digest: longest span, digest tie-break
     val w = org.apache.spark.sql.expressions.Window

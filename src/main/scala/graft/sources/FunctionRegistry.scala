@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 import org.apache.hadoop.fs.Path
-import java.nio.charset.StandardCharsets
 
 /** ddl10: PERSISTENT function registry — the week-two Hive surface gap
   * left after ddl09's `CREATE TEMPORARY FUNCTION`: in Hive, a
@@ -41,12 +40,9 @@ object FunctionRegistry {
   def regPath(spark: SparkSession): Path =
     new Path(spark.conf.get("spark.sql.warehouse.dir"), "_graft_functions")
 
-  private def fs(spark: SparkSession) =
-    regPath(spark).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def readLines(spark: SparkSession): Seq[String] = {
     val p = regPath(spark)
-    val f = fs(spark)
+    val f = LakeFiles.fs(spark, p)
     // crash-window recovery: writeLines is temp-then-rename, but a
     // crash BETWEEN the delete and the rename leaves only the temp
     // file — complete the interrupted rename before reading, so no
@@ -54,15 +50,7 @@ object FunctionRegistry {
     val tmp = new Path(p.getParent, p.getName + ".tmp")
     if (!f.exists(p) && f.exists(tmp)) { f.rename(tmp, p); () }
     if (!f.exists(p)) return Nil
-    val in = f.open(p)
-    val body = try {
-      val bos = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-      new String(bos.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
-    val lines = body.split("\n", -1).toSeq.filter(_.nonEmpty)
+    val lines = LakeFiles.read(f, p).split("\n", -1).toSeq.filter(_.nonEmpty)
     require(lines.headOption.forall(_ == Header),
       s"function registry at $p is not a $Header file")
     lines.drop(1)
@@ -72,11 +60,8 @@ object FunctionRegistry {
   private def writeLines(spark: SparkSession, lines: Seq[String]): Unit = {
     val dst = regPath(spark)
     val tmp = new Path(dst.getParent, dst.getName + ".tmp")
-    val f = fs(spark)
-    val out = f.create(tmp, true)
-    try out.write((Header +: lines).mkString("\n")
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    val f = LakeFiles.fs(spark, dst)
+    LakeFiles.write(f, tmp, (Header +: lines).mkString("\n"), overwrite = true)
     f.delete(dst, false)
     require(f.rename(tmp, dst), s"rename $tmp -> $dst failed")
   }

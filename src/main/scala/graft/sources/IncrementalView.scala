@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -42,9 +40,6 @@ object IncrementalView {
 
   private def defPath(path: String) = new Path(path, "_graft_imv_def")
 
-  private def fsOf(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** mv03: optional STATIC-DIMENSION enrichment join applied before
     * the aggregate — the SPJG view class (select-project-join-group).
     * Valid incrementally because a join against a FIXED dimension
@@ -67,7 +62,7 @@ object IncrementalView {
   private final val DefHeader = "graft-imv-v2"
 
   private def writeDef(spark: SparkSession, path: String, d: Def): Unit = {
-    val f = fsOf(spark, path)
+    val f = LakeFiles.fs(spark, path)
     require(!f.exists(defPath(path)), s"incremental view $path exists")
     // the dim line puts the PATH last so the 3-field split leaves an
     // arbitrary (comma-containing) path intact; the join key is the
@@ -79,21 +74,12 @@ object IncrementalView {
     val body = (Seq(DefHeader, d.basePath, d.keys.mkString(",")) ++
       d.dim.map(x => s"dim,${x.joinKey},${x.path}").toSeq ++
       d.aggs.map(a => s"${a.fn},${a.col},${a.as}")).mkString("\n")
-    val out = f.create(defPath(path), false)
-    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    LakeFiles.write(f, defPath(path), body, overwrite = false)
   }
 
   private def readDef(spark: SparkSession, path: String): Def = {
-    val f = fsOf(spark, path)
-    val in = f.open(defPath(path))
-    val body = try {
-      val bos = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-      new String(bos.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
-    val allLines = body.split("\n", -1).toSeq
+    val allLines = LakeFiles.read(LakeFiles.fs(spark, path), defPath(path))
+      .split("\n", -1).toSeq
     require(allLines.headOption.contains(DefHeader),
       s"incremental view def at $path is not a $DefHeader file " +
         s"(got '${allLines.headOption.getOrElse("")}'): written by a " +
@@ -245,7 +231,7 @@ object IncrementalView {
     * a single-base view (mv02/mv03)? The sql08 REFRESH statement keys
     * its dispatch on this. */
   def isJoinView(spark: SparkSession, mvPath: String): Boolean =
-    fsOf(spark, mvPath).exists(def2Path(mvPath))
+    LakeFiles.fs(spark, mvPath).exists(def2Path(mvPath))
 
   // ------------------------------------------------------------- mv04
 
@@ -294,26 +280,17 @@ object IncrementalView {
   private def def2Path(path: String) = new Path(path, "_graft_imv2_def")
 
   private def writeDef2(spark: SparkSession, path: String, d: Def2): Unit = {
-    val f = fsOf(spark, path)
+    val f = LakeFiles.fs(spark, path)
     require(!f.exists(def2Path(path)), s"incremental join view $path exists")
     val body = (Seq(Def2Header, d.basePathA, d.basePathB,
       d.joinKeys.mkString(","), d.keys.mkString(",")) ++
       d.aggs.map(a => s"${a.fn},${a.col},${a.as}")).mkString("\n")
-    val out = f.create(def2Path(path), false)
-    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    LakeFiles.write(f, def2Path(path), body, overwrite = false)
   }
 
   private def readDef2(spark: SparkSession, path: String): Def2 = {
-    val f = fsOf(spark, path)
-    val in = f.open(def2Path(path))
-    val body = try {
-      val bos = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-      new String(bos.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
-    val lines = body.split("\n", -1).toSeq
+    val lines = LakeFiles.read(LakeFiles.fs(spark, path), def2Path(path))
+      .split("\n", -1).toSeq
     require(lines.headOption.contains(Def2Header),
       s"not a $Def2Header def at $path: '${lines.headOption.getOrElse("")}'")
     Def2(lines(1), lines(2), lines(3).split(",").toSeq.filter(_.nonEmpty),

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -26,30 +24,17 @@ object MaterializedView {
 
   private def defPath(path: String) = new Path(path, "_graft_mv_def.sql")
 
-  private def fsOf(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Create the view at `path`: store `sql`, materialize as v1. */
   def create(spark: SparkSession, path: String, sql: String): Long = {
-    val f = fsOf(spark, path)
+    val f = LakeFiles.fs(spark, path)
     require(!f.exists(defPath(path)), s"materialized view $path exists")
-    val out = f.create(defPath(path), false)
-    try out.write(sql.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    LakeFiles.write(f, defPath(path), sql, overwrite = false)
     SnapshotTable.create(spark, path, spark.sql(sql), "mv-create")
   }
 
   /** The stored SQL definition. */
-  def definition(spark: SparkSession, path: String): String = {
-    val f = fsOf(spark, path)
-    val in = f.open(defPath(path))
-    try {
-      val bos = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-      new String(bos.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
-  }
+  def definition(spark: SparkSession, path: String): String =
+    LakeFiles.read(LakeFiles.fs(spark, path), defPath(path))
 
   /** Re-run the stored definition and publish atomically (one s16
     * overwrite commit). Returns the new version. */

@@ -69,20 +69,10 @@ object SnapshotTable {
                       tsMillis: Long, schema: StructType,
                       files: Seq[String])
 
-  private def fs(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def snapDir(path: String) = new Path(path, "_graft_snapshots")
   private def manifestPath(path: String, v: Long) =
     new Path(snapDir(path), f"v$v%08d")
   private def currentPath(path: String) = new Path(snapDir(path), "CURRENT")
-
-  private def writeFile(f: FileSystem, p: Path, body: String,
-                        overwrite: Boolean): Unit = {
-    val out = f.create(p, overwrite)
-    try out.write(body.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
 
   /** ATOMICALLY claim `p` (fail if it exists), then write `body`.
     * Hadoop's local `FileSystem.create(overwrite = false)` is
@@ -101,7 +91,7 @@ object SnapshotTable {
       java.nio.file.Files.createFile(local) // throws if it exists
       java.nio.file.Files.write(local, body.getBytes(StandardCharsets.UTF_8))
       ()
-    } else writeFile(f, p, body, overwrite = false)
+    } else LakeFiles.write(f, p, body, overwrite = false)
   }
 
   /** Pluggable COMMIT-ARBITRATION seam — the object-store gap made a
@@ -135,17 +125,6 @@ object SnapshotTable {
     * has two referees). */
   @volatile var commitArbiter: CommitArbiter = ExclusiveCreateArbiter
 
-  private def readFile(f: FileSystem, p: Path): String = {
-    val in = f.open(p)
-    try {
-      val bos = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-      new String(bos.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
-  }
-
   private def manifestVersions(f: FileSystem, path: String): Seq[Long] = {
     val sd = snapDir(path)
     if (!f.exists(sd)) Seq.empty
@@ -159,7 +138,7 @@ object SnapshotTable {
     * is the commit point — see [[appendOptimistic]]); the `CURRENT`
     * file is a best-effort human-readable hint, never read here. */
   def currentVersion(spark: SparkSession, path: String): Long =
-    manifestVersions(fs(spark, path), path).lastOption.getOrElse(0L)
+    manifestVersions(LakeFiles.fs(spark, path), path).lastOption.getOrElse(0L)
 
   /** Manifest terminator: the exclusive CREATE claims the version
     * number atomically, but the body lands through the same stream a
@@ -172,12 +151,12 @@ object SnapshotTable {
   /** Load one snapshot's manifest. Retries briefly if the manifest is
     * claimed but its body is still in flight (see [[EndSentinel]]). */
   def snapshot(spark: SparkSession, path: String, version: Long): Snapshot = {
-    val f = fs(spark, path)
+    val f = LakeFiles.fs(spark, path)
     val mp = manifestPath(path, version)
     require(f.exists(mp), s"snapshot table $path has no version $version")
     var attempt = 0
     while (true) {
-      val lines = readFile(f, mp).split("\n", -1).toSeq
+      val lines = LakeFiles.read(f, mp).split("\n", -1).toSeq
       if (lines.nonEmpty && lines.last == EndSentinel)
         return Snapshot(lines(0).toLong, lines(1).toLong, lines(2),
           lines(3).toLong,
@@ -195,7 +174,7 @@ object SnapshotTable {
 
   /** All snapshots, oldest first — the table's commit history. */
   def history(spark: SparkSession, path: String): Seq[Snapshot] =
-    manifestVersions(fs(spark, path), path)
+    manifestVersions(LakeFiles.fs(spark, path), path)
       .map(v => snapshot(spark, path, v))
 
   /** One commit: write `dfOf(head)` (if any) as a fresh immutable
@@ -232,18 +211,23 @@ object SnapshotTable {
   private[graft] var beforePublishHook: Option[Long => Unit] = None
 
   private def commit(spark: SparkSession, path: String, operation: String,
-                     dfOf: Long => Option[DataFrame],
-                     filesOf: (Long, Seq[String]) => Seq[String],
-                     schemaOf: (Long, Seq[String]) => StructType,
+                     dfOf: Snapshot => Option[DataFrame],
+                     filesOf: (Snapshot, Seq[String]) => Seq[String],
+                     schemaOf: (Snapshot, Seq[String]) => StructType,
                      partCols: Seq[String] = Nil,
                      rebase: Boolean = true,
                      payloadDir: String = "data"): Long =
     graft.operators.LakeLock.withWriter(spark, lockName(spark, path)) {
-      val f = fs(spark, path)
+      val f = LakeFiles.fs(spark, path)
       var attempt = 0
       while (true) {
+        // the head manifest, read once per attempt: every closure of
+        // this attempt plans against the same snapshot
         val head = currentVersion(spark, path)
-        val newFiles = dfOf(head) match {
+        val base =
+          if (head == 0L) Snapshot(0L, 0L, "", 0L, new StructType(), Nil)
+          else snapshot(spark, path, head)
+        val newFiles = dfOf(base) match {
           case None => Seq.empty
           case Some(d) =>
             val dir = s"$payloadDir/${UUID.randomUUID().toString.take(12)}"
@@ -262,7 +246,7 @@ object SnapshotTable {
         // exists) and fails loudly instead.
         try {
           publishManifest(spark, f, path, v, head, operation,
-            filesOf(head, newFiles), schemaOf(head, newFiles))
+            filesOf(base, newFiles), schemaOf(base, newFiles))
           return v
         } catch {
           case _: org.apache.hadoop.fs.FileAlreadyExistsException |
@@ -294,7 +278,7 @@ object SnapshotTable {
     commitArbiter.claim(f, manifestPath(path, v), body)
     try {
       val tmp = new Path(snapDir(path), s"CURRENT.tmp-${UUID.randomUUID()}")
-      writeFile(f, tmp, v.toString, overwrite = false)
+      LakeFiles.write(f, tmp, v.toString, overwrite = false)
       val fc = org.apache.hadoop.fs.FileContext.getFileContext(
         f.getUri, spark.sparkContext.hadoopConfiguration)
       fc.rename(fc.makeQualified(tmp), fc.makeQualified(currentPath(path)),
@@ -322,7 +306,7 @@ object SnapshotTable {
   def appendOptimistic(spark: SparkSession, path: String, df: DataFrame,
                        operation: String = "append",
                        maxRetries: Int = 20): Long = {
-    val f = fs(spark, path)
+    val f = LakeFiles.fs(spark, path)
     require(currentVersion(spark, path) > 0,
       s"snapshot table $path does not exist; create() it first")
     val dir = s"data/${UUID.randomUUID().toString.take(12)}"
@@ -362,7 +346,7 @@ object SnapshotTable {
     * would hand two spellings two different locks and defeat the
     * single-writer fence. */
   private[graft] def lockName(spark: SparkSession, path: String): String = {
-    val qualified = fs(spark, path)
+    val qualified = LakeFiles.fs(spark, path)
       .makeQualified(new Path(path)).toUri.toString
     val h = java.lang.Integer.toHexString(qualified.hashCode)
     s"snap_${new Path(qualified).getName}_$h"
@@ -383,8 +367,7 @@ object SnapshotTable {
   def append(spark: SparkSession, path: String, df: DataFrame,
              operation: String = "append"): Long =
     commit(spark, path, operation, _ => Some(df),
-      (head, nf) => snapshot(spark, path, head).files ++ nf,
-      (head, _) => snapshot(spark, path, head).schema)
+      (head, nf) => head.files ++ nf, (head, _) => head.schema)
 
   /** s23: SCHEMA EVOLUTION — append rows that ADD columns: the commit
     * records `df`'s (wider) schema as the new version's, old data
@@ -398,10 +381,9 @@ object SnapshotTable {
     * 100 TB cost one manifest write — no data rewrite. */
   def appendEvolved(spark: SparkSession, path: String, df: DataFrame): Long =
     commit(spark, path, "append-evolve", _ => Some(df),
-      (head, nf) => snapshot(spark, path, head).files ++ nf,
+      (head, nf) => head.files ++ nf,
       (head, _) => {
-        val old = snapshot(spark, path, head).schema
-        old.foreach { f =>
+        head.schema.foreach { f =>
           val n = df.schema.find(_.name == f.name)
           require(n.isDefined && n.get.dataType == f.dataType,
             s"appendEvolved: existing column ${f.name}: ${f.dataType} " +
@@ -425,8 +407,8 @@ object SnapshotTable {
     * this slice trades away for manifest simplicity.) */
   def deleteWhere(spark: SparkSession, path: String, cond: String): Long =
     commit(spark, path, "delete",
-      head => Some(read(spark, path, Some(head)).filter(s"NOT ($cond)")),
-      (_, nf) => nf, (head, _) => snapshot(spark, path, head).schema)
+      head => Some(readSnapshot(spark, path, head).filter(s"NOT ($cond)")),
+      (_, nf) => nf, (head, _) => head.schema)
 
   /** COW UPDATE: rows matching `cond` get each column in `sets`
     * re-evaluated (SQL expressions over the row); other rows pass
@@ -442,7 +424,7 @@ object SnapshotTable {
     require(sets.nonEmpty, "updateWhere needs at least one assignment")
     commit(spark, path, "update",
       h => {
-        val head = read(spark, path, Some(h))
+        val head = readSnapshot(spark, path, h)
         sets.keys.foreach(c => require(head.columns.contains(c),
           s"updateWhere: unknown column $c — adding columns is appendEvolved's job"))
         // all RHS expressions AND the WHERE cond evaluate against the
@@ -459,7 +441,7 @@ object SnapshotTable {
           }
         }.toSeq: _*))
       },
-      (_, nf) => nf, (h, _) => snapshot(spark, path, h).schema)
+      (_, nf) => nf, (h, _) => h.schema)
   }
 
   /** FILE-GRANULAR copy-on-write DELETE for a range predicate on an
@@ -477,28 +459,23 @@ object SnapshotTable {
                        lo: Long, hi: Long): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, not}
     // version-pinned: both closures derive the touched set from the
-    // SAME snapshot h, immune to a racing lock-free appendOptimistic
+    // SAME snapshot, immune to a racing lock-free appendOptimistic
     // moving the head between them (the publish CAS still arbitrates)
-    def touched(h: Long): Set[String] =
-      prunedOf(spark, path, snapshot(spark, path, h).files,
-        column, lo, hi).toSet
+    def touched(s: Snapshot): Set[String] =
+      prunedOf(spark, path, s.files, column, lo, hi).toSet
     commit(spark, path, "delete",
-      h => {
-        val s = snapshot(spark, path, h)
-        // keep rows where the delete predicate is NOT TRUE: a NULL or
-        // non-castable value makes between() NULL, and plain filter
-        // would silently drop those rows — but only in rewritten
-        // files, so survival would depend on physical layout
-        Some(readFiles(spark, path, s.schema, touched(h).toSeq.sorted)
-          .filter(not(coalesce(
-            col(column).cast("long").between(lo, hi), lit(false)))))
-      },
-      (h, nf) => {
-        val s = snapshot(spark, path, h)
-        val t = touched(h)
+      // keep rows where the delete predicate is NOT TRUE: a NULL or
+      // non-castable value makes between() NULL, and plain filter
+      // would silently drop those rows — but only in rewritten files,
+      // so survival would depend on physical layout
+      s => Some(readFiles(spark, path, s.schema, touched(s).toSeq.sorted)
+        .filter(not(coalesce(
+          col(column).cast("long").between(lo, hi), lit(false))))),
+      (s, nf) => {
+        val t = touched(s)
         s.files.filter(fp => isDv(fp) || !t.contains(fp)) ++ nf
       },
-      (h, _) => snapshot(spark, path, h).schema)
+      (s, _) => s.schema)
   }
 
   /** MERGE (keyed upsert) as ONE atomic commit: head rows whose key
@@ -513,12 +490,12 @@ object SnapshotTable {
     import org.apache.spark.sql.functions.col
     commit(spark, path, "merge",
       h => {
-        val head = read(spark, path, Some(h))
+        val head = readSnapshot(spark, path, h)
         Some(head
           .join(updates.select(keyCols.map(col): _*), keyCols, "left_anti")
           .unionByName(updates.select(head.columns.map(col).toSeq: _*)))
       },
-      (_, nf) => nf, (h, _) => snapshot(spark, path, h).schema)
+      (_, nf) => nf, (h, _) => h.schema)
   }
 
   /** SNAPSHOT DIFF: keyed change report between two versions —
@@ -564,8 +541,8 @@ object SnapshotTable {
     * uncompacted files. */
   def compact(spark: SparkSession, path: String, numFiles: Int): Long =
     commit(spark, path, "compact",
-      h => Some(read(spark, path, Some(h)).repartition(numFiles)),
-      (_, nf) => nf, (h, _) => snapshot(spark, path, h).schema)
+      h => Some(readSnapshot(spark, path, h).repartition(numFiles)),
+      (_, nf) => nf, (h, _) => h.schema)
 
   /** s22: MERGE-ON-READ DELETE via a deletion vector — the Delta/
     * Iceberg v2 position-delete idea at key granularity: instead of
@@ -586,10 +563,10 @@ object SnapshotTable {
     import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, "deleteWhereDV needs at least one key column")
     commit(spark, path, "dv-delete",
-      h => Some(read(spark, path, Some(h)).filter(cond)
+      h => Some(readSnapshot(spark, path, h).filter(cond)
         .select(keyCols.map(col): _*).distinct()),
-      (h, nf) => snapshot(spark, path, h).files ++ nf,
-      (h, _) => snapshot(spark, path, h).schema,
+      (h, nf) => h.files ++ nf,
+      (h, _) => h.schema,
       payloadDir = "dv")
   }
 
@@ -626,7 +603,7 @@ object SnapshotTable {
     commit(spark, path, s"compact-zorder($colA,$colB)",
       h => {
         import org.apache.spark.sql.functions.{col, max => fmax, min => fmin}
-        val df = read(spark, path, Some(h))
+        val df = readSnapshot(spark, path, h)
         val r = df.agg(
           fmin(col(colA).cast("long")), fmax(col(colA).cast("long")),
           fmin(col(colB).cast("long")), fmax(col(colB).cast("long"))).head()
@@ -648,7 +625,7 @@ object SnapshotTable {
             .drop("_graft_z"))
         }
       },
-      (_, nf) => nf, (h, _) => snapshot(spark, path, h).schema)
+      (_, nf) => nf, (h, _) => h.schema)
 
   /** Hive-style `%xx` path unescape (the partition writer escapes
     * special chars that way). Hand-rolled: URLDecoder would also turn
@@ -746,7 +723,12 @@ object SnapshotTable {
            version: Option[Long] = None): DataFrame = {
     val v = version.getOrElse(currentVersion(spark, path))
     require(v > 0, s"snapshot table $path does not exist")
-    val s = snapshot(spark, path, v)
+    readSnapshot(spark, path, snapshot(spark, path, v))
+  }
+
+  /** [[read]] of an already-loaded snapshot `s` of the table at `path`. */
+  private def readSnapshot(spark: SparkSession, path: String,
+                           s: Snapshot): DataFrame = {
     val (dvs, data) = s.files.partition(isDv)
     applyDv(spark, path, readFiles(spark, path, s.schema, data), dvs)
   }
@@ -784,8 +766,7 @@ object SnapshotTable {
                         operation: String = "append"): Long = {
     requirePartCols(df, partCols)
     commit(spark, path, operation, _ => Some(df),
-      (head, nf) => snapshot(spark, path, head).files ++ nf,
-      (head, _) => snapshot(spark, path, head).schema, partCols)
+      (head, nf) => head.files ++ nf, (head, _) => head.schema, partCols)
   }
 
   private def requirePartCols(df: DataFrame, partCols: Seq[String]): Unit = {
@@ -885,11 +866,11 @@ object SnapshotTable {
   def analyze(spark: SparkSession, path: String, column: String): Int =
     graft.operators.LakeLock.withWriter(spark, lockName(spark, path)) {
       import org.apache.spark.sql.functions.{col, input_file_name, min => fmin, max => fmax}
-      val f = fs(spark, path)
+      val f = LakeFiles.fs(spark, path)
       val sp = new Path(snapDir(path), s"stats.$column")
       val existing: Map[String, (Long, Long)] =
         if (f.exists(sp))
-          readFile(f, sp).split("\n").filter(_.nonEmpty).map { l =>
+          LakeFiles.read(f, sp).split("\n").filter(_.nonEmpty).map { l =>
             val a = l.split(",")
             a(0) -> (a(1).toLong, a(2).toLong)
           }.toMap
@@ -914,7 +895,7 @@ object SnapshotTable {
         val merged = existing ++ stats
         val body = merged.toSeq.sorted
           .map { case (fp, (mn, mx)) => s"$fp,$mn,$mx" }.mkString("\n")
-        writeFile(f, sp, body, overwrite = true)
+        LakeFiles.write(f, sp, body, overwrite = true)
         stats.size
       }
     }
@@ -934,11 +915,11 @@ object SnapshotTable {
   private def prunedOf(spark: SparkSession, path: String,
                        files: Seq[String], column: String,
                        lo: Long, hi: Long): Seq[String] = {
-    val f = fs(spark, path)
+    val f = LakeFiles.fs(spark, path)
     val sp = new Path(snapDir(path), s"stats.$column")
     if (!f.exists(sp)) files.filterNot(isDv)
     else {
-      val stats = readFile(f, sp).split("\n").filter(_.nonEmpty).map { l =>
+      val stats = LakeFiles.read(f, sp).split("\n").filter(_.nonEmpty).map { l =>
         val a = l.split(","); a(0) -> (a(1).toLong, a(2).toLong)
       }.toMap
       files.filterNot(isDv).filter { fp =>
@@ -975,7 +956,7 @@ object SnapshotTable {
   def expire(spark: SparkSession, path: String,
              keepLast: Int, orphanGraceMs: Long = 3600000L): (Int, Int) =
     graft.operators.LakeLock.withWriter(spark, lockName(spark, path)) {
-      val f = fs(spark, path)
+      val f = LakeFiles.fs(spark, path)
       val all = history(spark, path)
       val cut = all.map(_.version).sorted.dropRight(keepLast)
       if (cut.isEmpty) (0, 0)

@@ -46,9 +46,6 @@ class Bm25IndexSpec extends GraftSpec {
     fitted
     assert(rows(Bm25Index.search(queries, Name)) ==
       rows(TextAnalysis.q116(corpus, queries)))
-    // and with pruning disabled (full postings scan) — same answer
-    assert(rows(Bm25Index.search(queries, Name, prune = false)) ==
-      rows(TextAnalysis.q116(corpus, queries)))
   }
 
   test("s14 pruned search reads only the query terms' bucket files") {

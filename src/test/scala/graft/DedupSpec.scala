@@ -853,6 +853,51 @@ class DedupSpec extends GraftSpec {
     }
   }
 
+  test("extendAnchors == a brute-force longest common extension along the diagonal") {
+    // the maximal runs of the diagonal's match mask that contain an
+    // anchor whose whole gram matches, kept when >= minLen, by start
+    def brute(a: String, b: String, diag: Int, anchors: Seq[Int], gram: Int,
+              minLen: Int): Seq[(Int, Int, Int)] = {
+      def eq(i: Int) = i >= 0 && i < a.length && i - diag >= 0 &&
+        i - diag < b.length && a(i) == b(i - diag)
+      anchors.filter(p => (p until p + gram).forall(eq)).map { p =>
+        var s = p; while (eq(s - 1)) s -= 1
+        var e = p + gram; while (eq(e)) e += 1
+        (s, s - diag, e - s)
+      }.distinct.filter(_._3 >= minLen).sortBy(_._1)
+    }
+    def check(a: String, b: String, diag: Int, anchors: Seq[Int], gram: Int,
+              minLen: Int, expected: Option[Seq[(Int, Int, Int)]] = None): Unit = {
+      val got = Dedup.extendAnchors(a, b, diag, anchors, gram, minLen)
+      val want = brute(a, b, diag, anchors, gram, minLen)
+      assert(got == want, (a, b, diag, anchors, gram, minLen))
+      expected.foreach(e => assert(got == e, (a, b, diag, anchors)))
+    }
+    val shared = "abcdefghij"
+    // anchors at both ends of both texts
+    check(shared + "QQ" + shared, shared + "RR" + shared, 0, Seq(0, 18), 4, 4,
+      Some(Seq((0, 0, 10), (12, 12, 10))))
+    // a collision anchor: its hash matched, its gram does not
+    check("aaaabbbb", "aaaacccc", 0, Seq(0, 4), 4, 4, Some(Seq((0, 0, 4))))
+    check("xxxxbbbb", "yyyycccc", 0, Seq(4), 4, 4, Some(Nil))
+    // two anchors on one diagonal inside one span: one span out
+    check("zz" + shared, shared + "yy", 2, Seq(2, 6), 4, 4,
+      Some(Seq((2, 0, 10))))
+    val rng = new scala.util.Random(20261021L)
+    def text(n: Int) = Seq.fill(n)("ab"(rng.nextInt(2))).mkString
+    (1 to 2000).foreach { _ =>
+      val a = text(rng.nextInt(40))
+      val prefix = text(rng.nextInt(6))
+      val k = rng.nextInt(a.length + 1)
+      val b = prefix + a.drop(k).map(c =>
+        if (rng.nextDouble() < 0.1) ('a' + 'b' - c).toChar else c)
+      val diag = k - prefix.length + (rng.nextInt(5) - 2) * rng.nextInt(2)
+      val gram = 1 + rng.nextInt(4)
+      val anchors = (0 until a.length).filter(_ => rng.nextDouble() < 0.3)
+      check(a, b, diag, anchors, gram, gram + rng.nextInt(5))
+    }
+  }
+
   test("q202 pre-flight names a planted 500-carrier boilerplate gram; dfCap defuses the join") {
     val boiler = "standard license header boilerplate text shared verbatim by every single crawled page in this corpus!"
     assert(boiler.length >= 64, boiler.length)

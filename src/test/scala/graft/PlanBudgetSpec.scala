@@ -185,18 +185,23 @@ class PlanBudgetSpec extends GraftSpec {
     graft.Pins.release()
   }
 
-  /** (exchanges, InMemoryRelations, construction jobs) of one media
-    * lane built over the warm sf0.001 corpus: the shape a refactor of
-    * the rep-collapse skeleton must leave exactly as it was. */
-  private def mediaShape(build: org.apache.spark.sql.DataFrame =>
-      org.apache.spark.sql.DataFrame): (Int, Int, Int) = {
-    val docs = Tables.documents(spark, SF)
+  /** (exchanges, InMemoryRelations, construction jobs) of the frame
+    * `build` returns, its pins released after: the shape a refactor of
+    * the frame's operator must leave exactly as it was. */
+  private def shapeOf(build: => org.apache.spark.sql.DataFrame): (Int, Int, Int) = {
     var df: org.apache.spark.sql.DataFrame = null
-    val jobs = jobsOf { df = build(docs) }
+    val jobs = jobsOf { df = build }
     val shape = (PlanReport.analyze(df).exchanges,
       """\(\d+\) InMemoryRelation""".r.findAllIn(formattedPlan(df)).size, jobs)
     graft.Pins.release()
     shape
+  }
+
+  /** [[shapeOf]] one media lane built over the warm sf0.001 corpus. */
+  private def mediaShape(build: org.apache.spark.sql.DataFrame =>
+      org.apache.spark.sql.DataFrame): (Int, Int, Int) = {
+    val docs = Tables.documents(spark, SF)
+    shapeOf(build(docs))
   }
 
   import graft.operators.Multimodal
@@ -211,6 +216,49 @@ class PlanBudgetSpec extends GraftSpec {
   ).foreach { case (name, build, expected) =>
     test(s"$name: exchanges, pinned relations and construction jobs are pinned") {
       assert(mediaShape(build) == expected, name)
+    }
+  }
+
+  test("ANN and substring-span lanes: live operators and fitted-index serving keep their shape") {
+    import graft.operators.{AnnIndex, Dedup, SubstrIndex}
+    import org.apache.spark.sql.functions.col
+    val emb = Tables.embeddings(spark, SF)
+    val docs = Tables.documents(spark, SF)
+    val (ann, substr) = ("graft_shape_ann_ix", "graft_shape_substr_ix")
+    AnnIndex.fit(emb, ann)
+    SubstrIndex.fit(docs, substr)
+    val q = emb.filter(col("vec_id") < 20)
+    val batch = docs.filter(col("doc_id") % 7 === 0)
+    def entry(name: String) = () => SparkEntry.queries(name)(spark, SF)
+    // the values the pre-refactor operators read in this session
+    val cases = Seq[(String, () => org.apache.spark.sql.DataFrame, (Int, Int, Int))](
+      ("q45", entry("q45_ann_lsh"), (3, 5, 0)),
+      ("q55", entry("q55_ann_ivf"), (3, 4, 16)),
+      ("q83", entry("q83_ann_search_lsh"), (3, 4, 0)),
+      ("q108", entry("q108_ann_int8"), (3, 0, 0)),
+      ("q138", entry("q138_pq_ann"), (3, 0, 1)),
+      ("q193", entry("q193_ann_recall"), (43, 29, 18)),
+      ("q200", () => Dedup.q200(docs), (3, 5, 0)),
+      ("q201", () => Dedup.q201(docs), (9, 10, 0)),
+      ("q203", () => Dedup.q203(docs), (7, 8, 0)),
+      ("AnnIndex.searchLsh", () => AnnIndex.searchLsh(q, ann), (3, 0, 2)),
+      ("AnnIndex.searchIvf", () => AnnIndex.searchIvf(q, ann), (3, 0, 5)),
+      ("AnnIndex.searchInt8", () => AnnIndex.searchInt8(q, ann), (3, 0, 0)),
+      ("AnnIndex.searchPq", () => AnnIndex.searchPq(q, ann), (3, 0, 3)),
+      ("AnnIndex.searchIvfPq", () => AnnIndex.searchIvfPq(q, ann), (4, 0, 8)),
+      ("AnnIndex.searchHnsw", () => AnnIndex.searchHnsw(q, ann), (2, 0, 1)),
+      ("SubstrIndex.containment", () => SubstrIndex.containment(batch, substr), (9, 4, 1)),
+      ("SubstrIndex.scrub", () => SubstrIndex.scrub(batch, substr), (7, 4, 1)))
+    try {
+      // warm: schema inference, the q193 HNSW fit and the index loads
+      // run once outside the measured builds
+      cases.foreach { case (_, build, _) => build(); graft.Pins.release() }
+      cases.foreach { case (name, build, expected) =>
+        assert(shapeOf(build()) == expected, name)
+      }
+    } finally {
+      AnnIndex.drop(spark, ann)
+      SubstrIndex.drop(spark, substr)
     }
   }
 
