@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.ColumnBridge
+import graft.sources.LakeFiles
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -334,14 +335,12 @@ object LinearModel {
       sb ++= s"w,$k," + m.rows.get(k).mkString(",") += '\n'
     }
     val p = new org.apache.hadoop.fs.Path(path)
-    graft.sources.LakeFiles.write(graft.sources.LakeFiles.fs(spark, p), p,
-      sb.result(), overwrite = true)
+    LakeFiles.write(LakeFiles.fs(spark, p), p, sb.result(), overwrite = true)
   }
 
   def load(spark: SparkSession, path: String): LinearModel = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val lines = graft.sources.LakeFiles.read(graft.sources.LakeFiles.fs(spark, p), p)
-      .split("\n").filter(_.nonEmpty)
+    val lines = LakeFiles.read(LakeFiles.fs(spark, p), p).split("\n").filter(_.nonEmpty)
     require(lines.head == Header, s"not a $Header file: ${lines.head}")
     def field(tag: String): String = {
       val l = lines.find(_.startsWith(tag + ",")).getOrElse(

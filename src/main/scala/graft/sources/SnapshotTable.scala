@@ -179,8 +179,9 @@ object SnapshotTable {
 
   /** One commit: write `dfOf(head)` (if any) as a fresh immutable
     * data dir, publish manifest v(head+1) with `files`, atomically
-    * swap CURRENT. Runs under the table's writer lock — and `dfOf`
-    * receives the head AS SEEN UNDER THE LOCK, so a mutation that
+    * swap CURRENT. Runs under the table's writer lock — and `dfOf`,
+    * `filesOf` and `schemaOf` receive the head snapshot AS SEEN UNDER
+    * THE LOCK (its manifest read once per attempt), so a mutation that
     * derives its payload from the table (delete/merge/compact) plans
     * against the version it will actually replace. Resolving the base
     * outside the lock loses any appendOptimistic that lands between
